@@ -23,27 +23,6 @@ def _setup_logging() -> logging.Logger:
     return logger
 
 
-def _import_all_query_modules() -> None:
-    """Populate the registry with EVERY query module (the CLI previously
-    imported only three and silently hid the rest of the registry)."""
-    from etl_data_processor_spark import (  # noqa: F401
-        queries,
-        queries_cdc,
-        queries_corpus,
-        queries_ext,
-        queries_ext2,
-        queries_ext3,
-        queries_html,
-        queries_north,
-        queries_r3,
-        queries_r4,
-        queries_r5,
-        queries_rel2,
-        queries_tpch,
-        queries_tpch2,
-        queries_ts,
-    )
-
 def main(argv: list[str] | None = None) -> int:
     parser = argparse.ArgumentParser(prog="etl_data_processor_spark")
     sub = parser.add_subparsers(dest="cmd", required=True)
@@ -100,12 +79,13 @@ def main(argv: list[str] | None = None) -> int:
         import inspect
         import os
 
-        _import_all_query_modules()
-        from etl_data_processor_spark.registry import ORACLE, QUERIES
+        from etl_data_processor_spark.registry import ORACLE, load_all
+
+        queries = load_all()
 
         pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        for name in sorted(QUERIES):
-            fn = QUERIES[name]
+        for name in sorted(queries):
+            fn = queries[name]
             kind = "oracle" if name in ORACLE else "rows-only"
             try:
                 code = inspect.unwrap(fn).__code__
@@ -190,13 +170,14 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "query":
-        _import_all_query_modules()
-        from etl_data_processor_spark.registry import QUERIES
+        from etl_data_processor_spark.registry import load_all
 
-        if args.name not in QUERIES:
+        queries = load_all()
+
+        if args.name not in queries:
             log.error("unknown query %r (see `list`)", args.name)
             return 2
-        df = QUERIES[args.name](spark, args.sf_dir)
+        df = queries[args.name](spark, args.sf_dir)
         df.show(args.limit, truncate=False)
         log.info("%d rows", df.count())
         return 0

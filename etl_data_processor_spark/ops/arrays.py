@@ -20,9 +20,11 @@ def json_get(col: Column, field: str) -> Column:
 
 def map_lookup(keys_values: dict, key: Column) -> Column:
     """Literal-map lookup (B29) — the reference's month map (main.py:29-42)
-    as a broadcastable ``create_map`` expression."""
+    as a broadcastable ``create_map`` expression, indexed with ``m[key]``
+    (``getItem`` with a Column key forwards to the same expression but
+    is deprecated)."""
     m = F.create_map(*[F.lit(x) for kv in keys_values.items() for x in kv])
-    return m.getItem(key)
+    return m[key]
 
 
 # ---------------------------------------------------------------- vector math

@@ -19,8 +19,12 @@ only affects recall (tunable via bands/rows).
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from etl_data_processor_spark.ops.text import arrow_pass, pow_table, token_poly
 
 
 def _find_repartition_node(jplan):
@@ -657,7 +661,14 @@ def _word_shingles_fn(texts, k: int):
     return pd.Series(out)
 
 
-_SHINGLES_UDFS: dict = {}
+@functools.cache
+def _shingles_udf(k: int):
+    from pyspark.sql.types import ArrayType, StringType
+
+    def _fn(texts):
+        return _word_shingles_fn(texts, k)
+
+    return F.pandas_udf(_fn, ArrayType(StringType()))
 
 
 def word_shingles(text: Column, k: int = 3) -> Column:
@@ -670,14 +681,7 @@ def word_shingles(text: Column, k: int = 3) -> Column:
     stage (~2.5-7.5 executor-cpu-s per pass at sf0.1). Values are
     bit-identical (differential-pinned in tests), so every downstream —
     prefix sort, exact-Jaccard verify, minhash — is unchanged."""
-    if k not in _SHINGLES_UDFS:
-        from pyspark.sql.types import ArrayType, StringType
-
-        def _fn(texts, _k=k):
-            return _word_shingles_fn(texts, _k)
-
-        _SHINGLES_UDFS[k] = F.pandas_udf(_fn, ArrayType(StringType()))
-    return _SHINGLES_UDFS[k](text)
+    return _shingles_udf(k)(text)
 
 
 def with_shingles(
@@ -751,50 +755,95 @@ def _minhash_sigs_expr(hashes: Column, params: list[tuple[int, int]], p: int) ->
     )
 
 
+def _flatten(arrays):
+    """``(flat int64 values, per-row lengths, per-row NULL mask)`` of a
+    Series of ``array<long>`` values; a NULL row has length 0."""
+    import numpy as np
+
+    isnull = np.array([a is None for a in arrays], dtype=bool)
+    parts = [np.asarray(a, dtype=np.int64) for a in arrays if a is not None]
+    lens = np.zeros(len(arrays), dtype=np.int64)
+    lens[~isnull] = [len(a) for a in parts]
+    flat = np.concatenate(parts) if parts else np.zeros(0, dtype=np.int64)
+    return flat, lens, isnull
+
+
+def _segment_reduce(flat, lens, ufunc, lift, width: int, cap: int):
+    """``ufunc.reduceat`` of ``lift(flat)`` per document, where document
+    i owns the next ``lens[i]`` values of ``flat``. ``lift`` widens each
+    value to a ``width``-column row, so documents run in chunks of <=
+    ``cap`` values (a longer document is a chunk alone) to bound that
+    matrix. Returns ``int64[len(lens), width]``; empty documents' rows
+    are 0 (they are left out of the ``reduceat`` segments)."""
+    import numpy as np
+
+    ends = np.cumsum(lens)
+    starts = ends - lens
+    out = np.zeros((len(lens), width), dtype=np.int64)
+    j = 0
+    while j < len(lens):
+        k = max(int(np.searchsorted(ends, starts[j] + cap, "right")), j + 1)
+        idx = j + np.flatnonzero(lens[j:k])
+        if len(idx):
+            seg = lift(flat[starts[j]:ends[k - 1]])
+            out[idx] = ufunc.reduceat(seg, starts[idx] - starts[j], axis=0)
+        j = k
+    return out
+
+
+def _majority_sigs(flat, lens, nbits: int):
+    """``uint64`` SimHash signature per document from its hashes in
+    ``flat`` (laid out as in :func:`_segment_reduce`): bit b is set iff
+    ``#{h: bit b set} * 2 > len`` — the all-integer form of the
+    ``sum(+/-1) > 0`` majority vote, so an empty document (all votes
+    tied at 0) gives 0. Chunks of <= 2^18 hashes keep the unpacked bit
+    lanes near 64 MB."""
+    import numpy as np
+
+    shifts = np.arange(nbits, dtype=np.uint64)
+    c1 = _segment_reduce(
+        flat.view(np.uint64),
+        lens,
+        np.add,
+        lambda f: ((f[:, None] >> shifts) & np.uint64(1)).astype(np.int32),
+        nbits,
+        1 << 18,
+    )
+    sigbits = (2 * c1 > lens[:, None]).astype(np.uint64)
+    return (sigbits << shifts).sum(axis=1, dtype=np.uint64)
+
+
 def _minhash_sigs_fn(hash_arrays, params: list, p: int):
     """MinHash signatures from per-doc base-hash arrays, one vectorized
     numpy pass per Arrow batch (r11, guide §4.2) — the exact integers of
     :func:`_minhash_sigs_expr`: base hashes are < 2^31 (masked xxhash64)
     and a < 2^31, so a*h + b < 2^62 stays exact in int64; mod p and the
     per-doc min are the same arithmetic the interpreted per-(param,
-    hash) HOF chain evaluated one element at a time. Docs are processed
-    in <=2^17-hash chunks (~32 MB peak per param block). A NULL hash
-    array yields NULL (the HOF chain's null propagation); empty arrays
-    cannot occur (shingles always carry >= 1 element)."""
+    hash) HOF chain evaluated one element at a time, reduced by
+    :func:`_segment_reduce` in <=2^17-hash chunks (~32 MB peak per param
+    block). A NULL hash array yields NULL (the HOF chain's null
+    propagation); empty arrays cannot occur (shingles always carry >= 1
+    element)."""
     import numpy as np
     import pandas as pd
 
-    a = np.array([x for x, _ in params], dtype=np.int64)[None, :]
-    b = np.array([x for _, x in params], dtype=np.int64)[None, :]
-    n = len(hash_arrays)
-    out: list = [None] * n
-    lens = np.zeros(n, dtype=np.int64)
-    arrs: list = [None] * n
-    for j, h in enumerate(hash_arrays):
-        if h is not None:
-            arrs[j] = np.asarray(h, dtype=np.int64)
-            lens[j] = len(arrs[j])
-    j = 0
-    while j < n:
-        k, tot = j, 0
-        while k < n and (tot == 0 or tot + lens[k] <= (1 << 17)):
-            tot += int(lens[k])
-            k += 1
-        idx = [i for i in range(j, k) if lens[i] > 0]
-        if idx:
-            flat = np.concatenate([arrs[i] for i in idx])
-            vals = (flat[:, None] * a + b) % p
-            ln = lens[idx]
-            starts = np.zeros(len(idx), dtype=np.int64)
-            np.cumsum(ln[:-1], out=starts[1:])
-            mins = np.minimum.reduceat(vals, starts, axis=0)
-            for t, i in enumerate(idx):
-                out[i] = mins[t].tolist()
-        j = k
-    return pd.Series(out)
+    a = np.array([x for x, _ in params], dtype=np.int64)
+    b = np.array([x for _, x in params], dtype=np.int64)
+    flat, lens, _ = _flatten(hash_arrays)
+    mins = _segment_reduce(
+        flat, lens, np.minimum, lambda f: (f[:, None] * a + b) % p, len(params), 1 << 17
+    )
+    return pd.Series([m.tolist() if ln else None for m, ln in zip(mins, lens)])
 
 
-_MINHASH_SIGS_UDFS: dict = {}
+@functools.cache
+def _minhash_sigs_udf(params: tuple, p: int):
+    from pyspark.sql.types import ArrayType, LongType
+
+    def _fn(hs):
+        return _minhash_sigs_fn(hs, list(params), p)
+
+    return F.pandas_udf(_fn, ArrayType(LongType()))
 
 
 def _minhash_sigs_col(hashes: Column, params: list[tuple[int, int]], p: int) -> Column:
@@ -802,15 +851,7 @@ def _minhash_sigs_col(hashes: Column, params: list[tuple[int, int]], p: int) -> 
     nested-HOF permutation scan — 32 x |shingles| lambda evaluations per
     doc — moved to one vectorized Arrow pass; values bit-identical,
     differential-pinned in tests)."""
-    key = (tuple(params), p)
-    if key not in _MINHASH_SIGS_UDFS:
-        from pyspark.sql.types import ArrayType, LongType
-
-        def _fn(hs, _params=list(params), _p=p):
-            return _minhash_sigs_fn(hs, _params, _p)
-
-        _MINHASH_SIGS_UDFS[key] = F.pandas_udf(_fn, ArrayType(LongType()))
-    return _MINHASH_SIGS_UDFS[key](hashes)
+    return _minhash_sigs_udf(tuple(params), p)(hashes)
 
 
 def minhash_signatures(
@@ -1064,12 +1105,6 @@ def ngram_jaccard_pairs_blocked(
     )
 
 
-def _bit_value(bit: int) -> int:
-    """Two's-complement signed-long value with only ``bit`` set (bit 63 is
-    the sign bit, so its value is -2^63 — a bare 1<<63 overflows LongType)."""
-    return (1 << bit) if bit < 63 else -(1 << 63)
-
-
 def _simhash_votes_fn(hash_arrays):
     """64-bit SimHash signatures from per-doc token-hash arrays, one
     vectorized numpy pass per Arrow batch (r11, guide §4.2).
@@ -1078,57 +1113,17 @@ def _simhash_votes_fn(hash_arrays):
     ``transform(tokens, xxhash64)`` arrays (so the hash VALUES are the
     exact xxhash64 longs the signature has always been built from —
     only the 64-per-token interpreted zip_with vote loop moves to
-    numpy). Per doc: bit b of the signature is set iff
-    ``#{h: bit b set} * 2 > n_tokens`` — algebraically identical to the
-    old ``sum(+/-1) > 0`` majority vote, all-integer, deterministic.
+    numpy, as :func:`_majority_sigs`).
 
     Edges mirror the old expression chain exactly: a NULL hash array
-    (null text) yields NULL; an EMPTY array yields 0 (all votes tie at
-    0, no bit set). Memory: per-bit counting unpacks 64 int32 lanes, so
-    docs are processed in <=2^18-hash chunks (~64 MB peak) regardless
-    of batch size."""
+    (null text) yields NULL; an EMPTY array yields 0."""
     import numpy as np
     import pandas as pd
 
-    shifts = np.arange(64, dtype=np.uint64)
-    n = len(hash_arrays)
-    out = np.zeros(n, dtype=np.uint64)
-    isnull = np.zeros(n, dtype=bool)
-    lens = np.zeros(n, dtype=np.int64)
-    arrs: list = [None] * n
-    for j, a in enumerate(hash_arrays):
-        if a is None:
-            isnull[j] = True
-        else:
-            arrs[j] = np.asarray(a, dtype=np.int64)
-            lens[j] = len(arrs[j])
-    j = 0
-    while j < n:
-        k, tot = j, 0
-        while k < n and (tot == 0 or tot + lens[k] <= (1 << 18)):
-            tot += int(lens[k])
-            k += 1
-        idx = [i for i in range(j, k) if lens[i] > 0]
-        if idx:
-            flat = np.concatenate([arrs[i] for i in idx]).view(np.uint64)
-            bits = ((flat[:, None] >> shifts) & np.uint64(1)).astype(np.int32)
-            ln = lens[idx]
-            starts = np.zeros(len(idx), dtype=np.int64)
-            np.cumsum(ln[:-1], out=starts[1:])
-            c1 = np.add.reduceat(bits, starts, axis=0)
-            sigbits = (2 * c1.astype(np.int64)) > ln[:, None]
-            sigs = (sigbits.astype(np.uint64) << shifts).sum(
-                axis=1, dtype=np.uint64
-            )
-            out[idx] = sigs
-        j = k
-    res = pd.Series(out.view(np.int64)).astype("Int64")
-    if isnull.any():
-        res[isnull] = pd.NA
+    flat, lens, isnull = _flatten(hash_arrays)
+    res = pd.Series(_majority_sigs(flat, lens, 64).view(np.int64)).astype("Int64")
+    res[isnull] = pd.NA
     return res
-
-
-_CF_M32 = 1 << 32
 
 
 def _charfold_simhash_fn(texts, bases: tuple):
@@ -1137,112 +1132,42 @@ def _charfold_simhash_fn(texts, bases: tuple):
     (r11, guide §4.2) — the exact integers of the expression chain in
     q_simhash_portable / q_simhash64_portable: tokens from
     split(lower(trim(text)), \\s+) (== ``str.lower().split()`` on this
-    corpus — the proven pair_clip_gram_counts equivalence; the
-    empty-text [''] token folds to h=0 whose all-zero bits vote -1
-    everywhere, the same signature 0 the empty token list yields here);
-    per-token hash = Horner fold (a*base + code) % 2^32 over ``ascii()``
-    char codes, evaluated as code * base^(len-1-j) sums — every
-    intermediate < 2^51, exact in uint64; per-bit majority votes as in
-    :func:`_simhash_votes_fn`. NULL text yields NULL (the expression
-    chain's null propagation). Non-ASCII bytes fall back to the exact
-    per-char Python fold (ord == the codepoint ascii() returns)."""
+    corpus; the empty-text [''] token folds to h=0 whose all-zero bits
+    vote -1 everywhere, the same signature 0 the empty token list yields
+    here); per-token hash = :func:`token_poly` (``base``, 32 bits — the
+    Horner fold over ``ascii()`` char codes; see its contract);
+    per-bit majority votes by :func:`_majority_sigs`. NULL text yields
+    NULL (the expression chain's null propagation)."""
     import numpy as np
     import pandas as pd
 
-    m32 = np.uint64(_CF_M32)
-    shifts32 = np.arange(32, dtype=np.uint64)
-    n = len(texts)
-    cols = [np.zeros(n, dtype=np.uint64) for _ in bases]
-    isnull = np.zeros(n, dtype=bool)
-    doc_ntoks = np.zeros(n, dtype=np.int64)
-    all_toks: list = []
-    for j, t in enumerate(texts):
-        if t is None:
-            isnull[j] = True
-            continue
-        w = t.lower().split()
-        doc_ntoks[j] = len(w)
-        all_toks.extend(w)
-    if all_toks:
-        joined = "".join(all_toks)
-        tok_lens = np.array([len(t) for t in all_toks], dtype=np.int64)
-        try:
-            raw = joined.encode("ascii")
-            buf = np.frombuffer(raw, dtype=np.uint8).astype(np.uint64)
-            ascii_ok = True
-        except UnicodeEncodeError:
-            ascii_ok = False
-        tok_ends = np.cumsum(tok_lens)
-        tok_starts = tok_ends - tok_lens
-        ne = tok_lens > 0  # .split() yields no empty tokens, but guard
-        hs_per_base = []
-        for base in bases:
-            if ascii_ok:
-                maxlen = int(tok_lens.max())
-                powtab = np.empty(maxlen, dtype=np.uint64)
-                powtab[0] = 1
-                for i in range(1, maxlen):
-                    powtab[i] = (powtab[i - 1] * np.uint64(base)) % m32
-                tok_idx = np.repeat(
-                    np.arange(len(all_toks), dtype=np.int64), tok_lens
-                )
-                e = tok_ends[tok_idx] - 1 - np.arange(len(buf), dtype=np.int64)
-                contrib = buf * powtab[e]
-                hs = np.zeros(len(all_toks), dtype=np.uint64)
-                if ne.any():
-                    sums = np.add.reduceat(contrib, tok_starts[ne])
-                    hs[ne] = sums % m32
-            else:  # exact scalar fallback (ord == ascii() codepoint)
-                hs = np.array(
-                    [
-                        _py_charfold(t, base) for t in all_toks
-                    ],
-                    dtype=np.uint64,
-                )
-            hs_per_base.append(hs)
-        # per-doc majority votes, chunked like _simhash_votes_fn
-        doc_ends = np.cumsum(doc_ntoks)
-        doc_starts = doc_ends - doc_ntoks
-        for bi, hs in enumerate(hs_per_base):
-            out = cols[bi]
-            j = 0
-            while j < n:
-                k, tot = j, 0
-                while k < n and (tot == 0 or tot + doc_ntoks[k] <= (1 << 18)):
-                    tot += int(doc_ntoks[k])
-                    k += 1
-                idx = [i for i in range(j, k) if doc_ntoks[i] > 0]
-                if idx:
-                    seg = hs[doc_starts[idx[0]]:doc_ends[idx[-1]]]
-                    bits = ((seg[:, None] >> shifts32) & np.uint64(1)).astype(
-                        np.int32
-                    )
-                    ln = doc_ntoks[idx]
-                    starts = np.zeros(len(idx), dtype=np.int64)
-                    np.cumsum(ln[:-1], out=starts[1:])
-                    c1 = np.add.reduceat(bits, starts, axis=0)
-                    sigbits = (2 * c1.astype(np.int64)) > ln[:, None]
-                    out[idx] = (sigbits.astype(np.uint64) << shifts32).sum(
-                        axis=1, dtype=np.uint64
-                    )
-                j = k
+    isnull = np.array([t is None for t in texts], dtype=bool)
+    toks = [(t or "").lower().split() for t in texts]
+    lens = np.array([len(w) for w in toks], dtype=np.int64)
+    flat = [t for w in toks for t in w]
     res = []
-    for col in cols:
-        s = pd.Series(col.view(np.int64)).astype("Int64")
-        if isnull.any():
-            s[isnull] = pd.NA
+    for base in bases:
+        sigs = _majority_sigs(token_poly(flat, base, 32), lens, 32)
+        s = pd.Series(sigs.view(np.int64)).astype("Int64")
+        s[isnull] = pd.NA
         res.append(s)
     return res
 
 
-def _py_charfold(tok: str, base: int) -> int:
-    h = 0
-    for c in tok:
-        h = (h * base + ord(c)) % _CF_M32
-    return h
+@functools.cache
+def _charfold_simhash_udf(bases: tuple):
+    import pandas as pd
+    from pyspark.sql.types import LongType, StructField, StructType
 
+    schema = StructType(
+        [StructField(f"s{i}", LongType()) for i in range(len(bases))]
+    )
 
-_CHARFOLD_SIMHASH_UDFS: dict = {}
+    def _fn(texts):
+        cols = _charfold_simhash_fn(texts, bases)
+        return pd.concat({f"s{i}": c for i, c in enumerate(cols)}, axis=1)
+
+    return F.pandas_udf(_fn, schema)
 
 
 def charfold_simhash(text: Column, bases: tuple = (31,)):
@@ -1251,26 +1176,14 @@ def charfold_simhash(text: Column, bases: tuple = (31,)):
     per-bit expression chains (differential-pinned in
     tests/test_r11_ops.py). Returns a struct column with fields
     ``s0, s1, ...`` (one per base)."""
-    key = tuple(bases)
-    if key not in _CHARFOLD_SIMHASH_UDFS:
-        import pandas as pd
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        schema = StructType(
-            [StructField(f"s{i}", LongType()) for i in range(len(key))]
-        )
-
-        def _fn(texts, _bases=key):
-            cols = _charfold_simhash_fn(texts, _bases)
-            return pd.concat(
-                {f"s{i}": c for i, c in enumerate(cols)}, axis=1
-            )
-
-        _CHARFOLD_SIMHASH_UDFS[key] = F.pandas_udf(_fn, schema)
-    return _CHARFOLD_SIMHASH_UDFS[key](text)
+    return _charfold_simhash_udf(tuple(bases))(text)
 
 
-_SIMHASH_VOTES_UDF = None
+@functools.cache
+def _simhash_votes_udf():
+    from pyspark.sql.types import LongType
+
+    return F.pandas_udf(_simhash_votes_fn, LongType())
 
 
 def simhash(text: Column, token_col_hash_bits: int = 64) -> Column:
@@ -1289,12 +1202,7 @@ def simhash(text: Column, token_col_hash_bits: int = 64) -> Column:
         raise ValueError("simhash supports only 64-bit signatures")
     toks = F.split(F.trim(F.lower(text)), r"\s+")
     hashes = F.transform(toks, lambda t: F.xxhash64(t))
-    global _SIMHASH_VOTES_UDF
-    if _SIMHASH_VOTES_UDF is None:
-        from pyspark.sql.types import LongType
-
-        _SIMHASH_VOTES_UDF = F.pandas_udf(_simhash_votes_fn, LongType())
-    return _SIMHASH_VOTES_UDF(hashes)
+    return _simhash_votes_udf()(hashes)
 
 
 def simhash_signatures(
@@ -1560,9 +1468,10 @@ def _positional_gram_hashes(
     :func:`shared_ngram_runs`, one vectorized numpy pass per Arrow batch
     (r11, guide §4.2 + §2.3). The replaced JVM chain built every gram
     STRING (interpreted transform + array_join over slices) and then
-    xxhash64-ed it; here token hashes are a batched byte-polynomial and
-    each gram hash is the base-power combination of its k token hashes
-    (uint64 wrap arithmetic) — gram strings never materialize.
+    xxhash64-ed it; here token hashes are :func:`token_poly` (base
+    1000003, 64 bits, +1 so an empty token is not 0) and each gram hash
+    is the base-power combination of its k token hashes (uint64 wrap
+    arithmetic) — gram strings never materialize.
 
     Semantics: tokens are ``text.split(" ")`` (the operator's exact
     split — single space, empties kept); space-free tokens make
@@ -1575,81 +1484,29 @@ def _positional_gram_hashes(
     import numpy as np
     import pyarrow as pa
 
-    B_TOK = np.uint64(1000003)
-    B_GRAM = np.uint64(0x9E3779B97F4A7C15)
-    ddl = f"{id_col} long, pos int, g long"
+    gpow = pow_table(0x9E3779B97F4A7C15, k, 64)[::-1]  # B_GRAM^(k-1-j)
     schema = pa.schema(
-        [
-            pa.field(id_col, pa.int64()),
-            pa.field("pos", pa.int32()),
-            pa.field("g", pa.int64()),
-        ]
+        [(id_col, pa.int64()), ("pos", pa.int32()), ("g", pa.int64())]
     )
-    gpow = np.empty(k, dtype=np.uint64)
-    gpow[k - 1] = 1
-    for j in range(k - 2, -1, -1):
-        gpow[j] = gpow[j + 1] * B_GRAM
 
-    def emit(batches):
-        for batch in batches:
-            ids = batch.column(id_col).to_pylist()
-            txts = batch.column(text_col).to_pylist()
-            out_id: list = []
-            out_pos: list = []
-            out_g: list = []
-            toks_per_doc = [
-                (t or "").split(" ") if t is not None else [] for t in txts
-            ]
-            all_toks = [t for w in toks_per_doc for t in w]
-            # batched token hashes: byte polynomial in uint64
-            th = np.zeros(len(all_toks), dtype=np.uint64)
-            if all_toks:
-                lens = np.array([len(t) for t in all_toks], dtype=np.int64)
-                buf = np.frombuffer(
-                    "".join(all_toks).encode("utf-8"), dtype=np.uint8
-                ).astype(np.uint64)
-                if len(buf) != int(lens.sum()):  # non-ASCII: re-measure lens
-                    blens = np.array(
-                        [len(t.encode("utf-8")) for t in all_toks],
-                        dtype=np.int64,
-                    )
-                    lens = blens
-                ends = np.cumsum(lens)
-                starts = ends - lens
-                maxlen = int(lens.max()) if len(lens) else 1
-                powtab = np.empty(max(maxlen, 1), dtype=np.uint64)
-                powtab[0] = 1
-                for i in range(1, maxlen):
-                    powtab[i] = powtab[i - 1] * B_TOK
-                tok_idx = np.repeat(
-                    np.arange(len(all_toks), dtype=np.int64), lens
-                )
-                e = ends[tok_idx] - 1 - np.arange(len(buf), dtype=np.int64)
-                contrib = buf * powtab[e]
-                ne = lens > 0
-                if ne.any():
-                    sums = np.zeros(len(all_toks), dtype=np.uint64)
-                    sums[ne] = np.add.reduceat(contrib, starts[ne])
-                    th = sums + np.uint64(1)  # +1: empty token hash != 0
-                else:
-                    th = np.full(len(all_toks), np.uint64(1))
-            off = 0
-            for did, w in zip(ids, toks_per_doc):
-                n = len(w)
-                if n >= k:
-                    dth = th[off:off + n]
-                    H = np.zeros(n - k + 1, dtype=np.uint64)
-                    for j in range(k):
-                        H += dth[j:j + n - k + 1] * gpow[j]
-                    out_id.extend([did] * len(H))
-                    out_pos.extend(range(1, len(H) + 1))
-                    out_g.extend(H.view(np.int64).tolist())
-                off += n
-            yield pa.RecordBatch.from_pydict(
-                {id_col: out_id, "pos": out_pos, "g": out_g}, schema=schema
-            )
+    def emit(b):
+        toks = [[] if t is None else t.split(" ") for t in b[text_col]]
+        th = token_poly([t for w in toks for t in w], 1000003, 64) + np.uint64(1)
+        out: dict = {id_col: [], "pos": [], "g": []}
+        off = 0
+        for did, w in zip(b[id_col], toks):
+            n = len(w)
+            if n >= k:
+                H = np.zeros(n - k + 1, dtype=np.uint64)
+                for j in range(k):
+                    H += th[off + j:off + j + n - k + 1] * gpow[j]
+                out[id_col].extend([did] * len(H))
+                out["pos"].extend(range(1, len(H) + 1))
+                out["g"].extend(H.view(np.int64).tolist())
+            off += n
+        return out
 
-    return docs.select(id_col, text_col).mapInArrow(emit, ddl)
+    return arrow_pass(docs.select(id_col, text_col), emit, schema)
 
 
 def shared_ngram_runs(

@@ -11,6 +11,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from etl_data_processor_spark.ops.arrays import map_lookup
+
 # Danish month-name -> month number, as in the reference's month map
 # (main.py:29-42) used by its approval-date extractor (main.py:217-232).
 DANISH_MONTHS: dict[str, str] = {
@@ -85,18 +87,15 @@ def normalize_danish_date(text: Column) -> Column:
     """A9 (main.py:217-232): extract 'Godkendt den <d>. <danish-month> <yyyy>'
     and normalize to 'YYYY-MM-DD' (zero-padded day, month via the Danish map).
 
-    The month map is applied with ``create_map`` — a literal broadcast lookup,
-    deterministic on every JVM locale (SURVEY.md §7 risk register says avoid
-    ``to_date(locale=da)``).
+    The month map is applied with :func:`arrays.map_lookup` — a literal
+    broadcast lookup, deterministic on every JVM locale (SURVEY.md §7 risk
+    register says avoid ``to_date(locale=da)``).
     """
     pattern = r"(?i)Godkendt den (\d{1,2})\.? ([a-zæøå]+) (\d{4})"
     day = F.regexp_extract(text, pattern, 1)
     month_name = F.lower(F.regexp_extract(text, pattern, 2))
     year = F.regexp_extract(text, pattern, 3)
-    month_map = F.create_map(
-        *[F.lit(x) for kv in DANISH_MONTHS.items() for x in kv]
-    )
-    month = month_map.getItem(month_name)
+    month = map_lookup(DANISH_MONTHS, month_name)
     return F.when(
         (day != "") & month.isNotNull(),
         F.concat_ws("-", year, month, F.lpad(day, 2, "0")),

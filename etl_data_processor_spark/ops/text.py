@@ -9,6 +9,8 @@ pipeline runs over 100 TB before anything expensive.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -71,19 +73,18 @@ def _char_entropy_q12_fn(texts):
     return pd.Series(out, dtype="Int64")
 
 
-_CHAR_ENTROPY_UDF = None
+@functools.cache
+def _char_entropy_udf():
+    from pyspark.sql.types import LongType
+
+    return F.pandas_udf(_char_entropy_q12_fn, LongType())
 
 
 def char_entropy_q12(text: Column) -> Column:
     """Column form of :func:`_char_entropy_q12_fn` (the pandas UDF is
     built lazily — decorating at import time would parse the return
     type before any session exists)."""
-    global _CHAR_ENTROPY_UDF
-    if _CHAR_ENTROPY_UDF is None:
-        from pyspark.sql.types import LongType
-
-        _CHAR_ENTROPY_UDF = F.pandas_udf(_char_entropy_q12_fn, LongType())
-    return _CHAR_ENTROPY_UDF(text)
+    return _char_entropy_udf()(text)
 
 
 def token_count(text: Column) -> Column:
@@ -334,7 +335,7 @@ def symdelete_hash_arrays(name_col: str) -> Column:
     single largest stage of both linkage keys. This pass computes the
     variant hashes WITHOUT materializing variant strings: a polynomial
     rolling hash over the UTF-32 code points gives every deletion
-    variant's hash from prefix hashes + power tables in O(1) each,
+    variant's hash from prefix hashes + :func:`pow_table` powers in O(1) each,
     batched across all rows of equal length in numpy (uint64 wraparound
     arithmetic), then a splitmix64 finalizer + variant-length salt
     decorrelates the lattice. Per-row ``array_distinct`` semantics are
@@ -360,7 +361,6 @@ def symdelete_hash_arrays(name_col: str) -> Column:
     from pyspark.sql.types import ArrayType, LongType
 
     B = 0x100000001B3  # FNV-64 prime as the polynomial base
-    M64 = 0xFFFFFFFFFFFFFFFF
 
     pair_cache: dict = {}
 
@@ -385,13 +385,7 @@ def symdelete_hash_arrays(name_col: str) -> Column:
         """(N, L) uint64 code points -> (N, V) variant hashes, V =
         1 + L + L(L-1)/2, unsorted, undeduped."""
         n, length = chars.shape
-        # powers in Python ints (numpy warns on SCALAR uint overflow;
-        # the array wraparound below is silent by design)
-        acc, pws = 1, [1]
-        for _ in range(length):
-            acc = (acc * B) & M64
-            pws.append(acc)
-        pw = np.array(pws, dtype=np.uint64)
+        pw = pow_table(B, length + 1, 64)
         P = np.empty((n, length + 1), dtype=np.uint64)
         P[:, 0] = np.uint64(0)
         for t in range(length):
@@ -1140,6 +1134,102 @@ def char_poly_hash_sql(expr: str) -> str:
     )
 
 
+def pow_table(base: int, n: int, bits: int):
+    """``uint64[n]`` of ``base**i mod 2**bits`` for i = 0..n-1, built
+    from masked Python ints (a numpy uint64 SCALAR product warns on
+    overflow; the ARRAY products that consume the table wrap silently,
+    which is the arithmetic :func:`token_poly` relies on)."""
+    import numpy as np
+
+    mask = (1 << bits) - 1
+    out, acc = [], 1
+    for _ in range(n):
+        out.append(acc)
+        acc = (acc * base) & mask
+    return np.array(out, dtype=np.uint64)
+
+
+def token_poly(tokens: list, base: int, bits: int):
+    """Per-token polynomial hashes as ``uint64[len(tokens)]`` — the
+    batched Python twin of :func:`char_poly_hash` (``base=31, bits=32``)
+    and the one token-hash kernel of every Arrow pass in this module
+    and in ops.dedup. The exactness contract, stated once here:
+
+    - Code points: h(t) = sum_j ord(t[j]) * base^(L-1-j) mod 2^bits with
+      L = len(t), i.e. the Horner fold ``h = (h*base + ord(c)) mod
+      2^bits`` over the token's UTF-32 code points. A non-BMP character
+      is ONE term (Python's ``ord``; ``ascii()`` in the JVM twin returns
+      the same first code point), so no input needs a fallback path.
+    - Power-of-two modulus: ``1 <= bits <= 64`` is asserted — the
+      modulus is 2^bits, never an arbitrary prime.
+    - Wraparound: the power table (:func:`pow_table`), every
+      code-point * power product and the per-token ``reduceat`` sum run
+      in uint64, whose wraparound is reduction mod 2^64; 2^bits divides
+      2^64, so the final mask is exact however large the intermediates
+      (or the token) get.
+    - Null and empty: an empty token hashes to 0. Tokens must be ``str``
+      — callers map a NULL text to zero tokens, so NULL never reaches
+      the kernel.
+    """
+    import numpy as np
+
+    assert 1 <= bits <= 64, "token_poly needs a 2**bits modulus, bits <= 64"
+    lens = np.fromiter(map(len, tokens), dtype=np.int64, count=len(tokens))
+    cps = np.frombuffer(
+        "".join(tokens).encode("utf-32-le", "surrogatepass"), dtype=np.uint32
+    )
+    ends = np.cumsum(lens)
+    exps = np.repeat(ends - 1, lens) - np.arange(len(cps))
+    terms = cps * pow_table(base, int(lens.max(initial=0)), bits)[exps]
+    out = np.zeros(len(tokens), dtype=np.uint64)
+    ne = lens > 0
+    if ne.any():
+        out[ne] = np.add.reduceat(terms, (ends - lens)[ne])
+    return out & np.uint64((1 << bits) - 1)
+
+
+def arrow_pass(df: DataFrame, fn, schema) -> DataFrame:
+    """``df.mapInArrow`` running ``fn`` once per Arrow batch — the one
+    scaffold of every Arrow pass in this module and in ops.dedup.
+
+    ``fn`` takes the batch as ``{column: list}`` and returns
+    ``{field: list}`` for the fields of the ``pa.Schema`` ``schema``
+    (extra keys are ignored; empty lists make an empty batch). The Spark
+    schema is derived from ``schema`` with ``from_arrow_schema`` (int32
+    -> int, int64 -> bigint, string -> string, all nullable), so a pass
+    declares its output types once.
+
+    Exactness contract of the passes built on it: NULL arrives as
+    ``None`` and a NULL text is treated as the empty string (zero
+    tokens, so it contributes no token, gram or count); token hashes are
+    :func:`token_poly`; passes emit only exact integers and exact
+    strings, and every division and final aggregate stays in the
+    caller's JVM plan, so the keys stay value-oracled bit for bit.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    def run(batches):
+        for batch in batches:
+            yield pa.RecordBatch.from_pydict(fn(batch.to_pydict()), schema=schema)
+
+    return df.mapInArrow(run, from_arrow_schema(schema))
+
+
+def _key_fields(key_col: str | None, key_ddl: str) -> list:
+    """The optional leading key field of a keyed pass's ``pa.schema``."""
+    import pyarrow as pa
+
+    if key_col is None:
+        return []
+    return [(key_col, pa.int64() if key_ddl == "long" else pa.string())]
+
+
+def _columns(names: tuple, rows: list) -> dict:
+    """Row tuples -> the ``{name: column}`` dict :func:`arrow_pass` takes."""
+    return {name: [r[i] for r in rows] for i, name in enumerate(names)}
+
+
 def token_poly_bucket_counts(
     docs: DataFrame,
     mod: int,
@@ -1148,122 +1238,45 @@ def token_poly_bucket_counts(
     text_col: str = "text",
 ) -> DataFrame:
     """Hashed-unigram bucket counts for the DSIR family in ONE Arrow
-    pass (r11, guide §4.2): tokenize + per-char Horner fold
-    (:func:`char_poly_hash`, base 31 mod 2^32) + pmod bucket + count,
+    pass (r11, guide §4.2): tokenize + :func:`token_poly` (base 31 mod
+    2^32, i.e. :func:`char_poly_hash`) + pmod bucket + count,
     batch-aggregated. The replaced JVM chain evaluated the char fold as
     an interpreted lambda PER CHARACTER of the full corpus token
     stream — the dominant stage of q_selection_pipeline's DSIR leg.
 
-    Exactness: tokens from ``str.split()`` (== tokenize's trim+\\s+ on
-    this corpus, the proven equivalence); the fold is exact uint64
-    arithmetic (code * 31^j sums < 2^51 before each mod; non-ASCII
-    falls back to the exact scalar fold, ord == the codepoint
-    ``ascii()`` returns); bucket = h % mod on the non-negative 32-bit
-    fold == pmod. Counts are exact integers; the caller's aggregates
-    and joins stay in the JVM.
+    Tokens from ``str.split()`` (== tokenize's trim+\\s+ on this corpus);
+    hashing, NULL and empty handling as in :func:`token_poly` /
+    :func:`arrow_pass`; bucket = h % mod on the non-negative 32-bit hash
+    == pmod.
 
     Output: ``(key, bucket long, c long)`` rows when ``key_col`` is
     given (per-key bucket counts, <= mod rows per key per batch), else
     ``(bucket long, c long)``.
     """
-    from collections import Counter
-
     import numpy as np
     import pyarrow as pa
 
-    m32 = np.uint64(_POLY_MOD)
-
-    def _hashes(all_toks: list) -> "np.ndarray":
-        joined = "".join(all_toks)
-        tok_lens = np.array([len(t) for t in all_toks], dtype=np.int64)
-        try:
-            buf = np.frombuffer(joined.encode("ascii"), dtype=np.uint8).astype(
-                np.uint64
-            )
-        except UnicodeEncodeError:
-            out = np.empty(len(all_toks), dtype=np.uint64)
-            for i, t in enumerate(all_toks):
-                h = 0
-                for c in t:
-                    h = (h * 31 + ord(c)) % _POLY_MOD
-                out[i] = h
-            return out
-        tok_ends = np.cumsum(tok_lens)
-        tok_starts = tok_ends - tok_lens
-        maxlen = int(tok_lens.max()) if len(tok_lens) else 1
-        powtab = np.empty(max(maxlen, 1), dtype=np.uint64)
-        powtab[0] = 1
-        for i in range(1, maxlen):
-            powtab[i] = (powtab[i - 1] * np.uint64(31)) % m32
-        tok_idx = np.repeat(np.arange(len(all_toks), dtype=np.int64), tok_lens)
-        e = tok_ends[tok_idx] - 1 - np.arange(len(buf), dtype=np.int64)
-        contrib = buf * powtab[e]
-        hs = np.zeros(len(all_toks), dtype=np.uint64)
-        ne = tok_lens > 0
-        if ne.any():
-            hs[ne] = np.add.reduceat(contrib, tok_starts[ne]) % m32
-        return hs
-
-    if key_col is not None:
-        ddl = f"{key_col} {key_ddl}, bucket long, c long"
-        schema = pa.schema(
-            [
-                pa.field(key_col, pa.int64() if key_ddl == "long" else pa.string()),
-                pa.field("bucket", pa.int64()),
-                pa.field("c", pa.int64()),
-            ]
+    def count(b):
+        keys = b[key_col] if key_col else [None] * len(b[text_col])
+        words = [(t or "").split() for t in b[text_col]]
+        codes: dict = {}  # key -> dense owner code
+        owner = np.repeat(
+            np.array([codes.setdefault(k, len(codes)) for k in keys], dtype=np.int64),
+            [len(w) for w in words],
         )
+        bks = token_poly([t for w in words for t in w], 31, 32) % np.uint64(mod)
+        vals, cnt = np.unique(owner * mod + bks.astype(np.int64), return_counts=True)
+        ukeys = list(codes)
+        return {
+            key_col: [ukeys[o] for o in (vals // mod).tolist()],
+            "bucket": (vals % mod).tolist(),
+            "c": cnt.tolist(),
+        }
 
-        def emit(batches):
-            for batch in batches:
-                keys = batch.column(key_col).to_pylist()
-                txts = batch.column(text_col).to_pylist()
-                toks: list = []
-                owners: list = []
-                for kv, t in zip(keys, txts):
-                    w = (t or "").split()
-                    toks.extend(w)
-                    owners.extend([kv] * len(w))
-                cnt: Counter = Counter()
-                if toks:
-                    bks = (_hashes(toks) % np.uint64(mod)).astype(np.int64)
-                    for kv, bk in zip(owners, bks.tolist()):
-                        cnt[(kv, bk)] += 1
-                ks, bs, cs = [], [], []
-                for (kv, bk), c in cnt.items():
-                    ks.append(kv)
-                    bs.append(bk)
-                    cs.append(c)
-                yield pa.RecordBatch.from_pydict(
-                    {key_col: ks, "bucket": bs, "c": cs}, schema=schema
-                )
-
-        return docs.select(key_col, text_col).mapInArrow(emit, ddl)
-
-    ddl = "bucket long, c long"
     schema = pa.schema(
-        [pa.field("bucket", pa.int64()), pa.field("c", pa.int64())]
+        _key_fields(key_col, key_ddl) + [("bucket", pa.int64()), ("c", pa.int64())]
     )
-
-    def emit0(batches):
-        for batch in batches:
-            txts = batch.column(text_col).to_pylist()
-            toks = []
-            for t in txts:
-                toks.extend((t or "").split())
-            if toks:
-                bks = (_hashes(toks) % np.uint64(mod)).astype(np.int64)
-                vals, counts = np.unique(bks, return_counts=True)
-                yield pa.RecordBatch.from_pydict(
-                    {"bucket": vals.tolist(), "c": counts.tolist()},
-                    schema=schema,
-                )
-            else:
-                yield pa.RecordBatch.from_pydict(
-                    {"bucket": [], "c": []}, schema=schema
-                )
-
-    return docs.select(text_col).mapInArrow(emit0, ddl)
+    return arrow_pass(docs.select(*filter(None, (key_col, text_col))), count, schema)
 
 
 def pair_clip_gram_counts(
@@ -1289,9 +1302,8 @@ def pair_clip_gram_counts(
     the clip both precision (BLEU: m/t_cand) and recall (ROUGE/chrF
     legs: m/t_ref) metrics share — and t_* are the gram-occurrence
     totals per side. Token mode also emits lc/lr (uncapped token
-    counts, BLEU's brevity-penalty lengths). All values are exact
-    integers; every float division stays in the caller's JVM
-    expressions, so the keys remain value-oracled bit-for-bit.
+    counts, BLEU's brevity-penalty lengths). Values follow the
+    :func:`arrow_pass` contract.
 
     Why this shape (measured, r10): the explode form shuffles each
     side's full gram-count multiset (tens of MB at sf0.1; ~10-50x the
@@ -1309,18 +1321,15 @@ def pair_clip_gram_counts(
     import pyarrow as pa
 
     token_mode = mode == "token"
-    fields = [
-        pa.field("source", pa.string()),
-        pa.field("n", pa.int32()),
-        pa.field("m", pa.int64()),
-        pa.field("t_ref", pa.int64()),
-        pa.field("t_cand", pa.int64()),
-    ]
-    if token_mode:
-        fields += [pa.field("lc", pa.int64()), pa.field("lr", pa.int64())]
-    out_schema = pa.schema(fields)
-    ddl = "source string, n int, m long, t_ref long, t_cand long" + (
-        ", lc long, lr long" if token_mode else ""
+    schema = pa.schema(
+        [
+            ("source", pa.string()),
+            ("n", pa.int32()),
+            ("m", pa.int64()),
+            ("t_ref", pa.int64()),
+            ("t_cand", pa.int64()),
+        ]
+        + ([("lc", pa.int64()), ("lr", pa.int64())] if token_mode else [])
     )
 
     def counts(units, n, memo=None, key=None):
@@ -1341,42 +1350,37 @@ def pair_clip_gram_counts(
             memo[(key, n)] = c
         return c
 
-    def score(batches):
-        for batch in batches:
-            src = batch.column("source").to_pylist()
-            rid = batch.column("rid").to_pylist()
-            ctxt = batch.column("__c").to_pylist()
-            rtxt = batch.column("__r").to_pylist()
-            memo: dict = {}
-            out = {f.name: [] for f in fields}
-            for s, r, ct, rt in zip(src, rid, ctxt, rtxt):
-                ct, rt = ct or "", rt or ""  # null text == no grams
-                cu = ct.split() if token_mode else ct
-                ru = rt.split() if token_mode else rt
-                for n in orders:
-                    cc = counts(cu, n)
-                    rc = counts(ru, n, memo, r)
-                    if len(cc) < len(rc):
-                        m = sum(
-                            min(k_c, rc[g])
-                            for g, k_c in cc.items() if g in rc
-                        )
-                    else:
-                        m = sum(
-                            min(k_r, cc[g])
-                            for g, k_r in rc.items() if g in cc
-                        )
-                    out["source"].append(s)
-                    out["n"].append(n)
-                    out["m"].append(m)
-                    out["t_ref"].append(sum(rc.values()))
-                    out["t_cand"].append(sum(cc.values()))
-                    if token_mode:
-                        out["lc"].append(len(cu))
-                        out["lr"].append(len(ru))
-            yield pa.RecordBatch.from_pydict(out, schema=out_schema)
+    def score(b):
+        memo: dict = {}
+        out: dict = {name: [] for name in schema.names}
+        for s, r, ct, rt in zip(b["source"], b["rid"], b["__c"], b["__r"]):
+            ct, rt = ct or "", rt or ""  # null text == no grams
+            cu = ct.split() if token_mode else ct
+            ru = rt.split() if token_mode else rt
+            for n in orders:
+                cc = counts(cu, n)
+                rc = counts(ru, n, memo, r)
+                if len(cc) < len(rc):
+                    m = sum(
+                        min(k_c, rc[g])
+                        for g, k_c in cc.items() if g in rc
+                    )
+                else:
+                    m = sum(
+                        min(k_r, cc[g])
+                        for g, k_r in rc.items() if g in cc
+                    )
+                out["source"].append(s)
+                out["n"].append(n)
+                out["m"].append(m)
+                out["t_ref"].append(sum(rc.values()))
+                out["t_cand"].append(sum(cc.values()))
+                if token_mode:
+                    out["lc"].append(len(cu))
+                    out["lr"].append(len(ru))
+        return out
 
-    return pairs_txt.mapInArrow(score, ddl)
+    return arrow_pass(pairs_txt, score, schema)
 
 
 def doc_grams_arrow(
@@ -1400,14 +1404,14 @@ def doc_grams_arrow(
     the identical move as pair_clip_gram_counts (r10, measured 34 ->
     0.35 cpu-s on q_chrf_eval).
 
-    Exactness: tokens come from ``str.split()`` (same semantics as
-    ops.text.tokenize's trim+\\s+ on this corpus — the proven
-    pair_clip_gram_counts equivalence); grams are plain space-joins of
-    token slices, and short/empty/null docs emit nothing, which is the
-    DuckDB oracle's ``WHERE i + n - 1 <= len(w)`` guard exactly.
+    Tokens come from ``str.split()`` (same semantics as
+    ops.text.tokenize's trim+\\s+ on this corpus); grams are plain
+    space-joins of token slices, and short/empty/null docs emit nothing,
+    which is the DuckDB oracle's ``WHERE i + n - 1 <= len(w)`` guard
+    exactly. One gram generator feeds a per-shape reducer; values follow
+    the :func:`arrow_pass` contract.
 
-    Shapes (all emit only exact integers / exact strings; every
-    division and final aggregate stays in the caller's JVM plan):
+    Shapes (``key_col=None`` drops the key column):
 
     - ``doc_distinct``: one row ``(key, g)`` per DISTINCT gram of each
       doc, single order ``orders[0]``. Valid because each input ROW is
@@ -1427,127 +1431,47 @@ def doc_grams_arrow(
 
     import pyarrow as pa
 
-    if shape == "batch_counts" and key_col is None:
-        # keyless variant: corpus-global gram-occurrence counts per batch
-        ddl = "n int, g string, c long"
-        schema = pa.schema(
-            [
-                pa.field("n", pa.int32()),
-                pa.field("g", pa.string()),
-                pa.field("c", pa.int64()),
-            ]
+    n0 = orders[0]
+
+    def doc_tokens(b):
+        keys = b[key_col] if key_col else [None] * len(b[text_col])
+        return zip(keys, ((t or "").split() for t in b[text_col]))
+
+    def grams(w, n):
+        return [" ".join(w[i:i + n]) for i in range(len(w) - n + 1)]
+
+    def batch_counts(b):
+        cnt = Counter(
+            (k, n, g) for k, w in doc_tokens(b) for n in orders for g in grams(w, n)
         )
+        return {**_columns((key_col, "n", "g"), list(cnt)), "c": list(cnt.values())}
 
-        def emit_k0(batches):
-            for batch in batches:
-                txts = batch.column(text_col).to_pylist()
-                cnt: Counter = Counter()
-                for t in txts:
-                    w = (t or "").split()
-                    top = len(w) + 1
-                    for n in orders:
-                        for i in range(top - n):
-                            cnt[(n, " ".join(w[i:i + n]))] += 1
-                ns, gs, cs = [], [], []
-                for (n, g), c in cnt.items():
-                    ns.append(n)
-                    gs.append(g)
-                    cs.append(c)
-                yield pa.RecordBatch.from_pydict(
-                    {"n": ns, "g": gs, "c": cs}, schema=schema
-                )
+    def doc_distinct(b):
+        ks: list = []
+        gs: list = []
+        for k, w in doc_tokens(b):
+            seen = set(grams(w, n0))
+            ks += [k] * len(seen)
+            gs += seen
+        return {key_col: ks, "g": gs}
 
-        return docs.select(text_col).mapInArrow(emit_k0, ddl)
+    def doc_counts(b):
+        rows = [(k, len(set(grams(w, n0)))) for k, w in doc_tokens(b) if len(w) >= n0]
+        return _columns((key_col, "n_grams"), rows)
 
-    if shape == "batch_counts":
-        ddl = f"{key_col} {key_ddl}, n int, g string, c long"
-        schema = pa.schema(
-            [
-                pa.field(key_col, pa.int64() if key_ddl == "long" else pa.string()),
-                pa.field("n", pa.int32()),
-                pa.field("g", pa.string()),
-                pa.field("c", pa.int64()),
-            ]
-        )
-
-        def emit(batches):
-            for batch in batches:
-                keys = batch.column(key_col).to_pylist()
-                txts = batch.column(text_col).to_pylist()
-                cnt: Counter = Counter()
-                for k, t in zip(keys, txts):
-                    w = (t or "").split()
-                    top = len(w) + 1
-                    for n in orders:
-                        for i in range(top - n):
-                            cnt[(k, n, " ".join(w[i:i + n]))] += 1
-                ks, ns, gs, cs = [], [], [], []
-                for (k, n, g), c in cnt.items():
-                    ks.append(k)
-                    ns.append(n)
-                    gs.append(g)
-                    cs.append(c)
-                yield pa.RecordBatch.from_pydict(
-                    {key_col: ks, "n": ns, "g": gs, "c": cs}, schema=schema
-                )
-
-    elif shape == "doc_distinct":
-        n0 = orders[0]
-        ddl = f"{key_col} {key_ddl}, g string"
-        schema = pa.schema(
-            [
-                pa.field(key_col, pa.int64() if key_ddl == "long" else pa.string()),
-                pa.field("g", pa.string()),
-            ]
-        )
-
-        def emit(batches):
-            for batch in batches:
-                keys = batch.column(key_col).to_pylist()
-                txts = batch.column(text_col).to_pylist()
-                ks, gs = [], []
-                for k, t in zip(keys, txts):
-                    w = (t or "").split()
-                    seen = {
-                        " ".join(w[i:i + n0]) for i in range(len(w) - n0 + 1)
-                    }
-                    ks.extend([k] * len(seen))
-                    gs.extend(seen)
-                yield pa.RecordBatch.from_pydict(
-                    {key_col: ks, "g": gs}, schema=schema
-                )
-
-    elif shape == "doc_counts":
-        n0 = orders[0]
-        ddl = f"{key_col} {key_ddl}, n_grams long"
-        schema = pa.schema(
-            [
-                pa.field(key_col, pa.int64() if key_ddl == "long" else pa.string()),
-                pa.field("n_grams", pa.int64()),
-            ]
-        )
-
-        def emit(batches):
-            for batch in batches:
-                keys = batch.column(key_col).to_pylist()
-                txts = batch.column(text_col).to_pylist()
-                ks, cs = [], []
-                for k, t in zip(keys, txts):
-                    w = (t or "").split()
-                    nd = len({
-                        " ".join(w[i:i + n0]) for i in range(len(w) - n0 + 1)
-                    })
-                    if nd:
-                        ks.append(k)
-                        cs.append(nd)
-                yield pa.RecordBatch.from_pydict(
-                    {key_col: ks, "n_grams": cs}, schema=schema
-                )
-
-    else:  # pragma: no cover - programming error
+    reducers = {
+        "batch_counts": (
+            batch_counts,
+            [("n", pa.int32()), ("g", pa.string()), ("c", pa.int64())],
+        ),
+        "doc_distinct": (doc_distinct, [("g", pa.string())]),
+        "doc_counts": (doc_counts, [("n_grams", pa.int64())]),
+    }
+    if shape not in reducers:  # pragma: no cover - programming error
         raise ValueError(f"unknown shape {shape!r}")
-
-    return docs.select(key_col, text_col).mapInArrow(emit, ddl)
+    fn, fields = reducers[shape]
+    schema = pa.schema(_key_fields(key_col, key_ddl) + fields)
+    return arrow_pass(docs.select(*filter(None, (key_col, text_col))), fn, schema)
 
 
 def span_corrupt_t5(docs: DataFrame, salt: int, mod: int) -> DataFrame:
@@ -1562,11 +1486,11 @@ def span_corrupt_t5(docs: DataFrame, salt: int, mod: int) -> DataFrame:
 
     Exactness vs the unchanged DuckDB oracle: tokens come from
     ``str.split()`` (same semantics as ops.text.tokenize's trim+\\s+ on
-    this corpus — the proven pair_clip_gram_counts equivalence); the
-    mask hash replicates ops.sampling.hash32 in uint64 numpy (every
-    intermediate < 2^62, masks at & (2^32-1) exactly like pmod on
-    non-negative keys); strings are exact Python joins. Docs with zero
-    tokens emit no row, mirroring the explode+groupBy form.
+    this corpus); the mask hash replicates ops.sampling.hash32 in
+    uint64 numpy (every intermediate < 2^62, masks at & (2^32-1)
+    exactly like pmod on non-negative keys); the rest is the
+    :func:`arrow_pass` contract. Docs with zero tokens emit no row,
+    mirroring the explode+groupBy form.
 
     Input: ``(doc_id long, text string)``. Output: one row per non-empty
     doc: ``(doc_id, n_tokens, n_masked, n_spans, inputs, targets)``.
@@ -1582,66 +1506,58 @@ def span_corrupt_t5(docs: DataFrame, salt: int, mod: int) -> DataFrame:
     s16 = np.uint64(16)
     s13 = np.uint64(13)
 
-    names = ["doc_id", "n_tokens", "n_masked", "n_spans", "inputs", "targets"]
-    out_schema = pa.schema(
+    schema = pa.schema(
         [
-            pa.field("doc_id", pa.int64()),
-            pa.field("n_tokens", pa.int64()),
-            pa.field("n_masked", pa.int64()),
-            pa.field("n_spans", pa.int64()),
-            pa.field("inputs", pa.string()),
-            pa.field("targets", pa.string()),
+            ("doc_id", pa.int64()),
+            ("n_tokens", pa.int64()),
+            ("n_masked", pa.int64()),
+            ("n_spans", pa.int64()),
+            ("inputs", pa.string()),
+            ("targets", pa.string()),
         ]
     )
-    ddl = (
-        "doc_id long, n_tokens long, n_masked long, n_spans long, "
-        "inputs string, targets string"
-    )
 
-    def transform(batches):
-        for batch in batches:
-            ids = batch.column("doc_id").to_pylist()
-            txts = batch.column("text").to_pylist()
-            out: dict = {k: [] for k in names}
-            for did, txt in zip(ids, txts):
-                toks = (txt or "").split()
-                nt = len(toks)
-                if nt == 0:
-                    continue
-                # hash32(doc_id * salt + pos) % mod == 0, pos = 1..nt
-                key = np.arange(1, nt + 1, dtype=np.uint64) + np.uint64(
-                    did * salt
-                )
-                h = key & mask32
-                h = (h * a1) & mask32
-                h = h ^ (h >> s16)
-                h = (h * a2) & mask32
-                h = h ^ (h >> s13)
-                masked = (h % np.uint64(mod)) == 0
-                prev = np.empty_like(masked)
-                prev[0] = False
-                prev[1:] = masked[:-1]
-                span_start = masked & ~prev
-                span_id = np.cumsum(span_start) - 1
-                inp: list = []
-                tgt: list = []
-                for t, mk, st, sid in zip(
-                    toks, masked.tolist(), span_start.tolist(),
-                    span_id.tolist(),
-                ):
-                    if not mk:
-                        inp.append(t)
-                    elif st:
-                        inp.append(f"<extra_id_{sid}>")
-                        tgt.append(f"<extra_id_{sid}> {t}")
-                    else:
-                        tgt.append(t)
-                out["doc_id"].append(did)
-                out["n_tokens"].append(nt)
-                out["n_masked"].append(int(masked.sum()))
-                out["n_spans"].append(int(span_start.sum()))
-                out["inputs"].append(" ".join(inp))
-                out["targets"].append(" ".join(tgt))
-            yield pa.RecordBatch.from_pydict(out, schema=out_schema)
+    def transform(b):
+        out: dict = {k: [] for k in schema.names}
+        for did, txt in zip(b["doc_id"], b["text"]):
+            toks = (txt or "").split()
+            nt = len(toks)
+            if nt == 0:
+                continue
+            # hash32(doc_id * salt + pos) % mod == 0, pos = 1..nt
+            key = np.arange(1, nt + 1, dtype=np.uint64) + np.uint64(
+                did * salt
+            )
+            h = key & mask32
+            h = (h * a1) & mask32
+            h = h ^ (h >> s16)
+            h = (h * a2) & mask32
+            h = h ^ (h >> s13)
+            masked = (h % np.uint64(mod)) == 0
+            prev = np.empty_like(masked)
+            prev[0] = False
+            prev[1:] = masked[:-1]
+            span_start = masked & ~prev
+            span_id = np.cumsum(span_start) - 1
+            inp: list = []
+            tgt: list = []
+            for t, mk, st, sid in zip(
+                toks, masked.tolist(), span_start.tolist(),
+                span_id.tolist(),
+            ):
+                if not mk:
+                    inp.append(t)
+                elif st:
+                    inp.append(f"<extra_id_{sid}>")
+                    tgt.append(f"<extra_id_{sid}> {t}")
+                else:
+                    tgt.append(t)
+            out["doc_id"].append(did)
+            out["n_tokens"].append(nt)
+            out["n_masked"].append(int(masked.sum()))
+            out["n_spans"].append(int(span_start.sum()))
+            out["inputs"].append(" ".join(inp))
+            out["targets"].append(" ".join(tgt))
+        return out
 
-    return docs.mapInArrow(transform, ddl)
+    return arrow_pass(docs.select("doc_id", "text"), transform, schema)

@@ -31,6 +31,22 @@ def q(name: str, sql: str | None = None):
     return deco
 
 
+def load_all() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Import every ``queries*`` module of the package (each registers its
+    keys on import) and return the full registry — the one loader
+    ``__spark_entry__`` and the CLI share, so no entry point can see a
+    subset."""
+    import importlib
+    import pkgutil
+
+    import etl_data_processor_spark as pkg
+
+    for mod in pkgutil.iter_modules(pkg.__path__):
+        if mod.name.startswith("queries"):
+            importlib.import_module(f"{pkg.__name__}.{mod.name}")
+    return QUERIES
+
+
 def cat(spark: SparkSession, sf_dir: str) -> Catalog:
     return Catalog(spark, sf_dir)
 

@@ -7,6 +7,9 @@ import pytest
 
 import csv
 import glob
+import os
+import subprocess
+import sys
 import time
 
 from etl_data_processor_spark.io import Catalog
@@ -55,6 +58,26 @@ def test_cli_medicines_and_list(spark, tmp_path, capsys):
         "Decision Date",
         "Indication",
     ]
+
+
+def test_cli_list_sees_the_entry_registry():
+    """`list` (and with it `query`) loads the same registry as
+    ``__spark_entry__``: same keys, same oracle-checked subset. Run in a fresh
+    interpreter, so modules this test session already imported cannot
+    fill in what the CLI's own loader misses."""
+    import __spark_entry__ as entry
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-m", "etl_data_processor_spark", "list"],
+        cwd=root,
+        capture_output=True,
+        text=True,
+        check=True,
+    ).stdout
+    kinds = dict(line.split("\t")[:2] for line in out.splitlines())
+    assert set(kinds) == set(entry.queries())
+    assert {k for k, v in kinds.items() if v == "oracle"} == set(entry.oracle_sql())
 
 
 def test_cli_unknown_query(spark):
