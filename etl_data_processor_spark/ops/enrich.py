@@ -2,11 +2,16 @@
 
 Generalizes the reference's core pipeline insight — A13+A14+A15 fused
 (main.py:262-305): dedupe the inputs of an expensive per-value function,
-call it in bounded chunks with per-chunk error isolation and rate limiting,
-then left-join results back with deterministic miss fallbacks
-(main.py:297-300: miss → (raw_text, '')).
+call it in bounded chunks with per-chunk error isolation, then left-join
+results back with deterministic miss fallbacks
+(main.py:297-300: miss → (raw_text, '')). Rate limiting (A19) belongs to
+the client: ``llm_json_client`` paces its calls with a ``TokenBucket``.
 
 Spark-first shape:
+- ``cache()`` the input before it branches into the distinct keys and the
+  join back. Catalyst cannot share a subtree across a Python stage, so
+  without it everything upstream (an HTML parse, an HTTP fetch) runs once
+  per branch. The first job to read the input fills the cache.
 - ``distinct()`` before the expensive stage — the reference's manual rewrite
   (main.py:264, 272-273, 285) that Catalyst won't do across a Python UDF.
 - ``mapInPandas`` for the expensive stage: Arrow delivers batches, the
@@ -54,7 +59,6 @@ def batch_enrich(
     result_schema: StructType,
     client_factory: Callable[[], EnrichClient] = lambda: deterministic_stub_client,
     chunk_size: int = 200,
-    rate_limit_s: float = 0.0,
     defaults: dict[str, Column] | None = None,
     broadcast_results: bool = True,
 ) -> DataFrame:
@@ -73,8 +77,6 @@ def batch_enrich(
             rows: list[dict] = []
             for i in range(0, len(keys), chunk_size):
                 chunk = keys[i : i + chunk_size]
-                if rate_limit_s:
-                    time.sleep(rate_limit_s)  # token-bucket stand-in (A19)
                 try:
                     result = client(chunk)
                 except Exception:
@@ -88,6 +90,7 @@ def batch_enrich(
                     )
             yield pd.DataFrame(rows, columns=[key_col] + field_names)
 
+    df = df.cache()  # read by the distinct-key branch and the join back
     distinct_keys = df.select(key_col).distinct()
     enriched = distinct_keys.mapInPandas(enrich_partition, result_schema)
 

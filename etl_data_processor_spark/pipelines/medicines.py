@@ -21,9 +21,13 @@ with the network/LLM stages replaced by deterministic equivalents:
                          (main.py:307-327)
   A17 sink            -> write_csv (main.py:329-331; BOM dropped)
 
-Every stage is a Column expression or the Arrow-batched enrichment operator —
-the whole pipeline is one Catalyst plan plus one mapInPandas stage and would
-run unchanged over a 100 TB card dump.
+Every stage is a Column expression or an Arrow-batched mapInPandas stage.
+Fed from raw HTML (``cards_from_html``), the pipeline is one Catalyst plan
+with three Python stages: card extraction, detail extraction and
+enrichment. ``batch_enrich`` caches its input, so everything upstream of
+the enrichment (the HTML parse, or the HTTP fetch on the live path) is
+computed once even though the distinct keys and the join back both read
+it. The plan would run unchanged over a 100 TB card dump.
 """
 
 from __future__ import annotations

@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -19,25 +22,82 @@ SCHEMA = StructType(
 )
 
 
-def test_batch_enrich_distinct_and_joinback(spark):
-    """Distinct-before-expensive (A13): the client must see each distinct key
-    once even when the fact side repeats it."""
-    calls = []
-
-    rows = [(i, "drug one") if i % 2 == 0 else (i, "drug two") for i in range(10)]
-    df = spark.createDataFrame(rows, ["row_id", "text"])
+def _logged_client_factory(log_dir, answer):
+    """client_factory whose client appends the keys of each call, as one
+    JSON line, to a per-process file under ``log_dir``: the client runs in
+    Spark's Python workers, where no driver-side list can see it."""
 
     def factory():
         def client(texts):
-            calls.append(len(texts))
-            return {t: {"active_ingredient": t.split()[0].upper(), "trade_name": t.split()[1]} for t in texts}
+            import json
+            import os
+
+            with open(os.path.join(log_dir, f"{os.getpid()}.log"), "a") as f:
+                f.write(json.dumps(texts) + "\n")
+            return {t: answer(t) for t in texts}
+
         return client
 
+    return factory
+
+
+def _logged_calls(log_dir):
+    """Every list logged as a JSON line under ``log_dir`` (for a client
+    from ``_logged_client_factory``: the keys of each call)."""
+    calls = []
+    for name in os.listdir(log_dir):
+        with open(os.path.join(log_dir, name)) as f:
+            calls += [json.loads(line) for line in f]
+    return calls
+
+
+def test_batch_enrich_distinct_and_joinback(spark, tmp_path):
+    """Distinct-before-expensive (A13): the client must see each distinct key
+    once even when the fact side repeats it."""
+    rows = [(i, "drug one") if i % 2 == 0 else (i, "drug two") for i in range(10)]
+    df = spark.createDataFrame(rows, ["row_id", "text"])
+
+    factory = _logged_client_factory(
+        str(tmp_path),
+        lambda t: {"active_ingredient": t.split()[0].upper(), "trade_name": t.split()[1]},
+    )
     out = batch_enrich(df, "text", SCHEMA, client_factory=factory).collect()
     assert len(out) == 10
     by_text = {r.text: (r.active_ingredient, r.trade_name) for r in out}
     assert by_text["drug one"] == ("DRUG", "one")
     assert by_text["drug two"] == ("DRUG", "two")
+    keys = [k for call in _logged_calls(str(tmp_path)) for k in call]
+    assert sorted(keys) == ["drug one", "drug two"]
+
+
+def test_batch_enrich_evaluates_input_once(spark, tmp_path):
+    """The input is computed once although the distinct keys and the join
+    back both read it: an Arrow pass upstream of the enrichment logs the
+    ids of the rows it processes, and the log holds each input row once."""
+    import pyarrow as pa
+
+    from etl_data_processor_spark.ops.text import arrow_pass
+
+    row_log = str(tmp_path)
+
+    def logged(cols):
+        import json
+        import os
+
+        with open(os.path.join(row_log, f"{os.getpid()}.log"), "a") as f:
+            f.write(json.dumps(cols["row_id"]) + "\n")
+        return cols
+
+    rows = [(i, f"drug {i % 3}") for i in range(12)]
+    src = arrow_pass(
+        spark.createDataFrame(rows, "row_id long, text string"),
+        logged,
+        pa.schema([("row_id", pa.int64()), ("text", pa.string())]),
+    )
+    out = batch_enrich(src, "text", SCHEMA).collect()
+    assert len(out) == len(rows)
+    processed = [i for batch in _logged_calls(row_log) for i in batch]
+    assert sorted(processed) == [i for i, _ in rows]
 
 
 def test_batch_enrich_error_isolation_and_defaults(spark):
@@ -65,24 +125,22 @@ def test_batch_enrich_error_isolation_and_defaults(spark):
 
 
 @pytest.mark.slow
-def test_batch_enrich_chunking(spark):
+def test_batch_enrich_chunking(spark, tmp_path):
     """Chunk size bounds each client call (A14, chunk loop main.py:188-193)."""
-    seen = []
+    texts = [f"text {i}" for i in range(10)]
+    df = spark.createDataFrame(list(enumerate(texts)), ["row_id", "text"])
 
-    df = spark.createDataFrame([(i, f"text {i}") for i in range(10)], ["row_id", "text"])
-
-    def factory():
-        def client(texts):
-            seen.append(len(texts))
-            return {t: {"active_ingredient": t.upper(), "trade_name": ""} for t in texts}
-        return client
-
+    factory = _logged_client_factory(
+        str(tmp_path), lambda t: {"active_ingredient": t.upper(), "trade_name": ""}
+    )
     out = batch_enrich(
         df.coalesce(1), "text", SCHEMA, client_factory=factory, chunk_size=3
     ).collect()
     assert len(out) == 10
-    # driver can't see executor-side lists; assert via result completeness
     assert all(r.active_ingredient == r.text.upper() for r in out)
+    calls = _logged_calls(str(tmp_path))
+    assert all(1 <= len(call) <= 3 for call in calls)
+    assert sorted(k for call in calls for k in call) == sorted(texts)
 
 
 def test_asof_backward_basic(spark):

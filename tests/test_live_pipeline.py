@@ -66,18 +66,24 @@ def _render_site(spark):
 @pytest.fixture()
 def live_medicines_site(spark):
     """Local HTTP server carrying BOTH the paged listing API and the
-    per-card detail pages; yields (endpoint, base_url)."""
+    per-card detail pages; yields (endpoint, base_url, hits), where ``hits``
+    counts GETs per detail path and per listing page (``/api?page=N``)."""
+    import collections
     import http.server
     import threading
     from urllib.parse import parse_qs, urlparse
 
     listing, details = _render_site(spark)
+    hits: collections.Counter = collections.Counter()
+    hits_lock = threading.Lock()
 
     class H(http.server.BaseHTTPRequestHandler):
         def do_GET(self):
             parsed = urlparse(self.path)
+            key = parsed.path
             if parsed.path == "/api":
                 page = int(parse_qs(parsed.query).get("page", ["1"])[0])
+                key = f"/api?page={page}"
                 status, body = (
                     (200, listing[page]) if page in listing else (404, "")
                 )
@@ -85,6 +91,8 @@ def live_medicines_site(spark):
                 status, body = 200, details[parsed.path]
             else:
                 status, body = 404, ""
+            with hits_lock:
+                hits[key] += 1
             raw = body.encode()
             self.send_response(status)
             self.send_header("Content-Length", str(len(raw)))
@@ -99,7 +107,7 @@ def live_medicines_site(spark):
     t.start()
     try:
         base = f"http://127.0.0.1:{srv.server_address[1]}"
-        yield f"{base}/api", base
+        yield f"{base}/api", base, hits
     finally:
         srv.shutdown()
         srv.server_close()
@@ -120,7 +128,7 @@ def test_live_transport_end_to_end_matches_golden(spark, live_medicines_site):
         fetch_details_live,
     )
 
-    endpoint, base = live_medicines_site
+    endpoint, base, hits = live_medicines_site
     spark.dataSource.register(PagedDecisionSource)
     listing = (
         spark.read.format("paged_decisions")
@@ -148,13 +156,22 @@ def test_live_transport_end_to_end_matches_golden(spark, live_medicines_site):
         want = sorted(tuple(r) for r in reader)
     assert got == want
 
+    # Each page is fetched once per run: batch_enrich caches its input, so
+    # the distinct-key branch and the join back do not each re-run the
+    # fetch. Page 1 also serves the driver's planning fetch.
+    detail_hits = {p: n for p, n in hits.items() if not p.startswith("/api")}
+    assert len(detail_hits) == 30
+    assert set(detail_hits.values()) == {1}, detail_hits
+    assert hits["/api?page=1"] == 2
+    assert hits["/api?page=2"] == 1
+
 
 def test_fetch_details_live_null_fills_failed_pages(spark, live_medicines_site):
     """A detail URL that 404s yields html=NULL and the row SURVIVES (the
     reference appends the un-enriched decision, main.py:283-285)."""
     from etl_data_processor_spark.sources.paged import fetch_details_live
 
-    _, base = live_medicines_site
+    _, base, _ = live_medicines_site
     df = spark.createDataFrame(
         [("/anbefalinger-og-vejledninger/med-0",), ("/no-such-page",)],
         ["url"],
