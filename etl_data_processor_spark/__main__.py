@@ -160,12 +160,14 @@ def main(argv: list[str] | None = None) -> int:
             synthetic_cards,
         )
 
-        out_df = run_pipeline(synthetic_cards(spark, args.cards))
+        cards = synthetic_cards(spark, args.cards)
+        out_df = run_pipeline(cards)
         n = out_df.count()
         # CLI convenience: one CSV file, like the reference's single output
         # (main.py:329-331). The engine-level write_csv stays partitioned —
         # a 100 TB result should never be forced through one writer.
         write_csv(out_df.coalesce(1), args.out)
+        cards.unpersist()
         log.info("wrote %d rows to %s", n, args.out)
         return 0
 

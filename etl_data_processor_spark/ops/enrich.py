@@ -8,10 +8,14 @@ results back with deterministic miss fallbacks
 the client: ``llm_json_client`` paces its calls with a ``TokenBucket``.
 
 Spark-first shape:
-- ``cache()`` the input before it branches into the distinct keys and the
-  join back. Catalyst cannot share a subtree across a Python stage, so
-  without it everything upstream (an HTML parse, an HTTP fetch) runs once
-  per branch. The first job to read the input fills the cache.
+- The input is read twice, by the distinct keys and by the join back, and
+  Catalyst cannot share a subtree across a Python stage. A caller whose
+  input is expensive to compute (an HTML parse, an HTTP fetch) caches it
+  before the call and unpersists it after the sink, so the upstream runs
+  once (``pipelines.medicines.run_pipeline`` does). The operator itself
+  caches nothing: a plain scan saves no CPU from a cache but pays its
+  memory (``q_batch_map``), and a cache made here would have no owner to
+  release it.
 - ``distinct()`` before the expensive stage — the reference's manual rewrite
   (main.py:264, 272-273, 285) that Catalyst won't do across a Python UDF.
 - ``mapInPandas`` for the expensive stage: Arrow delivers batches, the
@@ -67,6 +71,9 @@ def batch_enrich(
     ``result_schema`` must contain ``key_col`` plus the enrichment columns.
     Fallback rows (chunk failure / client miss) carry NULLs, which the final
     join fills from ``defaults`` (coalesce), mirroring main.py:297-303.
+
+    ``df`` is evaluated twice (distinct keys, join back); cache it first if
+    computing it is expensive.
     """
     field_names = [f.name for f in result_schema.fields if f.name != key_col]
 
@@ -90,7 +97,6 @@ def batch_enrich(
                     )
             yield pd.DataFrame(rows, columns=[key_col] + field_names)
 
-    df = df.cache()  # read by the distinct-key branch and the join back
     distinct_keys = df.select(key_col).distinct()
     enriched = distinct_keys.mapInPandas(enrich_partition, result_schema)
 

@@ -24,10 +24,10 @@ with the network/LLM stages replaced by deterministic equivalents:
 Every stage is a Column expression or an Arrow-batched mapInPandas stage.
 Fed from raw HTML (``cards_from_html``), the pipeline is one Catalyst plan
 with three Python stages: card extraction, detail extraction and
-enrichment. ``batch_enrich`` caches its input, so everything upstream of
-the enrichment (the HTML parse, or the HTTP fetch on the live path) is
-computed once even though the distinct keys and the join back both read
-it. The plan would run unchanged over a 100 TB card dump.
+enrichment. ``run_pipeline`` caches its ``cards`` input, so everything
+upstream of the enrichment (the HTML parse, or the HTTP fetch on the live
+path) is computed once even though the distinct keys and the join back
+both read it. The plan would run unchanged over a 100 TB card dump.
 """
 
 from __future__ import annotations
@@ -66,7 +66,13 @@ def run_pipeline(cards: DataFrame, client_factory=None) -> DataFrame:
     the env-gated :func:`~..ops.enrich.resolve_enrich_client` seam (the
     deterministic stub unless ``ETL_LLM_GENERATE`` names a live SDK
     generate function — main.py:178-215 semantics), so the composed
-    pipeline exercises the same factory path in tests and production."""
+    pipeline exercises the same factory path in tests and production.
+
+    ``cards`` is cached: the enrichment's distinct keys and its join back
+    both read it, and Catalyst cannot share the upstream Python stages (DOM
+    extraction, HTTP fetch) between them. The first job fills the cache.
+    It stays in the session until the caller calls ``cards.unpersist()``
+    after the sink."""
     from etl_data_processor_spark.ops.enrich import resolve_enrich_client
 
     if client_factory is None:
@@ -74,7 +80,7 @@ def run_pipeline(cards: DataFrame, client_factory=None) -> DataFrame:
             ["active_ingredient", "trade_name"]
         )
     # A4: absolutize relative urls
-    df = cards.withColumn("url", S.conditional_concat(F.col("url"), BASE_URL))
+    df = cards.cache().withColumn("url", S.conditional_concat(F.col("url"), BASE_URL))
 
     # A5: classify, first-match-wins incl. negative lookbehind; unmatched rows
     # are dropped (extract_decision_from_card returns None -> skipped)

@@ -5,6 +5,7 @@ on the synthetic medicines fixture, checked against a committed golden CSV.
 from __future__ import annotations
 
 import csv
+import json
 import os
 
 from etl_data_processor_spark.pipelines.medicines import (
@@ -69,3 +70,35 @@ def test_csv_sink_roundtrip(spark, tmp_path):
     back = read_csv(spark, path)
     assert sorted(back.columns) == sorted(OUTPUT_COLUMNS)
     assert back.count() == out.count()
+
+
+def test_pipeline_computes_cards_once(spark, tmp_path):
+    """run_pipeline caches its cards: an Arrow pass upstream logs the url of
+    every row it processes, and each card is processed once although the
+    enrichment's distinct keys and its join back both read the cards.
+    ``cards.unpersist()`` releases the cache."""
+    import pyarrow as pa
+
+    from etl_data_processor_spark.ops.text import arrow_pass
+
+    row_log = str(tmp_path)
+
+    def logged(cols):
+        import json
+        import os
+
+        with open(os.path.join(row_log, f"{os.getpid()}.log"), "a") as f:
+            f.write(json.dumps(cols["url"]) + "\n")
+        return cols
+
+    src = synthetic_cards(spark, 40)
+    cards = arrow_pass(src, logged, pa.schema([(c, pa.string()) for c in src.columns]))
+    assert len(run_pipeline(cards).collect()) == 20
+    processed = []
+    for name in os.listdir(row_log):
+        with open(os.path.join(row_log, name)) as f:
+            processed += [url for line in f for url in json.loads(line)]
+    assert sorted(processed) == sorted(r.url for r in src.collect())
+    assert cards.storageLevel.useMemory
+    cards.unpersist()
+    assert not cards.storageLevel.useMemory
