@@ -53,7 +53,7 @@ def main(argv: list[str] | None = None) -> int:
 
     p_a = sub.add_parser(
         "artifacts",
-        help="materialized-index artifact store maintenance (_artifacts GC)",
+        help="artifact store maintenance (_artifacts GC: indexes and trained models)",
     )
     p_a.add_argument("action", choices=["vacuum"])
     p_a.add_argument(

@@ -13,11 +13,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def json_get(col: Column, field: str) -> Column:
-    """Extract a scalar from a JSON string column (B30) — stays JVM-side."""
-    return F.get_json_object(col, f"$.{field}")
-
-
 def map_lookup(keys_values: dict, key: Column) -> Column:
     """Literal-map lookup (B29) — the reference's month map (main.py:29-42)
     as a broadcastable ``create_map`` expression, indexed with ``m[key]``
@@ -47,13 +42,3 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-    )

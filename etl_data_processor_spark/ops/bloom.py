@@ -36,7 +36,6 @@ from etl_data_processor_spark.ops.sampling import (
     _A1 as _A1_NP,
     _A2 as _A2_NP,
     hash32,
-    hash32_sql,
 )
 
 
@@ -46,13 +45,6 @@ def _positions(key: Column, m_bits: int, k: int, seed: int) -> list[Column]:
     h1 = hash32(key, seed)
     h2 = hash32(key, seed + 1)
     return [F.pmod(h1 + F.lit(i) * h2, F.lit(m_bits)) for i in range(k)]
-
-
-def positions_sql(expr: str, m_bits: int, k: int, seed: int) -> list[str]:
-    """DuckDB expressions computing exactly :func:`_positions`."""
-    h1 = hash32_sql(expr, seed)
-    h2 = hash32_sql(expr, seed + 1)
-    return [f"(({h1}) + {i} * ({h2})) % {m_bits}" for i in range(k)]
 
 
 def build_bloom(

@@ -29,11 +29,6 @@ def filter_isin(df: DataFrame, column: str, values: Sequence) -> DataFrame:
     return df.filter(F.col(column).isin(list(values)))
 
 
-def filter_range(df: DataFrame, column: str, lo, hi) -> DataFrame:
-    """BETWEEN filter (inclusive both ends, SQL semantics)."""
-    return df.filter(F.col(column).between(lo, hi))
-
-
 # ---------------------------------------------------------------- joins
 
 def broadcast_join(fact: DataFrame, dim: DataFrame, on, how: str = "inner") -> DataFrame:
@@ -101,18 +96,6 @@ def top_k(df: DataFrame, order_by: Sequence[Column], k: int) -> DataFrame:
     global sort). Mirrors the reference's early-stop/limit semantics (A18,
     main.py:348-349)."""
     return df.orderBy(*order_by).limit(k)
-
-
-def top_k_per_group(
-    df: DataFrame, keys: Sequence[str], order_by: Sequence[Column], k: int, rank_col: str = "rn"
-) -> DataFrame:
-    """Top-K within each group via row_number window — the scalable idiom for
-    per-group limits (single shuffle on the group key)."""
-    w = Window.partitionBy(*keys).orderBy(*order_by)
-    return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) <= k)
-    )
 
 
 def ranked_topk(

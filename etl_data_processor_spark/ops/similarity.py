@@ -1180,9 +1180,6 @@ def ivfpq_cosine_topk(
     )
 
 
-_MODEL_CACHE: dict[tuple, object] = {}
-
-
 def model_fingerprint(obj) -> str:
     """Short content hash of driver-held model state (centroids, codebooks)
     for keying PERSISTED index artifacts (ops.dedup.cached_df): the
@@ -1194,208 +1191,59 @@ def model_fingerprint(obj) -> str:
     return hashlib.md5(repr(obj).encode()).hexdigest()[:12]
 
 
-# Bump when the on-disk model encoding changes (mirrors
-# ops.dedup._ARTIFACT_VERSION for DataFrame artifacts).
-_MODEL_VERSION = 1
+def cached_model(spark, key: tuple, builder, sources: tuple):
+    """Trained model state (IVF centroids, PQ codebooks) as an artifact of
+    the ops.dedup store. Training is DETERMINISTIC (no RNG: seeds are
+    hash-sampled rows, means are fixed-point integer arithmetic), so a
+    load is bit-identical to retraining, and reuse is the production
+    shape: train an index once, serve every query from it. A cold
+    process reads the state file instead of re-running the sampled
+    k-means corpus pass.
 
-
-def model_location(spark, key: tuple) -> str:
-    """Filesystem path of the persisted model-state file for ``key`` —
-    warehouse/_models/md5(version + key)[:16]. The driver-dict sibling
-    of ops.dedup.artifact_location: same warehouse root, separate
-    namespace (these are single small files of repr-encoded Python
-    state, not parquet directories)."""
-    import hashlib
-    import os
-
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    slug = hashlib.md5(
-        repr((_MODEL_VERSION, *key)).encode()
-    ).hexdigest()[:16]
-    return os.path.join(warehouse, "_models", slug)
-
-
-def cached_model(key: tuple, builder, spark=None, sources: tuple = ()):
-    """Memo for DETERMINISTIC trained model state (IVF centroids, PQ
-    codebooks). Training here has no RNG — seeds are hash-sampled rows,
-    means are fixed-point integer arithmetic — so a cache hit is
-    bit-identical to retraining, and reuse is pure physics: the
-    production shape trains an index ONCE and serves every query from
-    it; retraining per query measures an anti-pattern. Model state is a
-    few KB of driver lists; the cache never holds DataFrames.
-
-    When ``spark`` is passed, the memo becomes a read-through cache of
-    an ON-DISK artifact (warehouse/_models/<slug>, VERDICT r8 item 2):
-    a COLD process loads the trained state from the file instead of
-    re-running the sampled-k-means corpus pass — the same "an index you
-    rebuild per session isn't an index" rule the posting shards follow.
-    Encoding is ``repr`` / ``ast.literal_eval``: exact round-trip for
-    the nested tuple/list/float structures trained here (Python float
-    repr is shortest-round-trip), so the loaded object is ``==`` to the
-    trained one and :func:`model_fingerprint` — which keys the derived
-    DataFrame artifacts — is byte-identical across sessions. Writes go
-    to a process-unique temp file and atomically rename into place, so
-    concurrent trainers race safely.
-
-    ``sources`` (optional file/dir paths the training READ) closes the
-    stale-cache hole the DataFrame artifact store already closed with
-    ``source_signature``: the current signature of every source is
-    recorded in the ``.key.json`` manifest and REVALIDATED on every
-    disk load — a fixture regenerated in place (new data, same path,
-    same params → same slug) retrains and atomically overwrites the
-    slug instead of serving the old fixture's centroids forever
-    (ADVICE r9, medium). Revalidate-on-load is chosen over embedding
-    the signature in the key so a regenerated fixture REUSES its slug
-    rather than leaking an unreachable one until vacuum."""
-    import json
-    import os
-
-    if key in _MODEL_CACHE:
-        return _MODEL_CACHE[key]
-    if spark is not None:
-        import ast
-
-        from etl_data_processor_spark.ops.dedup import source_signature
-
-        cur_sig = repr(source_signature(*sources)) if sources else None
-        path = model_location(spark, key)
-        if os.path.exists(path):
-            stale = False
-            if cur_sig is not None:
-                try:
-                    with open(f"{path}.key.json", encoding="utf-8") as f:
-                        stale = json.load(f).get("sig") != cur_sig
-                except (OSError, ValueError):
-                    stale = True  # no/broken manifest: can't prove fresh
-            if not stale:
-                with open(path, encoding="utf-8") as f:
-                    obj = ast.literal_eval(f.read())
-                _MODEL_CACHE[key] = obj
-                return obj
-        obj = builder()
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        _atomic_publish(os.path.dirname(path), path, repr(obj))
-        # sidecar manifest: records the training key (so vacuum_models
-        # can prove a slug unreachable — its fixture dir is gone) and
-        # the source signature at training time (so a later load can
-        # detect an in-place fixture regeneration) — the _KEY.json
-        # discipline from the DataFrame artifact store
-        _atomic_publish(
-            os.path.dirname(path),
-            f"{path}.key.json",
-            json.dumps({"key": repr(key), "sig": cur_sig}),
-        )
-        _MODEL_CACHE[key] = obj
-        return obj
-    _MODEL_CACHE[key] = builder()
-    return _MODEL_CACHE[key]
-
-
-def _atomic_publish(dirname: str, dest: str, text: str) -> None:
-    """Write ``text`` to a process-unique temp file in ``dirname`` and
-    atomically rename it to ``dest`` (concurrent publishers race
-    safely; readers never see a partial file)."""
-    import os
-    import tempfile
-
-    fd, tmp = tempfile.mkstemp(dir=dirname, prefix=".model-tmp-")
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write(text)
-        os.replace(tmp, dest)
-    except BaseException:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-        raise
-
-
-def vacuum_models(
-    spark=None,
-    warehouse: str | None = None,
-    min_age_seconds: float = 600.0,
-    dry_run: bool = False,
-) -> list[str]:
-    """GC for the ``_models`` store — the driver-state sibling of
-    ops.dedup.vacuum_artifacts. Reclaims
-
-    - crashed partial writes: ``.model-tmp-*`` files past the age window
-      (publication is an atomic rename, so an aged tmp has no writer);
-    - unreachable models: the ``<slug>.key.json`` manifest records the
-      training key; any ABSOLUTE path among its components that no
-      longer exists means no caller can ever rebuild this slug's key
-      (keys embed the fixture dir), so the file is garbage. Relative
-      path components are spared — their meaning depends on the
-      caller's cwd, which the vacuum cannot know;
-    - legacy slugs with no manifest, once past the age window (models
-      are caches; the next access retrains deterministically).
-
-    ``min_age_seconds`` spares anything a concurrent trainer may still
-    be publishing. Returns deleted names; ``dry_run`` lists only."""
+    The model is one slug under ``warehouse/_artifacts`` (located by
+    ops.dedup.artifact_location, published by _publish_artifact with its
+    ``_KEY.json`` manifest) holding ``model.repr`` and ``_SUCCESS``. The
+    key embeds ``source_signature(*sources)`` like every DataFrame
+    artifact key, so a fixture regenerated in place trains a new slug
+    and vacuum_artifacts reclaims the superseded one. Encoding is
+    ``repr`` / ``ast.literal_eval``: an exact round-trip for the nested
+    tuple/list/float state trained here (float repr is shortest-round-
+    trip), and every caller gets the state read back from the file, so
+    :func:`model_fingerprint`, which keys the derived index artifacts,
+    is byte-identical across sessions. The in-process memo is
+    ops.dedup.session_memo."""
     import ast
-    import json
     import os
-    import shutil  # noqa: F401  (parity with vacuum_artifacts imports)
-    import time
 
-    if warehouse is None:
-        if spark is None:
-            raise ValueError(
-                "vacuum_models needs either a SparkSession (to read "
-                "spark.sql.warehouse.dir) or an explicit warehouse path"
+    from etl_data_processor_spark.ops.dedup import (
+        _ARTIFACT_VERSION,
+        _publish_artifact,
+        artifact_location,
+        session_memo,
+        source_signature,
+    )
+
+    sig = source_signature(*sources)
+    full = (*key, sig)
+    path = artifact_location(spark, full)
+    state = os.path.join(path, "model.repr")
+
+    def write_tmp(tmp):
+        os.makedirs(tmp)
+        with open(os.path.join(tmp, "model.repr"), "w", encoding="utf-8") as f:
+            f.write(repr(builder()))
+        open(os.path.join(tmp, "_SUCCESS"), "w").close()
+
+    def load():
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            _publish_artifact(
+                path,
+                write_tmp,
+                key_repr=repr((_ARTIFACT_VERSION, *full)),
+                sources=sources,
+                cur_sig=sig,
             )
-        warehouse = spark.conf.get(
-            "spark.sql.warehouse.dir", "spark-warehouse"
-        ).removeprefix("file:")
-    mdir = os.path.join(warehouse, "_models")
-    if not os.path.isdir(mdir):
-        return []
-    now = time.time()
-    deleted: list[str] = []
+        with open(state, encoding="utf-8") as f:
+            return ast.literal_eval(f.read())
 
-    def reclaim(name: str) -> None:
-        deleted.append(name)
-        if not dry_run:
-            try:
-                os.unlink(os.path.join(mdir, name))
-            except OSError:
-                pass
-
-    entries = sorted(os.listdir(mdir))
-    for name in entries:
-        path = os.path.join(mdir, name)
-        if not os.path.isfile(path):
-            continue
-        try:
-            age = now - os.path.getmtime(path)
-        except OSError:
-            continue
-        if age < min_age_seconds:
-            continue
-        if name.startswith(".model-tmp-"):
-            reclaim(name)
-            continue
-        if name.endswith(".key.json"):
-            continue  # handled with its model file below
-        manifest = os.path.join(mdir, f"{name}.key.json")
-        if not os.path.exists(manifest):
-            reclaim(name)  # legacy, rebuildable cache
-            continue
-        try:
-            with open(manifest, encoding="utf-8") as f:
-                key = ast.literal_eval(json.load(f)["key"])
-        except (OSError, ValueError, KeyError, SyntaxError):
-            reclaim(name)
-            reclaim(f"{name}.key.json")
-            continue
-        stale = any(
-            isinstance(c, str) and os.path.isabs(c) and not os.path.exists(c)
-            for c in key
-        )
-        if stale:
-            reclaim(name)
-            reclaim(f"{name}.key.json")
-    return deleted
+    return session_memo(spark, full, load)

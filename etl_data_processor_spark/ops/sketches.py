@@ -55,10 +55,6 @@ def hll_merge(
     )
 
 
-def hll_estimate(sketch: Column) -> Column:
-    return F.hll_sketch_estimate(sketch)
-
-
 # =====================================================================
 # Count-min sketch (tall form)
 # =====================================================================

@@ -1798,9 +1798,9 @@ def q_cosine_pq(spark, sf_dir):
     from etl_data_processor_spark.ops.similarity import cached_model
 
     books = cached_model(
+        spark,
         ("pq", sf_dir, 16, 16),
         lambda: train_pq_codebooks(emb, m_sub=16, k_codes=16),
-        spark=spark,
         sources=(f"{sf_dir}/embeddings.parquet",),
     )
     # persisted code table (the compressed index artifact) — fingerprint-
@@ -1856,15 +1856,15 @@ def ivfpq_index_artifact(spark, sf_dir):
 
     emb = read_parquet_memo(spark, f"{sf_dir}/embeddings.parquet")
     cents = cached_model(
+        spark,
         ("ivfpq-cents", sf_dir, 16),
         lambda: train_ivf_centroids(emb, n_lists=16),
-        spark=spark,
         sources=(f"{sf_dir}/embeddings.parquet",),
     )
     books = cached_model(
+        spark,
         ("pq", sf_dir, 16, 16),
         lambda: train_pq_codebooks(emb, m_sub=16, k_codes=16),
-        spark=spark,
         sources=(f"{sf_dir}/embeddings.parquet",),
     )
 

@@ -1593,14 +1593,14 @@ def ivf_index_artifact(spark, sf_dir):
     # Train on a deterministic hash-sample (how IVF indexes are always
     # trained at scale — centroid quality needs ~O(100) points per list,
     # not the full corpus); assignment then runs over everything. Model
-    # state persists on disk (warehouse/_models) so a COLD serving
-    # session loads centroids instead of re-running the k-means pass.
+    # state persists in the artifact store so a COLD serving session
+    # loads centroids instead of re-running the k-means pass.
     cents = SIM.cached_model(
+        spark,
         ("ivf", sf_dir, 16, 2, 0.5),
         lambda: SIM.train_ivf_centroids(
             deterministic_sample(emb, "vec_id", 0.5), n_lists=16, iters=2
         ),
-        spark=spark,
         sources=(f"{sf_dir}/embeddings.parquet",),
     )
     # persisted assignment table (the list-partitioned index artifact a

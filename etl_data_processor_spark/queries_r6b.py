@@ -674,12 +674,6 @@ def _fs_mstep(e):
     )
 
 
-# (appId, customer path, content signature) -> estimated candidate-pair
-# count for q_linkage_fs_em's bucket sizing. Statistics-for-planning memo
-# (VERDICT r10 item 7) — holds one integer per fixture, never rows.
-_EST_PAIRS_MEMO: dict = {}
-
-
 @q("q_linkage_fs_em", _FS_ORACLE)
 def q_linkage_fs_em(spark, sf_dir):
     """B66: Fellegi–Sunter parameter estimation (the EM at the core of
@@ -772,31 +766,28 @@ def q_linkage_fs_em(spark, sf_dir):
     # tasks) made task-scheduling overhead the bottleneck.
     nshuf = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     # The estimator is planning STATISTICS (like AQE's), not a query
-    # result, so it follows the _TABLE_MEMO discipline (VERDICT r10
-    # item 7): memoized per (session, path, on-disk content signature) —
-    # one narrow-aggregate collect per session per fixture instead of
-    # one per execution; a regenerated fixture changes the signature and
-    # re-estimates. The query's own computation still runs from parquet
-    # on every execution.
-    from etl_data_processor_spark.ops.dedup import source_signature
+    # result, so it lives in the session memo like a resolved table
+    # (VERDICT r10 item 7): one integer per (session, path, on-disk
+    # content signature) — one narrow-aggregate collect per session per
+    # fixture instead of one per execution; a regenerated fixture changes
+    # the signature and re-estimates. The query's own computation still
+    # runs from parquet on every execution.
+    from etl_data_processor_spark.ops.dedup import (
+        session_memo,
+        source_signature,
+    )
 
     cust_path = f"{sf_dir}/customer.parquet"
-    memo_key = (
-        spark.sparkContext.applicationId,
-        cust_path,
-        source_signature(cust_path),
-    )
-    est_pairs = _EST_PAIRS_MEMO.get(memo_key)
-    if est_pairs is None:
-        est_pairs = (
+    est_pairs = session_memo(
+        spark,
+        ("est_pairs", cust_path, source_signature(cust_path)),
+        lambda: (
             cust.groupBy("c_name", "c_nationkey")
             .agg(F.count(F.lit(1)).alias("c"))
             .agg(F.sum(F.col("c") * F.col("c")).alias("p"))
             .collect()[0]["p"]
-        )
-        if len(_EST_PAIRS_MEMO) > 512:
-            _EST_PAIRS_MEMO.clear()
-        _EST_PAIRS_MEMO[memo_key] = est_pairs
+        ),
+    )
     nbkt = max(nshuf, min(128 * nshuf, int(est_pairs) // 512))
     cand_a = cand_a.repartition(nbkt, "__v", "c_nationkey")
     cand_b = cand_b.repartition(nbkt, "__vb", "d_nationkey")

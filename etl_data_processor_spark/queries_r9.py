@@ -51,8 +51,8 @@ _ANN_PROBE = 10
 
 def _ivf_topk_served(spark, sf_dir, qrows, k):
     """IVF top-k with every corpus-sized input read from persisted
-    artifacts: centroids from the on-disk model store
-    (ops.similarity.model_location), inverted lists (vectors included —
+    artifacts: centroids from their model slug in the artifact store
+    (ops.similarity.cached_model), inverted lists (vectors included —
     IVF-Flat) from the assignment artifact with the probed-list
     IN-filter PUSHED into the parquet scan. ``qrows`` is the collected
     query rows (vec_id, embedding) — query-bounded driver state, what a

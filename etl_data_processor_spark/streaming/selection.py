@@ -8,7 +8,7 @@ EXCEPT two corpus-relative pieces, which is exactly what a streaming
 port must handle:
 
 - the length-quantile cuts and the DSIR models are corpus-relative ->
-  FROZEN PER EPOCH (:func:`frozen_selection_models` derives them once
+  FROZEN PER EPOCH (:func:`frozen_selection_state` derives them once
   from the epoch's reference corpus — in production, yesterday's corpus;
   re-freeze per epoch exactly like re-training a tokenizer);
 - exact dedup is cross-batch stateful -> a seen-norms state table with
@@ -64,7 +64,7 @@ def _trigrams(w):
     )
 
 
-def frozen_selection_models(
+def frozen_selection_state(
     spark,
     docs: DataFrame,
     ref_source: str,

@@ -78,22 +78,6 @@ def session_counts(
     )
 
 
-def streaming_tumbling(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    duration: str = "10 minutes",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """B36+B38: watermarked streaming tumbling agg — late rows beyond the
-    watermark are dropped, state is bounded."""
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, duration).alias("win"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("win.start").alias("win_start"), "n")
-    )
-
-
 def streaming_dedup(
     stream: DataFrame,
     keys: list[str],
@@ -103,22 +87,6 @@ def streaming_dedup(
     """B39: stateful streaming dedup with bounded state —
     dropDuplicatesWithinWatermark keeps only in-watermark keys in state."""
     return stream.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
-
-
-def run_stream_to_memory(
-    stream_df: DataFrame, query_name: str, mode: str = "append"
-) -> DataFrame:
-    """B40: drain a (bounded) stream into an in-memory table and return the
-    materialized result — the test harness for streaming semantics."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(query_name)
 
 
 def streaming_running_totals(

@@ -1,26 +1,25 @@
 """Round-10 pins (ADVICE r9 fixes).
 
-- cached_model revalidates the persisted model against the CURRENT
-  source signature on every disk load: a fixture regenerated in place
-  (same path, same params -> same slug) retrains instead of serving
-  stale centroids forever, and the slug is reused, not leaked.
+- cached_model keys the persisted model by the CURRENT source
+  signature: a fixture regenerated in place (same path, same params)
+  retrains instead of serving stale centroids forever, and the
+  superseded slug is left for vacuum_artifacts to reclaim.
 - mwu_of_counts survives degenerate inputs (all observations in one
   tie group / empty side) with the batch twin's NULL-on-div-by-zero
   semantics instead of raising out of the foreachBatch sink.
-- vacuum_models with neither spark nor warehouse raises a clear
-  ValueError instead of AttributeError.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import shutil
 from contextlib import redirect_stdout
 
-import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
+from etl_data_processor_spark.ops import dedup as D
 from etl_data_processor_spark.ops import similarity as SIM
 from etl_data_processor_spark.streaming.drift import mwu_of_counts
 
@@ -99,16 +98,16 @@ def test_ivfpq_serving_cold_session_runs_no_training(spark, sf_dir):
     """Restart scenario for the PQ serving path: with both artifacts on
     disk, a cold session (cleared model memo + DataFrame memo + session
     cache) builds the shortlist plan without re-running k-means OR the
-    PQ Lloyd pass — centroids and codebooks come from warehouse/_models,
-    the code table from warehouse/_artifacts."""
-    from etl_data_processor_spark.ops import dedup as D
+    PQ Lloyd pass — centroids, codebooks and the code table all come
+    from warehouse/_artifacts."""
     from etl_data_processor_spark.queries_ext3 import ivfpq_index_artifact
     from etl_data_processor_spark.queries_r10 import _ivfpq_shortlist_df
 
     ivfpq_index_artifact(spark, sf_dir)  # train at most once
+    sig = D.source_signature(f"{sf_dir}/embeddings.parquet")
     for mkey in (("ivfpq-cents", sf_dir, 16), ("pq", sf_dir, 16, 16)):
-        assert os.path.exists(SIM.model_location(spark, mkey))
-        SIM._MODEL_CACHE.pop(mkey, None)
+        slug = D.artifact_location(spark, (*mkey, sig))
+        assert os.path.exists(os.path.join(slug, "_SUCCESS"))
     D._DF_CACHE.clear()
     spark.catalog.clearCache()
 
@@ -136,78 +135,58 @@ def _boom(*a, **k):
 
 def test_cached_model_retrains_on_source_regeneration(spark, tmp_path):
     """In-place fixture regeneration (content changes, path does not)
-    must invalidate the persisted model: the manifest's recorded source
-    signature no longer matches, so a cold load retrains and atomically
-    overwrites the SAME slug (no unreachable-slug leak)."""
+    must invalidate the persisted model: the key embeds the source
+    signature, so the regenerated fixture trains into a NEW slug and the
+    superseded one becomes garbage that vacuum_artifacts reclaims."""
     src = tmp_path / "corpus.bin"
     src.write_bytes(b"v1" * 100)
-    key = ("r10-test-model", str(tmp_path))
+    key, sources = ("r10-test-model", str(tmp_path)), (str(src),)
     calls = []
 
     def trainer():
         calls.append(1)
         return [(0, [float(len(calls)), 2.5])]
 
-    first = SIM.cached_model(
-        key, trainer, spark=spark, sources=(str(src),)
-    )
-    path = SIM.model_location(spark, key)
+    def slug():
+        return D.artifact_location(spark, (*key, D.source_signature(*sources)))
+
+    def forget():  # simulate process death: drop the session-memo entry
+        D._DF_CACHE.pop(
+            (spark.sparkContext.applicationId, *key,
+             D.source_signature(*sources)),
+            None,
+        )
+
+    slugs = [slug()]
     try:
+        first = SIM.cached_model(spark, key, trainer, sources=sources)
         assert calls == [1]
         # cold load, source untouched: served from disk, no retrain
-        SIM._MODEL_CACHE.pop(key, None)
-        assert SIM.cached_model(
-            key, trainer, spark=spark, sources=(str(src),)
-        ) == first
+        forget()
+        assert SIM.cached_model(spark, key, trainer, sources=sources) == first
         assert calls == [1]
         # regenerate the fixture IN PLACE (different size -> different
         # signature even if mtime granularity collapses)
         src.write_bytes(b"v2" * 101)
-        SIM._MODEL_CACHE.pop(key, None)
-        second = SIM.cached_model(
-            key, trainer, spark=spark, sources=(str(src),)
-        )
+        slugs.append(slug())
+        second = SIM.cached_model(spark, key, trainer, sources=sources)
         assert calls == [1, 1], "regenerated source must retrain"
         assert second == [(0, [2.0, 2.5])]
-        # the slug was REUSED (overwritten), not leaked
-        assert os.path.exists(path)
-        # and the refreshed manifest now validates: next cold load hits
-        SIM._MODEL_CACHE.pop(key, None)
-        assert SIM.cached_model(
-            key, trainer, spark=spark, sources=(str(src),)
-        ) == second
+        # the old slug is now unreachable and reclaimable; the new is not
+        assert slugs[0] != slugs[1]
+        listed = D.vacuum_artifacts(spark=spark, min_age_seconds=0,
+                                    dry_run=True)
+        assert os.path.basename(slugs[0]) in listed
+        assert os.path.basename(slugs[1]) not in listed
+        # the next cold load hits the new slug
+        forget()
+        assert SIM.cached_model(spark, key, trainer, sources=sources) == second
         assert calls == [1, 1]
     finally:
-        SIM._MODEL_CACHE.pop(key, None)
-        for p in (path, f"{path}.key.json"):
-            if os.path.exists(p):
-                os.unlink(p)
-
-
-def test_cached_model_missing_manifest_is_stale(spark, tmp_path):
-    """A model file with sources but NO manifest cannot prove it was
-    trained on the current fixture -> treated as stale (retrains)."""
-    src = tmp_path / "corpus.bin"
-    src.write_bytes(b"x" * 10)
-    key = ("r10-test-nomanifest", str(tmp_path))
-    calls = []
-
-    def trainer():
-        calls.append(1)
-        return [1, 2, 3]
-
-    SIM.cached_model(key, trainer, spark=spark, sources=(str(src),))
-    path = SIM.model_location(spark, key)
-    try:
-        os.unlink(f"{path}.key.json")
-        SIM._MODEL_CACHE.pop(key, None)
-        SIM.cached_model(key, trainer, spark=spark, sources=(str(src),))
-        assert calls == [1, 1]
-    finally:
-        SIM._MODEL_CACHE.pop(key, None)
-        for p in (path, f"{path}.key.json"):
-            if os.path.exists(p):
-                os.unlink(p)
+        forget()
+        for p in slugs:
+            shutil.rmtree(p, ignore_errors=True)
+    assert not any(os.path.exists(p) for p in slugs)
 
 
 def test_mwu_degenerate_counts_do_not_raise():
@@ -224,8 +203,3 @@ def test_mwu_degenerate_counts_do_not_raise():
     # sanity: the non-degenerate path still yields a finite z
     _, _, z6_ok, _ = mwu_of_counts({1: 5, 2: 5}, {3: 5, 4: 5})
     assert z6_ok is not None
-
-
-def test_vacuum_models_requires_spark_or_warehouse():
-    with pytest.raises(ValueError, match="warehouse"):
-        SIM.vacuum_models()

@@ -5,21 +5,29 @@ longer matches reality (unreachable — keys embed the live signature, so no
 caller can ever address them again), crashed ``.tmp-*`` orphans, and
 manifest-less legacy slugs — but NEVER anything younger than the retention
 window (a just-published artifact may be mid-scan in a concurrent reader).
+Trained models (ops.similarity.cached_model) are slugs of the same store,
+so every rule is also pinned on model-slug inputs.
 """
 
 import json
 import os
 import time
+from types import SimpleNamespace
 
 import pytest
 
 from etl_data_processor_spark.ops import dedup as D
 
 
-def _mk_slug(adir, name, sources=None, signature=None, success=True, age=None):
-    """Hand-build an artifact slug the way cached_df publishes one."""
+def _mk_slug(adir, name, sources=None, signature=None, success=True, age=None,
+             model=None):
+    """Hand-build an artifact slug the way cached_df publishes one (or, with
+    ``model``, the way cached_model publishes its state file)."""
     path = os.path.join(adir, name)
     os.makedirs(path, exist_ok=True)
+    if model is not None:
+        with open(os.path.join(path, "model.repr"), "w") as f:
+            f.write(repr(model))
     if success:
         open(os.path.join(path, "_SUCCESS"), "w").close()
     if sources is not None:
@@ -36,6 +44,8 @@ def _mk_slug(adir, name, sources=None, signature=None, success=True, age=None):
             )
     if age is not None:
         old = time.time() - age
+        for name in os.listdir(path):
+            os.utime(os.path.join(path, name), (old, old))
         os.utime(path, (old, old))
     return path
 
@@ -64,14 +74,19 @@ def test_vacuum_reclaims_stale_spares_fresh(adir, tmp_path):
     _mk_slug(adir, "fresh", sources=[str(src_live)], age=3600)
     _mk_slug(adir, "removed-src", sources=[str(src_gone)], age=3600)
     _mk_slug(adir, "rewritten-src", sources=[str(src_rewr)], age=3600)
+    _mk_slug(adir, "model-fresh", sources=[str(src_live)], age=3600,
+             model=[(0, [1.0])])
+    _mk_slug(adir, "model-stale", sources=[str(src_rewr)], age=3600,
+             model=[(0, [1.0])])
 
     os.remove(src_gone)
     time.sleep(0.01)  # mtime_ns must move on coarse filesystems
     src_rewr.write_text("NEW contents!")
 
     dropped = D.vacuum_artifacts(warehouse=_wh(adir), min_age_seconds=600)
-    assert sorted(dropped) == ["removed-src", "rewritten-src"]
+    assert sorted(dropped) == ["model-stale", "removed-src", "rewritten-src"]
     assert os.path.isdir(os.path.join(adir, "fresh"))
+    assert os.path.isdir(os.path.join(adir, "model-fresh"))
     assert not os.path.exists(os.path.join(adir, "removed-src"))
     assert not os.path.exists(os.path.join(adir, "rewritten-src"))
     # idempotent: a second pass finds nothing left to do
@@ -85,13 +100,17 @@ def test_vacuum_retention_window_spares_young(adir, tmp_path):
     src = tmp_path / "s.txt"
     src.write_text("x")
     _mk_slug(adir, "young-stale", sources=[str(src)])
+    _mk_slug(adir, "young-model-stale", sources=[str(src)], model=[1, 2])
     os.remove(src)
     _mk_slug(adir, "young-legacy")  # no manifest at all
     assert D.vacuum_artifacts(warehouse=_wh(adir), min_age_seconds=600) == []
     assert os.path.isdir(os.path.join(adir, "young-stale"))
-    # min_age=0 reclaims both (legacy slugs have no provenance to test)
+    assert os.path.isdir(os.path.join(adir, "young-model-stale"))
+    # min_age=0 reclaims all (legacy slugs have no provenance to test)
     dropped = D.vacuum_artifacts(warehouse=_wh(adir), min_age_seconds=0)
-    assert sorted(dropped) == ["young-legacy", "young-stale"]
+    assert sorted(dropped) == [
+        "young-legacy", "young-model-stale", "young-stale",
+    ]
 
 
 def test_vacuum_reclaims_tmp_orphans_and_bad_manifest(adir, tmp_path):
@@ -99,25 +118,33 @@ def test_vacuum_reclaims_tmp_orphans_and_bad_manifest(adir, tmp_path):
     atomic rename, so no live writer exists); an unreadable manifest is
     garbage by definition."""
     _mk_slug(adir, "slug.tmp-deadbeef", success=False, age=3600)
+    _mk_slug(adir, "model.tmp-0badf00d", success=False, age=3600,
+             model=[(0, [1.0])])  # a trainer that died before publishing
+    _mk_slug(adir, "legacy-model", age=3600, model=[(0, [1.0])])  # no manifest
     bad = _mk_slug(adir, "bad-manifest")
     with open(os.path.join(bad, "_KEY.json"), "w") as f:
         f.write("{not json")
     old = time.time() - 3600  # writing the manifest reset the dir mtime
     os.utime(bad, (old, old))
     dropped = D.vacuum_artifacts(warehouse=_wh(adir), min_age_seconds=600)
-    assert sorted(dropped) == ["bad-manifest", "slug.tmp-deadbeef"]
+    assert sorted(dropped) == [
+        "bad-manifest", "legacy-model", "model.tmp-0badf00d",
+        "slug.tmp-deadbeef",
+    ]
 
 
 def test_vacuum_dry_run_deletes_nothing(adir, tmp_path):
     src = tmp_path / "s.txt"
     src.write_text("x")
     _mk_slug(adir, "stale", sources=[str(src)], age=3600)
+    _mk_slug(adir, "stale-model", sources=[str(src)], age=3600, model=[1])
     os.remove(src)
     listed = D.vacuum_artifacts(
         warehouse=_wh(adir), min_age_seconds=600, dry_run=True
     )
-    assert listed == ["stale"]
+    assert listed == ["stale", "stale-model"]
     assert os.path.isdir(os.path.join(adir, "stale"))
+    assert os.path.isdir(os.path.join(adir, "stale-model"))
 
 
 def test_vacuum_missing_store_is_noop(tmp_path):
@@ -157,21 +184,58 @@ def test_cached_df_records_provenance_and_survives_vacuum(spark, tmp_path):
     assert slug in dropped and not os.path.exists(spath)
 
 
-def test_artifacts_vacuum_cli(adir, tmp_path, capsys):
+def test_artifacts_vacuum_cli(spark, adir, tmp_path, capsys):
     """`python -m etl_data_processor_spark artifacts vacuum` is the
-    maintain-style entry point (no Spark session required)."""
+    maintain-style entry point (no Spark session required). It collects
+    trained models too: a model whose source was regenerated leaves a
+    superseded slug, which the CLI reclaims while sparing the current
+    one."""
     from etl_data_processor_spark.__main__ import main
+    from etl_data_processor_spark.ops.similarity import cached_model
 
     src = tmp_path / "s.txt"
     src.write_text("x")
     _mk_slug(adir, "stale", sources=[str(src)], age=3600)
     os.remove(src)
+
+    # the test session, publishing into this test's warehouse
+    session = SimpleNamespace(
+        sparkContext=spark.sparkContext,
+        conf={"spark.sql.warehouse.dir": _wh(adir)},
+    )
+    corpus = tmp_path / "corpus.bin"
+    key = ("r5-cli-model", str(tmp_path))
+
+    def train(state):
+        corpus_sig = D.source_signature(str(corpus))
+        assert cached_model(
+            session, key, lambda: state, sources=(str(corpus),)
+        ) == state
+        return os.path.basename(
+            D.artifact_location(session, (*key, corpus_sig))
+        )
+
+    corpus.write_bytes(b"v1")
+    superseded = train([(0, [1.0])])
+    time.sleep(0.01)  # mtime_ns must move on coarse filesystems
+    corpus.write_bytes(b"v2, regenerated")
+    current = train([(0, [2.0])])
+    assert superseded != current
+
     rc = main(
         ["artifacts", "vacuum", "--warehouse", _wh(adir), "--min-age", "600"]
     )
     assert rc == 0
-    assert "stale" in capsys.readouterr().out
+    out = capsys.readouterr().out.splitlines()
+    assert "stale" in out and superseded not in out  # the models are young
     assert not os.path.exists(os.path.join(adir, "stale"))
+    rc = main(
+        ["artifacts", "vacuum", "--warehouse", _wh(adir), "--min-age", "0"]
+    )
+    assert rc == 0
+    out = capsys.readouterr().out.splitlines()
+    assert superseded in out and current not in out
+    assert sorted(os.listdir(adir)) == [current]
 
 
 def test_deletion_neighborhood_matches_reference_and_is_complete(spark):

@@ -4,22 +4,37 @@
   fresh-plan pin proving zero corpus scans at query time (both legs
   read persisted artifacts only).
 - cached_model's disk layer: a cold process (simulated by clearing the
-  in-memory memo) loads trained model state from warehouse/_models
-  without invoking the trainer, and the loaded object is equal — so
-  model_fingerprint, which keys the derived index artifacts, is stable
-  across sessions and the artifacts are NOT invalidated by a restart.
+  in-memory memo) loads trained model state from its slug in the
+  artifact store without invoking the trainer, and the loaded object is
+  equal — so model_fingerprint, which keys the derived index artifacts,
+  is stable across sessions and the artifacts are NOT invalidated by a
+  restart.
 """
 
 from __future__ import annotations
 
 import io
 import os
+import shutil
 from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entry_mod
+from etl_data_processor_spark.ops import dedup as D
 from etl_data_processor_spark.ops import similarity as SIM
+
+
+def _model_key(key, sources):
+    """The artifact-store key cached_model files ``key`` under."""
+    return (*key, D.source_signature(*sources))
+
+
+def _forget(spark, key, sources):
+    """Simulate process death: drop the model's session-memo entry."""
+    D._DF_CACHE.pop(
+        (spark.sparkContext.applicationId, *_model_key(key, sources)), None
+    )
 
 
 def _pairs(df):
@@ -63,46 +78,49 @@ def test_cached_model_cold_load_skips_training(spark, sf_dir, tmp_path):
     """A cold process (cleared memo) serves the model from the on-disk
     store without invoking the trainer, and the loaded state is equal
     to the trained state (so model_fingerprint-keyed artifacts stay
-    valid across restarts)."""
-    key = ("r9-test-model", str(tmp_path))
+    valid across restarts). Removing the slug leaves nothing behind."""
+    src = tmp_path / "corpus.bin"
+    src.write_bytes(b"corpus")
+    key, sources = ("r9-test-model", str(tmp_path)), (str(src),)
     calls = []
 
     def trainer():
         calls.append(1)
         return [(0, [1.0, 2.5, -0.125]), (1, [0.3333333333333333, 7.0, 0.1])]
 
-    first = SIM.cached_model(key, trainer, spark=spark)
-    assert calls == [1]
-    path = SIM.model_location(spark, key)
-    assert os.path.exists(path)
+    path = D.artifact_location(spark, _model_key(key, sources))
     try:
+        first = SIM.cached_model(spark, key, trainer, sources=sources)
+        assert calls == [1]
+        assert os.path.exists(os.path.join(path, "_SUCCESS"))
         # simulate process death: the memo is gone, the file is not
-        SIM._MODEL_CACHE.pop(key, None)
-        second = SIM.cached_model(key, trainer, spark=spark)
+        _forget(spark, key, sources)
+        second = SIM.cached_model(spark, key, trainer, sources=sources)
         assert calls == [1], "cold load must not retrain"
         assert second == first
         assert SIM.model_fingerprint(second) == SIM.model_fingerprint(first)
     finally:
-        SIM._MODEL_CACHE.pop(key, None)
-        if os.path.exists(path):
-            os.unlink(path)
+        _forget(spark, key, sources)
+        shutil.rmtree(path, ignore_errors=True)
+    assert not os.path.exists(path)
 
 
 def test_ivf_serving_cold_session_runs_no_kmeans(spark, sf_dir):
     """The production restart scenario end-to-end: after the index
     exists, a cold session (cleared model memo + DataFrame memo +
     session cache) builds q_cosine_ivf's plan without re-running the
-    k-means corpus pass — the centroids come from warehouse/_models,
-    the assignment table from warehouse/_artifacts."""
-    from etl_data_processor_spark.ops import dedup as D
+    k-means corpus pass — the centroids and the assignment table both
+    come from warehouse/_artifacts."""
     from etl_data_processor_spark.queries_north import ivf_index_artifact
 
     # ensure both artifacts exist (trains at most once)
     ivf_index_artifact(spark, sf_dir)
-    model_key = ("ivf", sf_dir, 16, 2, 0.5)
-    assert os.path.exists(SIM.model_location(spark, model_key))
+    model_key = _model_key(
+        ("ivf", sf_dir, 16, 2, 0.5), (f"{sf_dir}/embeddings.parquet",)
+    )
+    slug = D.artifact_location(spark, model_key)
+    assert os.path.exists(os.path.join(slug, "_SUCCESS"))
 
-    SIM._MODEL_CACHE.pop(model_key, None)
     D._DF_CACHE.clear()
     spark.catalog.clearCache()
 
@@ -169,71 +187,27 @@ def test_eval_mrr_shape_and_bounds(spark, sf_dir):
             assert r["rr6"] == 1.0
 
 
-def test_vacuum_models_lifecycle(spark, tmp_path):
-    """GC for the model store: crashed tmps and models whose recorded
-    fixture dir is gone are reclaimed past the age window; live models
-    (key paths exist or are relative) and young files are spared."""
-    import json
-    import time
-
-    wh = str(tmp_path / "wh")
-    mdir = os.path.join(wh, "_models")
-    os.makedirs(mdir)
-    old = time.time() - 3600
-
-    def put(name, body, manifest_key=None, age=True):
-        p = os.path.join(mdir, name)
-        with open(p, "w", encoding="utf-8") as f:
-            f.write(body)
-        if manifest_key is not None:
-            with open(f"{p}.key.json", "w", encoding="utf-8") as f:
-                json.dump({"key": repr(manifest_key)}, f)
-            if age:
-                os.utime(f"{p}.key.json", (old, old))
-        if age:
-            os.utime(p, (old, old))
-
-    live_dir = str(tmp_path / "fixture")
-    os.makedirs(live_dir)
-    put("live", "[(0, [1.0])]", manifest_key=("ivf", live_dir, 16))
-    put("stale", "[(0, [1.0])]",
-        manifest_key=("ivf", str(tmp_path / "gone_dir"), 16))
-    put("relpath", "[(0, [1.0])]", manifest_key=("pq", "testdata_rel", 8))
-    put("legacy", "[(0, [1.0])]")                      # no manifest, old
-    put(".model-tmp-123", "partial")                   # crashed writer
-    put("young", "[(0, [1.0])]",
-        manifest_key=("ivf", str(tmp_path / "also_gone"), 4), age=False)
-
-    dropped = set(SIM.vacuum_models(warehouse=wh, min_age_seconds=600))
-    assert dropped == {
-        "stale", "stale.key.json", "legacy", ".model-tmp-123",
-    }, dropped
-    left = set(os.listdir(mdir))
-    assert "live" in left and "relpath" in left and "young" in left
-
-    # dry_run lists without deleting
-    put("stale2", "x", manifest_key=("m", str(tmp_path / "gone2"), 1))
-    listed = SIM.vacuum_models(warehouse=wh, min_age_seconds=600,
-                               dry_run=True)
-    assert "stale2" in listed
-    assert os.path.exists(os.path.join(mdir, "stale2"))
-
-
 def test_cached_model_writes_manifest(spark, tmp_path):
-    key = ("r9-manifest-model", str(tmp_path))
-    try:
-        SIM.cached_model(key, lambda: [(0, [1.5])], spark=spark)
-        path = SIM.model_location(spark, key)
-        import json
+    """The model slug carries the artifact store's _KEY.json: the full key
+    (source signature included) and the sources the vacuum re-checks."""
+    import json
 
-        with open(f"{path}.key.json", encoding="utf-8") as f:
-            assert json.load(f)["key"] == repr(key)
+    src = tmp_path / "corpus.bin"
+    src.write_bytes(b"corpus")
+    key, sources = ("r9-manifest-model", str(tmp_path)), (str(src),)
+    path = D.artifact_location(spark, _model_key(key, sources))
+    try:
+        SIM.cached_model(spark, key, lambda: [(0, [1.5])], sources=sources)
+        assert sorted(os.listdir(path)) == ["_KEY.json", "_SUCCESS", "model.repr"]
+        with open(os.path.join(path, "_KEY.json"), encoding="utf-8") as f:
+            meta = json.load(f)
+        assert meta["key"] == repr((D._ARTIFACT_VERSION, *_model_key(key, sources)))
+        assert meta["sources"] == list(sources)
+        assert meta["signature"] == repr(D.source_signature(*sources))
     finally:
-        SIM._MODEL_CACHE.pop(key, None)
-        for suf in ("", ".key.json"):
-            p = SIM.model_location(spark, key) + suf
-            if os.path.exists(p):
-                os.unlink(p)
+        _forget(spark, key, sources)
+        shutil.rmtree(path, ignore_errors=True)
+    assert not os.path.exists(path)
 
 
 def test_registry_rejects_duplicate_names():

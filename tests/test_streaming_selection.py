@@ -16,7 +16,7 @@ import __spark_entry__ as entry_mod
 from etl_data_processor_spark.io import Catalog
 from etl_data_processor_spark.streaming.selection import (
     finalize_selection,
-    frozen_selection_models,
+    frozen_selection_state,
     selection_gate_sink,
 )
 from etl_data_processor_spark.streaming.windows import streaming_dedup
@@ -33,7 +33,7 @@ def test_streaming_selection_matches_batch(spark, sf_dir, tmp_path):
     # epoch freeze: the corpus-relative model state, derived once (in
     # production: from yesterday's epoch; here: the same fixture the
     # batch capstone reads, so the twin must match it exactly)
-    models = frozen_selection_models(spark, docs, ref_source="src0")
+    models = frozen_selection_state(spark, docs, ref_source="src0")
 
     # stream input in ASCENDING doc_id ranges with OVERLAPS (replayed
     # rows) — at-least-once ingest; ascending order is what makes
@@ -110,7 +110,7 @@ def test_multi_epoch_refreeze_boundary_semantics(spark, sf_dir, tmp_path):
     seen_table = str(tmp_path / "seen_norms")
 
     # ---- epoch 1: freeze from C1, stream C1 in two files -------------
-    m1 = frozen_selection_models(spark, c1, ref_source="src0")
+    m1 = frozen_selection_state(spark, c1, ref_source="src0")
     scores1 = str(tmp_path / "scores_e1")
     apply1 = selection_gate_sink(m1, seen_table, scores1)
     src1 = str(tmp_path / "in_e1")
@@ -137,7 +137,7 @@ def test_multi_epoch_refreeze_boundary_semantics(spark, sf_dir, tmp_path):
     TF.append_idempotent(TF.read(spark, seen_table), seen_snap, "e1-close")
 
     # ---- boundary: re-freeze from the grown corpus -------------------
-    m2 = frozen_selection_models(spark, full, ref_source="src0")
+    m2 = frozen_selection_state(spark, full, ref_source="src0")
     assert m2["cuts"] != m1["cuts"] or sorted(
         map(tuple, m2["lr"].collect())
     ) != sorted(map(tuple, m1["lr"].collect())), "re-freeze changed nothing"
