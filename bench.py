@@ -317,6 +317,16 @@ def vm_probe(best_of: int = 3) -> float:
     return round(best, 4)
 
 
+def full_artifact_name(cpus: str, nproc: int) -> str:
+    """File for the full result: ``BENCH_full.json``, or ``BENCH_full_c<N>.json``
+    when ``SPARK_GRAFT_CPUS`` (``cpus``) pins a core count other than the
+    machine's (a scaling run), so it does not overwrite the default run's
+    artifact; the same naming as ``BENCH_r10_c8.json``."""
+    if cpus in ("", "*", str(nproc)):
+        return "BENCH_full.json"
+    return f"BENCH_full_c{cpus}.json"
+
+
 def main() -> None:
     probe_s = vm_probe()
     spark = get_spark("bench", extra_conf={"spark.ui.enabled": "true"})
@@ -505,9 +515,10 @@ def main() -> None:
     # Self-contained artifact (VERDICT r2 finding 3): the driver captures
     # only a stdout tail, which has truncated past rounds' JSON — so always
     # persist the full parsed result next to the script as well.
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_full.json"
+    full_name = full_artifact_name(
+        os.environ.get("SPARK_GRAFT_CPUS", ""), len(os.sched_getaffinity(0))
     )
+    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), full_name)
     try:
         with open(full_path, "w") as f:
             f.write(payload + "\n")
@@ -540,7 +551,7 @@ def main() -> None:
         "wall_flags_cleared_on_confirm": sorted(
             out.get("wall_flags_cleared_on_confirm", {})
         ),
-        "full": "BENCH_full.json",
+        "full": full_name,
     }
     print(json.dumps(compact), flush=True)
 

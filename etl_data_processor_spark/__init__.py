@@ -35,9 +35,10 @@ surveyed in SURVEY.md), generalized into a tested operator library:
 
 Everything is public-Spark-surface only: DataFrame/SQL + Catalyst; no custom
 optimizer rules, no RDDs in hot paths, no collect() inside operators.
+
+Importing the package imports nothing else, pyspark included: Python workers
+start as ``python -m etl_data_processor_spark.worker_daemon``, which must
+settle ``sys.path`` before pyspark is imported. Import the submodules.
 """
 
 __version__ = "0.1.0"
-
-from etl_data_processor_spark.session import get_spark  # noqa: F401
-from etl_data_processor_spark.io import Catalog  # noqa: F401

@@ -8,6 +8,8 @@ right default on a 1000-executor cluster:
 - Broadcast threshold generous enough that TPC-H-style dims always broadcast.
 - Shuffle partitions sized for the test scale; at cluster scale AQE coalesces
   and the caller can override via ``extra_conf``.
+- Python workers run under ``worker_daemon``, which imports pyspark from
+  site-packages instead of Spark's archives (see its docstring).
 """
 
 from __future__ import annotations
@@ -53,6 +55,19 @@ DEFAULT_CONF: dict[str, str] = {
 }
 
 
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def worker_conf(root: str, cwd: str, pythonpath: str) -> dict[str, str]:
+    """The worker-daemon conf, set only where workers can import the package
+    at ``root``: through the JVM's working directory (``cwd``, inherited from
+    this process) or ``PYTHONPATH``, as they import ``ops.*``."""
+    places = [cwd, *filter(None, pythonpath.split(os.pathsep))]
+    if os.path.realpath(root) in map(os.path.realpath, places):
+        return {"spark.python.daemon.module": "etl_data_processor_spark.worker_daemon"}
+    return {}
+
+
 def get_spark(
     app_name: str = "etl-data-processor-spark",
     master: str | None = None,
@@ -70,6 +85,7 @@ def get_spark(
         master = f"local[{cpus}]"
     builder = builder.master(master)
     conf = dict(DEFAULT_CONF)
+    conf.update(worker_conf(PACKAGE_ROOT, os.getcwd(), os.environ.get("PYTHONPATH", "")))
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
