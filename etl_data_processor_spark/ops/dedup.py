@@ -107,26 +107,6 @@ def _parallelize(df: DataFrame) -> DataFrame:
     return df.repartition(parallelism)
 
 
-def cache_skinny(df: DataFrame, probe: DataFrame, n: int = 8) -> DataFrame:
-    """Cache a skinny DERIVED frame (gate-decision doc-id sets, vocab/bigram
-    aggregates) at a width keyed off the width of ``probe`` — the raw scan
-    it derives from (pass the PRE-``_parallelize`` frame: the widened one
-    always reads as wide).
-
-    Narrow probe (test scale): repartition DOWN to ``n`` first — caching at
-    the aggregation's 32-way shuffle width pins near-empty partitions past
-    AQE for every downstream consumer (~0.15 cpu-s fixed cost per task, the
-    round-6 hybrid-RRF lesson). Wide probe (the 100 TB case): keep the
-    aggregation's shuffle width untouched — these frames are corpus-
-    cardinality (one row per surviving doc) and collapsing them to ``n``
-    fixed partitions would rebuild every downstream join from ``n`` tasks
-    (VERDICT r6 item 3). The probe is the same metadata-only optimized-plan
-    width check as :func:`_parallelize` — no job, no stage finalization."""
-    if _parallelize(probe) is not probe:  # probe is narrow (test scale)
-        df = df.repartition(n)
-    return df.cache()
-
-
 # The one in-process memo, keyed (applicationId, *key): cached_df frames,
 # trained model state (ops.similarity.cached_model), resolved parquet
 # readers (io.read_parquet_memo, io.Catalog.table) and per-session

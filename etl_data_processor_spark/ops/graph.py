@@ -160,9 +160,12 @@ def connected_components(
     both paths against each other).
     """
     def signature(df: DataFrame) -> tuple[int, int]:
-        # the agg action doubles as the checkpoint materializer (lazy
-        # localCheckpoint persists on its first job) — one job per round,
-        # not two
+        # Under AQE this is NOT where the round runs: the lazy
+        # localCheckpoint(eager=False) that made `df` already ran every
+        # upstream query stage to plan its final one (at sf0.01, 27 of
+        # q_corpus_pipeline's 29 build-time jobs run inside that call).
+        # This action runs what is left (2 jobs there): the final stage,
+        # which persists the checkpoint, and the signature agg over it.
         row = df.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
@@ -358,6 +361,16 @@ def dedup_keep_best(
     return docs.join(F.broadcast(drop), id_col, "left_anti")
 
 
+def _by_src(edges: DataFrame) -> DataFrame:
+    """Hash-partition ``edges`` by src at the session's shuffle width. The
+    explicit count matters: the session lets AQE coalesce a cached plan's
+    final shuffle, and a coalesced ``repartition("src")`` no longer
+    matches the join's required distribution, so every round would
+    re-shuffle the edge list. AQE leaves a numbered repartition alone."""
+    n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return edges.repartition(n, "src")
+
+
 def bfs_hops(
     edges: DataFrame, seeds: DataFrame, max_hops: int = 3
 ) -> DataFrame:
@@ -371,13 +384,14 @@ def bfs_hops(
     nodes against the edge list (not the accumulated set), so round cost is
     O(edges incident to the frontier) — the textbook Pregel BFS. The edge
     list is repartitioned by src ONCE and cached: every round's join reuses
-    that layout, so only the (node-bounded) frontier side shuffles.
+    that layout, so only the (node-bounded) frontier side shuffles. The
+    width is pinned (:func:`_by_src`) so AQE cannot coalesce the cache.
     Early-stops when a round discovers nothing (one count per round — a
     scalar job on the already-checkpointed frontier, same convergence
     pattern as connected_components). Equivalent to ``max_hops`` rounds of
     Bellman-Ford relaxation — the oracle unrolls exactly that recurrence.
     """
-    edges = edges.select("src", "dst").repartition("src").cache()
+    edges = _by_src(edges.select("src", "dst")).cache()
     dist = (
         seeds.select(F.col("node"), F.lit(0).alias("dist"))
         .distinct()
@@ -419,7 +433,7 @@ def sssp_bounded(
     per round against the src-partitioned cached edge list. Integer
     costs ⇒ engine-exact; the oracle unrolls the identical recurrence.
     Returns (node, dist)."""
-    edges = edges.select("src", "dst", "w").repartition("src").cache()
+    edges = _by_src(edges.select("src", "dst", "w")).cache()
     dist = (
         seeds.select(F.col("node"), F.lit(0).cast("long").alias("dist"))
         .distinct()

@@ -286,16 +286,11 @@ def q_hybrid_rrf(spark, sf_dir):
         F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
     # tf rows are distinct per (doc, token), so the per-token row count
-    # of the candidate frame IS the document frequency. The frame is
-    # repartitioned DOWN before caching: it is query-bounded and skinny
-    # (the round-robin exchange moves |q_tokens| x df three-column rows,
-    # negligible at any scale), while caching it at the tf shuffle's
-    # width pins corpus-width partitioning past AQE's reach — measured
-    # on this VM at ~0.15 cpu-s per-task fixed overhead, which is what
-    # the r6 scale stress actually flagged. coalesce() instead would
-    # collapse the corpus-wide tf reduce stage itself to 4 tasks — wrong
-    # at 100 TB; repartition keeps the upstream agg at full parallelism.
-    cand = tf.repartition(max(4, len(qids))).cache()
+    # of the candidate frame IS the document frequency. AQE sizes the
+    # cache from its data (the session lets it coalesce cached plans):
+    # a few partitions for this query-bounded frame, while the tf
+    # aggregate upstream keeps its full width.
+    cand = tf.cache()
     df = cand.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
     idf = F.log(
         F.lit(1.0)

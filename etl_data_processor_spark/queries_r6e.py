@@ -74,14 +74,13 @@ def q_collocations_pmi(spark, sf_dir):
     exact integer ratios. Scale: one corpus bigram explode into a
     vocabulary-sized aggregate; marginals re-aggregate the BIGRAM table
     (never the corpus); top-k is vocabulary-sized."""
-    from etl_data_processor_spark.ops.dedup import _parallelize, cache_skinny
+    from etl_data_processor_spark.ops.dedup import _parallelize
     from etl_data_processor_spark.ops.text import doc_grams_arrow
 
     # width guard: the bigram pass is the CPU-heavy stage and a
     # small single-file scan arrives as one partition (stress: 3.6 s
     # max task at sf1); a no-op on wide scans at 100 TB
-    raw_scan = _cat(spark, sf_dir).documents.select("text")
-    d = _parallelize(raw_scan)
+    d = _parallelize(_cat(spark, sf_dir).documents.select("text"))
     # r11 (guide §4.2): bigram construction via the keyless Arrow gram
     # pass (batch-aggregated "a b" occurrence counts — tokens contain no
     # whitespace, so substring_index splits the pair back exactly); the
@@ -89,12 +88,11 @@ def q_collocations_pmi(spark, sf_dir):
     # this key's dominant stage (6.4 executor-cpu-s at sf0.1).
     # The bigram table is vocabulary-sized and feeds FOUR consumers
     # (totals, both marginals, the scored join): cache it so the corpus
-    # pass runs exactly once (plan-pinned). Width is adaptive
-    # (cache_skinny, VERDICT r6 item 3): down to 8 at test scale —
-    # caching at the agg shuffle's width pins near-empty partitions past
-    # AQE for all four consumers (the hybrid-RRF lesson) — and untouched
-    # at 100 TB, where the bigram table's growth is unbounded
-    bg = cache_skinny(
+    # pass runs exactly once (plan-pinned). AQE sizes the cached width
+    # from the table (the session lets it coalesce cached plans): a few
+    # partitions at test scale, the agg's full width at 100 TB, where
+    # the bigram table's growth is unbounded
+    bg = (
         doc_grams_arrow(d, (2,), None, shape="batch_counts")
         .groupBy("g")
         .agg(F.sum("c").alias("c"))
@@ -102,8 +100,8 @@ def q_collocations_pmi(spark, sf_dir):
             F.substring_index(F.col("g"), " ", 1).alias("a"),
             F.substring_index(F.col("g"), " ", -1).alias("b"),
             "c",
-        ),
-        raw_scan,
+        )
+        .cache()
     )
     tot = bg.agg(F.sum("c").alias("n"))
     ua = bg.groupBy(F.col("a").alias("t")).agg(F.sum("c").alias("ca"))

@@ -176,15 +176,14 @@ def q_selection_pipeline(spark, sf_dir):
     TakeOrderedAndProject with rank recovered on the <=k rows — no
     single-partition window anywhere); nothing materializes between
     stages."""
-    from etl_data_processor_spark.ops.dedup import _parallelize, cache_skinny
+    from etl_data_processor_spark.ops.dedup import _parallelize
 
     d = _cat(spark, sf_dir).documents
-    raw_scan = d.select("doc_id", "source", "text", "n_chars")
     # width-guard the CPU-heavy explode stages (char counts, corpus-side
     # gram/token streams): a small single-file scan arrives as one
     # partition and ran the whole capstone nearly serially (stress:
     # 20 s wall ~ 19 cpu-s at sf0.1); a no-op on wide scans at 100 TB
-    dp = _parallelize(raw_scan)
+    dp = _parallelize(d.select("doc_id", "source", "text", "n_chars"))
 
     # stage 1: entropy gate (q_char_entropy_filter's integer rule; r10 —
     # the gate's eq comes from ops.text.char_entropy_q12, ONE vectorized
@@ -197,15 +196,17 @@ def q_selection_pipeline(spark, sf_dir):
     # chain (the stress measured the uncached form at 19 s wall ~ 5
     # sequential re-runs of the prefix). The cached frames carry ONE
     # long per surviving doc, so the heavy passes (entropy, trigram
-    # join, token explode) run exactly once. Width is adaptive
-    # (cache_skinny, VERDICT r6 item 3): down to 8 at test scale (caching
-    # at the 32-way shuffle width pins near-empty partitions past AQE),
-    # untouched at 100 TB (the doc-id sets are corpus-cardinality there).
-    ent = cache_skinny(
+    # join, token explode) run exactly once. No width is set by hand:
+    # `ent` keeps the width-guarded scan's partitions, and AQE sizes the
+    # aggregation shuffles under `keep` and `contam` from their data
+    # (the session lets it coalesce cached plans) — a few partitions at
+    # test scale, the full shuffle width at 100 TB, where these doc-id
+    # sets are corpus-cardinality.
+    ent = (
         dp.select("doc_id", char_entropy_q12(F.col("text")).alias("eq"))
         .filter(F.col("eq") >= F.lit(_SEL_ENT_MIN) * F.lit(1e12))
-        .select("doc_id"),
-        raw_scan,
+        .select("doc_id")
+        .cache()
     )
     g1 = dp.join(ent, "doc_id").select("doc_id", "source", "text", "n_chars")
 
@@ -221,12 +222,12 @@ def q_selection_pipeline(spark, sf_dir):
 
     # stage 3: exact dedup, keep min doc_id per normalized text
     norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    keep = cache_skinny(
+    keep = (
         g2.select("doc_id", norm.alias("norm"))
         .groupBy("norm")
         .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id"),
-        raw_scan,
+        .select("doc_id")
+        .cache()
     )
     g3 = g2.join(keep, "doc_id")
 
@@ -254,7 +255,7 @@ def q_selection_pipeline(spark, sf_dir):
     cgrams = doc_grams_arrow(
         cand0, (3,), "doc_id", "long", shape="doc_distinct"
     )
-    contam = cache_skinny(
+    contam = (
         cgrams.join(F.broadcast(bench.withColumn("__h", F.lit(1))), "g", "left")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("ng"), F.count("__h").alias("nh"))
@@ -262,8 +263,8 @@ def q_selection_pipeline(spark, sf_dir):
             F.col("nh").cast("double") / F.col("ng").cast("double")
             <= _SEL_CONTAM_TAU
         )
-        .select("doc_id"),
-        raw_scan,
+        .select("doc_id")
+        .cache()
     )
     g4 = cand0.join(contam, "doc_id")
 

@@ -511,12 +511,12 @@ def q_tpch_q21(spark, sf_dir):
     per-order aggregate over the already-joined frame: n_supp = distinct
     suppliers on the order, n_late = distinct LATE suppliers. EXISTS(other
     supplier) = n_supp >= 2; NOT EXISTS(other late supplier) = n_late = 1
-    given the outer row is itself late. The orderkey shuffle that builds
-    the joined frame is REUSED by the groupBy and by the join back (same
-    key), so the whole query costs one fact shuffle + one broadcast — at
-    100 TB this is the difference between 1 and 3 passes over lineitem.
-    The frame feeds two consumers, so it is cached (per-order rows, narrow
-    projection)."""
+    given the outer row is itself late, so the whole query costs one
+    pass over lineitem — at 100 TB the difference between 1 and 3. The
+    frame feeds two consumers, so it is cached (per-order rows, narrow
+    projection). When orders is too large to broadcast, the join back
+    re-shuffles the late rows by orderkey: the session lets AQE coalesce
+    the cached frame, so its orderkey partitioning is not reused."""
     cat = _cat(spark, sf_dir)
     eur = (
         cat.supplier.join(

@@ -4,6 +4,14 @@ Local testing runs on ``local[N]`` but every setting is chosen to also be the
 right default on a 1000-executor cluster:
 
 - AQE on (runtime join demotion, skew-join splitting, partition coalescing).
+  Coalescing covers cached frames too
+  (``canChangeCachedPlanOutputPartitioning``): a ``.cache()`` after an
+  aggregation is sized from its data instead of pinning
+  ``spark.sql.shuffle.partitions`` near-empty partitions for every reader.
+  Spark defaults this off because a reader that relies on a cached frame's
+  hash partitioning (a join on the key it was repartitioned by) may then
+  need an extra shuffle; such a frame pins its width with
+  ``repartition(n, col)``, which AQE leaves alone (``ops.graph._by_src``).
 - Arrow on for every pandas_udf / mapInPandas boundary (vectorized transfer).
 - Broadcast threshold generous enough that TPC-H-style dims always broadcast.
 - Shuffle partitions sized for the test scale; at cluster scale AQE coalesces
@@ -22,6 +30,9 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE size a cached frame's partitions from its data, as it does for
+    # any other plan (see the module docstring for why Spark defaults it off).
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",

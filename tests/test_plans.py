@@ -664,12 +664,11 @@ def test_hybrid_rrf_broadcast_legs_no_cartesian(spark, sf_dir):
     """B66 q_hybrid_rrf: query-side frames (query tokens, df, corpus
     stats, query vectors) broadcast into both legs; no cartesian
     product, no Python boundary — corpus cost is ONE tf explode+agg
-    pass plus the query-partitioned top-k windows. Exactly one
-    round-robin exchange is allowed and required: the query-bounded
-    candidate frame is repartitioned DOWN before caching (caching at
-    the tf shuffle's width pins 32 near-empty partitions past AQE's
-    reach — the per-task fixed cost the r6 scale stress flagged as
-    21x CPU at 10x data); the cached candidate frame is the only
+    pass plus the query-partitioned top-k windows. No round-robin
+    exchange: the query-bounded candidate frame is cached as the tf
+    aggregate leaves it, and AQE sizes the cache from its data (the
+    session lets it coalesce cached plans), so a hand repartition would
+    only add an exchange; the cached candidate frame is the only
     corpus-explode subtree — df and the scoring join both read it."""
     import re
 
@@ -677,7 +676,7 @@ def test_hybrid_rrf_broadcast_legs_no_cartesian(spark, sf_dir):
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "EvalPython" not in plan
-    assert len(re.findall(r"RoundRobinPartitioning", plan)) == 1
+    assert len(re.findall(r"RoundRobinPartitioning", plan)) == 0
     assert "InMemoryRelation" in plan
 
 
@@ -714,29 +713,97 @@ def test_topk_ranking_keys_plan_take_ordered_no_window(spark, sf_dir):
         assert len(re.findall(r"^\(\d+\) Window", plan, re.M)) == 0, name
 
 
-def test_cache_skinny_width_adapts_to_probe():
-    """cache_skinny (VERDICT r6 #3): a skinny derived frame caches at the
-    small fixed width when the raw scan is narrow (test scale) and keeps
-    its shuffle width untouched when the scan is wide — corpus-cardinality
-    doc-id sets must not collapse to 8 tasks at 100 TB. The cached plan is
-    an InMemoryRelation, so the width shows as the RoundRobin exchange in
-    its stored physical plan."""
-    from pyspark.sql import SparkSession
+def test_aqe_sizes_cached_plans_from_their_data(spark):
+    """The session lets AQE coalesce a cached plan's final shuffle
+    (spark.sql.optimizer.canChangeCachedPlanOutputPartitioning; Spark's
+    default pins every cached aggregate at spark.sql.shuffle.partitions).
+    A tiny cached groupBy therefore materializes in fewer partitions than
+    the shuffle width, while the same frame keeps the full width when its
+    rows count as large — the 100 TB case, where a doc-id set or a
+    vocabulary table must not collapse onto a few tasks."""
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    small = ("spark.sql.adaptive.advisoryPartitionSizeInBytes",
+             "spark.sql.adaptive.coalescePartitions.minPartitionSize")
 
-    from etl_data_processor_spark.ops.dedup import cache_skinny
+    def cached_width() -> int:
+        # 10k keys: every shuffle partition gets rows, up to Spark's
+        # default width of 200
+        df = spark.range(100_000).groupBy((F.col("id") % 10_000).alias("k"))
+        df = df.count().cache()
+        assert df.count() == 10_000
+        return df.rdd.getNumPartitions()
 
-    spark = SparkSession.getActiveSession()
-    narrow_probe = spark.range(10)  # tiny -> _parallelize would widen it
-    wide_probe = spark.range(10).repartition(64)  # explicit wide node
+    before = {k: spark.conf.get(k) for k in small}
     try:
-        derived = spark.range(100).groupBy("id").count()
-        out_n = cache_skinny(derived, narrow_probe)
-        plan_n = out_n._jdf.queryExecution().optimizedPlan().toString()
-        assert "RoundRobinPartitioning(8)" in plan_n
-
-        derived2 = spark.range(100).groupBy("id").agg(F.count(F.lit(1)))
-        out_w = cache_skinny(derived2, wide_probe)
-        plan_w = out_w._jdf.queryExecution().optimizedPlan().toString()
-        assert "RoundRobinPartitioning" not in plan_w
+        assert cached_width() < width
+        spark.catalog.clearCache()
+        for k in small:
+            spark.conf.set(k, "1")
+        assert cached_width() == width
     finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+        spark.catalog.clearCache()
+
+
+def test_get_spark_lets_aqe_resize_cached_plans(monkeypatch):
+    """get_spark sets the cached-plan conf, and extra_conf still wins.
+    The builder is faked: no session is started or changed."""
+    from types import SimpleNamespace
+
+    from etl_data_processor_spark import session
+
+    class Builder:
+        def __init__(self):
+            self.conf = {}
+
+        def appName(self, _):
+            return self
+
+        def master(self, _):
+            return self
+
+        def config(self, k, v):
+            self.conf[k] = v
+            return self
+
+        def getOrCreate(self):
+            return self.conf
+
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    fake = SimpleNamespace()
+    monkeypatch.setattr(session, "SparkSession", fake)
+    fake.builder = Builder()
+    assert session.get_spark()[key] == "true"
+    fake.builder = Builder()
+    assert session.get_spark(extra_conf={key: "false"})[key] == "false"
+
+
+def test_graph_edge_cache_keeps_src_partitioning(spark):
+    """bfs_hops / sssp_bounded join their cached edge list on src every
+    round. The session lets AQE coalesce a cached ``repartition("src")``,
+    after which the cache no longer satisfies the join and each round
+    re-shuffles the edges; ``ops.graph._by_src`` pins the width, so only
+    the (small) frontier side shuffles. Broadcast is off here, as it is
+    for edge lists too large to broadcast."""
+    from etl_data_processor_spark.ops.graph import _by_src
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        edges = _by_src(
+            spark.range(200).select(
+                F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+            )
+        ).cache()
+        edges.count()
+        front = spark.range(0, 200, 7).select(F.col("id").alias("src"))
+        joined = edges.join(front, "src")
+        assert joined.count() == len(range(0, 200, 7))
+        plan = joined._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in plan
+        assert plan.count("ENSURE_REQUIREMENTS") == 1, plan
+    finally:
+        spark.conf.set(key, before)
         spark.catalog.clearCache()
