@@ -278,49 +278,19 @@ def q_quality_drift_psi(spark, sf_dir):
     sum (integer summation is order-independent; a raw double SUM drifts
     with partition order — ops/exact). 100 TB shape: one corpus
     aggregate to (source, bin) counts; everything after is
-    sources x 10 rows, reference bins broadcast back."""
-    d = _cat(spark, sf_dir).documents
-    qs = T.quality_score(F.col("text"))
-    b = d.select(
-        "source",
-        F.least(F.floor(qs * 10).cast("int"), F.lit(9)).alias("bin"),
-    )
+    sources x 10 rows, reference bins broadcast back. The statistic is
+    ops.drift.psi_kernel, which streaming.drift.psi_monitor runs per
+    micro-batch; this loader supplies the reference."""
+    from etl_data_processor_spark.ops import drift as DR
+
     # the corpus collapses to <= |sources| x 10 rows here; cache the tiny
-    # table so the four consumers below (totals, grid, reference bins,
-    # terms) never re-run the corpus scan (plan-pinned: one parquet scan)
-    cnt = b.groupBy("source", "bin").agg(F.count("*").alias("c")).cache()
-    tot = cnt.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
-    grid = tot.crossJoin(
-        spark.range(10).select(F.col("id").cast("int").alias("bin"))
-    )
-    filled = grid.join(cnt, ["source", "bin"], "left").select(
-        "source", "bin", "n", F.coalesce(F.col("c"), F.lit(0)).alias("c")
-    )
-    ref = tot.agg(F.min("source").alias("rs"))
-    rd = (
-        filled.join(F.broadcast(ref), F.col("source") == F.col("rs"))
-        .select(F.col("bin"), F.col("c").alias("rc"), F.col("n").alias("rn"))
-    )
-    p = (F.col("c") + 1.0) / (F.col("n") + 10.0)
-    r = (F.col("rc") + 1.0) / (F.col("rn") + 10.0)
-    tq = F.floor((p - r) * F.log(p / r) * 1e12 + 0.5).cast("long")
-    terms = (
-        filled.crossJoin(F.broadcast(ref))
-        .filter(F.col("source") != F.col("rs"))
-        .join(F.broadcast(rd), "bin")
-        .select("source", "n", tq.alias("tq"))
-    )
-    return (
-        terms.groupBy("source")
-        .agg(
-            F.first("n").alias("n_docs"),
-            (
-                F.floor(F.sum("tq").cast("double") / 1000000.0 + 0.5)
-                / 1000000.0
-            ).alias("psi6"),
-        )
-        .orderBy("source")
-    )
+    # table so the kernel's consumers never re-run the corpus scan
+    # (plan-pinned: one parquet scan)
+    cnt = DR.psi_bin_counts(_cat(spark, sf_dir).documents).cache()
+    rs = F.broadcast(cnt.agg(F.min("source").alias("rs")))
+    ref = cnt.join(rs, F.col("source") == F.col("rs")).select("bin", "c")
+    psi = DR.psi_kernel(cnt, ref)
+    return psi.join(rs, F.col("source") != F.col("rs")).drop("rs").orderBy("source")
 
 
 # =====================================================================

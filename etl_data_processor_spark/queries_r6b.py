@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from etl_data_processor_spark.ops import drift as DR
 from etl_data_processor_spark.ops import similarity as SIM
 from etl_data_processor_spark.registry import cat as _cat
 from etl_data_processor_spark.registry import q
@@ -1059,7 +1060,6 @@ def q_contamination_ngrams(spark, sf_dir):
 # =====================================================================
 
 _KS_REF = "src0"   # reference source
-_KS_C05 = 1.358    # c(alpha) for alpha = 0.05 (standard KS table)
 
 _KS_ORACLE = f"""
 WITH vc AS (
@@ -1100,7 +1100,7 @@ SELECT d.source, d.n,
                   * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0 AS ks6,
        CAST(CASE WHEN CAST(d.dmax AS DOUBLE)
                       / (CAST(d.n AS DOUBLE) * CAST(nref.n_ref AS DOUBLE))
-                 > {_KS_C05} * SQRT((CAST(d.n AS DOUBLE)
+                 > {DR.KS_C05} * SQRT((CAST(d.n AS DOUBLE)
                                      + CAST(nref.n_ref AS DOUBLE))
                                     / (CAST(d.n AS DOUBLE)
                                        * CAST(nref.n_ref AS DOUBLE)))
@@ -1125,60 +1125,13 @@ def q_ks_drift(spark, sf_dir):
     |sources| x |distinct lengths| rows — value-distribution-sized, not
     corpus-sized; the only window runs per source on that tiny grid.
     At 100 TB the value-count table for an integer-valued metric is
-    bounded by the metric's range, not the row count."""
-    d = _cat(spark, sf_dir).documents
-    vc = d.groupBy("source", F.col("n_chars").alias("v")).agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    vc = vc.cache()  # value-distribution-sized; feeds four branches
-    rc = vc.filter(F.col("source") == _KS_REF).select(
-        "v", F.col("c").alias("cr")
-    )
-    nn = vc.groupBy("source").agg(F.sum("c").alias("n"))
-    n_ref = nn.filter(F.col("source") == _KS_REF).select(
-        F.col("n").alias("n_ref")
-    )
-    sources = vc.select("source").filter(
-        F.col("source") != _KS_REF
-    ).distinct()
-    points = vc.select("v").distinct()
-    pts = (
-        sources.crossJoin(points)
-        .join(vc, ["source", "v"], "left")
-        .join(F.broadcast(rc), "v", "left")
-        .select(
-            "source", "v",
-            F.coalesce(F.col("c"), F.lit(0)).alias("cs"),
-            F.coalesce(F.col("cr"), F.lit(0)).alias("cr"),
-        )
-    )
-    wv = Window.partitionBy("source").orderBy("v")
-    cum = pts.select(
-        "source", "v",
-        F.sum("cs").over(wv).alias("fs"),
-        F.sum("cr").over(wv).alias("fr"),
-    )
-    dmax = (
-        cum.join(F.broadcast(nn), "source")
-        .crossJoin(F.broadcast(n_ref))
-        .groupBy("source", "n")
-        .agg(
-            F.max(
-                F.abs(
-                    F.col("fs") * F.col("n_ref") - F.col("fr") * F.col("n")
-                )
-            ).alias("dmax"),
-            F.first("n_ref").alias("n_ref"),
-        )
-    )
-    nd = F.col("n").cast("double")
-    rd = F.col("n_ref").cast("double")
-    ks = F.col("dmax").cast("double") / (nd * rd)
-    crit = F.lit(_KS_C05) * F.sqrt((nd + rd) / (nd * rd))
-    return dmax.select(
-        "source", "n",
-        SIM.stable_round6(ks).alias("ks6"),
-        F.when(ks > crit, 1).otherwise(0).alias("drifted"),
+    bounded by the metric's range, not the row count. The statistic is
+    ops.drift.ks_kernel, shared with streaming.drift.ks_monitor."""
+    # value-distribution-sized; feeds the kernel's four branches
+    vc = DR.value_counts(_cat(spark, sf_dir).documents).cache()
+    return DR.ks_kernel(
+        vc.filter(F.col("source") != _KS_REF),
+        vc.filter(F.col("source") == _KS_REF).select("v", "c"),
     )
 
 

@@ -158,6 +158,194 @@ FROM sel
 """
 
 
+def entropy_gate(docs):
+    """Stage 1: doc_ids whose character entropy is >= 2.0 bits
+    (q_char_entropy_filter's integer rule). The eq comes from
+    ops.text.char_entropy_q12, ONE vectorized Arrow pass (r10; it
+    replaced a char explode -> two hash aggs -> join chain that cost 8
+    executor-cpu-seconds of this capstone's 53)."""
+    from etl_data_processor_spark.ops.text import char_entropy_q12
+
+    return (
+        docs.select("doc_id", char_entropy_q12(F.col("text")).alias("eq"))
+        .filter(F.col("eq") >= F.lit(_SEL_ENT_MIN) * F.lit(1e12))
+        .select("doc_id")
+    )
+
+
+def length_gate(g1, cuts):
+    """Stage 2: the rows of ``g1`` inside the ``cuts`` (lo, hi)."""
+    nc = F.col("n_chars").cast("double")
+    return g1.crossJoin(F.broadcast(cuts)).filter(
+        (nc >= F.col("lo")) & (nc <= F.col("hi"))
+    ).drop("lo", "hi")
+
+
+def decontaminate(cand0, bench):
+    """Stage 4: doc_ids of ``cand0`` whose distinct-trigram overlap with
+    ``bench`` is <= 0.2 (the q_contamination_ngrams rule). r11 (guide
+    §4.2 + §2.4): trigrams come from ops.text.doc_grams_arrow (the
+    interpreted JVM HOF chain was this capstone's heaviest stage), and
+    per-doc dedup rides inside the candidate pass (doc_id unique at all
+    SFs), deleting the (doc_id, g) distinct exchange."""
+    from etl_data_processor_spark.ops.text import doc_grams_arrow
+
+    cgrams = doc_grams_arrow(cand0, (3,), "doc_id", "long", shape="doc_distinct")
+    return (
+        cgrams.join(F.broadcast(bench.withColumn("__h", F.lit(1))), "g", "left")
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("ng"), F.count("__h").alias("nh"))
+        .filter(
+            F.col("nh").cast("double") / F.col("ng").cast("double")
+            <= _SEL_CONTAM_TAU
+        )
+        .select("doc_id")
+    )
+
+
+def dsir_log_ratios(tgt_docs, bt):
+    """Stage 5's model: the 64-row DSIR log-ratio table (bucket, lr_q),
+    target LM from ``tgt_docs``' hashed unigrams, raw LM from the
+    candidates' (doc_id, bucket, c) counts ``bt``; +1 smoothing, each
+    log ratio quantized to a 1e-12 integer. Bucket assignment is a PURE
+    function of the token: ops.text.token_poly_bucket_counts runs
+    tokenize + the char fold + pmod + count in one Arrow pass per
+    stream (r11, guide §4.2)."""
+    from etl_data_processor_spark.ops.text import token_poly_bucket_counts
+
+    tgt = (
+        token_poly_bucket_counts(tgt_docs, _SEL_BUCKETS)
+        .groupBy("bucket")
+        .agg(F.sum("c").alias("ct"))
+    )
+    raw = bt.groupBy("bucket").agg(F.sum("c").alias("cr"))
+    tots = tgt.agg(F.sum("ct").alias("nt")).crossJoin(
+        raw.agg(F.sum("cr").alias("nr"))
+    )
+    grid = bt.sparkSession.range(_SEL_BUCKETS).select(
+        F.col("id").cast("long").alias("bucket")
+    )
+    ratio = (
+        (F.coalesce(F.col("ct"), F.lit(0)) + F.lit(1.0))
+        / (F.col("nt") + F.lit(float(_SEL_BUCKETS)))
+    ) / (
+        (F.coalesce(F.col("cr"), F.lit(0)) + F.lit(1.0))
+        / (F.col("nr") + F.lit(float(_SEL_BUCKETS)))
+    )
+    return (
+        grid.join(tgt, "bucket", "left")
+        .join(raw, "bucket", "left")
+        .crossJoin(F.broadcast(tots))
+        .select(
+            "bucket",
+            F.floor(F.log(ratio) * F.lit(1e12) + F.lit(0.5))
+            .cast("long")
+            .alias("lr_q"),
+        )
+    )
+
+
+def dsir_scores(bt, lr):
+    """Stage 5: per-doc (doc_id, n_tokens, lw_q) from the (doc_id,
+    bucket, c) counts ``bt`` under the log-ratio table ``lr`` — per-token
+    lr_q sums as the algebraically identical per-bucket c * lr_q sums."""
+    return (
+        bt.join(F.broadcast(lr), "bucket")
+        .groupBy("doc_id")
+        .agg(
+            F.sum("c").alias("n_tokens"),
+            F.sum(F.col("c") * F.col("lr_q")).alias("lw_q"),
+        )
+    )
+
+
+def select_top(scored):
+    """Stage 6: top-100 of ``scored`` (doc_id, source, n_tokens, lw_q)
+    and hash32 shard placement. TakeOrderedAndProject (per-partition
+    heaps + a k-row merge), never a single-partition row_number window
+    over the corpus-sized scored frame (VERDICT r6 #1); sel_rank is
+    recovered on the <=k-row result."""
+    sel = ranked_topk(
+        scored, [("lw_q", "desc"), ("doc_id", "asc")], _SEL_TOP_K,
+        rank_col="sel_rank",
+    )
+    return sel.select(
+        "doc_id", "source", "n_tokens",
+        (
+            F.floor(F.col("lw_q").cast("double") / F.lit(1e6) + F.lit(0.5))
+            .cast("double") / F.lit(1e6)
+        ).alias("lw6"),
+        "sel_rank",
+        F.pmod(hash32(F.col("doc_id")), F.lit(_SEL_SHARDS))
+        .cast("int")
+        .alias("shard"),
+    )
+
+
+def dedup_key(text):
+    """Stage 3's dedup key: lower-cased, trimmed, whitespace-collapsed."""
+    return F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
+
+
+def selection_chain(dp):
+    """Stages 1-5 over ``dp`` (doc_id, source, text, n_chars). Returns
+    the corpus-relative models — ``cuts``, ``bench`` (trigram set) and
+    ``lr`` (DSIR table) — and ``scored`` (doc_id, source, n_tokens,
+    lw_q) for every survivor. q_selection_pipeline ranks ``scored``;
+    the streaming form freezes the models from an epoch's corpus.
+
+    Every gate's decision is cached as a SKINNY doc-id set: without
+    this, each downstream consumer re-executes the whole upstream chain
+    (the stress measured the uncached form at 19 s wall ~ 5 sequential
+    re-runs of the prefix). The cached frames carry ONE long per
+    surviving doc, so the heavy passes (entropy, trigram join, token
+    buckets) run exactly once. No width is set by hand: `ent` keeps the
+    width-guarded scan's partitions, and AQE sizes the aggregation
+    shuffles under `keep` and `contam` from their data (the session
+    lets it coalesce cached plans) — a few partitions at test scale,
+    the full shuffle width at 100 TB, where these doc-id sets are
+    corpus-cardinality."""
+    from etl_data_processor_spark.ops.text import (
+        doc_grams_arrow,
+        token_poly_bucket_counts,
+    )
+
+    ent = entropy_gate(dp).cache()
+    g1 = dp.join(ent, "doc_id").select("doc_id", "source", "text", "n_chars")
+    cuts = g1.agg(  # stage 2's [p05, p95] n_chars cuts (lo, hi)
+        F.percentile("n_chars", F.lit(0.05)).alias("lo"),
+        F.percentile("n_chars", F.lit(0.95)).alias("hi"),
+    )
+    g2 = length_gate(g1, cuts)
+
+    # stage 3: exact dedup, keep min doc_id per normalized text
+    keep = (
+        g2.select("doc_id", dedup_key(F.col("text")).alias("norm"))
+        .groupBy("norm")
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+        .cache()
+    )
+    g3 = g2.join(keep, "doc_id")
+
+    # stage 4's model: the benchmark's distinct word trigrams
+    ref = dp.filter(F.col("source") == _SEL_REF)
+    bench = (
+        doc_grams_arrow(ref, (3,), "doc_id", "long", shape="doc_distinct")
+        .select("g")
+        .distinct()
+    )
+    cand0 = g3.filter(F.col("source") != _SEL_REF)
+    g4 = cand0.join(decontaminate(cand0, bench).cache(), "doc_id")
+
+    # candidate (doc, bucket) counts computed ONCE for both the raw LM
+    # and the per-doc scores (skinny three-column frame, <= 64 rows/doc)
+    bt = token_poly_bucket_counts(g4, _SEL_BUCKETS, "doc_id", "long").cache()
+    lr = dsir_log_ratios(ref, bt)
+    scored = dsir_scores(bt, lr).join(g4.select("doc_id", "source"), "doc_id")
+    return {"cuts": cuts, "bench": bench, "lr": lr, "scored": scored}
+
+
 @q("q_selection_pipeline", _SEL_ORACLE)
 def q_selection_pipeline(spark, sf_dir):
     """B74 capstone: the round-6 selection layer END TO END in one plan —
@@ -175,168 +363,14 @@ def q_selection_pipeline(spark, sf_dir):
     proved (one corpus pass each; model tables broadcast; the top-k is
     TakeOrderedAndProject with rank recovered on the <=k rows — no
     single-partition window anywhere); nothing materializes between
-    stages."""
+    stages. The stage functions above are shared with
+    streaming.selection."""
     from etl_data_processor_spark.ops.dedup import _parallelize
 
     d = _cat(spark, sf_dir).documents
-    # width-guard the CPU-heavy explode stages (char counts, corpus-side
+    # width-guard the CPU-heavy Arrow stages (entropy, corpus-side
     # gram/token streams): a small single-file scan arrives as one
     # partition and ran the whole capstone nearly serially (stress:
     # 20 s wall ~ 19 cpu-s at sf0.1); a no-op on wide scans at 100 TB
     dp = _parallelize(d.select("doc_id", "source", "text", "n_chars"))
-
-    # stage 1: entropy gate (q_char_entropy_filter's integer rule; r10 —
-    # the gate's eq comes from ops.text.char_entropy_q12, ONE vectorized
-    # Arrow pass, replacing the char explode -> two hash aggs -> join
-    # chain that cost 8 executor-cpu-seconds of this capstone's 53).
-    from etl_data_processor_spark.ops.text import char_entropy_q12
-
-    # Every gate's decision is cached as a SKINNY doc-id set: without
-    # this, each downstream consumer re-executes the whole upstream
-    # chain (the stress measured the uncached form at 19 s wall ~ 5
-    # sequential re-runs of the prefix). The cached frames carry ONE
-    # long per surviving doc, so the heavy passes (entropy, trigram
-    # join, token explode) run exactly once. No width is set by hand:
-    # `ent` keeps the width-guarded scan's partitions, and AQE sizes the
-    # aggregation shuffles under `keep` and `contam` from their data
-    # (the session lets it coalesce cached plans) — a few partitions at
-    # test scale, the full shuffle width at 100 TB, where these doc-id
-    # sets are corpus-cardinality.
-    ent = (
-        dp.select("doc_id", char_entropy_q12(F.col("text")).alias("eq"))
-        .filter(F.col("eq") >= F.lit(_SEL_ENT_MIN) * F.lit(1e12))
-        .select("doc_id")
-        .cache()
-    )
-    g1 = dp.join(ent, "doc_id").select("doc_id", "source", "text", "n_chars")
-
-    # stage 2: length-quantile gate on the gated corpus
-    cuts = g1.agg(
-        F.percentile("n_chars", F.lit(0.05)).alias("lo"),
-        F.percentile("n_chars", F.lit(0.95)).alias("hi"),
-    )
-    nc = F.col("n_chars").cast("double")
-    g2 = g1.crossJoin(F.broadcast(cuts)).filter(
-        (nc >= F.col("lo")) & (nc <= F.col("hi"))
-    ).drop("lo", "hi")
-
-    # stage 3: exact dedup, keep min doc_id per normalized text
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    keep = (
-        g2.select("doc_id", norm.alias("norm"))
-        .groupBy("norm")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-        .cache()
-    )
-    g3 = g2.join(keep, "doc_id")
-
-    # stage 4: benchmark decontamination (distinct-trigram overlap —
-    # the q_contamination_ngrams rule). r11 (guide §4.2 + §2.4): trigram
-    # construction via ops.text.doc_grams_arrow (the interpreted JVM HOF
-    # chain was this capstone's heaviest stage); per-doc dedup rides
-    # inside the candidate pass (doc_id unique at all SFs), deleting
-    # the (doc_id, g) distinct exchange — the identical move proven on
-    # q_contamination_ngrams.
-    from etl_data_processor_spark.ops.text import (
-        doc_grams_arrow,
-        token_poly_bucket_counts,
-    )
-
-    bench = (
-        doc_grams_arrow(
-            dp.filter(F.col("source") == _SEL_REF),
-            (3,), "doc_id", "long", shape="doc_distinct",
-        )
-        .select("g")
-        .distinct()
-    )
-    cand0 = g3.filter(F.col("source") != _SEL_REF)
-    cgrams = doc_grams_arrow(
-        cand0, (3,), "doc_id", "long", shape="doc_distinct"
-    )
-    contam = (
-        cgrams.join(F.broadcast(bench.withColumn("__h", F.lit(1))), "g", "left")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("ng"), F.count("__h").alias("nh"))
-        .filter(
-            F.col("nh").cast("double") / F.col("ng").cast("double")
-            <= _SEL_CONTAM_TAU
-        )
-        .select("doc_id")
-        .cache()
-    )
-    g4 = cand0.join(contam, "doc_id")
-
-    # stage 5: DSIR over the survivors (target = RAW reference corpus).
-    # Bucket assignment is a PURE function of the token (char fold mod
-    # buckets). r11 (guide §4.2): both token streams' explode + per-CHAR
-    # interpreted Horner fold collapse into ops.text.token_poly_bucket_
-    # counts — one Arrow pass per stream emitting bucket COUNTS (exact
-    # integers, same fold, same pmod); per-token lr_q sums become the
-    # algebraically identical per-bucket c * lr_q sums.
-    tgt = (
-        token_poly_bucket_counts(
-            dp.filter(F.col("source") == _SEL_REF), _SEL_BUCKETS
-        )
-        .groupBy("bucket")
-        .agg(F.sum("c").alias("ct"))
-    )
-    # candidate (doc, bucket) counts computed ONCE for both the raw LM
-    # and the per-doc scores (skinny three-column frame, <= 64 rows/doc)
-    bt = token_poly_bucket_counts(g4, _SEL_BUCKETS, "doc_id", "long").cache()
-    raw = bt.groupBy("bucket").agg(F.sum("c").alias("cr"))
-    tots = tgt.agg(F.sum("ct").alias("nt")).crossJoin(
-        raw.agg(F.sum("cr").alias("nr"))
-    )
-    grid = spark.range(_SEL_BUCKETS).select(
-        F.col("id").cast("long").alias("bucket")
-    )
-    ratio = (
-        (F.coalesce(F.col("ct"), F.lit(0)) + F.lit(1.0))
-        / (F.col("nt") + F.lit(float(_SEL_BUCKETS)))
-    ) / (
-        (F.coalesce(F.col("cr"), F.lit(0)) + F.lit(1.0))
-        / (F.col("nr") + F.lit(float(_SEL_BUCKETS)))
-    )
-    lr = (
-        grid.join(tgt, "bucket", "left")
-        .join(raw, "bucket", "left")
-        .crossJoin(F.broadcast(tots))
-        .select(
-            "bucket",
-            F.floor(F.log(ratio) * F.lit(1e12) + F.lit(0.5))
-            .cast("long")
-            .alias("lr_q"),
-        )
-    )
-    scored = (
-        bt.join(F.broadcast(lr), "bucket")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("c").alias("n_tokens"),
-            F.sum(F.col("c") * F.col("lr_q")).alias("lw_q"),
-        )
-    )
-
-    # stage 6: top-k + shard placement. TakeOrderedAndProject
-    # (per-partition heaps + a k-row merge), never a single-partition
-    # row_number window over the corpus-sized scored frame (VERDICT r6
-    # #1); sel_rank is recovered on the <=k-row result.
-    sel = ranked_topk(
-        scored.join(g4.select("doc_id", "source"), "doc_id"),
-        [("lw_q", "desc"), ("doc_id", "asc")],
-        _SEL_TOP_K,
-        rank_col="sel_rank",
-    )
-    return sel.select(
-        "doc_id", "source", "n_tokens",
-        (
-            F.floor(F.col("lw_q").cast("double") / F.lit(1e6) + F.lit(0.5))
-            .cast("double") / F.lit(1e6)
-        ).alias("lw6"),
-        "sel_rank",
-        F.pmod(hash32(F.col("doc_id")), F.lit(_SEL_SHARDS))
-        .cast("int")
-        .alias("shard"),
-    )
+    return select_top(selection_chain(dp)["scored"])

@@ -66,7 +66,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from etl_data_processor_spark.ops import similarity as SIM  # noqa: E402
 from etl_data_processor_spark.ops.sampling import hash32_sql  # noqa: E402
-from etl_data_processor_spark.ops.text import _one_to, tokenize  # noqa: E402
+from etl_data_processor_spark.ops.text import tokenize  # noqa: E402
 
 _SQL_TOKENS = "list_filter(string_split(trim(text), ' '), t -> t <> '')"
 _SQL_ROUND6 = "CAST(FLOOR(({x}) * 1000000.0 + 0.5) AS DOUBLE) / 1000000.0"
@@ -1154,56 +1154,33 @@ FROM clip GROUP BY source
 """
 
 
-def rouge_grams():
-    """Word n-gram (order, gram) structs for orders 1..2 over the
-    prepared ``__w`` token-array column. Module-level so the streaming
-    twin (streaming.evals.rouge_monitor_sink) shares the exact
-    expression with the batch key."""
-    return F.flatten(
-        F.transform(
-            F.array(F.lit(1), F.lit(2)),
-            lambda n: F.transform(
-                _one_to(F.size("__w") - n + F.lit(1)),
-                lambda i: F.struct(
-                    n.alias("n"),
-                    F.array_join(F.slice("__w", i, n), " ").alias("g"),
-                ),
-            ),
-        )
+def rouge_eval(cand, ref):
+    """ROUGE-1/2 recall per candidate source: each ``cand`` row
+    (doc_id, source, text) is paired to the ``ref`` row (rid, text)
+    with rid = doc_id - (doc_id mod 20) (the q_bleu_eval pairing), the
+    two texts are joined once by rid, and clipped word-gram matches are
+    counted per pair in one Arrow pass (ops.text.pair_clip_gram_counts),
+    the recall denominator being the REFERENCE gram totals. Exact
+    integer matches/totals, one double division. The scoring kernel of
+    q_rouge_n and of streaming.evals.rouge_monitor."""
+    from etl_data_processor_spark.ops.text import pair_clip_gram_counts
+
+    c = cand.select(
+        "source",
+        (F.col("doc_id") - F.pmod(F.col("doc_id"), F.lit(_BLEU_SRCS))).alias("rid"),
+        F.col("text").alias("__c"),
     )
-
-
-def rouge_gram_counts(side, idc: str):
-    """Per-(pair id, order, gram) counts for one side."""
-    return (
-        side.select(F.col(idc).alias("pid"), F.explode(rouge_grams()).alias("p"))
-        .groupBy("pid", F.col("p.n").alias("n"), F.col("p.g").alias("g"))
-        .agg(F.count(F.lit(1)).alias("c"))
+    r = ref.select("rid", F.col("text").alias("__r"))
+    pc = pair_clip_gram_counts(
+        c.join(r, "rid").select("source", "rid", "__c", "__r"),
+        orders=(1, 2),
+        mode="token",
     )
-
-
-def rouge_report(pairs, rgc, cgc):
-    """ROUGE-1/2 recall per source from (cid, source, rid) pairs + the
-    per-side gram counts — the single scoring pipeline behind q_rouge_n
-    AND the streaming monitor (bit-identity by construction)."""
-    cgc = cgc.select(
-        F.col("pid").alias("cpid"), F.col("n").alias("cn"),
-        F.col("g").alias("cg"), F.col("c").alias("cc"),
-    )
+    # a (source, n) row exists iff some pair carried ref grams of order n
     clip = (
-        pairs.join(rgc, pairs["rid"] == rgc["pid"])
-        .join(
-            cgc,
-            (F.col("cid") == F.col("cpid"))
-            & (F.col("n") == F.col("cn"))
-            & (F.col("g") == F.col("cg")),
-            "left",
-        )
-        .groupBy("source", "n")
-        .agg(
-            F.sum(F.least(F.col("c"), F.coalesce(F.col("cc"), F.lit(0)))).alias("m"),
-            F.sum("c").alias("t"),
-        )
+        pc.groupBy("source", "n")
+        .agg(F.sum("m").alias("m"), F.sum("t_ref").alias("t"))
+        .filter(F.col("t") > 0)
     )
     wide = clip.groupBy("source").agg(
         *[
@@ -1227,50 +1204,18 @@ def q_rouge_n(spark, sf_dir):
     reference pairing: per pair, clipped gram matches are divided by the
     REFERENCE gram total (did the candidate cover the reference?),
     micro-averaged per source. Exact integer matches/totals; one double
-    division. Plan (r10): the q_bleu_eval pair-scorer shape — text
-    joined once by rid, clipped matches counted per pair in one Arrow
-    pass (ops.text.pair_clip_gram_counts), the recall denominator
-    being the REFERENCE gram totals; the explode-shaped rouge_* pair
-    stays module-level for the streaming monitor twin."""
+    division. Plan (r10): the q_bleu_eval pair-scorer shape, scored by
+    rouge_eval (shared with the streaming monitor)."""
     from etl_data_processor_spark.ops.dedup import _parallelize
-    from etl_data_processor_spark.ops.text import pair_clip_gram_counts
 
     d = _parallelize(
         _cat(spark, sf_dir).documents.select("doc_id", "source", "text")
     )
-    cand = d.filter(F.col("source") != "src0").select(
-        "source",
-        (F.col("doc_id") - F.pmod(F.col("doc_id"), F.lit(_BLEU_SRCS))).alias("rid"),
-        F.col("text").alias("__c"),
-    )
-    ref = d.filter(F.col("source") == "src0").select(
-        F.col("doc_id").alias("rid"), F.col("text").alias("__r")
-    )
-    pc = pair_clip_gram_counts(
-        cand.join(ref, "rid").select("source", "rid", "__c", "__r"),
-        orders=(1, 2),
-        mode="token",
-    )
-    # presence mirrors rouge_report's inner pairs-join on the REF gram
-    # counts: a (source, n) clip row existed iff some pair carried ref
-    # grams of that order
-    clip = (
-        pc.groupBy("source", "n")
-        .agg(F.sum("m").alias("m"), F.sum("t_ref").alias("t"))
-        .filter(F.col("t") > 0)
-    )
-    wide = clip.groupBy("source").agg(
-        *[
-            F.max(F.when(F.col("n") == i, F.col(col))).alias(f"{col}{i}")
-            for i in (1, 2)
-            for col in ("m", "t")
-        ]
-    )
-    dd = lambda c: c.cast("double")  # noqa: E731
-    return wide.select(
-        "source", "m1", "t1", "m2", "t2",
-        SIM.stable_round6(dd(F.col("m1")) / dd(F.col("t1"))).alias("rouge1_6"),
-        SIM.stable_round6(dd(F.col("m2")) / dd(F.col("t2"))).alias("rouge2_6"),
+    return rouge_eval(
+        d.filter(F.col("source") != "src0"),
+        d.filter(F.col("source") == "src0").select(
+            F.col("doc_id").alias("rid"), "text"
+        ),
     )
 
 
@@ -1332,59 +1277,23 @@ def q_js_divergence(spark, sf_dir):
     counts contribute only the q-side term (0*ln0 pinned to 0). Scale:
     the corpus collapses to a (source, token) count table; the grid is
     |sources| x |vocab| — vocabulary-sized work however large the
-    corpus."""
+    corpus. The statistic is ops.drift.jsd_kernel, shared with
+    streaming.drift.jsd_monitor."""
+    from etl_data_processor_spark.ops import drift as DR
     from etl_data_processor_spark.ops.dedup import _parallelize
 
     d = _parallelize(_cat(spark, sf_dir).documents.select("source", "text"))
-    # r11 (guide §4.2): the token explode + string hash agg measured
-    # 9.3 executor-cpu-s at sf0.1 in ONE pass — the same construction
-    # cost profile as the gram family, so the same fix: batch-level
-    # token counts from the Arrow pass (exact strings, exact integer
-    # counts), final sum in the JVM.
-    e = T.doc_grams_arrow(d, (1,), "source", "string", shape="batch_counts")
-    cs = e.groupBy("source", F.col("g").alias("token")).agg(
-        F.sum("c").alias("c")
-    )
-    # r11 (guide §2.3/§2.4 + §5): cs feeds FOUR consumers (the grid's
-    # left join, the source list, ns, and — new — cg, which is the
-    # per-source counts summed; deriving it from cs deletes the second
-    # full corpus pass + token-stream shuffle the old direct aggregate
-    # paid). The static plan duplicates a multi-consumer subtree (the
-    # before dump shows 4 independent Generate+agg chains over the
-    # corpus), so the vocabulary-sized cs is checkpointed once — the
-    # graph/PageRank house pattern (eager localCheckpoint inside the
-    # timed region; nothing persists across executions). Exact: integer
-    # counts over the identical token multiset.
-    cs = cs.localCheckpoint(eager=True)
-    cg = cs.groupBy("token").agg(F.sum("c").alias("cg"))
-    ns = cs.groupBy("source").agg(F.sum("c").alias("nsrc"))
-    ng = cg.agg(F.sum("cg").alias("ntot"))
-    grid = (
-        cs.select("source").distinct()
-        .crossJoin(cg)
-        .join(cs, ["source", "token"], "left")
-        .join(F.broadcast(ns), "source")
-        .crossJoin(F.broadcast(ng))
-        .select(
-            "source",
-            F.coalesce(F.col("c"), F.lit(0)).alias("cs"),
-            "cg", "nsrc", "ntot",
-        )
-    )
-    dd = lambda c: c.cast("double")  # noqa: E731
-    p = dd(F.col("cs")) / dd(F.col("nsrc"))
-    qv = dd(F.col("cg")) / dd(F.col("ntot"))
-    m = (p + qv) / F.lit(2.0)
-    q12 = lambda x: F.floor(x * F.lit(1e12) + F.lit(0.5)).cast("long")  # noqa: E731
-    pq = F.when(F.col("cs") == 0, F.lit(0).cast("long")).otherwise(
-        q12(p * F.log(p / m))
-    )
-    qq = q12(qv * F.log(qv / m))
-    terms = grid.select("source", pq.alias("pq"), qq.alias("qq"))
-    jsd = (
-        F.sum("pq").cast("double") + F.sum("qq").cast("double")
-    ) / F.lit(2.0) / F.lit(1e12)
-    return terms.groupBy("source").agg(SIM.stable_round6(jsd).alias("jsd6"))
+    # r11 (guide §4.2): token counts come from the Arrow pass (the token
+    # explode + string hash agg measured 9.3 executor-cpu-s at sf0.1).
+    # The vocabulary-sized cs feeds the kernel's source list, its grid
+    # and its totals, and the reference (the corpus counts) is cs summed
+    # over sources, which deletes a second corpus pass. The static plan
+    # duplicates a multi-consumer subtree, so cs is checkpointed once
+    # (the graph/PageRank house pattern; nothing persists across
+    # executions) and the reference is cached over it.
+    cs = DR.jsd_token_counts(d).localCheckpoint(eager=True)
+    ref = cs.groupBy("token").agg(F.sum("c").alias("c")).cache()
+    return DR.jsd_kernel(cs, ref)
 
 
 # =====================================================================

@@ -611,76 +611,44 @@ def _chrf_strip(col):
     return F.regexp_replace(F.trim(col), r"\s+", "")
 
 
-def _chrf_grams():
-    """Char n-gram (order, gram) structs for orders 1.._CHRF_N over the
-    prepared ``__s`` column, start positions capped at _CHRF_W on BOTH
-    engines. Module-level so the streaming twin shares the exact
-    expression (bit-identity by construction)."""
-    from etl_data_processor_spark.ops.text import _one_to
+def chrf_eval(cand, ref):
+    """chrF per candidate source: each ``cand`` row (doc_id, source,
+    text) is paired to the ``ref`` row (rid, text) with
+    rid = doc_id - (doc_id mod 20) (the q_bleu_eval pairing). Both texts
+    are whitespace-stripped, joined once by rid, and the clipped char
+    n-gram matches of orders 1..4 are counted PER PAIR in one Arrow
+    pass (ops.text.pair_clip_gram_counts — exact integer counts). Then
+    the micro-sums per (source, order), chrP/chrR as the arithmetic
+    means over orders of exact-integer ratios, and beta=2 F. The
+    scoring kernel of q_chrf_eval and of streaming.evals.chrf_monitor."""
+    from etl_data_processor_spark.ops.text import pair_clip_gram_counts
 
-    return F.flatten(
-        F.transform(
-            F.array(*[F.lit(i) for i in range(1, _CHRF_N + 1)]),
-            lambda n: F.transform(
-                _one_to(
-                    F.least(
-                        F.length("__s") - n + F.lit(1), F.lit(_CHRF_W)
-                    )
-                ),
-                lambda i: F.struct(
-                    n.alias("n"), F.col("__s").substr(i, n).alias("g")
-                ),
-            ),
-        )
+    s = _chrf_strip(F.col("text"))
+    c = cand.select(
+        "source",
+        (F.col("doc_id") - F.pmod(F.col("doc_id"), F.lit(_RL_SRCS))).alias("rid"),
+        s.alias("__c"),
     )
-
-
-def chrf_gram_counts(side, idc: str):
-    """Per-(pair id, order, gram) counts for one side — the unit both
-    the batch key and the streaming monitor aggregate from."""
-    return (
-        side.select(F.col(idc).alias("pid"), F.explode(_chrf_grams()).alias("p"))
-        .groupBy("pid", F.col("p.n").alias("n"), F.col("p.g").alias("g"))
-        .agg(F.count(F.lit(1)).alias("c"))
+    r = ref.select("rid", s.alias("__r"))
+    pc = pair_clip_gram_counts(
+        c.join(r, "rid").select("source", "rid", "__c", "__r"),
+        orders=tuple(range(1, _CHRF_N + 1)),
+        mode="char",
+        char_cap=_CHRF_W,
     )
-
-
-def chrf_report(pairs, rgc, cgc):
-    """chrF per source from (cid, source, rid) pairs + per-side gram
-    counts: clipped matches per (pair, order, gram), micro-sums per
-    (source, order), arithmetic-mean chrP/chrR over orders, beta=2 F.
-    The single scoring pipeline behind q_chrf_eval AND
-    streaming.evals.chrf_monitor_sink — one expression tree, so the
-    per-batch monitor is bit-identical to the batch key on the same
-    rows."""
-    cgc = cgc.select(
-        F.col("pid").alias("cpid"), F.col("n").alias("cn"),
-        F.col("g").alias("cg"), F.col("c").alias("cc"),
-    )
-    joined = (
-        pairs.join(rgc, pairs["rid"] == rgc["pid"])
-        .join(
-            cgc,
-            (F.col("cid") == F.col("cpid"))
-            & (F.col("n") == F.col("cn"))
-            & (F.col("g") == F.col("cg")),
-            "left",
-        )
-        .groupBy("source", "n")
+    # a (source, n) row exists iff some pair carried ref grams AND some
+    # pair carried cand grams of order n
+    byn0 = (
+        pc.groupBy("source", "n")
         .agg(
-            F.sum(
-                F.least(F.col("c"), F.coalesce(F.col("cc"), F.lit(0)))
-            ).alias("m"),
-            F.sum("c").alias("tr"),
+            F.sum("m").alias("m"),
+            F.sum("t_ref").alias("tr"),
+            F.sum("t_cand").alias("tc"),
         )
-    )
-    ctot = (
-        pairs.join(cgc, pairs["cid"] == cgc["cpid"])
-        .groupBy("source", F.col("cn").alias("n"))
-        .agg(F.sum("cc").alias("tc"))
+        .filter((F.col("tr") > 0) & (F.col("tc") > 0))
     )
     dd = lambda c: c.cast("double")  # noqa: E731
-    byn = joined.join(ctot, ["source", "n"]).select(
+    byn = byn0.select(
         "source", "n", "m", "tr", "tc",
         (dd(F.col("m")) / dd(F.col("tc"))).alias("prec_n"),
         (dd(F.col("m")) / dd(F.col("tr"))).alias("rec_n"),
@@ -719,73 +687,21 @@ def q_chrf_eval(spark, sf_dir):
     (word recall), ROUGE-L (order-aware LCS), chrF (char F). Scale
     shape (r10, guide §4.2/§2.3): the two TEXT payloads are joined once
     by rid and the clipped gram matches are counted PER PAIR in one
-    Arrow pass (ops.text.pair_clip_gram_counts — exact integer counts;
-    the float arithmetic below is the unchanged JVM expression tree),
-    replacing the earlier per-side gram-count explodes + 3-way join
-    that shuffled the gram multisets (~10-50x the text bytes) through
-    two hash aggregates — measured 27-34 executor-cpu-seconds at sf0.1
-    for this key alone. The explode-shaped chrf_* trio stays
-    module-level for streaming.evals.chrf_monitor_sink, whose
-    per-batch values remain bit-identical to this key's (both are
-    exact integers into the same final expressions)."""
+    Arrow pass, replacing the earlier per-side gram-count explodes +
+    3-way join that shuffled the gram multisets (~10-50x the text
+    bytes) through two hash aggregates — measured 27-34
+    executor-cpu-seconds at sf0.1 for this key alone. Scored by
+    chrf_eval (shared with the streaming monitor)."""
     from etl_data_processor_spark.ops.dedup import _parallelize
-    from etl_data_processor_spark.ops.text import pair_clip_gram_counts
 
     d = _parallelize(
         _cat(spark, sf_dir).documents.select("doc_id", "source", "text")
     )
-    s = _chrf_strip(F.col("text"))
-    cand = d.filter(F.col("source") != "src0").select(
-        "source",
-        (F.col("doc_id") - F.pmod(F.col("doc_id"), F.lit(_RL_SRCS))).alias(
-            "rid"
+    return chrf_eval(
+        d.filter(F.col("source") != "src0"),
+        d.filter(F.col("source") == "src0").select(
+            F.col("doc_id").alias("rid"), "text"
         ),
-        s.alias("__c"),
-    )
-    ref = d.filter(F.col("source") == "src0").select(
-        F.col("doc_id").alias("rid"), s.alias("__r")
-    )
-    pc = pair_clip_gram_counts(
-        cand.join(ref, "rid").select("source", "rid", "__c", "__r"),
-        orders=tuple(range(1, _CHRF_N + 1)),
-        mode="char",
-        char_cap=_CHRF_W,
-    )
-    # presence mirrors the explode form's inner joins: a (source, n)
-    # row existed iff some pair carried ref grams (joined) AND some
-    # pair carried cand grams (ctot)
-    byn0 = (
-        pc.groupBy("source", "n")
-        .agg(
-            F.sum("m").alias("m"),
-            F.sum("t_ref").alias("tr"),
-            F.sum("t_cand").alias("tc"),
-        )
-        .filter((F.col("tr") > 0) & (F.col("tc") > 0))
-    )
-    dd = lambda c: c.cast("double")  # noqa: E731
-    byn = byn0.select(
-        "source", "n", "m", "tr", "tc",
-        (dd(F.col("m")) / dd(F.col("tc"))).alias("prec_n"),
-        (dd(F.col("m")) / dd(F.col("tr"))).alias("rec_n"),
-    )
-    pr = byn.groupBy("source").agg(
-        F.avg("prec_n").alias("p"),
-        F.avg("rec_n").alias("r"),
-        F.sum("m").alias("matches"),
-        F.sum("tc").alias("cand_grams"),
-        F.sum("tr").alias("ref_grams"),
-    )
-    b2 = F.lit(float(_CHRF_BETA2))
-    fb = F.when(b2 * F.col("p") + F.col("r") == 0, F.lit(0.0)).otherwise(
-        (F.lit(1.0) + b2) * F.col("p") * F.col("r")
-        / (b2 * F.col("p") + F.col("r"))
-    )
-    return pr.select(
-        "source", "matches", "cand_grams", "ref_grams",
-        SIM.stable_round6(F.col("p")).alias("chrp6"),
-        SIM.stable_round6(F.col("r")).alias("chrr6"),
-        SIM.stable_round6(fb).alias("chrf6"),
     )
 
 
@@ -969,6 +885,47 @@ FROM mo JOIN tot ON tot.source = mo.source JOIN vt ON vt.source = mo.source
 """
 
 
+def heaps_ols(cum, *by):
+    """Heaps-law OLS of ln(types) on ln(tokens) over cumulative
+    checkpoints ``cum`` (*by, n, v), one fit per ``by`` group: each
+    coordinate quantizes to floor(ln(x)*1e9 + 0.5), the moments sum in
+    DECIMAL(38) (xq^2 overflows int64 — the q_zipf_fit lesson), one
+    double division per coefficient. Output (*by, n_points, beta6,
+    logk6); below two distinct points the slope's denominator is 0 and
+    both coefficients are NULL. The fit of q_heaps_fit and of
+    streaming.evals.heaps_monitor_sink."""
+    q9 = lambda col: F.floor(  # noqa: E731
+        F.log(col.cast("double")) * F.lit(1e9) + F.lit(0.5)
+    ).cast("long")
+    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
+    mo = (
+        cum.select(*by, q9(F.col("n")).alias("xq"), q9(F.col("v")).alias("yq"))
+        .groupBy(*by)
+        .agg(
+            F.count(F.lit(1)).alias("n_points"),
+            F.sum("xq").alias("sx"),
+            F.sum("yq").alias("sy"),
+            F.sum(dec(F.col("xq")) * dec(F.col("xq"))).alias("sxx"),
+            F.sum(dec(F.col("xq")) * dec(F.col("yq"))).alias("sxy"),
+        )
+    )
+    dd = lambda c: c.cast("double")  # noqa: E731
+    slope = F.try_divide(
+        dd(dec(F.col("n_points")) * F.col("sxy") - dec(F.col("sx")) * dec(F.col("sy"))),
+        dd(dec(F.col("n_points")) * F.col("sxx") - dec(F.col("sx")) * dec(F.col("sx"))),
+    )
+    intercept = (
+        (dd(F.col("sy")) - slope * dd(F.col("sx")))
+        / dd(F.col("n_points"))
+        / F.lit(1e9)
+    )
+    return mo.select(
+        *by, "n_points",
+        SIM.stable_round6(slope).alias("beta6"),
+        SIM.stable_round6(intercept).alias("logk6"),
+    )
+
+
 @q("q_heaps_fit", _HEAPS_ORACLE)
 def q_heaps_fit(spark, sf_dir):
     """B31 ext: Heaps-law fit per source — OLS of ln(distinct types) on
@@ -986,7 +943,8 @@ def q_heaps_fit(spark, sf_dir):
     computable from per-bucket NEW-type counts); the only window is the
     32-row-per-source cumulative sum; moments run in DECIMAL(38)/
     HUGEINT (xq^2 overflows int64 — the q_zipf_fit lesson); one double
-    division per coefficient."""
+    division per coefficient (heaps_ols, shared with the streaming
+    monitor)."""
     from etl_data_processor_spark.ops.text import tokenize
     from pyspark.sql import Window
 
@@ -1025,39 +983,13 @@ def q_heaps_fit(spark, sf_dir):
             F.sum("nv").over(win).alias("v"),
         )
     )
-    q9 = lambda col: F.floor(  # noqa: E731
-        F.log(col.cast("double")) * F.lit(1e9) + F.lit(0.5)
-    ).cast("long")
-    pts = cum.select("source", q9(F.col("n")).alias("xq"), q9(F.col("v")).alias("yq"))
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    mo = pts.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_points"),
-        F.sum("xq").alias("sx"),
-        F.sum("yq").alias("sy"),
-        F.sum(dec(F.col("xq")) * dec(F.col("xq"))).alias("sxx"),
-        F.sum(dec(F.col("xq")) * dec(F.col("yq"))).alias("sxy"),
-    )
     tot = toks_per.groupBy("source").agg(F.sum("nt").alias("n_tokens"))
     vt = first_b.groupBy("source").agg(F.count(F.lit(1)).alias("n_types"))
-    dd = lambda c: c.cast("double")  # noqa: E731
-    slope = dd(
-        dec(F.col("n_points")) * F.col("sxy") - dec(F.col("sx")) * dec(F.col("sy"))
-    ) / dd(
-        dec(F.col("n_points")) * F.col("sxx") - dec(F.col("sx")) * dec(F.col("sx"))
-    )
-    intercept = (
-        (dd(F.col("sy")) - slope * dd(F.col("sx")))
-        / dd(F.col("n_points"))
-        / F.lit(1e9)
-    )
     return (
-        mo.join(tot, "source")
+        heaps_ols(cum, "source")
+        .join(tot, "source")
         .join(vt, "source")
-        .select(
-            "source", "n_points", "n_tokens", "n_types",
-            SIM.stable_round6(slope).alias("beta6"),
-            SIM.stable_round6(intercept).alias("logk6"),
-        )
+        .select("source", "n_points", "n_tokens", "n_types", "beta6", "logk6")
     )
 
 

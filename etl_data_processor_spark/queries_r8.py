@@ -140,7 +140,7 @@ z AS (
     FROM m
 )
 SELECT source, ns, u2, {_SQL_ROUND6.format(x="zval")} AS z6,
-       CAST(ABS(zval) > 1.96 AS BOOLEAN) AS shifted
+       COALESCE(ABS(zval) > 1.96, FALSE) AS shifted
 FROM z
 """
 
@@ -160,57 +160,16 @@ def q_mannwhitney_u(spark, sf_dir):
     ECDF grid is |sources| x |distinct lengths| (value-range-bounded,
     the q_ks_drift scale argument); the only window cumulates the
     REFERENCE's bounded value table. Output: (source, ns, u2, z6,
-    shifted) with the alpha=0.05 two-sided flag."""
-    ref = _MWU_REF
-    d = _cat(spark, sf_dir).documents
-    vc = d.groupBy("source", F.col("n_chars").alias("v")).agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    vc = vc.cache()  # value-distribution-sized; feeds ref + grid branches
-    pts = vc.select("v").distinct()
-    rc = pts.join(
-        vc.filter(F.col("source") == ref).select("v", F.col("c").alias("cr")),
-        "v",
-        "left",
-    ).select("v", F.coalesce(F.col("cr"), F.lit(0)).alias("cr"))
-    from pyspark.sql import Window
+    shifted) with the alpha=0.05 two-sided flag; a zero variance gives
+    z6 NULL and shifted false. The statistic is ops.drift.mwu_kernel,
+    shared with streaming.drift.mwu_monitor."""
+    from etl_data_processor_spark.ops import drift as DR
 
-    wv = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    rcum = rc.select(
-        "v", "cr", F.coalesce(F.sum("cr").over(wv), F.lit(0)).alias("crum")
-    )
-    srcs = vc.select("source").filter(F.col("source") != ref).distinct()
-    grid = (
-        srcs.crossJoin(rcum)
-        .join(vc, ["source", "v"], "left")
-        .select(
-            "source", "v",
-            F.coalesce(F.col("c"), F.lit(0)).alias("cs"),
-            "cr", "crum",
-        )
-    )
-    dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
-    t = F.col("cs") + F.col("cr")
-    m = grid.groupBy("source").agg(
-        F.sum("cs").alias("ns"),
-        F.sum("cr").alias("nr"),
-        F.sum(
-            F.col("cs") * (F.lit(2) * F.col("crum") + F.col("cr"))
-        ).alias("u2"),
-        F.sum(dec(t) * dec(t) * dec(t) - dec(t)).alias("tq"),
-    )
-    dd = lambda c: c.cast("double")  # noqa: E731
-    ns, nr = F.col("ns"), F.col("nr")
-    n = ns + nr
-    nvar = dec(ns) * dec(nr) * (dec(n) * dec(n) * dec(n) - dec(n) - F.col("tq"))
-    dvar = dec(F.lit(12)) * dec(n) * dec(n - 1)
-    zval = (dd(F.col("u2")) - dd(ns * nr)) / (
-        F.lit(2.0) * F.sqrt(dd(nvar) / dd(dvar))
-    )
-    return m.select(
-        "source", "ns", "u2",
-        SIM.stable_round6(zval).alias("z6"),
-        (F.abs(zval) > 1.96).alias("shifted"),
+    # value-distribution-sized; feeds the reference and grid branches
+    vc = DR.value_counts(_cat(spark, sf_dir).documents).cache()
+    return DR.mwu_kernel(
+        vc.filter(F.col("source") != _MWU_REF),
+        vc.filter(F.col("source") == _MWU_REF).select("v", "c"),
     )
 
 

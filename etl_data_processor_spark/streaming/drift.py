@@ -1,330 +1,59 @@
 """Streaming drift monitors: per-micro-batch PSI, Jensen-Shannon
-divergence, Kolmogorov-Smirnov, and Mann-Whitney U against a FROZEN
-reference (the streaming twins of q_quality_drift_psi,
-q_js_divergence, q_ks_drift, and q_mannwhitney_u — the full batch
-drift quartet, evaluated incrementally with
-the pattern streaming/selection.py set: corpus-relative state freezes
-per epoch; per-batch work is stateless math against frozen state).
+divergence, Kolmogorov-Smirnov and Mann-Whitney U against a reference
+frozen once per epoch.
 
-A production ingest pipeline scores every arriving batch's
-quality-score distribution against the last epoch's reference bins and
-alerts on PSI > 0.25 — exactly the batch key's semantics, evaluated
-incrementally. Per batch the corpus work is ONE aggregate to <= 10 bin
-counts; the PSI arithmetic runs on those 10 rows with the same
-1e-12-integer term quantization as the batch key, so a micro-batch over
-rows R yields bit-identical PSI to the batch computation over R
-(asserted by tests/test_streaming_drift.py). Results append
-exactly-once per batch id through the log-structured table format.
+Each monitor returns the per-batch frame function for
+``tableformat.streaming_append_sink``: it counts the micro-batch the way
+its registered key counts the corpus and calls that key's kernel in
+ops.drift against the frozen reference. The kernel groups by ``source``,
+so a micro-batch holding one source's rows yields exactly the key's row
+for that source (tests/test_streaming_drift.py), and the table gains
+(batch_id, <kernel columns>) exactly once per batch id. No statistic is
+computed in driver Python. Usage::
+
+    ref = docs.filter(F.col("source") == "src0")
+    stream.writeStream.foreachBatch(
+        TF.streaming_append_sink(out_dir, psi_monitor(ref))
+    )
+
+A reader alerts on the key's own columns: ``psi6 > 0.25``, ``drifted``
+(KS), ``shifted`` (MWU), or a ``jsd6`` threshold of its choice.
 """
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from etl_data_processor_spark.ops.text import quality_score
-
-_BINS = 10
-
-
-def _bin_counts(docs: DataFrame) -> DataFrame:
-    qs = quality_score(F.col("text"))
-    return (
-        docs.select(
-            F.least(F.floor(qs * _BINS).cast("int"), F.lit(_BINS - 1)).alias(
-                "bin"
-            )
-        )
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+from etl_data_processor_spark.ops import drift as DR
+from etl_data_processor_spark.streaming import freeze
 
 
-def frozen_reference_bins(docs: DataFrame) -> dict[int, int]:
-    """Epoch freeze: the reference quality-score bin counts, collected as
-    10 integers of broadcastable model state."""
-    return {r["bin"]: r["c"] for r in _bin_counts(docs).collect()}
+def _pooled(counts: DataFrame, key: str) -> DataFrame:
+    """The reference's counts summed over its sources: (key, c)."""
+    return freeze(counts.groupBy(key).agg(F.sum("c").alias("c")))
 
 
-def psi_of_counts(counts: dict[int, int], ref: dict[int, int]) -> float:
-    """The batch key's exact PSI arithmetic on two bin-count dicts:
-    +1/+10 Laplace smoothing, each (p-r)*ln(p/r) term floored to a
-    1e-12 integer BEFORE the sum, final 1e-6 rounding — bit-identical
-    to q_quality_drift_psi on the same counts."""
-    n = sum(counts.values())
-    rn = sum(ref.values())
-    acc = 0
-    for b in range(_BINS):
-        p = (counts.get(b, 0) + 1.0) / (n + 10.0)
-        r = (ref.get(b, 0) + 1.0) / (rn + 10.0)
-        acc += math.floor((p - r) * math.log(p / r) * 1e12 + 0.5)
-    return math.floor(acc / 1e6 + 0.5) / 1e6
+def psi_monitor(ref_docs: DataFrame):
+    """q_quality_drift_psi per micro-batch: (source, n_docs, psi6)."""
+    ref = _pooled(DR.psi_bin_counts(ref_docs), "bin")
+    return lambda batch: DR.psi_kernel(DR.psi_bin_counts(batch), ref)
 
 
-def frozen_reference_unigrams(docs: DataFrame) -> DataFrame:
-    """Epoch freeze for the JSD monitor: the reference unigram count
-    table (token, rc) plus its total, CACHED as a cluster-side artifact.
-    Unlike the 10-integer PSI bins, unigram state is VOCABULARY-sized, so
-    it stays a DataFrame (never a driver dict): at 100 TB this is the
-    same vocabulary-sized table every drift key in the family reduces
-    to, and a production deployment would persist it through the table
-    format exactly like the dedup signature artifacts."""
-    from etl_data_processor_spark.ops.text import tokenize
-
-    toks = docs.select(F.explode(tokenize(F.col("text"))).alias("token"))
-    return toks.groupBy("token").agg(F.count(F.lit(1)).alias("rc")).cache()
+def jsd_monitor(ref_docs: DataFrame):
+    """q_js_divergence per micro-batch: (source, jsd6). The reference's
+    unigram table is vocabulary-sized, so it stays a cached frame."""
+    ref = _pooled(DR.jsd_token_counts(ref_docs), "token")
+    return lambda batch: DR.jsd_kernel(DR.jsd_token_counts(batch), ref)
 
 
-def jsd_of_counts(p_counts: dict[str, int], q_counts: dict[str, int]) -> float:
-    """q_js_divergence's exact arithmetic on two unigram count dicts:
-    each side's p*ln(p/m) term floored to a 1e-12 integer BEFORE the
-    sums, final 1e-6 rounding. Union-vocabulary semantics: a token
-    absent from one side contributes only the other side's term
-    (0*ln 0 pinned to 0; m is then half the present side's mass)."""
-    n = sum(p_counts.values())
-    rn = sum(q_counts.values())
-    pq = qq = 0
-    for tok in set(p_counts) | set(q_counts):
-        p = p_counts.get(tok, 0) / n if n else 0.0
-        r = q_counts.get(tok, 0) / rn if rn else 0.0
-        m = (p + r) / 2.0
-        if p > 0:
-            pq += math.floor(p * math.log(p / m) * 1e12 + 0.5)
-        if r > 0:
-            qq += math.floor(r * math.log(r / m) * 1e12 + 0.5)
-    return math.floor((pq + qq) / 2.0 / 1e6 + 0.5) / 1e6
+def ks_monitor(ref_docs: DataFrame):
+    """q_ks_drift per micro-batch: (source, n, ks6, drifted)."""
+    ref = _pooled(DR.value_counts(ref_docs), "v")
+    return lambda batch: DR.ks_kernel(DR.value_counts(batch), ref)
 
 
-def jsd_monitor_sink(ref: DataFrame, out_table: str, alert_at: float = 0.5):
-    """foreachBatch closure for the JSD drift monitor: per micro-batch,
-    aggregate the batch's unigram counts (one corpus pass), full-outer
-    join the frozen reference table (union vocabulary), quantize each
-    side's KL term to a 1e-12 integer, and sum — the ONLY values that
-    reach the driver are the two term sums and the token total; the
-    vocabulary-sized work stays distributed, unlike the PSI monitor's
-    10-bin collect. Appends (batch_id, n_tokens, jsd6, alert)
-    exactly-once through the table format. Bit-identical to
-    jsd_of_counts (and thus to q_js_divergence's arithmetic) on the
-    same rows — asserted per batch by tests/test_streaming_drift.py."""
-    from etl_data_processor_spark import tableformat as TF
-    from etl_data_processor_spark.ops.text import tokenize
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        toks = batch_df.select(
-            F.explode(tokenize(F.col("text"))).alias("token")
-        )
-        bc = toks.groupBy("token").agg(F.count(F.lit(1)).alias("bc"))
-        joined = bc.join(ref, "token", "full_outer").select(
-            F.coalesce(F.col("bc"), F.lit(0)).alias("bc"),
-            F.coalesce(F.col("rc"), F.lit(0)).alias("rc"),
-        )
-        # two collect() actions read this frame (the totals below, then
-        # the quantized term sums); without a persist the batch unigram
-        # aggregate + vocabulary-sized outer join would run twice per
-        # micro-batch (ADVICE r7)
-        joined.persist()
-        try:
-            totals = joined.agg(
-                F.sum("bc").alias("n"), F.sum("rc").alias("rn")
-            ).collect()[0]
-            n, rn = totals["n"] or 0, totals["rn"] or 0
-            if n == 0:
-                return
-            dd = lambda c: c.cast("double")  # noqa: E731
-            p = dd(F.col("bc")) / F.lit(float(n))
-            r = dd(F.col("rc")) / F.lit(float(rn)) if rn else F.lit(0.0)
-            m = (p + r) / F.lit(2.0)
-            q12 = lambda x: F.floor(  # noqa: E731
-                x * F.lit(1e12) + F.lit(0.5)
-            ).cast("long")
-            pq = F.when(F.col("bc") == 0, F.lit(0).cast("long")).otherwise(
-                q12(p * F.log(p / m))
-            )
-            qq = F.when(F.col("rc") == 0, F.lit(0).cast("long")).otherwise(
-                q12(r * F.log(r / m))
-            )
-            sums = joined.select(pq.alias("pq"), qq.alias("qq")).agg(
-                F.sum("pq").alias("sp"), F.sum("qq").alias("sq")
-            ).collect()[0]
-        finally:
-            joined.unpersist()
-        jsd6 = math.floor((sums["sp"] + sums["sq"]) / 2.0 / 1e6 + 0.5) / 1e6
-        row = spark.createDataFrame(
-            [(batch_id, int(n), jsd6, jsd6 > alert_at)],
-            "batch_id long, n_tokens long, jsd6 double, alert boolean",
-        )
-        TF.append_idempotent(row, out_table, f"jsd-{batch_id}")
-
-    return apply
-
-
-def drift_monitor_sink(ref: dict[int, int], out_table: str):
-    """foreachBatch closure: per micro-batch, aggregate the quality-score
-    bins (the only corpus-sized work), compute PSI against the frozen
-    reference on the driver (10 integers of state), and append
-    (batch_id, n_docs, psi6, alert) exactly-once."""
-    from etl_data_processor_spark import tableformat as TF
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        counts = {
-            r["bin"]: r["c"] for r in _bin_counts(batch_df).collect()
-        }
-        n = sum(counts.values())
-        if n == 0:
-            return
-        psi6 = psi_of_counts(counts, ref)
-        row = spark.createDataFrame(
-            [(batch_id, n, psi6, psi6 > 0.25)],
-            "batch_id long, n_docs long, psi6 double, alert boolean",
-        )
-        TF.append_idempotent(row, out_table, f"psi-{batch_id}")
-
-    return apply
-
-
-# --- KS monitor (the rank-based third member of the family) ----------
-
-_KS_C05 = 1.358  # c(alpha) for alpha = 0.05, as in q_ks_drift
-
-
-def frozen_reference_lengths(docs: DataFrame) -> dict[int, int]:
-    """Epoch freeze for the KS monitor: the reference n_chars value-count
-    table as a driver dict. Unlike unigram state this IS bounded model
-    state at any corpus size — an integer-valued metric's value-count
-    table is bounded by the metric's range, not the row count (the
-    q_ks_drift scale argument)."""
-    return {
-        r["v"]: r["c"]
-        for r in docs.groupBy(F.col("n_chars").alias("v"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    }
-
-
-def ks_of_counts(
-    counts: dict[int, int], ref: dict[int, int]
-) -> tuple[float, bool]:
-    """q_ks_drift's exact arithmetic on two value-count dicts: D is
-    maximized over cross-multiplied ECDF integers (fs*n_ref - fr*n — no
-    float until the single final normalization), the alpha=0.05
-    rejection compares against c(alpha)*sqrt((n+m)/(n*m))."""
-    n = sum(counts.values())
-    rn = sum(ref.values())
-    fs = fr = 0
-    dmax = 0
-    for v in sorted(set(counts) | set(ref)):
-        fs += counts.get(v, 0)
-        fr += ref.get(v, 0)
-        dmax = max(dmax, abs(fs * rn - fr * n))
-    ks6 = math.floor(dmax / (n * rn) * 1e6 + 0.5) / 1e6
-    crit = _KS_C05 * math.sqrt((n + rn) / (n * rn))
-    return ks6, dmax / (n * rn) > crit
-
-
-def ks_monitor_sink(ref: dict[int, int], out_table: str):
-    """foreachBatch closure for the KS drift monitor: per micro-batch,
-    ONE aggregate to the batch's n_chars value counts (bounded by the
-    metric's range), exact integer ECDF max against the frozen
-    reference on the driver, exactly-once append of
-    (batch_id, n_docs, ks6, drifted). Completes the streaming drift
-    family: PSI (binned), JSD (distributional), KS (rank-based,
-    bin-free)."""
-    from etl_data_processor_spark import tableformat as TF
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        counts = {
-            r["v"]: r["c"]
-            for r in batch_df.groupBy(F.col("n_chars").alias("v"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        }
-        n = sum(counts.values())
-        if n == 0:
-            return
-        ks6, drifted = ks_of_counts(counts, ref)
-        row = spark.createDataFrame(
-            [(batch_id, n, ks6, drifted)],
-            "batch_id long, n_docs long, ks6 double, drifted boolean",
-        )
-        TF.append_idempotent(row, out_table, f"ks-{batch_id}")
-
-    return apply
-
-
-# --- Mann-Whitney U monitor (location member, completing the quartet) -
-
-
-def mwu_of_counts(
-    counts: dict[int, int], ref: dict[int, int]
-) -> tuple[int, int, float | None, bool]:
-    """q_mannwhitney_u's exact arithmetic on two value-count dicts:
-    U*2 = sum_v cs(v) * (2*cumR(<v) + cr(v)) in pure integers, the
-    tie-corrected variance's numerator/denominator as arbitrary-
-    precision ints (Python's native bigint — the driver-side analogue
-    of the batch key's DECIMAL(38)), each cast to double exactly like
-    the batch plan before the one sqrt + division. Returns
-    (ns, u2, z6, shifted) — bit-identical to the batch key's row for
-    the same counts (asserted by tests/test_streaming_drift.py)."""
-    ns = sum(counts.values())
-    nr = sum(ref.values())
-    crum = 0
-    u2 = 0
-    tq = 0
-    for v in sorted(set(counts) | set(ref)):
-        cs = counts.get(v, 0)
-        cr = ref.get(v, 0)
-        u2 += cs * (2 * crum + cr)
-        t = cs + cr
-        tq += t * t * t - t
-        crum += cr
-    n = ns + nr
-    nvar = ns * nr * (n * n * n - n - tq)
-    dvar = 12 * n * (n - 1)
-    if nvar <= 0 or dvar <= 0:
-        # degenerate U: every observation in one tie group, or one side
-        # empty. The batch SQL twin's non-ANSI division yields NULL here
-        # rather than raising — mirror that (None z, not shifted) so the
-        # sink survives a constant micro-batch (ADVICE r9).
-        return ns, u2, None, False
-    zval = (float(u2) - float(ns * nr)) / (
-        2.0 * math.sqrt(float(nvar) / float(dvar))
-    )
-    z6 = math.floor(zval * 1e6 + 0.5) / 1e6
-    return ns, u2, z6, abs(zval) > 1.96
-
-
-def mwu_monitor_sink(ref: dict[int, int], out_table: str):
-    """foreachBatch closure for the Mann-Whitney U drift monitor — the
-    LOCATION member completing the streaming quartet (PSI binned, JSD
-    distributional, KS shape, MWU location; VERDICT r8 item 4). Per
-    micro-batch: ONE aggregate to the batch's n_chars value counts
-    (bounded by the metric's value range, the same state shape as the
-    KS monitor's), exact integer U and tie-corrected z against the
-    frozen reference on the driver, exactly-once append of
-    (batch_id, n_docs, u2, z6, shifted)."""
-    from etl_data_processor_spark import tableformat as TF
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        counts = {
-            r["v"]: r["c"]
-            for r in batch_df.groupBy(F.col("n_chars").alias("v"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        }
-        n = sum(counts.values())
-        if n == 0:
-            return
-        ns, u2, z6, shifted = mwu_of_counts(counts, ref)
-        row = spark.createDataFrame(
-            [(batch_id, ns, u2, z6, shifted)],
-            "batch_id long, n_docs long, u2 long, z6 double, shifted boolean",
-        )
-        TF.append_idempotent(row, out_table, f"mwu-{batch_id}")
-
-    return apply
+def mwu_monitor(ref_docs: DataFrame):
+    """q_mannwhitney_u per micro-batch: (source, ns, u2, z6, shifted)."""
+    ref = _pooled(DR.value_counts(ref_docs), "v")
+    return lambda batch: DR.mwu_kernel(DR.value_counts(batch), ref)

@@ -1,231 +1,112 @@
-"""Streaming eval monitors (VERDICT r7 item 5): per-micro-batch chrF
-and ROUGE-N against a FROZEN reference set, and a per-epoch Heaps
-vocabulary-growth monitor — the streaming twins of q_chrf_eval,
-q_rouge_n and q_heaps_fit, built with the pattern streaming/drift.py
-set: corpus-relative state freezes per epoch, per-batch work is
-stateless math against frozen state, results append exactly-once per
-batch id through the log-structured table format.
+"""Streaming eval monitors: per-micro-batch chrF and ROUGE-N against a
+reference set frozen once per epoch, and a Heaps vocabulary-growth
+monitor.
 
-Bit-identity is BY CONSTRUCTION for chrF/ROUGE: the sinks call the same
-module-level scoring pipelines the batch keys call
-(queries_r7b.chrf_gram_counts/chrf_report, queries_r7.rouge_gram_counts/
-rouge_report) — one expression tree, two consumers — so a micro-batch
-over rows R produces exactly the batch key's report over R (asserted
-per batch by tests/test_streaming_evals.py).
+chrF and ROUGE return the per-batch frame function for
+``tableformat.streaming_append_sink``: the batch's candidate rows (every
+source but the reference source src0) join the frozen reference docs
+(rid, text) by rid and are scored by the registered key's kernel
+(queries_r7b.chrf_eval, queries_r7.rouge_eval), so a micro-batch over
+rows R yields the key's report over R (tests/test_streaming_evals.py).
 
 The Heaps monitor carries CROSS-batch state — the seen-vocabulary table
 (token) and the checkpoint series — both log-structured tables appended
-exactly-once per batch id, so at-least-once micro-batch replays are
+exactly once per batch id, so at-least-once micro-batch replays are
 absorbed (the streaming/selection.py seen-state pattern). The
-vocabulary state is corpus-vocabulary-sized and stays cluster-side; per
-batch only three integers and the two OLS coefficients reach the
-driver. The fit replays q_heaps_fit's exact arithmetic (1e-9-quantized
-log points, arbitrary-precision integer moments — Python ints ARE the
-DECIMAL(38) the batch key uses, one double division per coefficient).
+vocabulary state is corpus-vocabulary-sized and stays cluster-side. Its
+fit is q_heaps_fit's OLS (queries_r7b.heaps_ols) over the checkpoint
+series.
 """
 
 from __future__ import annotations
-
-import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_data_processor_spark.ops.text import tokenize
+from etl_data_processor_spark.streaming import freeze, read_state
 
 
-# --- chrF / ROUGE-N per micro-batch (frozen reference set) ------------
+def _reference(ref_docs: DataFrame) -> DataFrame:
+    return freeze(ref_docs.select(F.col("doc_id").alias("rid"), "text"))
 
 
-def frozen_chrf_reference(ref_docs: DataFrame):
-    """Epoch freeze for the chrF monitor: the reference side's
-    per-(rid, order, gram) counts plus the rid list, both CACHED
-    cluster-side (reference-set-sized — never the stream)."""
-    from etl_data_processor_spark.queries_r7b import (
-        _chrf_strip,
-        chrf_gram_counts,
-    )
-
-    ref = ref_docs.select(
-        F.col("doc_id").alias("rid"), _chrf_strip(F.col("text")).alias("__s")
-    )
-    return chrf_gram_counts(ref, "rid").cache(), ref.select("rid").cache()
+def _candidates(batch: DataFrame) -> DataFrame:
+    return batch.filter(F.col("source") != "src0")
 
 
-def frozen_rouge_reference(ref_docs: DataFrame):
-    """Epoch freeze for the ROUGE monitor: per-(rid, order, gram) word
-    n-gram counts plus the rid list, cached cluster-side."""
-    from etl_data_processor_spark.queries_r7 import rouge_gram_counts
+def chrf_monitor(ref_docs: DataFrame):
+    """q_chrf_eval per micro-batch: (source, matches, cand_grams,
+    ref_grams, chrp6, chrr6, chrf6)."""
+    from etl_data_processor_spark.queries_r7b import chrf_eval
 
-    ref = ref_docs.select(
-        F.col("doc_id").alias("rid"), tokenize(F.col("text")).alias("__w")
-    )
-    return rouge_gram_counts(ref, "rid").cache(), ref.select("rid").cache()
+    ref = _reference(ref_docs)
+    return lambda batch: chrf_eval(_candidates(batch), ref)
 
 
-def _cand_pairs(batch_df: DataFrame, ref_ids: DataFrame, srcs: int, prep):
-    """The q_bleu_eval pairing over a micro-batch: candidates are the
-    non-reference rows, each paired to reference rid = doc_id - (doc_id
-    mod srcs); pairs are bounded by the batch, never the corpus."""
-    cand = batch_df.filter(F.col("source") != "src0").select(
-        F.col("doc_id").alias("cid"),
-        "source",
-        (F.col("doc_id") - F.pmod(F.col("doc_id"), F.lit(srcs))).alias("rid"),
-        prep(F.col("text")),
-    )
-    pairs = cand.select("cid", "source", "rid").join(ref_ids, "rid")
-    return cand, pairs
-
-
-def chrf_monitor_sink(ref_rgc: DataFrame, ref_ids: DataFrame, out_table: str):
-    """foreachBatch closure: per micro-batch of candidate docs, the
-    EXACT q_chrf_eval report (shared pipeline) against the frozen
-    reference grams, appended exactly-once as
-    (batch_id, source, matches, cand_grams, ref_grams, chrp6, chrr6,
-    chrf6). Per batch the stream-sized work is one gram explode + one
-    hash aggregate; the join keys on the frozen reference."""
-    from etl_data_processor_spark import tableformat as TF
-    from etl_data_processor_spark.queries_r7b import (
-        _RL_SRCS,
-        _chrf_strip,
-        chrf_gram_counts,
-        chrf_report,
-    )
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        cand, pairs = _cand_pairs(
-            batch_df, ref_ids, _RL_SRCS,
-            lambda t: _chrf_strip(t).alias("__s"),
-        )
-        report = chrf_report(pairs, ref_rgc, chrf_gram_counts(cand, "cid"))
-        out = report.select(F.lit(batch_id).alias("batch_id"), "*")
-        out = out.persist()  # emptiness probe + append: one derivation
-        try:
-            if not out.take(1):
-                return
-            TF.append_idempotent(out, out_table, f"chrf-{batch_id}")
-        finally:
-            out.unpersist()
-
-    return apply
-
-
-def rouge_monitor_sink(ref_rgc: DataFrame, ref_ids: DataFrame, out_table: str):
-    """foreachBatch closure: per micro-batch, the EXACT q_rouge_n report
-    (shared pipeline) against the frozen reference grams, appended
-    exactly-once as (batch_id, source, m1, t1, m2, t2, rouge1_6,
+def rouge_monitor(ref_docs: DataFrame):
+    """q_rouge_n per micro-batch: (source, m1, t1, m2, t2, rouge1_6,
     rouge2_6)."""
-    from etl_data_processor_spark import tableformat as TF
-    from etl_data_processor_spark.queries_r7 import (
-        _BLEU_SRCS,
-        rouge_gram_counts,
-        rouge_report,
-    )
+    from etl_data_processor_spark.queries_r7 import rouge_eval
 
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        cand, pairs = _cand_pairs(
-            batch_df, ref_ids, _BLEU_SRCS,
-            lambda t: tokenize(t).alias("__w"),
-        )
-        report = rouge_report(pairs, ref_rgc, rouge_gram_counts(cand, "cid"))
-        out = report.select(F.lit(batch_id).alias("batch_id"), "*")
-        out = out.persist()  # emptiness probe + append: one derivation
-        try:
-            if not out.take(1):
-                return
-            TF.append_idempotent(out, out_table, f"rouge-{batch_id}")
-        finally:
-            out.unpersist()
-
-    return apply
-
-
-# --- Heaps vocabulary-growth monitor (per-epoch checkpoints) ----------
-
-
-def heaps_fit_points(points: list[tuple[int, int]]):
-    """q_heaps_fit's exact OLS arithmetic on cumulative (tokens, types)
-    checkpoints: each coordinate quantizes to floor(ln(x)*1e9 + 0.5),
-    the moments accumulate as exact integers (Python ints = the batch
-    key's DECIMAL(38)), slope/intercept are the only double divisions,
-    final 1e-6 stable rounding. Returns (beta6, logk6), or (None, None)
-    below 2 distinct points."""
-    pts = [(n, v) for n, v in points if n > 0 and v > 0]
-    if len(pts) < 2:
-        return None, None
-    q9 = lambda x: math.floor(math.log(x) * 1e9 + 0.5)  # noqa: E731
-    xs = [q9(n) for n, _v in pts]
-    ys = [q9(v) for _n, v in pts]
-    k = len(pts)
-    sx, sy = sum(xs), sum(ys)
-    sxx = sum(x * x for x in xs)
-    sxy = sum(x * y for x, y in zip(xs, ys))
-    den = k * sxx - sx * sx
-    if den == 0:
-        return None, None
-    slope = float(k * sxy - sx * sy) / float(den)
-    intercept = (float(sy) - slope * float(sx)) / float(k) / 1e9
-    r6 = lambda x: math.floor(x * 1e6 + 0.5) / 1e6  # noqa: E731
-    return r6(slope), r6(intercept)
+    ref = _reference(ref_docs)
+    return lambda batch: rouge_eval(_candidates(batch), ref)
 
 
 def heaps_monitor_sink(vocab_table: str, out_table: str):
     """foreachBatch closure for the vocabulary-growth monitor: per
     micro-batch (epoch slice), ONE token aggregate gives the batch's
-    token count and distinct types; an anti-join against the seen-
-    vocabulary state table isolates the NEW types (first occurrence in
-    stream order — exactly q_heaps_fit's min-bucket semantics with
-    buckets := batches); the state table grows by those rows and the
-    checkpoint series (batch_id, cum tokens, cum types) gains one row,
-    both exactly-once. The running Heaps fit over all checkpoints so
-    far replays the batch key's arithmetic (heaps_fit_points) — this is
-    how a corpus team watches beta converge DURING ingest instead of
-    fitting it after the fact."""
+    token count; an anti-join against the seen-vocabulary state table
+    isolates the NEW types (first occurrence in stream order — exactly
+    q_heaps_fit's min-bucket semantics with buckets := batches). The
+    state table grows by those types and the checkpoint series gains
+    (batch_id, n_tokens, n_types, beta6, logk6) — cumulative counts and
+    the Heaps fit over every checkpoint so far, NULL until two exist —
+    both exactly once. This is how a corpus team watches beta converge
+    DURING ingest instead of fitting it after the fact."""
     from etl_data_processor_spark import tableformat as TF
+    from etl_data_processor_spark.queries_r7b import heaps_ols
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        toks = batch_df.select(
-            F.explode(tokenize(F.col("text"))).alias("token")
+        agg = (
+            batch_df.select(F.explode(tokenize(F.col("text"))).alias("token"))
+            .groupBy("token")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .persist()
         )
-        agg = toks.groupBy("token").agg(F.count(F.lit(1)).alias("c"))
-        agg = agg.persist()
         try:
-            n_batch = (agg.agg(F.sum("c").alias("n")).collect()[0]["n"]) or 0
+            n_batch = agg.agg(F.sum("c")).first()[0] or 0
             if n_batch == 0:
                 return
-            try:
-                seen = TF.read(spark, vocab_table).select("token")
-            except Exception:  # first batch: state not created yet
-                seen = None
-            new_types = (
-                agg.select("token").join(seen, "token", "left_anti")
-                if seen is not None
-                else agg.select("token")
-            )
+            seen = read_state(spark, vocab_table)
+            new_types = agg.select("token")
+            if seen is not None:
+                new_types = new_types.join(seen, "token", "left_anti")
             new_types = new_types.persist()
             n_new = new_types.count()
-            TF.append_idempotent(
-                new_types, vocab_table, f"heaps-vocab-{batch_id}"
-            )
+            TF.append_idempotent(new_types, vocab_table, f"heaps-vocab-{batch_id}")
             new_types.unpersist()
         finally:
             agg.unpersist()
-        try:
-            prior = TF.read(spark, out_table).select(
-                "batch_id", "n_tokens", "n_types"
-            ).collect()
-        except Exception:
-            prior = []
-        pts = sorted((r["batch_id"], r["n_tokens"], r["n_types"]) for r in prior)
-        cum_n = (pts[-1][1] if pts else 0) + n_batch
-        cum_v = (pts[-1][2] if pts else 0) + n_new
-        series = [(n, v) for _b, n, v in pts] + [(cum_n, cum_v)]
-        beta6, logk6 = heaps_fit_points(series)
-        row = spark.createDataFrame(
-            [(batch_id, cum_n, cum_v, beta6, logk6)],
-            "batch_id long, n_tokens long, n_types long, "
-            "beta6 double, logk6 double",
+        prior = read_state(spark, out_table)
+        last_n, last_v = (0, 0)
+        if prior is not None:
+            last_n, last_v = prior.agg(F.max("n_tokens"), F.max("n_types")).first()
+        point = spark.createDataFrame(
+            [(last_n + n_batch, last_v + n_new)], "n long, v long"
+        )
+        series = point
+        if prior is not None:
+            series = prior.select(
+                F.col("n_tokens").alias("n"), F.col("n_types").alias("v")
+            ).unionByName(point)
+        row = heaps_ols(series).crossJoin(point).select(
+            F.lit(batch_id).cast("long").alias("batch_id"),
+            F.col("n").alias("n_tokens"),
+            F.col("v").alias("n_types"),
+            "beta6",
+            "logk6",
         )
         TF.append_idempotent(row, out_table, f"heaps-{batch_id}")
 

@@ -790,14 +790,23 @@ def append_idempotent(
     raise ConflictError(f"could not publish after {max_retries} retries")
 
 
-def streaming_append_sink(table_dir: str):
+def streaming_append_sink(table_dir: str, per_batch=lambda df: df):
     """`writeStream.foreachBatch` sink committing each micro-batch as an
     idempotent transactional append — batch replays after a failure
     deduplicate on the recorded batch id, so the table sees each batch
-    exactly once."""
+    exactly once.
+
+    Each micro-batch first goes through ``per_batch`` (DataFrame ->
+    DataFrame; identity by default). A streaming monitor passes its
+    registered key's kernel there (streaming/drift.py, streaming/evals.py),
+    so the table holds ``batch_id`` plus the kernel's columns."""
+    from pyspark.sql import functions as F
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        append_idempotent(batch_df, table_dir, f"stream-batch-{batch_id}")
+        out = per_batch(batch_df).select(
+            F.lit(batch_id).cast("long").alias("batch_id"), "*"
+        )
+        append_idempotent(out, table_dir, f"stream-batch-{batch_id}")
 
     return sink
 

@@ -37,9 +37,8 @@ def test_token_bucket_enforces_rate():
 
 
 @pytest.mark.slow
-def test_cli_medicines_and_list(spark, tmp_path, capsys):
-    from etl_data_processor_spark.__main__ import main
-
+def test_cli_medicines_and_list(cli_main, tmp_path, capsys):
+    main = cli_main
     assert main(["list"]) == 0
     out = capsys.readouterr().out
     assert "q_agg_group\toracle" in out
@@ -80,17 +79,25 @@ def test_cli_list_sees_the_entry_registry():
     assert {k for k, v in kinds.items() if v == "oracle"} == set(entry.oracle_sql())
 
 
-def test_cli_unknown_query(spark):
-    from etl_data_processor_spark.__main__ import main
-
-    assert main(["query", "q_does_not_exist"]) == 2
+def test_cli_unknown_query(cli_main):
+    assert cli_main(["query", "q_does_not_exist"]) == 2
 
 
-def test_cli_table_lifecycle(spark, tmp_path, capsys):
+def test_cli_main_leaves_the_shared_session_conf(spark, cli_main):
+    """An in-process ``main`` runs ``get_spark``, which re-applies
+    ``DEFAULT_CONF`` to the shared session; ``cli_main`` restores it, so
+    later test modules still run with this suite's 8 shuffle
+    partitions."""
+    assert cli_main(["query", "q_does_not_exist"]) == 2
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+
+
+def test_cli_table_lifecycle(spark, cli_main, tmp_path, capsys):
     """`table history/show/compact/vacuum` drive the table format from
     the CLI (reference A20 parity extended to the storage lifecycle)."""
     from etl_data_processor_spark import tableformat as TF
-    from etl_data_processor_spark.__main__ import main
+
+    main = cli_main
 
     t = str(tmp_path / "t")
     TF.append(spark.range(0, 5), t)

@@ -4,9 +4,9 @@
   signature: a fixture regenerated in place (same path, same params)
   retrains instead of serving stale centroids forever, and the
   superseded slug is left for vacuum_artifacts to reclaim.
-- mwu_of_counts survives degenerate inputs (all observations in one
-  tie group / empty side) with the batch twin's NULL-on-div-by-zero
-  semantics instead of raising out of the foreachBatch sink.
+- degenerate micro-batches (a zero MWU variance, a one-checkpoint
+  Heaps fit) append NULL statistics through the registered keys'
+  arithmetic instead of raising out of the foreachBatch sink.
 """
 
 from __future__ import annotations
@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 import __spark_entry__ as entry_mod
 from etl_data_processor_spark.ops import dedup as D
 from etl_data_processor_spark.ops import similarity as SIM
-from etl_data_processor_spark.streaming.drift import mwu_of_counts
 
 
 def _pairs(df):
@@ -189,17 +188,33 @@ def test_cached_model_retrains_on_source_regeneration(spark, tmp_path):
     assert not any(os.path.exists(p) for p in slugs)
 
 
-def test_mwu_degenerate_counts_do_not_raise():
-    """All observations in one tie group -> tie-corrected variance is 0;
-    the batch SQL twin's non-ANSI division yields NULL there, so the
-    driver twin returns (ns, u2, None, False) instead of raising
-    ZeroDivisionError out of the streaming sink."""
-    ns, u2, z6, shifted = mwu_of_counts({5: 3}, {5: 7})
-    assert (ns, z6, shifted) == (3, None, False)
-    assert u2 == 3 * (2 * 0 + 7)  # all ties: U*2 = cs*cr
-    # empty reference: nvar = ns*0*... = 0
-    ns2, _u22, z62, sh2 = mwu_of_counts({1: 4, 2: 1}, {})
-    assert (ns2, z62, sh2) == (5, None, False)
-    # sanity: the non-degenerate path still yields a finite z
-    _, _, z6_ok, _ = mwu_of_counts({1: 5, 2: 5}, {3: 5, 4: 5})
-    assert z6_ok is not None
+def test_mwu_degenerate_counts_do_not_raise(spark, tmp_path):
+    """Degenerate micro-batches run the keys' own arithmetic and append
+    NULL statistics instead of raising DIVIDE_BY_ZERO under ANSI: a
+    constant batch against a constant reference is one tie group (the
+    MWU variance is 0), and the Heaps monitor's first micro-batch is one
+    checkpoint (the OLS slope's denominator is 0)."""
+    from etl_data_processor_spark import tableformat as TF
+    from etl_data_processor_spark.streaming.drift import mwu_monitor
+    from etl_data_processor_spark.streaming.evals import heaps_monitor_sink
+
+    schema = "doc_id long, text string, lang string, source string, n_chars long"
+    ref = spark.createDataFrame(
+        [(i, "a b", "en", "src0", 5) for i in range(7)], schema
+    )
+    const = spark.createDataFrame(
+        [(i, "a b c", "en", "src1", 5) for i in range(3)], schema
+    )
+
+    mwu = str(tmp_path / "mwu")
+    TF.streaming_append_sink(mwu, mwu_monitor(ref))(const, 0)
+    row = TF.read(spark, mwu).first()
+    # all ties: U*2 = cs * cr
+    assert (row["ns"], row["u2"], row["z6"], row["shifted"]) == (3, 21, None, False)
+
+    heaps = str(tmp_path / "heaps")
+    heaps_monitor_sink(str(tmp_path / "vocab"), heaps)(const, 0)
+    row = TF.read(spark, heaps).first()
+    assert (row["n_tokens"], row["n_types"], row["beta6"], row["logk6"]) == (
+        9, 3, None, None,
+    )

@@ -184,13 +184,12 @@ def test_cached_df_records_provenance_and_survives_vacuum(spark, tmp_path):
     assert slug in dropped and not os.path.exists(spath)
 
 
-def test_artifacts_vacuum_cli(spark, adir, tmp_path, capsys):
+def test_artifacts_vacuum_cli(spark, cli_main, adir, tmp_path, capsys):
     """`python -m etl_data_processor_spark artifacts vacuum` is the
     maintain-style entry point (no Spark session required). It collects
     trained models too: a model whose source was regenerated leaves a
     superseded slug, which the CLI reclaims while sparing the current
     one."""
-    from etl_data_processor_spark.__main__ import main
     from etl_data_processor_spark.ops.similarity import cached_model
 
     src = tmp_path / "s.txt"
@@ -222,14 +221,14 @@ def test_artifacts_vacuum_cli(spark, adir, tmp_path, capsys):
     current = train([(0, [2.0])])
     assert superseded != current
 
-    rc = main(
+    rc = cli_main(
         ["artifacts", "vacuum", "--warehouse", _wh(adir), "--min-age", "600"]
     )
     assert rc == 0
     out = capsys.readouterr().out.splitlines()
     assert "stale" in out and superseded not in out  # the models are young
     assert not os.path.exists(os.path.join(adir, "stale"))
-    rc = main(
+    rc = cli_main(
         ["artifacts", "vacuum", "--warehouse", _wh(adir), "--min-age", "0"]
     )
     assert rc == 0

@@ -1,277 +1,117 @@
-"""Streaming drift monitor (streaming/drift.py): per-micro-batch PSI
-against a frozen reference must be BIT-IDENTICAL to the batch PSI
-arithmetic over the same rows, and the alert threshold must fire for a
-genuinely shifted batch."""
+"""Streaming drift monitors (streaming/drift.py): each monitor runs its
+registered key's kernel per micro-batch, so streaming the fixture one
+source per micro-batch must append, for every source, exactly the row
+the batch key reports for that source."""
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entry_mod
 from etl_data_processor_spark import tableformat as TF
 from etl_data_processor_spark.io import Catalog
 from etl_data_processor_spark.streaming.drift import (
-    drift_monitor_sink,
-    frozen_reference_bins,
-    psi_of_counts,
-    _bin_counts,
+    jsd_monitor,
+    ks_monitor,
+    mwu_monitor,
+    psi_monitor,
 )
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 
-def test_streaming_psi_matches_batch_per_file(spark, sf_dir, tmp_path):
-    docs = Catalog(spark, sf_dir).documents
-    ref = frozen_reference_bins(docs.filter(F.col("source") == "src0"))
-    assert sum(ref.values()) > 0
-
-    # three disjoint files = three micro-batches with different mixes
-    src = str(tmp_path / "incoming")
-    cuts = [(0, 150), (150, 300), (300, 10_000_000)]
-    for lo, hi in cuts:
-        docs.filter(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "psi")
-    q = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(drift_monitor_sink(ref, out))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = sorted(
-        (r["n_docs"], r["psi6"]) for r in TF.read(spark, out).collect()
-    )
-    assert len(got) == 3
-
-    # batch recompute per file slice must agree bit for bit (compare as
-    # multisets: two slices can share a row count)
-    want = []
-    for lo, hi in cuts:
-        sl = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        counts = {r["bin"]: r["c"] for r in _bin_counts(sl).collect()}
-        want.append((sum(counts.values()), psi_of_counts(counts, ref)))
-    assert got == sorted(want)
-
-    # a degenerate batch (every doc in one bin) must alert
-    shifted = {0: 1000}
-    assert psi_of_counts(shifted, ref) > 0.25
+def _sink_rows(spark, out) -> dict:
+    """source -> sink row without its batch_id; one row per micro-batch."""
+    rows = [r.asDict() for r in TF.read(spark, out).collect()]
+    assert len({r.pop("batch_id") for r in rows}) == len(rows)
+    return {r["source"]: r for r in rows}
 
 
-def test_streaming_jsd_matches_batch_per_file(spark, sf_dir, tmp_path):
-    """The JSD monitor's per-micro-batch value must equal jsd_of_counts
-    (q_js_divergence's exact arithmetic) on that file slice's unigram
-    counts, and a disjoint-vocabulary batch must hit the ln 2 bound."""
-    import math
-
-    from etl_data_processor_spark.ops.text import tokenize
-    from etl_data_processor_spark.streaming.drift import (
-        frozen_reference_unigrams,
-        jsd_monitor_sink,
-        jsd_of_counts,
-    )
-
-    docs = Catalog(spark, sf_dir).documents
-    ref_docs = docs.filter(F.col("source") == "src0")
-    ref = frozen_reference_unigrams(ref_docs)
-    ref_counts = {r["token"]: r["rc"] for r in ref.collect()}
-    assert sum(ref_counts.values()) > 0
-
-    src = str(tmp_path / "incoming")
-    cuts = [(0, 150), (150, 300), (300, 10_000_000)]
-    for lo, hi in cuts:
-        docs.filter(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "jsd")
-    q = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(jsd_monitor_sink(ref, out))
-        .option("checkpointLocation", str(tmp_path / "ckpt_jsd"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = sorted(
-        (r["n_tokens"], r["jsd6"]) for r in TF.read(spark, out).collect()
-    )
-    assert len(got) == 3
-
-    want = []
-    for lo, hi in cuts:
-        sl = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        counts = {
-            r["token"]: r["c"]
-            for r in sl.select(
-                F.explode(tokenize(F.col("text"))).alias("token")
-            )
-            .groupBy("token")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        }
-        want.append((sum(counts.values()), jsd_of_counts(counts, ref_counts)))
-    assert got == sorted(want)
-
-    # fully disjoint vocabularies sit at the ln 2 bound and must alert
-    disjoint = jsd_of_counts({"zzz_only": 10}, ref_counts)
-    assert abs(disjoint - math.floor(math.log(2) * 1e6) / 1e6) < 2e-6
-    assert disjoint > 0.5
-
-
-def test_streaming_ks_matches_batch_per_file(spark, sf_dir, tmp_path):
-    """The KS monitor's per-micro-batch statistic must equal
-    ks_of_counts (q_ks_drift's exact integer ECDF arithmetic) on that
-    file slice's value counts, and a shifted batch must set drifted."""
-    from etl_data_processor_spark.streaming.drift import (
-        frozen_reference_lengths,
-        ks_monitor_sink,
-        ks_of_counts,
-    )
-
-    docs = Catalog(spark, sf_dir).documents
-    ref = frozen_reference_lengths(docs.filter(F.col("source") == "src0"))
-    assert sum(ref.values()) > 0
-
-    src = str(tmp_path / "incoming_ks")
-    cuts = [(0, 150), (150, 300), (300, 10_000_000)]
-    for lo, hi in cuts:
-        docs.filter(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "ks")
-    q = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(ks_monitor_sink(ref, out))
-        .option("checkpointLocation", str(tmp_path / "ckpt_ks"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = sorted(
-        (r["n_docs"], r["ks6"], r["drifted"])
-        for r in TF.read(spark, out).collect()
-    )
-    assert len(got) == 3
-
-    want = []
-    for lo, hi in cuts:
-        sl = docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi))
-        counts = {
-            r["v"]: r["c"]
-            for r in sl.groupBy(F.col("n_chars").alias("v"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        }
-        ks6, drifted = ks_of_counts(counts, ref)
-        want.append((sum(counts.values()), ks6, drifted))
-    assert got == sorted(want)
-
-    # a batch shifted far outside the reference support must drift
-    shifted = {10_000_000: 500}
-    ks6, drifted = ks_of_counts(shifted, ref)
-    assert ks6 == 1.0 and drifted
-
-
-def test_streaming_mwu_matches_batch_per_file(spark, sf_dir, tmp_path):
-    """The MWU monitor's per-micro-batch statistic must equal
-    mwu_of_counts (q_mannwhitney_u's exact integer U + tie-corrected z)
-    on that file slice's value counts, and a location-shifted batch
-    must set shifted."""
-    from etl_data_processor_spark.streaming.drift import (
-        frozen_reference_lengths,
-        mwu_monitor_sink,
-        mwu_of_counts,
-    )
-
-    docs = Catalog(spark, sf_dir).documents
-    ref = frozen_reference_lengths(docs.filter(F.col("source") == "src0"))
-    assert sum(ref.values()) > 0
-
-    src = str(tmp_path / "incoming_mwu")
-    cuts = [(0, 150), (150, 300), (300, 10_000_000)]
-    for lo, hi in cuts:
-        docs.filter(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "mwu")
-    q = (
-        spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(mwu_monitor_sink(ref, out))
-        .option("checkpointLocation", str(tmp_path / "ckpt_mwu"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    got = sorted(
-        (r["n_docs"], r["u2"], r["z6"], r["shifted"])
-        for r in TF.read(spark, out).collect()
-    )
-    assert len(got) == 3
-
-    want = []
-    for lo, hi in cuts:
-        counts = {
-            r["v"]: r["c"]
-            for r in docs.filter(
-                (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-            )
-            .groupBy(F.col("n_chars").alias("v"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        }
-        want.append(mwu_of_counts(counts, ref))
-    assert got == sorted(want)
-
-    # a batch shifted far above the reference support must flag
-    shifted_counts = {10_000_000 + i: 20 for i in range(10)}
-    ns, u2, z6, shifted = mwu_of_counts(shifted_counts, ref)
-    assert shifted and z6 > 1.96
-    # every shifted value exceeds every reference value -> U2 is maximal
-    assert u2 == 2 * ns * sum(ref.values())
-
-
-def test_mwu_of_counts_bit_identical_to_batch_key(spark, sf_dir):
-    """Driver arithmetic == the batch key's plan arithmetic: for every
-    non-reference source, mwu_of_counts on the per-source value counts
-    reproduces q_mannwhitney_u's (ns, u2, z6, shifted) row exactly."""
-    import __spark_entry__ as entry_mod
-    from etl_data_processor_spark.streaming.drift import (
-        frozen_reference_lengths,
-        mwu_of_counts,
-    )
-
-    docs = Catalog(spark, sf_dir).documents
-    ref = frozen_reference_lengths(docs.filter(F.col("source") == "src0"))
-    batch = {
-        r["source"]: (r["ns"], r["u2"], r["z6"], r["shifted"])
-        for r in entry_mod.queries()["q_mannwhitney_u"](
-            spark, sf_dir
-        ).collect()
+def _key_rows(spark, sf_dir, key) -> dict:
+    return {
+        r["source"]: r.asDict()
+        for r in entry_mod.queries()[key](spark, sf_dir).collect()
     }
-    assert batch
-    for source, row in batch.items():
-        counts = {
-            r["v"]: r["c"]
-            for r in docs.filter(F.col("source") == source)
-            .groupBy(F.col("n_chars").alias("v"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        }
-        assert mwu_of_counts(counts, ref) == row, source
+
+
+def _src0(spark, sf_dir):
+    return Catalog(spark, sf_dir).documents.filter(F.col("source") == "src0")
+
+
+def _batch(spark, rows):
+    """A hand-made micro-batch: (doc_id, text, n_chars) rows of one source."""
+    return spark.createDataFrame(
+        [(i, t, "en", "srcX", n) for i, t, n in rows], DOC_SCHEMA
+    )
+
+
+def test_streaming_psi_matches_batch_per_file(
+    spark, sf_dir, tmp_path, stream_sources
+):
+    """Reference src0 (the key's minimum source); src0 against itself
+    reads 0, and a batch piled into one bin reads as shifted."""
+    monitor = psi_monitor(_src0(spark, sf_dir))
+    out = str(tmp_path / "psi")
+    stream_sources(TF.streaming_append_sink(out, monitor))
+
+    got = _sink_rows(spark, out)
+    assert got.pop("src0")["psi6"] == 0.0
+    assert got == _key_rows(spark, sf_dir, "q_quality_drift_psi")
+
+    piled = monitor(_batch(spark, [(i, "!!!", 3) for i in range(100)])).first()
+    assert piled["n_docs"] == 100 and piled["psi6"] > 0.25
+
+
+def test_streaming_jsd_matches_batch_per_file(
+    spark, sf_dir, tmp_path, stream_sources
+):
+    """Reference the whole corpus (the key's global distribution); a
+    batch whose vocabulary is disjoint from the reference's sits at the
+    ln 2 bound, which needs the kernel's union vocabulary."""
+    monitor = jsd_monitor(Catalog(spark, sf_dir).documents)
+    out = str(tmp_path / "jsd")
+    stream_sources(TF.streaming_append_sink(out, monitor))
+
+    assert _sink_rows(spark, out) == _key_rows(spark, sf_dir, "q_js_divergence")
+
+    disjoint = monitor(_batch(spark, [(0, "zzz_only " * 10, 90)])).first()
+    assert abs(disjoint["jsd6"] - math.floor(math.log(2) * 1e6) / 1e6) < 2e-6
+
+
+def test_streaming_ks_matches_batch_per_file(
+    spark, sf_dir, tmp_path, stream_sources
+):
+    """Reference src0; a batch far outside the reference's support has
+    D = 1 and drifts."""
+    monitor = ks_monitor(_src0(spark, sf_dir))
+    out = str(tmp_path / "ks")
+    stream_sources(TF.streaming_append_sink(out, monitor))
+
+    got = _sink_rows(spark, out)
+    assert (got["src0"]["ks6"], got.pop("src0")["drifted"]) == (0.0, 0)
+    assert got == _key_rows(spark, sf_dir, "q_ks_drift")
+
+    far = monitor(_batch(spark, [(i, "x", 10_000_000) for i in range(500)]))
+    assert (far.first()["ks6"], far.first()["drifted"]) == (1.0, 1)
+
+
+def test_streaming_mwu_matches_batch_per_file(
+    spark, sf_dir, tmp_path, stream_sources
+):
+    """Reference src0; a batch shifted above every reference value has
+    the maximal U and is flagged."""
+    ref = _src0(spark, sf_dir)
+    monitor = mwu_monitor(ref)
+    out = str(tmp_path / "mwu")
+    stream_sources(TF.streaming_append_sink(out, monitor))
+
+    got = _sink_rows(spark, out)
+    assert (got["src0"]["z6"], got.pop("src0")["shifted"]) == (0.0, False)
+    assert got == _key_rows(spark, sf_dir, "q_mannwhitney_u")
+
+    rows = [(i, "x", 10_000_000 + i % 10) for i in range(200)]
+    shifted = monitor(_batch(spark, rows)).first()
+    assert shifted["shifted"] and shifted["z6"] > 1.96
+    assert shifted["u2"] == 2 * shifted["ns"] * ref.count()

@@ -1,29 +1,23 @@
-"""Streaming eval monitors (streaming/evals.py; VERDICT r7 item 5):
-per-micro-batch chrF / ROUGE-N against a frozen reference must match a
-pure-Python replay of the batch keys' arithmetic on the same file
-slice, and the Heaps vocabulary-growth monitor's cumulative checkpoints
-must equal an independent stream-order replay (with the fit replaying
-q_heaps_fit's exact integer-moment OLS)."""
+"""Streaming eval monitors (streaming/evals.py): the chrF and ROUGE
+monitors run their registered key's kernel per micro-batch, so streaming
+the fixture one source per micro-batch must append, for every candidate
+source, exactly the key's row for it. The Heaps vocabulary-growth
+monitor's cumulative checkpoints must equal an independent stream-order
+replay, each fitted by the key's OLS (queries_r7b.heaps_ols)."""
 
 from __future__ import annotations
 
-import pytest
-
-import math
-from collections import Counter
-
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entry_mod
+import pyarrow.parquet as pq
 from etl_data_processor_spark import tableformat as TF
 from etl_data_processor_spark.io import Catalog
+from etl_data_processor_spark.queries_r7b import heaps_ols
 from etl_data_processor_spark.streaming.evals import (
-    chrf_monitor_sink,
-    frozen_chrf_reference,
-    frozen_rouge_reference,
-    heaps_fit_points,
+    chrf_monitor,
     heaps_monitor_sink,
-    rouge_monitor_sink,
+    rouge_monitor,
 )
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
@@ -50,118 +44,37 @@ def _stream(spark, sf_dir, tmp_path, sink, name):
     q.awaitTermination()
 
 
-def _docs_dict(sf_dir):
-    return {
-        r["doc_id"]: (r["source"], r["text"])
-        for r in pq.read_table(f"{sf_dir}/documents.parquet").to_pylist()
+def _matches_key_per_source(spark, sf_dir, out, key):
+    """One sink row per candidate source (the src0 micro-batch holds no
+    candidates), each equal to the key's row for that source."""
+    rows = [r.asDict() for r in TF.read(spark, out).collect()]
+    assert len({r.pop("batch_id") for r in rows}) == len(rows)
+    want = {
+        r["source"]: r.asDict()
+        for r in entry_mod.queries()[key](spark, sf_dir).collect()
     }
+    assert len(want) == 19
+    assert {r["source"]: r for r in rows} == want
 
 
-def _r6(x):
-    return math.floor(x * 1e6 + 0.5) / 1e6
-
-
-@pytest.mark.slow
-def test_streaming_chrf_matches_python_replay_per_file(
-    spark, sf_dir, tmp_path
+def test_streaming_chrf_matches_batch_per_file(
+    spark, sf_dir, tmp_path, stream_sources
 ):
-    docs = Catalog(spark, sf_dir).documents
-    rgc, rids = frozen_chrf_reference(docs.filter(F.col("source") == "src0"))
+    ref = Catalog(spark, sf_dir).documents.filter(F.col("source") == "src0")
     out = str(tmp_path / "chrf")
-    _stream(spark, sf_dir, tmp_path, chrf_monitor_sink(rgc, rids, out), "chrf")
-
-    got = {
-        (r["batch_id"], r["source"]): r for r in TF.read(spark, out).collect()
-    }
-    assert {b for b, _s in got} == {0, 1, 2}
-
-    # pure-Python replay per slice (q_chrf_eval's arithmetic, restricted
-    # to the slice's candidate docs; reference side is the WHOLE corpus'
-    # src0 docs — the frozen epoch state)
-    alldocs = _docs_dict(sf_dir)
-    strip = lambda t: "".join(t.strip().split())  # noqa: E731
-
-    def grams(s, n):
-        return Counter(s[i: i + n] for i in range(min(len(s) - n + 1, 8192)))
-
-    for b, (lo, hi) in enumerate(SLICES):
-        agg = {}
-        for cid, (source, text) in alldocs.items():
-            if not (lo <= cid < hi) or source == "src0":
-                continue
-            rid = cid - (cid % 20)
-            if rid not in alldocs or alldocs[rid][0] != "src0":
-                continue
-            cs, rs = strip(text), strip(alldocs[rid][1])
-            a = agg.setdefault(source, {n: [0, 0, 0] for n in range(1, 5)})
-            for n in range(1, 5):
-                cg, rg = grams(cs, n), grams(rs, n)
-                a[n][0] += sum(min(c, cg.get(g, 0)) for g, c in rg.items())
-                a[n][1] += sum(cg.values())
-                a[n][2] += sum(rg.values())
-        assert {s for bb, s in got if bb == b} == set(agg)
-        for source, byn in agg.items():
-            r = got[(b, source)]
-            m = sum(v[0] for v in byn.values())
-            tc = sum(v[1] for v in byn.values())
-            tr = sum(v[2] for v in byn.values())
-            assert (r["matches"], r["cand_grams"], r["ref_grams"]) == (
-                m, tc, tr,
-            ), (b, source)
-            p = sum(v[0] / v[1] for v in byn.values()) / 4
-            rec = sum(v[0] / v[2] for v in byn.values()) / 4
-            f = 0.0 if 4 * p + rec == 0 else 5 * p * rec / (4 * p + rec)
-            assert r["chrp6"] == _r6(p) and r["chrr6"] == _r6(rec)
-            assert r["chrf6"] == _r6(f)
+    stream_sources(TF.streaming_append_sink(out, chrf_monitor(ref)))
+    _matches_key_per_source(spark, sf_dir, out, "q_chrf_eval")
 
 
-def test_streaming_rouge_matches_python_replay_per_file(
-    spark, sf_dir, tmp_path
+def test_streaming_rouge_matches_batch_per_file(
+    spark, sf_dir, tmp_path, stream_sources
 ):
-    docs = Catalog(spark, sf_dir).documents
-    rgc, rids = frozen_rouge_reference(docs.filter(F.col("source") == "src0"))
+    ref = Catalog(spark, sf_dir).documents.filter(F.col("source") == "src0")
     out = str(tmp_path / "rouge")
-    _stream(
-        spark, sf_dir, tmp_path, rouge_monitor_sink(rgc, rids, out), "rouge"
-    )
-
-    got = {
-        (r["batch_id"], r["source"]): r for r in TF.read(spark, out).collect()
-    }
-    assert {b for b, _s in got} == {0, 1, 2}
-
-    alldocs = _docs_dict(sf_dir)
-
-    def grams(toks, n):
-        return Counter(
-            " ".join(toks[i: i + n]) for i in range(len(toks) - n + 1)
-        )
-
-    for b, (lo, hi) in enumerate(SLICES):
-        agg = {}
-        for cid, (source, text) in alldocs.items():
-            if not (lo <= cid < hi) or source == "src0":
-                continue
-            rid = cid - (cid % 20)
-            if rid not in alldocs or alldocs[rid][0] != "src0":
-                continue
-            ct, rt = text.split(), alldocs[rid][1].split()
-            a = agg.setdefault(source, {1: [0, 0], 2: [0, 0]})
-            for n in (1, 2):
-                cg, rg = grams(ct, n), grams(rt, n)
-                a[n][0] += sum(min(c, cg.get(g, 0)) for g, c in rg.items())
-                a[n][1] += sum(rg.values())
-        assert {s for bb, s in got if bb == b} == set(agg)
-        for source, byn in agg.items():
-            r = got[(b, source)]
-            assert (r["m1"], r["t1"], r["m2"], r["t2"]) == (
-                byn[1][0], byn[1][1], byn[2][0], byn[2][1],
-            ), (b, source)
-            assert r["rouge1_6"] == _r6(byn[1][0] / byn[1][1])
-            assert r["rouge2_6"] == _r6(byn[2][0] / byn[2][1])
+    stream_sources(TF.streaming_append_sink(out, rouge_monitor(ref)))
+    _matches_key_per_source(spark, sf_dir, out, "q_rouge_n")
 
 
-@pytest.mark.slow
 def test_streaming_heaps_matches_stream_order_replay(spark, sf_dir, tmp_path):
     vocab = str(tmp_path / "heaps-vocab")
     out = str(tmp_path / "heaps")
@@ -177,8 +90,11 @@ def test_streaming_heaps_matches_stream_order_replay(spark, sf_dir, tmp_path):
 
     # independent stream-order replay: cumulative token count + first-
     # occurrence type count per slice (q_heaps_fit's min-bucket semantics
-    # with buckets := batches), fit via the exact-arithmetic helper
-    alldocs = _docs_dict(sf_dir)
+    # with buckets := batches), fit by the key's OLS
+    alldocs = {
+        r["doc_id"]: (r["source"], r["text"])
+        for r in pq.read_table(f"{sf_dir}/documents.parquet").to_pylist()
+    }
     seen: set[str] = set()
     cum_n = 0
     series = []
@@ -192,8 +108,8 @@ def test_streaming_heaps_matches_stream_order_replay(spark, sf_dir, tmp_path):
         cum_n += len(toks)
         seen |= set(toks)
         series.append((cum_n, len(seen)))
-        beta6, logk6 = heaps_fit_points(series)
-        assert got[b] == (b, cum_n, len(seen), beta6, logk6), b
+        fit = heaps_ols(spark.createDataFrame(series, "n long, v long")).first()
+        assert got[b] == (b, cum_n, len(seen), fit["beta6"], fit["logk6"]), b
     # the fixture's generator vocabulary saturates within the first
     # slice, so the true slope is ~0 (every later token is a repeat);
     # a broken fit lands far outside [0, Heaps' theoretical < 1]

@@ -1,5 +1,5 @@
-"""Streaming twin of q_selection_pipeline (VERDICT r6 next-round item 6):
-the batch capstone's gate chain run as a LIVE foreachBatch pipeline —
+"""Streaming form of q_selection_pipeline (streaming/selection.py): the
+batch capstone's stage functions run as a LIVE foreachBatch pipeline —
 file-stream ingest with replayed/overlapping files, per-epoch FROZEN
 model state (length cuts, benchmark trigram set, DSIR LM), stateful
 exact dedup through a seen-norms table, exactly-once score appends, and
@@ -24,7 +24,6 @@ from etl_data_processor_spark.streaming.windows import streaming_dedup
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 
-@pytest.mark.slow
 def test_streaming_selection_matches_batch(spark, sf_dir, tmp_path):
     docs = Catalog(spark, sf_dir).documents.select(
         "doc_id", "source", "text", "n_chars"
@@ -33,7 +32,7 @@ def test_streaming_selection_matches_batch(spark, sf_dir, tmp_path):
     # epoch freeze: the corpus-relative model state, derived once (in
     # production: from yesterday's epoch; here: the same fixture the
     # batch capstone reads, so the twin must match it exactly)
-    models = frozen_selection_state(spark, docs, ref_source="src0")
+    models = frozen_selection_state(docs)
 
     # stream input in ASCENDING doc_id ranges with OVERLAPS (replayed
     # rows) — at-least-once ingest; ascending order is what makes
@@ -110,7 +109,7 @@ def test_multi_epoch_refreeze_boundary_semantics(spark, sf_dir, tmp_path):
     seen_table = str(tmp_path / "seen_norms")
 
     # ---- epoch 1: freeze from C1, stream C1 in two files -------------
-    m1 = frozen_selection_state(spark, c1, ref_source="src0")
+    m1 = frozen_selection_state(c1)
     scores1 = str(tmp_path / "scores_e1")
     apply1 = selection_gate_sink(m1, seen_table, scores1)
     src1 = str(tmp_path / "in_e1")
@@ -137,8 +136,8 @@ def test_multi_epoch_refreeze_boundary_semantics(spark, sf_dir, tmp_path):
     TF.append_idempotent(TF.read(spark, seen_table), seen_snap, "e1-close")
 
     # ---- boundary: re-freeze from the grown corpus -------------------
-    m2 = frozen_selection_state(spark, full, ref_source="src0")
-    assert m2["cuts"] != m1["cuts"] or sorted(
+    m2 = frozen_selection_state(full)
+    assert m2["cuts"].collect() != m1["cuts"].collect() or sorted(
         map(tuple, m2["lr"].collect())
     ) != sorted(map(tuple, m1["lr"].collect())), "re-freeze changed nothing"
 

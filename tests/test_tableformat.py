@@ -154,6 +154,7 @@ def test_streaming_sink_is_exactly_once_under_replay(spark, tmp_path):
     q.awaitTermination(120)
     before = ids(TF.read(spark, t))
     assert before == list(range(10))
+    assert TF.read(spark, t).columns == ["batch_id", "id"]
     # simulate the failure-recovery path: batch 0 is delivered again
     TF.streaming_append_sink(t)(spark.range(0, 10), 0)
     assert ids(TF.read(spark, t)) == before
