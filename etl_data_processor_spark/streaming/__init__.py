@@ -14,4 +14,7 @@ def read_state(spark, table_dir):
     commit."""
     from etl_data_processor_spark import tableformat as TF
 
-    return TF.read(spark, table_dir) if TF.history(table_dir) else None
+    try:
+        return TF.read(spark, table_dir)
+    except ValueError:  # no commit yet
+        return None

@@ -9,7 +9,7 @@ ops.drift against the frozen reference. The kernel groups by ``source``,
 so a micro-batch holding one source's rows yields exactly the key's row
 for that source (tests/test_streaming_drift.py), and the table gains
 (batch_id, <kernel columns>) exactly once per batch id. No statistic is
-computed in driver Python. Usage::
+computed outside the plan. Usage::
 
     ref = docs.filter(F.col("source") == "src0")
     stream.writeStream.foreachBatch(
