@@ -1004,29 +1004,10 @@ def minhash_lsh_pairs(
         # "materialize the signature table once" practice.
         buckets = buckets.cache()
 
-    left = buckets.alias("a")
-    right = buckets.alias("b")
-    candidates = (
-        left.join(
-            right,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-
-    sa = sh.select(F.col(id_col).alias("id_a"), F.col("shingles").alias("sh_a"))
-    sb = sh.select(F.col(id_col).alias("id_b"), F.col("shingles").alias("sh_b"))
-    return (
-        candidates.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", F.round(exact_jaccard(F.col("sh_a"), F.col("sh_b")), 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return lsh_verified_pairs(
+        buckets, buckets, sh,
+        keep=F.col(f"a.{id_col}") < F.col(f"b.{id_col}"),
+        threshold=threshold, id_col=id_col,
     )
 
 
@@ -1432,6 +1413,63 @@ def minhash_lsh_pairs_between(
         .withColumn("jaccard", F.round(exact_jaccard(F.col("sh_l"), F.col("sh_r")), 4))
         .filter(F.col("jaccard") >= threshold)
         .select("id_l", "id_r", "jaccard")
+    )
+
+
+def lsh_verified_pairs(
+    buckets_a: DataFrame,
+    buckets_b: DataFrame,
+    shingled: DataFrame,
+    keep: Column,
+    threshold: float = 0.8,
+    id_col: str = "doc_id",
+    carry_cols: tuple[str, ...] = (),
+) -> DataFrame:
+    """Every verified near-dup pair a pipeline needs, from ONE bucket join.
+
+    ``buckets_a`` and ``buckets_b`` are slices of one
+    :func:`minhash_band_buckets` index (often the same frame), aliased
+    ``a`` and ``b``; ``shingled`` holds the shingles of every id on either
+    side. ``keep`` is a predicate over ``a.*`` and ``b.*`` that picks the
+    pairs to verify (orientation such as ``a.id < b.id``, and any slices
+    the caller never wants). It applies before the ``distinct``, so a
+    dropped pair costs no candidate shuffle and no Jaccard.
+
+    Buckets come from each document alone, so two documents are candidates
+    here exactly when they are candidates in any join of smaller slices
+    holding both: one join over the whole index yields every slice's pairs
+    (self-pairs, bipartite pairs, delta pairs) at once, and the caller
+    splits them by the carried columns instead of joining the index again.
+
+    Returns (id_a, id_b, <carry>_a..., <carry>_b..., jaccard), jaccard
+    rounded to 4 and >= ``threshold``."""
+    cand = (
+        buckets_a.alias("a")
+        .join(
+            buckets_b.alias("b"),
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.sig") == F.col("b.sig"))
+            & keep,
+        )
+        .select(
+            F.col(f"a.{id_col}").alias("id_a"),
+            F.col(f"b.{id_col}").alias("id_b"),
+            *[F.col(f"a.{c}").alias(f"{c}_a") for c in carry_cols],
+            *[F.col(f"b.{c}").alias(f"{c}_b") for c in carry_cols],
+        )
+        .distinct()
+    )
+    sh = shingled.select(id_col, "shingles")
+    return (
+        cand.join(sh.toDF("id_a", "sh_a"), "id_a")
+        .join(sh.toDF("id_b", "sh_b"), "id_b")
+        .withColumn("jaccard", F.round(exact_jaccard(F.col("sh_a"), F.col("sh_b")), 4))
+        .filter(F.col("jaccard") >= threshold)
+        .select(
+            "id_a", "id_b",
+            *[f"{c}_a" for c in carry_cols], *[f"{c}_b" for c in carry_cols],
+            "jaccard",
+        )
     )
 
 

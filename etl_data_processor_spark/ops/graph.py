@@ -35,7 +35,7 @@ curation), composed over ops.dedup's pair generators.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from etl_data_processor_spark.ops import dedup as D
@@ -159,21 +159,27 @@ def connected_components(
     Set ``small_graph_edges=0`` to force the distributed path (tests pin
     both paths against each other).
     """
-    def signature(df: DataFrame) -> tuple[int, int]:
-        # Under AQE this is NOT where the round runs: the lazy
-        # localCheckpoint(eager=False) that made `df` already ran every
-        # upstream query stage to plan its final one (at sf0.01, 27 of
-        # q_corpus_pipeline's 29 build-time jobs run inside that call).
-        # This action runs what is left (2 jobs there): the final stage,
-        # which persists the checkpoint, and the signature agg over it.
-        row = df.agg(
+    def sig_cols() -> list[Column]:
+        return [
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-        ).collect()[0]
+        ]
+
+    def signature(df: DataFrame) -> tuple[int, int]:
+        # A round's signature. Under AQE the lazy localCheckpoint that
+        # made `df` already ran the round's upstream query stages inside
+        # that call; this action runs the final stage, which persists the
+        # checkpoint, and the signature agg over it: two jobs per round.
+        row = df.agg(*sig_cols()).collect()[0]
         return (row["n"], row["h"])
 
-    e = _canonical_edges(edges, src, dst).localCheckpoint(eager=False)
-    prev = signature(e)
+    # The initial signature rides on the checkpoint's own job: an
+    # Observation is filled by the action that runs its plan, so the
+    # eager checkpoint returns (n, h) with no second pass over the edges.
+    obs = Observation("cc_edges")
+    e = _canonical_edges(edges, src, dst).observe(obs, *sig_cols())
+    e = e.localCheckpoint(eager=True)
+    prev = (obs.get["n"], obs.get["h"])
     if prev[0] <= small_graph_edges:
         return _cc_single_task(e)
     for _ in range(max_iter):
@@ -236,6 +242,76 @@ def dedup_keep(
     )
     drop = clusters.filter(F.col("is_canonical") == 0).select(id_col)
     return docs.join(F.broadcast(drop), id_col, "left_anti")
+
+
+def decontaminate_dedup(
+    docs: DataFrame,
+    shingled: DataFrame,
+    buckets: DataFrame,
+    bench_sources: list[str],
+    threshold: float = 0.8,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Decontaminate a corpus against its benchmark slice, then cluster-dedup
+    what is left, from ONE verified pair set.
+
+    ``docs`` has ``doc_id`` and ``source``; a doc is benchmark when its
+    source is in ``bench_sources`` and train otherwise. ``shingled`` and
+    ``buckets`` are the corpus LSH index, carrying ``source``
+    (``queries_north._lsh_index``). Returns ``(pairs, contaminated,
+    kept)``:
+
+    - ``pairs``: every verified pair (``ops.dedup.lsh_verified_pairs``)
+      except bench–bench ones, which are dropped before verification,
+      pinned by a lazy ``localCheckpoint``;
+    - ``contaminated``: ``doc_id`` of each train doc that near-duplicates
+      a benchmark doc, the train ends of the train–bench pairs;
+    - ``kept``: the train docs minus ``contaminated`` and minus the
+      non-canonical members of the clusters that the train–train pairs
+      with no contaminated end form.
+
+    This is ``decontaminate`` followed by ``dedup_keep`` over the clean
+    train docs, with one bucket join instead of two: a pair's candidacy
+    and Jaccard depend only on its two documents, so the one set,
+    restricted to train×bench, is the bipartite result and, restricted to
+    clean×clean, the self-join over the clean docs."""
+    def bench(c: str) -> Column:
+        return F.col(c).isin(bench_sources)
+
+    # every frame below reads the pair set, so it is pinned, and by a
+    # checkpoint: a cache() would stay in the CacheManager after the
+    # caller's frame is gone
+    pairs = D.lsh_verified_pairs(
+        buckets, buckets, shingled,
+        keep=(F.col("a.doc_id") < F.col("b.doc_id"))
+        & ~(bench("a.source") & bench("b.source")),
+        threshold=threshold,
+        carry_cols=("source",),
+    ).localCheckpoint(eager=False)
+    # benchmark-bounded and tiny: every anti-join below broadcasts it
+    contaminated = (
+        pairs.filter(bench("source_a") != bench("source_b"))
+        .select(
+            F.when(bench("source_a"), F.col("id_b"))
+            .otherwise(F.col("id_a"))
+            .alias("doc_id")
+        )
+        .distinct()
+    )
+    edges = (
+        pairs.filter(~bench("source_a") & ~bench("source_b"))
+        .join(F.broadcast(contaminated.toDF("id_a")), "id_a", "left_anti")
+        .join(F.broadcast(contaminated.toDF("id_b")), "id_b", "left_anti")
+    )
+    cc = connected_components(edges)
+    drop = cc.filter(F.col("node") != F.col("component")).select(
+        F.col("node").alias("doc_id")
+    )
+    kept = (
+        docs.filter(~bench("source"))
+        .join(F.broadcast(contaminated), "doc_id", "left_anti")
+        .join(F.broadcast(drop), "doc_id", "left_anti")
+    )
+    return pairs, contaminated, kept
 
 
 def pagerank_exact(

@@ -275,53 +275,25 @@ def q_corpus_pipeline(spark, sf_dir):
     """Capstone: decontaminate → cluster-dedup → quality-weighted sample →
     per-source stats, all stages oracle-checked END-TO-END in one query
     (the per-stage oracles are q_decontaminate / q_dedup_keep /
-    q_sample_weighted). The 100 TB shape inherits each stage's guarantee:
-    the corpus is scanned, hashed and filtered but never shuffled except
-    the tiny pair graph and the final per-source aggregate."""
-    from etl_data_processor_spark.ops.dedup import minhash_lsh_pairs_between
-    from etl_data_processor_spark.ops.graph import dedup_keep
+    q_sample_weighted).
+
+    Both dedup stages read ONE verified pair set
+    (``ops.graph.decontaminate_dedup``): the session's LSH bucket index
+    joined to itself once, with bench–bench pairs dropped before
+    verification. Contaminated ids are the train ends of its train–bench
+    pairs; its train–train pairs with no contaminated end are the dedup
+    edges. The 100 TB shape: the corpus is scanned, hashed and filtered
+    but never shuffled; only the pair set, the pair graph and the final
+    per-source aggregate are."""
+    from etl_data_processor_spark.ops.graph import decontaminate_dedup
     from etl_data_processor_spark.queries_north import _lsh_index
 
-    d = _cat(spark, sf_dir).documents
-    bench_srcs = ["src0", "src1", "src2", "src3"]
     # the session's shared LSH index: shingle + signature passes are paid
     # ONCE per corpus (each re-shingle is a full corpus re-scan at 100 TB)
-    # and every stage below slices the cached frames by a plain filter on
-    # the carried source column.
     shingled, buckets = _lsh_index(spark, sf_dir)
-    is_bench = F.col("source").isin(bench_srcs)
-    sh_train = shingled.filter(~is_bench)
-    sh_bench = shingled.filter(is_bench)
-    bk_train = buckets.filter(~is_bench)
-    bk_bench = buckets.filter(is_bench)
-    train = d.filter(~F.col("source").isin(bench_srcs))
-    # Decontamination inlined (vs calling ops.dedup.decontaminate) so the
-    # contaminated-id set — benchmark-bounded, tiny — can be PINNED: every
-    # downstream stage (cluster-dedup pairs, the kept-corpus anti-join, the
-    # scoring join) consumes `clean`, and without the pin each consumer
-    # re-executes the whole bipartite-LSH subtree inside clean's plan
-    # (measured ~2s x 2 extra at sf0.1). With it, re-deriving clean is a
-    # corpus scan + broadcast anti-join — the 100 TB-safe shape.
-    contaminated = (
-        minhash_lsh_pairs_between(
-            train, d.filter(F.col("source").isin(bench_srcs)),
-            threshold=0.8,
-            shingled_left=sh_train, shingled_right=sh_bench,
-            buckets_left=bk_train, buckets_right=bk_bench,
-        )
-        .select(F.col("id_l").alias("doc_id"))
-        .distinct()
-        .cache()
-    )
-    clean = train.join(F.broadcast(contaminated), "doc_id", "left_anti")
-    kept = dedup_keep(
-        clean, threshold=0.8,
-        shingled=sh_train.join(
-            clean.select("doc_id"), "doc_id", "left_semi"
-        ),
-        buckets=bk_train.join(
-            clean.select("doc_id"), "doc_id", "left_semi"
-        ),
+    _, _, kept = decontaminate_dedup(
+        _cat(spark, sf_dir).documents, shingled, buckets,
+        ["src0", "src1", "src2", "src3"], threshold=0.8,
     )
     scored = kept.select(
         "doc_id", "source", T.quality_score(F.col("text")).alias("quality")

@@ -1396,44 +1396,31 @@ def q_top_paths(spark, sf_dir):
 def q_dedup_incremental(spark, sf_dir):
     """INCREMENTAL dedup: near-dup pairs involving a new-arrival delta
     (doc_id%10==0 plays the daily ingest; the rest is the standing corpus)
-    = delta-vs-delta self-pairs UNION bipartite delta-vs-base pairs — and
-    critically NO base self-join. This is the daily-ingest cost model: work
-    is O(|delta| signatures) plus bucket collisions against the base
-    signature table (the session's shared LSH index — queries_north
-    ._lsh_index — sliced by the delta predicate, the exact persisted-
-    band-bucket-table production shape: re-shingling the 100 TB base never
-    happens). The oracle is the naive all-pairs definition restricted to
-    delta-touching pairs, so the gate proves the incremental decomposition
-    loses nothing."""
-    from etl_data_processor_spark.ops.dedup import (
-        minhash_lsh_pairs,
-        minhash_lsh_pairs_between,
-    )
+    = delta-vs-delta pairs plus delta-vs-base pairs from ONE join of the
+    delta's buckets against the whole index — and critically NO base
+    self-join. This is the daily-ingest cost model: work is O(|delta|
+    signatures) plus bucket collisions against the base signature table
+    (the session's shared LSH index — queries_north._lsh_index — sliced by
+    the delta predicate, the exact persisted-band-bucket-table production
+    shape: re-shingling the 100 TB base never happens). The oracle is the
+    naive all-pairs definition restricted to delta-touching pairs, so the
+    gate proves the incremental decomposition loses nothing."""
+    from etl_data_processor_spark.ops.dedup import lsh_verified_pairs
     from etl_data_processor_spark.queries_north import _lsh_index
 
-    d = _cat(spark, sf_dir).documents
     shingled, buckets = _lsh_index(spark, sf_dir)
-    is_delta = F.col("doc_id") % 10 == 0
-    sh_delta = shingled.filter(is_delta)
-    sh_base = shingled.filter(~is_delta)
-    within = minhash_lsh_pairs(
-        d.filter(is_delta), threshold=0.8,
-        shingled=sh_delta, buckets=buckets.filter(is_delta),
+    # delta buckets against ALL buckets, so the base never meets itself:
+    # a delta-base pair is found once from its delta end, a delta-delta
+    # pair once from its smaller id
+    pairs = lsh_verified_pairs(
+        buckets.filter(F.col("doc_id") % 10 == 0), buckets, shingled,
+        keep=(F.col("b.doc_id") % 10 != 0) | (F.col("a.doc_id") < F.col("b.doc_id")),
     )
-    between = minhash_lsh_pairs_between(
-        d.filter(is_delta),
-        d.filter(~is_delta),
-        threshold=0.8,
-        shingled_left=sh_delta,
-        shingled_right=sh_base,
-        buckets_left=buckets.filter(is_delta),
-        buckets_right=buckets.filter(~is_delta),
-    ).select(
-        F.least(F.col("id_l"), F.col("id_r")).alias("id_a"),
-        F.greatest(F.col("id_l"), F.col("id_r")).alias("id_b"),
+    return pairs.select(
+        F.least("id_a", "id_b").alias("id_a"),
+        F.greatest("id_a", "id_b").alias("id_b"),
         "jaccard",
     )
-    return within.unionByName(between)
 
 
 # =====================================================================

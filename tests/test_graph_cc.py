@@ -108,6 +108,30 @@ def test_cc_partition_invariance(spark):
     assert a == b
 
 
+def test_cc_initial_signature_comes_from_the_checkpoint_job(spark):
+    """The initial (n, h) signature is read from an Observation on the
+    eager checkpoint of the canonical edge list, so on the single-task
+    path the call runs exactly the checkpoint's own jobs (a separate
+    signature collect ran one job more)."""
+    from etl_data_processor_spark.ops.graph import _canonical_edges
+
+    df = spark.createDataFrame(
+        TOPOLOGIES["two_triangles_bridge"], "id_a long, id_b long"
+    )
+    dag = spark._jsc.sc().dagScheduler()
+
+    def jobs(fn) -> int:
+        j0 = dag.nextJobId()
+        fn()
+        return dag.nextJobId() - j0
+
+    checkpoint = jobs(
+        lambda: _canonical_edges(df, "id_a", "id_b").localCheckpoint(eager=True)
+    )
+    assert checkpoint >= 1
+    assert jobs(lambda: connected_components(df)) == checkpoint
+
+
 def test_dedup_clusters_closes_pairs(spark, sf_dir):
     docs = Catalog(spark, sf_dir).documents
     pairs = [
@@ -268,3 +292,128 @@ def test_dedup_best_keeps_highest_quality(spark, sf_dir):
         ).collect()
     }
     assert got == keep_expected
+
+
+_BENCH_SRCS = ["src0", "src1", "src2", "src3"]
+
+
+def _words(tag: str, lo: int, hi: int, swap: dict[int, str] | None = None) -> str:
+    swap = swap or {}
+    return " ".join(swap.get(i, f"{tag}{i}") for i in range(lo, hi))
+
+
+def _jaccard3(a: str, b: str) -> float:
+    def sh(t: str) -> set:
+        w = t.split()
+        return {" ".join(w[i:i + 3]) for i in range(len(w) - 2)} or {" ".join(w)}
+
+    x, y = sh(a), sh(b)
+    return len(x & y) / len(x | y)
+
+
+# doc_id -> (source, text). Train A~B~C is a chain (A~C below the
+# threshold) whose smallest id, A, is contaminated by bench X; bench Y1~Y2
+# near-duplicate each other; train T near-duplicates bench Z1 and Z2; the
+# docs of fewer than 3 tokens are one whole-text shingle each, so the two
+# "two words" docs pair up and bench "solo" contaminates train "solo".
+_HAND_CORPUS = {
+    1: ("src4", _words("a", 0, 40)),  # A
+    2: ("src5", _words("a", 4, 44)),  # B
+    3: ("src4", _words("a", 8, 48)),  # C
+    4: ("src6", _words("t", 0, 30)),  # T
+    5: ("src4", "two words"),
+    6: ("src5", "two words"),
+    7: ("src6", "solo"),
+    8: ("src4", _words("f", 0, 25)),
+    9: ("src5", _words("g", 0, 12)),
+    101: ("src0", _words("a", 0, 40, {39: "x"})),  # X
+    102: ("src1", _words("y", 0, 30)),  # Y1
+    103: ("src2", _words("y", 0, 30, {29: "y"})),  # Y2
+    104: ("src3", _words("t", 0, 30, {29: "z"})),  # Z1
+    105: ("src0", _words("t", 0, 30, {0: "z"})),  # Z2
+    106: ("src1", "solo"),
+}
+
+
+def _hand_index(spark):
+    from etl_data_processor_spark.ops.dedup import minhash_band_buckets, with_shingles
+
+    j = lambda a, b: _jaccard3(_HAND_CORPUS[a][1], _HAND_CORPUS[b][1])  # noqa: E731
+    assert min(j(1, 101), j(1, 2), j(2, 3), j(102, 103), j(4, 104), j(4, 105)) >= 0.8
+    assert max(j(1, 3), j(2, 101)) < 0.8
+    docs = spark.createDataFrame(
+        [(i, t, s) for i, (s, t) in _HAND_CORPUS.items()],
+        "doc_id long, text string, source string",
+    )
+    sh = with_shingles(docs).select("doc_id", "source", "shingles")
+    return docs, sh, minhash_band_buckets(sh, carry_cols=["source"])
+
+
+@pytest.mark.parametrize("corpus", ["fixture", "hand_built"])
+def test_decontaminate_dedup_equals_two_step_composition(spark, sf_dir, corpus):
+    """decontaminate_dedup's one verified pair set against the two joins it
+    replaces, over slices of the same LSH index: the train×bench pairs of
+    minhash_lsh_pairs_between plus the train×train pairs of
+    minhash_lsh_pairs, the contaminated ids, and dedup_keep over the clean
+    train docs."""
+    from etl_data_processor_spark.ops.dedup import minhash_lsh_pairs_between
+    from etl_data_processor_spark.ops.graph import decontaminate_dedup
+    from etl_data_processor_spark.queries_north import _lsh_index
+
+    if corpus == "fixture":
+        docs = Catalog(spark, sf_dir).documents
+        sh, bk = _lsh_index(spark, sf_dir)
+    else:
+        docs, sh, bk = _hand_index(spark)
+    is_bench = F.col("source").isin(_BENCH_SRCS)
+    train = docs.filter(~is_bench)
+    between = minhash_lsh_pairs_between(
+        train, docs.filter(is_bench), threshold=0.8,
+        shingled_left=sh.filter(~is_bench), shingled_right=sh.filter(is_bench),
+        buckets_left=bk.filter(~is_bench), buckets_right=bk.filter(is_bench),
+    ).collect()
+    within = minhash_lsh_pairs(
+        train, threshold=0.8,
+        shingled=sh.filter(~is_bench), buckets=bk.filter(~is_bench),
+    ).collect()
+    contaminated = {r["id_l"] for r in between}
+    clean = docs.filter(~is_bench & ~F.col("doc_id").isin(sorted(contaminated)))
+    clean_ids = clean.select("doc_id")
+    kept = dedup_keep(
+        clean, threshold=0.8,
+        shingled=sh.join(clean_ids, "doc_id", "left_semi"),
+        buckets=bk.join(clean_ids, "doc_id", "left_semi"),
+    )
+    kept_ids = {r["doc_id"] for r in kept.select("doc_id").collect()}
+
+    pairs, got_contaminated, got_kept = decontaminate_dedup(
+        docs, sh, bk, _BENCH_SRCS, threshold=0.8
+    )
+    assert {
+        (r["id_a"], r["id_b"], r["jaccard"]) for r in pairs.collect()
+    } == {
+        (min(r["id_l"], r["id_r"]), max(r["id_l"], r["id_r"]), r["jaccard"])
+        for r in between
+    } | {(r["id_a"], r["id_b"], r["jaccard"]) for r in within}
+    assert {r["doc_id"] for r in got_contaminated.collect()} == contaminated
+    assert {r["doc_id"] for r in got_kept.select("doc_id").collect()} == kept_ids
+    if corpus == "hand_built":
+        assert contaminated == {1, 4, 7}
+        assert kept_ids == {2, 5, 8, 9}
+
+
+def test_corpus_pipeline_caches_only_the_lsh_artifacts(spark, sf_dir):
+    """q_corpus_pipeline leaves no cached plan of its own behind: after
+    clearCache() and two runs, the CacheManager holds the session's two
+    LSH artifact frames and nothing else."""
+    import __spark_entry__ as entry
+    from etl_data_processor_spark.queries_north import _lsh_index
+
+    spark.catalog.clearCache()
+    for _ in range(2):
+        entry.queries()["q_corpus_pipeline"](spark, sf_dir).collect()
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    assert field.get(cm).size() == 2
+    assert all(f.storageLevel.useMemory for f in _lsh_index(spark, sf_dir))
