@@ -16,17 +16,9 @@ the same algorithm GraphFrames uses:
 - converges in O(log^2 n) rounds on any graph (near-dup graphs are
   star-like blobs and converge in 2-3), vs O(diameter) for naive label
   propagation, which degrades to O(n) rounds on chain-shaped graphs;
-- every round ends in ``localCheckpoint`` to truncate lineage — without it
-  the plan doubles per round and Catalyst analysis dominates. On a real
-  cluster swap in ``checkpoint()`` against the cluster checkpoint dir for
-  fault tolerance; the algorithm is unchanged.
-
-Convergence is detected by an (edge-count, xor-of-edge-hashes) signature:
-one cheap agg on the already-materialized round output, no set-difference
-join. bit_xor is order-independent and cannot overflow (sum would, under
-ANSI mode); the edge set is distinct, so a collision masking a real change
-needs two distinct edge SETS with equal count AND equal xxhash64 xor —
-probability ~2^-64 per round.
+- rounds run through ``ops.iterate.rounds`` (as PageRank, BFS and SSSP
+  below do) and stop when the edge set's ``state_hash``, observed by each
+  round's checkpoint job, repeats: no separate action, no set difference.
 
 Reference parity: the reference engine has no graph operator (main.py:1-422
 is a linear pipeline); this module is north-star scope (training-data
@@ -35,10 +27,11 @@ curation), composed over ops.dedup's pair generators.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from etl_data_processor_spark.ops import dedup as D
+from etl_data_processor_spark.ops import iterate as I
 
 
 def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -147,8 +140,8 @@ def connected_components(
     the minimum node id of the connected component. Nodes with no edges are
     not emitted — callers keep singletons via anti-join (see dedup_keep).
 
-    Two physical strategies behind one contract (the initial edge count —
-    already needed for convergence signatures — picks one, no extra job):
+    Two physical strategies behind one contract (the initial edge count,
+    observed by the edges' checkpoint job, picks one with no extra job):
 
     - ``n <= small_graph_edges``: single-task union-find (_cc_single_task).
       A tiny graph pays pure scheduling overhead in the star rounds (each
@@ -159,37 +152,13 @@ def connected_components(
     Set ``small_graph_edges=0`` to force the distributed path (tests pin
     both paths against each other).
     """
-    def sig_cols() -> list[Column]:
-        return [
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias("h"),
-        ]
-
-    def signature(df: DataFrame) -> tuple[int, int]:
-        # A round's signature. Under AQE the lazy localCheckpoint that
-        # made `df` already ran the round's upstream query stages inside
-        # that call; this action runs the final stage, which persists the
-        # checkpoint, and the signature agg over it: two jobs per round.
-        row = df.agg(*sig_cols()).collect()[0]
-        return (row["n"], row["h"])
-
-    # The initial signature rides on the checkpoint's own job: an
-    # Observation is filled by the action that runs its plan, so the
-    # eager checkpoint returns (n, h) with no second pass over the edges.
-    obs = Observation("cc_edges")
-    e = _canonical_edges(edges, src, dst).observe(obs, *sig_cols())
-    e = e.localCheckpoint(eager=True)
-    prev = (obs.get["n"], obs.get["h"])
+    sig = I.state_hash("u", "v")
+    e, prev = I.pin(_canonical_edges(edges, src, dst), sig)
     if prev[0] <= small_graph_edges:
         return _cc_single_task(e)
-    for _ in range(max_iter):
-        e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        cur = signature(e)
-        if cur == prev:
-            break
-        prev = cur
-    else:
-        raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+    e = I.rounds(
+        e, lambda e, _: _small_star(_large_star(e)), max_iter, sig, prev
+    )
 
     # Converged edge set is a forest of stars: (member, root) with root = min.
     labels = e.select(F.col("u").alias("node"), F.col("v").alias("component"))
@@ -319,89 +288,61 @@ def pagerank_exact(
     iters: int = 5,
     total_q: int = 1_000_000_000_000,
     damping_pct: int = 85,
-    validate: bool = False,
 ) -> DataFrame:
     """Power-iteration PageRank in EXACT integer arithmetic (micro-unit
-    ranks), so any engine derives bit-identical scores — the iterative-
-    algorithm pattern (like connected_components) but with per-iteration
-    numeric state instead of labels.
+    ranks), so any engine derives bit-identical scores — a fixed-round
+    ``ops.iterate.rounds`` loop with per-iteration numeric state instead
+    of connected_components' labels.
 
     ``edges`` is a directed (src, dst) edge list (pass both directions for
     an undirected graph). CONTRACT: every node must have out-degree ≥ 1 —
     the node set is derived from the src column, so dst-only (dangling)
     nodes are absent from the returned ranks and their mass is not
     redistributed. This holds by construction for symmetrized edge lists;
-    for a general directed graph pass ``validate=True`` to fail fast
-    instead of silently dropping danglers. Each
-    iteration: contribution = rank div out_degree (integer division —
-    deterministic, no float summation-order drift), one hash-shuffle
-    aggregate on dst, then rank' = (15%·init) + (85%·Σcontrib) in integer
-    div-by-100 arithmetic. At 100 TB each iteration is one shuffle of the
+    for a general directed graph, symmetrize the edge list or add
+    self-loops first. Each iteration: contribution = rank div out_degree
+    (integer division — deterministic, no float summation-order drift),
+    one hash-shuffle aggregate on dst, then rank' = (15%·init) +
+    (85%·Σcontrib) in integer div-by-100 arithmetic. At 100 TB each iteration is one shuffle of the
     edge list; ranks/degrees are node-sized — the loop's exchanges shrink
     to the node table after the first join. Rank mass uses a 1e12 base so
     int64 never overflows (Σcontrib ≤ total_q, ×85 ≈ 8.5e13 ≪ 2^63).
     """
-    # The edge list and degree table are the loop's working set: without
-    # pinning them, every iteration's plan re-derives them from source (the
-    # final plan would rescan the input 2×iters times — measured 3× slower
-    # at sf0.01). Same practice as connected_components' per-round persist.
-    edges = edges.cache()
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).cache()
-    n = deg.count()  # one tiny driver scalar; the iteration stays distributed
-    if validate:
-        dangling = (
-            edges.select(F.col("dst").alias("src"))
-            .distinct()
-            .join(deg, "src", "left_anti")
-            .count()
-        )
-        if dangling:
-            edges.unpersist()
-            deg.unpersist()
-            raise ValueError(
-                f"pagerank_exact: {dangling} dangling node(s) have in-edges "
-                "but out-degree 0; their rank would be silently dropped. "
-                "Symmetrize the edge list or add self-loops."
-            )
+    # The degree table and every round read the edge list: unpinned, the
+    # final plan rescans the input 2×iters times (3× slower at sf0.01). A
+    # checkpoint, not cache(), leaves nothing in the CacheManager. The
+    # node count is observed by the degree table's pin.
+    edges = edges.localCheckpoint(eager=False)
+    deg, (n,) = I.pin(
+        edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")),
+        [F.count(F.lit(1))],
+    )
     init_q = total_q // n
     base_q = (100 - damping_pct) * init_q // 100
+
     # State carries (src, deg, rank_q) so the contribution join is ONE
     # broadcast join against the edge list: the edge list (the 100 TB-scale
     # object) never shuffles — only the node-sized Σcontrib aggregate does.
-    # One shuffle per iteration, the Pregel cost floor.
-    state = deg.select("src", "deg", F.lit(init_q).alias("rank_q"))
-    for _ in range(iters):
+    # One shuffle per iteration, the Pregel cost floor. At node counts
+    # beyond broadcast range, drop the hints: the joins fall back to hash
+    # shuffles and the algorithm is unchanged.
+    def step(state: DataFrame, _: int) -> DataFrame:
         contrib = edges.join(F.broadcast(state), "src").select(
             F.col("dst").alias("src"),
             F.expr("rank_q div deg").alias("c"),
         )
         summed = contrib.groupBy("src").agg(F.sum("c").alias("s"))
-        state = (
-            deg.join(F.broadcast(summed), "src", "left")
-            .select(
-                "src",
-                "deg",
-                (
-                    F.lit(base_q)
-                    + F.expr(f"coalesce(s, 0) * {damping_pct} div 100")
-                ).alias("rank_q"),
-            )
-            # truncate lineage each round (lazy: materializes on the next
-            # round's first job) — otherwise the final plan nests all
-            # iterations and analysis/AQE cost grows superlinearly with
-            # iters. Same pattern as connected_components. At node counts
-            # beyond broadcast range, drop the hints: the joins fall back
-            # to hash shuffles and the algorithm is unchanged.
-            .localCheckpoint(eager=False)
+        return deg.join(F.broadcast(summed), "src", "left").select(
+            "src",
+            "deg",
+            (
+                F.lit(base_q)
+                + F.expr(f"coalesce(s, 0) * {damping_pct} div 100")
+            ).alias("rank_q"),
         )
-    # Materialize the final state BEFORE dropping the loop's working set —
-    # an eager checkpoint cuts the result free of the edges/deg lineage, so
-    # unpersisting them cannot trigger a recompute-from-source later. Without
-    # the unpersist, repeated calls leak executor storage (ADVICE r1).
-    result = state.select("src", "rank_q").localCheckpoint(eager=True)
-    edges.unpersist()
-    deg.unpersist()
-    return result
+
+    state = deg.select("src", "deg", F.lit(init_q).alias("rank_q"))
+    return I.rounds(state, step, iters).select("src", "rank_q")
 
 
 def dedup_keep_best(
@@ -438,13 +379,14 @@ def dedup_keep_best(
 
 
 def _by_src(edges: DataFrame) -> DataFrame:
-    """Hash-partition ``edges`` by src at the session's shuffle width. The
-    explicit count matters: the session lets AQE coalesce a cached plan's
-    final shuffle, and a coalesced ``repartition("src")`` no longer
-    matches the join's required distribution, so every round would
-    re-shuffle the edge list. AQE leaves a numbered repartition alone."""
+    """``edges`` hash-partitioned by src at the session's shuffle width and
+    cached, for loops whose every round joins it on src. The explicit count
+    matters: the session lets AQE coalesce a cached plan's final shuffle,
+    and a coalesced ``repartition("src")`` no longer matches the join's
+    required distribution. AQE leaves a numbered repartition alone; a local
+    checkpoint drops the partitioning (two exchanges per join, not one)."""
     n = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    return edges.repartition(n, "src")
+    return edges.repartition(n, "src").cache()
 
 
 def bfs_hops(
@@ -456,44 +398,33 @@ def bfs_hops(
     ``seeds`` is a one-column (node) frame; returns (node, dist) for every
     node within ``max_hops`` of a seed, dist = 0 for the seeds themselves.
 
-    FRONTIER-based expansion: each round joins only the newly-discovered
-    nodes against the edge list (not the accumulated set), so round cost is
-    O(edges incident to the frontier) — the textbook Pregel BFS. The edge
-    list is repartitioned by src ONCE and cached: every round's join reuses
-    that layout, so only the (node-bounded) frontier side shuffles. The
-    width is pinned (:func:`_by_src`) so AQE cannot coalesce the cache.
-    Early-stops when a round discovers nothing (one count per round — a
-    scalar job on the already-checkpointed frontier, same convergence
-    pattern as connected_components). Equivalent to ``max_hops`` rounds of
+    FRONTIER-based expansion: the state is the distance table, and round h
+    joins only its frontier (the nodes at dist h-1) against the edge list,
+    so round cost is O(edges incident to the frontier) — the textbook
+    Pregel BFS. The edge list is partitioned by src once and cached
+    (:func:`_by_src`), so only the (node-bounded) frontier side shuffles.
+    Once the reachable set is exhausted a round's frontier is empty and
+    the round adds nothing. Equivalent to ``max_hops`` rounds of
     Bellman-Ford relaxation — the oracle unrolls exactly that recurrence.
     """
-    edges = _by_src(edges.select("src", "dst")).cache()
-    dist = (
-        seeds.select(F.col("node"), F.lit(0).alias("dist"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    frontier = dist.select("node")
-    for h in range(1, max_hops + 1):
+    edges = _by_src(edges.select("src", "dst"))
+
+    def step(dist: DataFrame, i: int) -> DataFrame:
+        frontier = dist.filter(F.col("dist") == i).select(
+            F.col("node").alias("src")
+        )
         reached = (
-            edges.join(
-                frontier.withColumnRenamed("node", "src"), "src"
-            )
+            edges.join(frontier, "src")
             .select(F.col("dst").alias("node"))
             .distinct()
         )
-        new = (
-            reached.join(dist.select("node"), "node", "left_anti")
-            .select("node", F.lit(h).alias("dist"))
-            .localCheckpoint(eager=False)
+        new = reached.join(dist.select("node"), "node", "left_anti").select(
+            "node", F.lit(i + 1).alias("dist")
         )
-        if new.isEmpty():
-            break
-        dist = dist.unionByName(new).localCheckpoint(eager=False)
-        frontier = new.select("node")
-    result = dist.localCheckpoint(eager=True)
-    edges.unpersist()
-    return result
+        return dist.unionByName(new)
+
+    dist = seeds.select(F.col("node"), F.lit(0).alias("dist")).distinct()
+    return I.rounds(dist, step, max_hops, working=(edges,))
 
 
 def sssp_bounded(
@@ -509,25 +440,22 @@ def sssp_bounded(
     per round against the src-partitioned cached edge list. Integer
     costs ⇒ engine-exact; the oracle unrolls the identical recurrence.
     Returns (node, dist)."""
-    edges = _by_src(edges.select("src", "dst", "w")).cache()
-    dist = (
-        seeds.select(F.col("node"), F.lit(0).cast("long").alias("dist"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(rounds):
+    edges = _by_src(edges.select("src", "dst", "w"))
+
+    def step(dist: DataFrame, _: int) -> DataFrame:
         cand = edges.join(
             dist.withColumnRenamed("node", "src"), "src"
         ).select(
             F.col("dst").alias("node"),
             (F.col("dist") + F.col("w")).alias("dist"),
         )
-        dist = (
+        return (
             dist.unionByName(cand)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
         )
-    result = dist.localCheckpoint(eager=True)
-    edges.unpersist()
-    return result
+
+    dist = seeds.select(
+        F.col("node"), F.lit(0).cast("long").alias("dist")
+    ).distinct()
+    return I.rounds(dist, step, rounds, working=(edges,))

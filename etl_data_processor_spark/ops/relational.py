@@ -197,25 +197,3 @@ def partial_then_final_agg(
     return partial.groupBy(key).agg(
         F.sum("__n").alias("n"), F.sum("__s").alias(f"sum_{value}")
     )
-
-
-# ---------------------------------------------------------------- observability
-
-def with_observation(df: DataFrame, name: str = "metrics"):
-    """A21 (main.py:353-355): pipeline observability without extra actions.
-    Attaches an Observation collecting row count + null count; metrics are
-    available after the FIRST action on the returned df — at 100 TB this is
-    free (piggybacks the job) vs a second full `count()` pass.
-
-    Returns (df, observation); read ``observation.get`` after an action.
-    """
-    from pyspark.sql import Observation
-
-    obs = Observation(name)
-    first_col = df.columns[0]
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.when(F.col(first_col).isNull(), 1).otherwise(0)).alias("n_null_first_col"),
-    )
-    return observed, obs

@@ -41,6 +41,7 @@ from pyspark.sql.types import (
 )
 
 from etl_data_processor_spark.registry import q, cat as _cat
+from etl_data_processor_spark.ops import iterate
 from etl_data_processor_spark.ops.dedup import exact_jaccard, word_shingles
 from etl_data_processor_spark.ops.sampling import hash32_sql
 from etl_data_processor_spark.ops.similarity import stable_round6
@@ -800,7 +801,9 @@ def _pointer_double_closure(nodes, base: int = 8):
     k < base) by pointer doubling over an arbitrary node SET (ids may be
     non-contiguous: a LEFT join with an arithmetic single-step fallback
     handles ancestors that are not themselves tracked nodes — an inner
-    join would silently drop those chains)."""
+    join would silently drop those chains). Rounds run through
+    ``ops.iterate.rounds`` until the state hash stops changing: a resolved
+    state (every anc a root) maps to itself."""
     state = nodes.select(
         "node",
         F.when(F.col("node") < base, F.col("node"))
@@ -810,31 +813,30 @@ def _pointer_double_closure(nodes, base: int = 8):
         .otherwise(F.lit(1))
         .cast("int")
         .alias("dist"),
-    ).localCheckpoint()
+    )
     arith_anc = F.when(F.col("anc") < base, F.col("anc")).otherwise(
         F.expr(f"anc div {base}")
     )
     arith_d = F.when(F.col("anc") < base, F.lit(0)).otherwise(F.lit(1))
-    for _ in range(40):  # 2^40 depth bound — convergence breaks far earlier
+
+    def step(state, _):
         amap = state.select(
             F.col("node").alias("anc"),
             F.col("anc").alias("anc2"),
             F.col("dist").alias("d2"),
         )
-        state = (
-            state.join(amap, "anc", "left")
-            .select(
-                "node",
-                F.coalesce(F.col("anc2"), arith_anc).alias("anc"),
-                (F.col("dist") + F.coalesce(F.col("d2"), arith_d))
-                .cast("int")
-                .alias("dist"),
-            )
-            .localCheckpoint()
+        return state.join(amap, "anc", "left").select(
+            "node",
+            F.coalesce(F.col("anc2"), arith_anc).alias("anc"),
+            (F.col("dist") + F.coalesce(F.col("d2"), arith_d))
+            .cast("int")
+            .alias("dist"),
         )
-        if state.filter(F.col("anc") >= base).count() == 0:
-            break
-    return state
+
+    # 2^40 depth bound — a fixed point comes far earlier
+    return iterate.rounds(
+        state, step, 40, signature=iterate.state_hash("node", "anc", "dist")
+    )
 
 
 @q(
@@ -859,11 +861,11 @@ def q_hierarchy_closure(spark, sf_dir):
     the round count stays single digits for any realistic hierarchy.
     Untracked ancestors (non-contiguous key spaces) take an arithmetic
     single step instead of being dropped (gap-pinned by test).
-    localCheckpoint truncates the per-round lineage (same pattern as
-    ops/graph.py connected components); the per-round scalar count is the
-    standard convergence action. Oracle = DuckDB recursive CTE, i.e. the
-    per-level definition — the gate proves doubling computes the same
-    closure."""
+    Rounds run through ops.iterate.rounds, like ops/graph.py's connected
+    components: the state hash observed by each round's checkpoint job
+    detects the fixed point, with no separate action. Oracle = DuckDB
+    recursive CTE, i.e. the per-level definition — the gate proves
+    doubling computes the same closure."""
     p = _cat(spark, sf_dir).part.select(F.col("p_partkey").alias("node"))
     state = _pointer_double_closure(p, base=8)
     return state.select(

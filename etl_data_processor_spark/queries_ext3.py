@@ -184,7 +184,7 @@ def q_graph_bfs(spark, sf_dir):
     min hop distance (≤3) from the seed customers (custkey%97==0) to
     every reachable node. Frontier-only expansion (each round joins just
     the newly discovered nodes against the src-partitioned cached edge
-    list), early-stop on an empty frontier; the oracle unrolls the
+    list), three rounds of ops.iterate.rounds; the oracle unrolls the
     equivalent Bellman-Ford recurrence with node-bounded levels."""
     from etl_data_processor_spark.ops.graph import bfs_hops
 

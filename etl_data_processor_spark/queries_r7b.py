@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from etl_data_processor_spark.ops import iterate
 from etl_data_processor_spark.ops import similarity as SIM
 from etl_data_processor_spark.registry import cat as _cat
 from etl_data_processor_spark.registry import q
@@ -1075,11 +1076,11 @@ def q_label_propagation(spark, sf_dir):
     ).unionByName(
         pairs.select(F.col("key_b").alias("src"), F.col("key_a").alias("dst"))
     )
-    edges = edges.cache()  # consumed once per round
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("lbl")
-    )
-    for _ in range(_LPA_ROUNDS):
+    # read by every round and released by the loop; a cache, since behind
+    # a checkpoint each round's join would shuffle the edge list again
+    edges = edges.cache()
+
+    def step(labels, _):
         counted = (
             edges.join(
                 labels.select(F.col("node").alias("src"), "lbl"), "src"
@@ -1087,11 +1088,16 @@ def q_label_propagation(spark, sf_dir):
             .groupBy(F.col("dst").alias("node"), "lbl")
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
-        labels = counted.groupBy("node").agg(
+        return counted.groupBy("node").agg(
             F.min(F.struct((-F.col("cnt")).alias("nc"), F.col("lbl"))).alias(
                 "__b"
             )
         ).select("node", F.col("__b.lbl").alias("lbl"))
+
+    labels = edges.select(F.col("src").alias("node")).distinct().select(
+        "node", F.col("node").alias("lbl")
+    )
+    labels = iterate.rounds(labels, step, _LPA_ROUNDS, working=(edges,))
     return labels.groupBy(F.col("lbl").alias("community")).agg(
         F.count(F.lit(1)).alias("n_members")
     )

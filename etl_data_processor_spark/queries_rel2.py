@@ -486,8 +486,8 @@ def q_paged_source(spark, sf_dir):
 )
 def q_count(spark, sf_dir):
     """A21 (main.py:353-355): observability counts — per-type event counts
-    (the global-count form is q_scan; observation piggybacking is
-    relational.with_observation)."""
+    (the global-count form is q_scan; an Observation filled by the job
+    that already runs, with no second pass, is ops.iterate.pin)."""
     return (
         _cat(spark, sf_dir)
         .events.groupBy("event_type")

@@ -1,5 +1,6 @@
-"""Tests for observability (A21), the CLI scaffold (A20), and the token
-bucket (A19)."""
+"""Tests for the CLI scaffold (A20) and the token bucket (A19). An
+Observation filled by the action that runs its plan (A21) is covered by
+tests/test_iterate.py."""
 
 from __future__ import annotations
 
@@ -12,18 +13,7 @@ import subprocess
 import sys
 import time
 
-from etl_data_processor_spark.io import Catalog
 from etl_data_processor_spark.ops.enrich import TokenBucket
-from etl_data_processor_spark.ops.relational import with_observation
-
-
-def test_observation_piggybacks_action(spark, sf_dir):
-    df = Catalog(spark, sf_dir).orders
-    observed, obs = with_observation(df)
-    assert observed.count() == 1500  # the action
-    metrics = obs.get
-    assert metrics["n_rows"] == 1500
-    assert metrics["n_null_first_col"] == 0
 
 
 def test_token_bucket_enforces_rate():

@@ -783,9 +783,10 @@ def test_graph_edge_cache_keeps_src_partitioning(spark):
     """bfs_hops / sssp_bounded join their cached edge list on src every
     round. The session lets AQE coalesce a cached ``repartition("src")``,
     after which the cache no longer satisfies the join and each round
-    re-shuffles the edges; ``ops.graph._by_src`` pins the width, so only
-    the (small) frontier side shuffles. Broadcast is off here, as it is
-    for edge lists too large to broadcast."""
+    re-shuffles the edges; ``ops.graph._by_src``, which both call to
+    build that cache, pins the width, so only the (small) frontier side
+    shuffles. Broadcast is off here, as it is for edge lists too large to
+    broadcast."""
     from etl_data_processor_spark.ops.graph import _by_src
 
     key = "spark.sql.autoBroadcastJoinThreshold"
@@ -796,7 +797,7 @@ def test_graph_edge_cache_keeps_src_partitioning(spark):
             spark.range(200).select(
                 F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
             )
-        ).cache()
+        )
         edges.count()
         front = spark.range(0, 200, 7).select(F.col("id").alias("src"))
         joined = edges.join(front, "src")
