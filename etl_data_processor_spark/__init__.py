@@ -6,14 +6,13 @@ surveyed in SURVEY.md), generalized into a tested operator library:
 
 - ``session``     — SparkSession factory tuned for scale (AQE, Arrow, broadcast,
                     INT64 timestamp writes, LTZ parquet reads).
-- ``io``          — batch sources/sinks (parquet/csv/json) + table catalog +
-                    ``write_clustered`` (range-clustered layout for row-group skipping).
+- ``io``          — parquet table catalog + CSV sink + Morton z-order value.
 - ``ops.scalar``  — pure Column-expression functions (classify, dates, regex,
                     string/math/null handling) mirroring reference semantics.
 - ``ops.relational`` — joins, aggregates, windows, set ops, sort/top-k, dedup,
                     salted skew joins.
-- ``ops.arrays``  — array/map/JSON functions and vector math.
-- ``ops.text``    — text analysis: tokenization, language-ID, quality,
+- ``ops.arrays``  — literal-map lookup.
+- ``ops.text``    — text analysis: tokenization, quality,
                     fingerprints, PII scrubbing, context-window chunking,
                     fuzzy key matching.
 - ``ops.dedup``   — exact + MinHash-LSH + SimHash + n-gram-Jaccard near-dup,

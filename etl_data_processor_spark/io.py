@@ -1,9 +1,9 @@
 """Batch sources and sinks + a tiny table catalog over a fixture directory.
 
 The reference reads HTML pages and writes one CSV (SURVEY.md A1, A17,
-main.py:44-61, 329-331). The engine generalizes to the standard columnar
-formats; parquet is the primary format because scans get predicate pushdown,
-column pruning, and min/max row-group skipping for free.
+main.py:44-61, 329-331). The engine reads parquet, because scans get
+predicate pushdown, column pruning, and min/max row-group skipping for free,
+and writes the reference's CSV.
 
 At 100 TB the scan IS the query cost: every reader here goes through
 ``spark.read`` so Catalyst can prune columns and push filters into the
@@ -35,10 +35,6 @@ TABLES = (
 BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def normalize_ntz(df: DataFrame) -> DataFrame:
     """Rebase every TIMESTAMP_NTZ column to TIMESTAMP (LTZ) preserving the
     naive wall time as UTC, independent of the session timezone.
@@ -62,90 +58,6 @@ def normalize_ntz(df: DataFrame) -> DataFrame:
     return df
 
 
-def read_csv(spark: SparkSession, path: str, schema=None, **options) -> DataFrame:
-    """CSV source; permissive by default (reference skips malformed records
-    rather than failing the run — main.py:98-103)."""
-    opts = {"header": "true", "mode": "PERMISSIVE", **options}
-    reader = spark.read.options(**opts)
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", "true")
-    return reader.csv(path)
-
-
-def read_json(spark: SparkSession, path: str, schema=None, **options) -> DataFrame:
-    opts = {"mode": "PERMISSIVE", **options}
-    reader = spark.read.options(**opts)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
-
-
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-
-
-def overwrite_partitions(
-    df: DataFrame, path: str, partition_by: list[str]
-) -> None:
-    """Dynamic partition overwrite: replace ONLY the partitions present in
-    ``df``, leave every other partition untouched — the idempotent-backfill
-    primitive (re-running a day's job rewrites that day, never truncates
-    the table, unlike mode='overwrite' whose static form drops ALL
-    partitions). Scoped via the writer option, not a session conf, so
-    concurrent writers with different semantics don't race on global
-    state. At 100 TB this is how incremental daily builds stay
-    re-runnable."""
-    (
-        df.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(*partition_by)
-        .parquet(path)
-    )
-
-
-def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:
-    """Schema-evolution read: union the footer schemas of every file under
-    ``path`` (``mergeSchema``) so late-added columns surface as nulls on
-    old files instead of being silently dropped (Spark's default reads the
-    schema of ONE footer). Worth its one-time footer-listing cost only on
-    evolving tables — static tables should keep the default single-footer
-    read."""
-    return normalize_ntz(
-        spark.read.option("mergeSchema", "true").parquet(path)
-    )
-
-
-def write_clustered(
-    df: DataFrame,
-    path: str,
-    by: list[str],
-    n_files: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Range-cluster rows across files and sort within each (poor-man's
-    Z-order for a single key): ``repartitionByRange`` gives each output file
-    a narrow, near-disjoint key range and the within-file sort tightens
-    every parquet row group's min/max stats. A later filtered scan then
-    skips whole files/row groups instead of reading everything — at 100 TB
-    this turns a time- or key-range query from a full-corpus scan into a
-    touch of the few files that can match. The range exchange samples the
-    key distribution, so skew produces balanced files without manual
-    boundaries. (Multi-key locality beyond the leading key needs a
-    space-filling curve — see ``zorder_value``/``write_zordered``; the
-    leading-key case is the common time-series/event layout.)"""
-    (
-        df.repartitionByRange(n_files, *[F.col(c) for c in by])
-        .sortWithinPartitions(*by)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
 ZORDER_BITS = 16
 
 
@@ -154,8 +66,8 @@ def zorder_value(x: Column, y: Column, bits: int = ZORDER_BITS) -> Column:
     of x lands at position 2b, bit b of y at 2b+1. Rows sorted by this value
     follow a space-filling curve, so ANY rectangle in (x, y) space touches
     O(perimeter) curve segments — a parquet layout sorted by z-value gives
-    BOTH keys row-group min/max locality, where write_clustered gives it
-    only to the leading key.
+    BOTH keys row-group min/max locality, where a sort on one key gives it
+    only to that key.
 
     Pure 64-bit Column arithmetic (shift/mask/add unrolled per bit — no UDF,
     no Python), and engine-portable: :func:`zorder_value_sql` emits the
@@ -185,31 +97,6 @@ def zorder_value_sql(x: str, y: str, bits: int = ZORDER_BITS) -> str:
         terms.append(f"(((({x})::BIGINT >> {b}) & 1) << {2 * b})")
         terms.append(f"(((({y})::BIGINT >> {b}) & 1) << {2 * b + 1})")
     return "(" + " + ".join(terms) + ")"
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    x: Column,
-    y: Column,
-    n_files: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Two-key locality layout: range-partition and sort by the Morton
-    z-value of (x, y), then drop the helper column. Filtered scans on
-    EITHER key (or both) skip files/row groups whose min/max z-range cannot
-    intersect the predicate's z-ranges — the Delta OPTIMIZE ZORDER BY idea
-    in plain parquet. Same shuffle budget as write_clustered (one range
-    exchange); the curve only changes the sort key."""
-    z = zorder_value(x, y)
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )
 
 
 def write_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -297,55 +184,6 @@ class Catalog:
         """Register every fixture table as a temp view for spark.sql()."""
         for name in TABLES:
             self.table(name).createOrReplaceTempView(name)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    n_buckets: int = 32,
-    sort_col: str | None = None,
-) -> None:
-    """Persist ``df`` as a BUCKETED managed table: one up-front shuffle on
-    ``bucket_col``, after which every equi-join/aggregate on that key over
-    this table plans ZERO exchanges (co-partitioned reads; with
-    ``sort_col`` also pre-sorted buckets — SortMergeJoin skips its sort).
-    The 100 TB pattern for recurring fact-to-fact joins: daily builds and
-    CDC reconciliation amortize the write shuffle across every read
-    (measured: 6 exchanges -> 2 and 0 fact exchanges on the TPC-H Q18
-    shape, scripts/bucket_probe.py / SCALE.md). Spark bucketing requires
-    the table catalog (saveAsTable), not a bare path."""
-    w = df.write.mode("overwrite").format("parquet")
-    if sort_col is not None:
-        w = w.bucketBy(n_buckets, bucket_col).sortBy(sort_col)
-    else:
-        w = w.bucketBy(n_buckets, bucket_col)
-    w.saveAsTable(table_name)
-
-
-def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
-    """Read a bucketed table back (catalog read — the bucket spec travels
-    with the table metadata, so downstream joins see the layout)."""
-    return spark.table(table_name)
-
-
-def write_orc(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """ORC sink (columnar alternative to parquet — Spark-native, same
-    predicate-pushdown/column-pruning story; some warehouses are
-    ORC-standardized). Same partitioning contract as write_parquet."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.orc(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
 
 
 def ensure_bucketed_join_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:

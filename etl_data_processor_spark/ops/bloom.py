@@ -19,9 +19,9 @@ the plain join; false positives only cost wasted shuffle rows.
 Scale shape: the filter is built DISTRIBUTED — keys explode to k bit
 positions, positions fold to 64-bit words via a bit_or hash aggregate,
 and the driver collects at most m/64 words (the filter size, NOT the key
-count). The big side's test is k array-lookups + bit-tests inside the
-scan stage's codegen; the words ship as a literal array (for huge m,
-swap the literal for a broadcast variable + pandas UDF — same contract).
+count). The big side's test is k array-lookups + bit-tests per row in
+one Arrow-batched numpy pass, filtered before the join; the words ship
+in the UDF closure.
 
 Reference parity: none (main.py:1-422 has no joins at scale); north-star
 scope (SURVEY.md §2 join-family extension).
@@ -84,43 +84,18 @@ def build_bloom(
     return words
 
 
-def might_contain(
-    key: Column, words: list[int], m_bits: int, k: int = 5, seed: int = 0
-) -> Column:
-    """Membership test Column: TRUE for every inserted key (no false
-    negatives), false-positive rate ~(1-e^{-kn/m})^k. Pure JVM
-    expressions — evaluated inside whole-stage codegen at the scan.
-
-    The word table is ONE array literal (F.lit on the list), not an
-    F.array of m/64 literal nodes — the expanded tree blows past the
-    codegen size limits and falls back to interpreted evaluation
-    (measured ~3 µs/row, 37 s over a 12M-row fact; the single-literal
-    form runs at scan speed)."""
-    arr = F.lit(words).cast("array<long>")
-    tests = []
-    for p in _positions(key, m_bits, k, seed):
-        word = F.element_at(arr, (p / 64).cast("int") + 1)
-        bit = F.call_function(
-            "shiftrightunsigned", word, (p % 64).cast("int")
-        ).bitwiseAND(F.lit(1))
-        tests.append(bit == F.lit(1))
-    cond = tests[0]
-    for t in tests[1:]:
-        cond = cond & t
-    return cond
-
-
 def might_contain_batch(
     words: list[int], m_bits: int, k: int = 5, seed: int = 0
 ):
-    """Arrow-vectorized membership test (pandas UDF) — bit-identical to
-    :func:`might_contain` but evaluated as numpy batch ops.
+    """Membership test as an Arrow-vectorized pandas UDF: TRUE for every
+    inserted key (no false negatives), false-positive rate
+    ~(1-e^{-kn/m})^k.
 
-    Why it exists: the expression form drops out of whole-stage codegen
-    (measured: the k-probe AND chain evaluates interpreted at ~3 µs/row
-    — 35 s over a 12M-row fact, vs ~0.5 s here). Same trade as
-    ops/similarity's lsh_signatures_batch: the literal-heavy expression
-    path is exact but slow at fact scale; the numpy path computes the
+    Numpy batch ops rather than expressions: the k-probe AND chain of
+    array lookups and bit-tests (``might_contain`` in tests/reference.py)
+    drops out of whole-stage codegen and evaluates interpreted (measured
+    ~3 µs/row — 35 s over a 12M-row fact, vs ~0.5 s here). Same trade as
+    ops/similarity's lsh_signatures_batch: the numpy path computes the
     identical integer mixer (numpy int64 mod/multiply/shift replicate
     hash32's pmod semantics exactly — parity pinned by test)."""
     import numpy as np
@@ -168,7 +143,6 @@ def bloom_pruned_join(
     k: int = 5,
     seed: int = 0,
     how: str = "inner",
-    arrow: bool = True,
 ) -> DataFrame:
     """fact ⋈ dim with the fact side bloom-pruned on the dim's key set
     first. Result == plain join (no false negatives); the win is that
@@ -188,14 +162,6 @@ def bloom_pruned_join(
             "result of outer/anti joins"
         )
     words = build_bloom(dim.select(dim_key), dim_key, m_bits, k, seed)
-    if arrow:
-        # Arrow-batched membership (default): the expression form falls
-        # out of codegen at >=2 probes and evaluates interpreted —
-        # ~70x slower on a wide fact (see might_contain_batch)
-        pred = might_contain_batch(words, m_bits, k, seed)(
-            F.col(fact_key)
-        )
-    else:
-        pred = might_contain(F.col(fact_key), words, m_bits, k, seed)
+    pred = might_contain_batch(words, m_bits, k, seed)(F.col(fact_key))
     pruned = fact.filter(pred)
     return pruned.join(dim, pruned[fact_key] == dim[dim_key], how)

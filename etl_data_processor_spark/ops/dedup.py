@@ -613,26 +613,10 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     )
 
 
-def _word_shingles_expr(text: Column, k: int = 3) -> Column:
-    """Distinct word k-gram shingles as array<string> (pure expressions:
-    split + transform over indices + array_distinct). Kept as the
-    reference implementation for the r11 Arrow fast path's equivalence
-    differential (tests/test_r11_ops.py); query paths use
-    :func:`word_shingles`."""
-    words = F.split(F.trim(text), r"\s+")
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    shingle_at = lambda i: F.concat_ws(  # noqa: E731
-        " ", *[F.element_at(words, (i + j + 1).cast("int")) for j in range(k)]
-    )
-    return F.when(
-        n >= k, F.array_distinct(F.transform(idx, shingle_at))
-    ).otherwise(F.array(F.concat_ws(" ", words)))
-
-
 def _word_shingles_fn(texts, k: int):
     """Per-doc distinct word k-gram shingles, one vectorized pass per
-    Arrow batch — the exact values of :func:`_word_shingles_expr`:
+    Arrow batch — the exact values of the expression form in
+    tests/reference.py (split + array_distinct over k-gram concat_ws):
     ``str.split()`` == split(trim, \\s+) on this corpus (the proven
     pair_clip_gram_counts equivalence), ``dict.fromkeys`` == the
     first-occurrence order of array_distinct, and the < k-word branch
@@ -671,8 +655,8 @@ def word_shingles(text: Column, k: int = 3) -> Column:
 
     r11 (guide §4.2): the construction runs as a vectorized Arrow pass
     (:func:`_word_shingles_fn`) — the expression form
-    (:func:`_word_shingles_expr`, interpreted per gram: element_at x k,
-    concat_ws, array_distinct) dominated every shingle consumer's scan
+    (interpreted per gram: element_at x k, concat_ws, array_distinct; kept
+    in tests/reference.py) dominated every shingle consumer's scan
     stage (~2.5-7.5 executor-cpu-s per pass at sf0.1). Values are
     bit-identical (differential-pinned in tests), so every downstream —
     prefix sort, exact-Jaccard verify, minhash — is unchanged."""
@@ -728,26 +712,6 @@ def _affine_params(n: int, p: int, seed: int = 1234567) -> list[tuple[int, int]]
         b = state % p
         out.append((a, b))
     return out
-
-
-def _minhash_sigs_expr(hashes: Column, params: list[tuple[int, int]], p: int) -> Column:
-    """MinHash signature array from a base-hash array: per (a, b) param,
-    array_min((a·h + b) mod p). One nested higher-order expression — plan
-    size independent of the number of hashes, no shuffle, no explode.
-    Kept as the reference implementation for the r11 Arrow fast path's
-    equivalence differential; query paths use :func:`_minhash_sigs_col`."""
-    param_arr = F.array(
-        *[F.struct(F.lit(a).alias("a"), F.lit(b).alias("b")) for a, b in params]
-    )
-    return F.transform(
-        param_arr,
-        lambda pr: F.array_min(
-            F.transform(
-                hashes,
-                lambda h: (pr.getField("a") * h + pr.getField("b")) % F.lit(p),
-            )
-        ),
-    )
 
 
 def _flatten(arrays):
@@ -811,8 +775,8 @@ def _majority_sigs(flat, lens, nbits: int):
 def _minhash_sigs_fn(hash_arrays, params: list, p: int):
     """MinHash signatures from per-doc base-hash arrays, one vectorized
     numpy pass per Arrow batch (r11, guide §4.2) — the exact integers of
-    :func:`_minhash_sigs_expr`: base hashes are < 2^31 (masked xxhash64)
-    and a < 2^31, so a*h + b < 2^62 stays exact in int64; mod p and the
+    the nested higher-order expression form (tests/reference.py): base
+    hashes are < 2^31 (masked xxhash64) and a < 2^31, so a*h + b < 2^62 stays exact in int64; mod p and the
     per-doc min are the same arithmetic the interpreted per-(param,
     hash) HOF chain evaluated one element at a time, reduced by
     :func:`_segment_reduce` in <=2^17-hash chunks (~32 MB peak per param
@@ -847,29 +811,6 @@ def _minhash_sigs_col(hashes: Column, params: list[tuple[int, int]], p: int) -> 
     doc — moved to one vectorized Arrow pass; values bit-identical,
     differential-pinned in tests)."""
     return _minhash_sigs_udf(tuple(params), p)(hashes)
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    num_hashes: int = 32,
-) -> DataFrame:
-    """(id, sigs: array<long>) MinHash signatures — a NARROW plan (no
-    aggregate, no exchange beyond the explicit parallelism repartition), so
-    at 100 TB signature computation is embarrassingly parallel and the only
-    shuffle in a dedup pipeline is the band-bucket join."""
-    p = (1 << 31) - 1
-    params = _affine_params(num_hashes, p)
-    sh = with_shingles(_parallelize(df.select(id_col, text_col)), text_col, k)
-    hashed = sh.withColumn(
-        "__h",
-        F.transform(
-            F.col("shingles"), lambda s: F.xxhash64(s).bitwiseAND(F.lit(0x7FFFFFFF))
-        ),
-    )
-    return hashed.select(id_col, _minhash_sigs_col(F.col("__h"), params, p).alias("sigs"))
 
 
 def _band_buckets(
@@ -1351,71 +1292,6 @@ def prefix_filter_jaccard_pairs(
     )
 
 
-def minhash_lsh_pairs_between(
-    left: DataFrame,
-    right: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-    threshold: float = 0.8,
-    shingled_left: DataFrame | None = None,
-    shingled_right: DataFrame | None = None,
-    buckets_left: DataFrame | None = None,
-    buckets_right: DataFrame | None = None,
-) -> DataFrame:
-    """Bipartite MinHash-LSH near-dup pairs ACROSS two corpora — the
-    cross-table form of ``minhash_lsh_pairs`` (same signatures, same band
-    scheme, same exact-Jaccard verification), returning
-    (id_l, id_r, jaccard) with id_l from ``left`` and id_r from ``right``.
-
-    The primary use is train-vs-benchmark decontamination: neither corpus
-    is self-joined, so cost is |left ∩ right bucket collisions|, not either
-    table's quadratic. Both sides MUST use the same hash params — they do,
-    because ``_affine_params`` is seed-deterministic. ``buckets_left`` /
-    ``buckets_right`` accept precomputed :func:`minhash_band_buckets`
-    slices (keyed by ``id_col``) so a pipeline pays the signature pass
-    once."""
-
-    def prep(
-        df: DataFrame,
-        alias: str,
-        pre: DataFrame | None,
-        bk: DataFrame | None,
-    ) -> tuple[DataFrame, DataFrame]:
-        if pre is not None:
-            sh = pre.select(F.col(id_col).alias(alias), "shingles")
-        else:
-            sh = with_shingles(
-                _parallelize(df.select(id_col, text_col)), text_col, k
-            ).select(F.col(id_col).alias(alias), "shingles")
-            sh.cache()
-        if bk is None:
-            bk = minhash_band_buckets(
-                sh.select(F.col(alias).alias(id_col), "shingles"),
-                id_col,
-                num_hashes,
-                bands,
-            )
-        return sh, bk.select(
-            F.col(id_col).alias(alias), "band", "sig"
-        )
-
-    sh_l, bk_l = prep(left, "id_l", shingled_left, buckets_left)
-    sh_r, bk_r = prep(right, "id_r", shingled_right, buckets_right)
-    candidates = (
-        bk_l.join(bk_r, ["band", "sig"]).select("id_l", "id_r").distinct()
-    )
-    return (
-        candidates.join(sh_l.select("id_l", F.col("shingles").alias("sh_l")), "id_l")
-        .join(sh_r.select("id_r", F.col("shingles").alias("sh_r")), "id_r")
-        .withColumn("jaccard", F.round(exact_jaccard(F.col("sh_l"), F.col("sh_r")), 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_l", "id_r", "jaccard")
-    )
-
-
 def lsh_verified_pairs(
     buckets_a: DataFrame,
     buckets_b: DataFrame,
@@ -1471,27 +1347,6 @@ def lsh_verified_pairs(
             "jaccard",
         )
     )
-
-
-def decontaminate(
-    train: DataFrame,
-    benchmark: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    shingled_train: DataFrame | None = None,
-    shingled_benchmark: DataFrame | None = None,
-) -> DataFrame:
-    """Benchmark decontamination: drop every train doc that near-duplicates
-    ANY benchmark doc (Jaccard >= threshold). The contaminated-id set is
-    bounded by the benchmark size — tiny against a 100 TB train corpus —
-    so the final anti-join broadcasts and train is never shuffled."""
-    pairs = minhash_lsh_pairs_between(
-        train, benchmark, id_col=id_col, text_col=text_col, threshold=threshold,
-        shingled_left=shingled_train, shingled_right=shingled_benchmark,
-    )
-    contaminated = pairs.select(F.col("id_l").alias(id_col)).distinct()
-    return train.join(F.broadcast(contaminated), id_col, "left_anti")
 
 
 def _positional_gram_hashes(

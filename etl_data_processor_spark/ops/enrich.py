@@ -64,7 +64,6 @@ def batch_enrich(
     client_factory: Callable[[], EnrichClient] = lambda: deterministic_stub_client,
     chunk_size: int = 200,
     defaults: dict[str, Column] | None = None,
-    broadcast_results: bool = True,
 ) -> DataFrame:
     """Enrich ``df`` by ``key_col`` through an expensive batched function.
 
@@ -101,10 +100,7 @@ def batch_enrich(
     enriched = distinct_keys.mapInPandas(enrich_partition, result_schema)
 
     # Broadcast fits the reference's regime (hundreds of distinct keys).
-    # For huge key spaces pass broadcast_results=False: the join becomes a
-    # shuffle join on the key both sides already hash on.
-    right = F.broadcast(enriched) if broadcast_results else enriched
-    out = df.join(right, key_col, "left")
+    out = df.join(F.broadcast(enriched), key_col, "left")
     for col_name, fallback in (defaults or {}).items():
         out = out.withColumn(col_name, F.coalesce(F.col(col_name), fallback))
     return out

@@ -317,6 +317,8 @@ def pagerank_exact(
         edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")),
         [F.count(F.lit(1))],
     )
+    if n == 0:  # no nodes: an empty rank table, not a division by zero
+        return deg.select("src", F.lit(0).cast("long").alias("rank_q"))
     init_q = total_q // n
     base_q = (100 - damping_pct) * init_q // 100
 

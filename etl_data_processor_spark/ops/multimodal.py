@@ -1,7 +1,7 @@
 """Multimodal column plumbing (north star B33).
 
-Images/audio/video are opaque ``binary`` columns plus a typed metadata
-struct. The Spark-side machinery is real and tested — schema, Arrow-batched
+Images/audio/video are opaque ``binary`` columns. The Spark-side
+machinery is real and tested — schema, Arrow-batched
 ``mapInPandas`` feature extraction, partition-friendly shapes — while the
 actual media decode sits behind a RUNTIME capability probe:
 
@@ -43,16 +43,6 @@ def to_blob(text: Column) -> Column:
     """Encode a string column as a binary blob (UTF-8) — the test stand-in
     for real media bytes."""
     return F.encode(text, "UTF-8")
-
-
-def blob_metadata(blob: Column, media_type: str = "text/plain") -> Column:
-    """Typed metadata struct computed JVM-side: size + media type + stable
-    content id. Queries touching only this struct never decode the blob."""
-    return F.struct(
-        F.octet_length(blob).cast("long").alias("n_bytes"),
-        F.lit(media_type).alias("media_type"),
-        F.xxhash64(blob).alias("content_id"),
-    )
 
 
 def probe_codecs() -> str | None:
@@ -204,57 +194,6 @@ def fake_feature_extractor(
             )
 
     return df.select(id_col, blob_col).mapInPandas(extract, FEATURE_SCHEMA)
-
-
-RESIZE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("resized_blob", BinaryType()),
-    ]
-)
-
-
-def resize_images(
-    df: DataFrame,
-    width: int,
-    height: int,
-    id_col: str = "doc_id",
-    blob_col: str = "blob",
-) -> DataFrame:
-    """Image resize plumbing: binary in -> binary out through Arrow batches.
-
-    The Spark-side contract is production-shaped: one ``mapInPandas`` pass,
-    blobs never leave binary form, output size is width*height bytes per
-    row, and per-batch Python cost amortizes over the Arrow batch. The
-    "resize" body is the deterministic stand-in (stride-sample the byte
-    stream to exactly width*height bytes, zero-padded) — production swaps
-    in a real decoder + PIL/opencv resize per `decode_image`'s note without
-    touching the Spark plumbing."""
-    n_out = width * height
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for b in pdf[blob_col]:
-                b = bytes(b)
-                if len(b) >= n_out:
-                    stride = len(b) // n_out
-                    sampled = b[:: stride][:n_out]
-                else:
-                    sampled = b
-                outs.append(sampled + b"\x00" * (n_out - len(sampled)))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    "width": width,
-                    "height": height,
-                    "resized_blob": outs,
-                }
-            )
-
-    return df.select(id_col, blob_col).mapInPandas(resize, RESIZE_SCHEMA)
 
 
 FRAME_SCHEMA = StructType(

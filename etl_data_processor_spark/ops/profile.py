@@ -24,24 +24,19 @@ def profile(
     df: DataFrame,
     numeric_cols: list[str],
     string_cols: list[str],
-    exact: bool = True,
 ) -> DataFrame:
     """Long-format profile: one row per column with
     (col_name, n, n_null, n_distinct, min_num, max_num, min_str, max_str);
     the num/str min-max pair not applicable to the column's type is NULL.
 
-    ``exact=True`` plans the multi-distinct as one Expand (rows fan out
-    K+1-fold, then sort-aggregate) — still one scan, but the fan-out is the
-    price of exact cardinalities. At 100 TB profiling runs with
-    ``exact=False``: approx_count_distinct (HLL++) keeps the plan a plain
-    partial+final hash agg with NO row fan-out and constant-size state;
-    cardinality profiling tolerates ~2% error by nature."""
-    distinct = F.count_distinct if exact else F.approx_count_distinct
+    The exact multi-distinct plans as one Expand (rows fan out K+1-fold,
+    then sort-aggregate) — still one scan, but the fan-out is the price of
+    exact cardinalities."""
     aggs = [F.count(F.lit(1)).alias("__total")]
     for c in numeric_cols + string_cols:
         aggs += [
             F.count(F.col(c)).alias(f"__n_{c}"),
-            distinct(F.col(c)).alias(f"__d_{c}"),
+            F.count_distinct(F.col(c)).alias(f"__d_{c}"),
             F.min(F.col(c)).alias(f"__min_{c}"),
             F.max(F.col(c)).alias(f"__max_{c}"),
         ]

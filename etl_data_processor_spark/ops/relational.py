@@ -177,23 +177,3 @@ def salted_join(
     salted_right = right.withColumn("__salt", salts)
     out = salted_left.join(salted_right, [key, "__salt"], how)
     return out.drop("__salt")
-
-
-def partial_then_final_agg(
-    df: DataFrame,
-    key: str,
-    value: str,
-    salt_buckets: int = 32,
-) -> DataFrame:
-    """Two-level aggregation for a skewed groupBy key: first aggregate on
-    (key, salt) — spreading the hot key over ``salt_buckets`` reducers —
-    then combine the partials per key. Spark already does map-side partial
-    aggregation; this adds a REDUCER-side split for keys whose partials are
-    still too hot (count/sum decompose; avg = sum/count of partials)."""
-    salted = df.withColumn("__salt", (F.xxhash64(F.rand(seed=0)) % salt_buckets))
-    partial = salted.groupBy(key, "__salt").agg(
-        F.count(F.lit(1)).alias("__n"), F.sum(value).alias("__s")
-    )
-    return partial.groupBy(key).agg(
-        F.sum("__n").alias("n"), F.sum("__s").alias(f"sum_{value}")
-    )

@@ -14,8 +14,7 @@ Two paths:
 
 Exact-decimal scoring: dot products are computed over DECIMAL-cast elements
 (exact + order-independent — see ops.exact) so results are engine-stable and
-oracle-checkable; the raw double fold in ops.arrays stays available for
-throughput-first use.
+oracle-checkable.
 """
 
 from __future__ import annotations
@@ -252,31 +251,6 @@ def _quantize_plane(p: list[float]) -> list[int]:
     return [int(math.floor(float(x) * _Q + 0.5)) for x in p]
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane signature: one bit per plane = sign of <v, p>,
-    packed into a long. Pure expressions — the planes are literals folded
-    into codegen.
-
-    The sign test is an EXACT fixed-point integer dot (both sides quantized
-    at scale ``_Q``): order-independent and engine-stable, and bit-identical
-    to the numpy batch path (:func:`lsh_signatures_batch`), so the two
-    implementations are interchangeable per side of the bucket join."""
-    qv = _quantize(vec)
-    sig = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                qv,
-                F.array(*[F.lit(x) for x in _quantize_plane(p)]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        sig = sig + F.when(dot >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0))
-    return sig
-
-
 def lsh_signatures_batch(
     df: DataFrame,
     tables: list[list[list[float]]],
@@ -285,13 +259,13 @@ def lsh_signatures_batch(
 ) -> DataFrame:
     """All per-table signatures in ONE Arrow-batched numpy matmul.
 
-    The expression path (:func:`lsh_bucket`) folds tables × planes × dim
-    literal nodes into the plan — ~1 s of Catalyst analysis and multi-second
-    first-run codegen once tables × planes ≳ 64 (measured; see SCALE.md).
+    The expression form (``lsh_bucket`` in tests/reference.py) folds
+    tables × planes × dim literal nodes into the plan — ~1 s of Catalyst
+    analysis and multi-second first-run codegen once tables × planes ≳ 64 (measured; see SCALE.md).
     Here the planes live in a (T·B, dim) int64 numpy array captured by the
     UDF closure, and each Arrow batch computes ``Vq @ P.T`` — one exact
     int64 matmul — then packs sign bits per table. Bit-identical to the
-    expression path: both quantize with floor(x·1e7 + 0.5) in IEEE doubles
+    expression form: both quantize with floor(x·1e7 + 0.5) in IEEE doubles
     and take signs of exact integer dots.
 
     Returns ``df`` plus ``out_col: array<long>`` (one signature per table).
@@ -324,58 +298,18 @@ def lsh_signatures_batch(
     return df.mapInPandas(gen, schema)
 
 
-def lsh_probe_buckets(
-    vec: Column, planes: list[list[float]], n_probes: int
-) -> Column:
-    """Multi-probe bucket list (query-directed, after Lv et al. VLDB'07):
-    the exact signature plus the single-bit flips with the smallest
-    projection |margin| — the planes the vector sits closest to are the ones
-    most likely to disagree with a true neighbor's signature. Returns an
-    array of ``n_probes`` bucket ids; pure expressions, so the query side
-    stays a broadcast literal plan. Dots are the same exact fixed-point
-    integers as :func:`lsh_bucket`, so probe bucket 0 (the unflipped
-    signature) is bit-identical to the corpus-side signature."""
-    qv = _quantize(vec)
-    dots = [
-        F.aggregate(
-            F.zip_with(
-                qv,
-                F.array(*[F.lit(x) for x in _quantize_plane(p)]),
-                lambda x, y: x * y,
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        for p in planes
-    ]
-    sig = F.lit(0).cast("long")
-    for i, d in enumerate(dots):
-        sig = sig + F.when(d >= 0, F.lit(1 << i).cast("long")).otherwise(F.lit(0))
-    margins = F.array(
-        *[
-            F.struct(F.abs(d).alias("m"), F.lit(i).alias("i"))
-            for i, d in enumerate(dots)
-        ]
-    )
-    n_flips = min(n_probes - 1, len(planes))
-    flips = F.slice(F.array_sort(margins), 1, n_flips)
-    bitvals = F.array(*[F.lit(1 << i).cast("long") for i in range(len(planes))])
-
-    def flip(s):
-        # closure over sig/bitvals (never default args: pyspark binds extra
-        # lambda params to the element index)
-        return sig.bitwiseXOR(F.element_at(bitvals, s.getField("i") + 1))
-
-    return F.concat(F.array(sig), F.transform(flips, flip))
-
-
 def _probe_buckets_py(
     vec: list[float], tables: list[list[list[float]]], n_probes: int
 ) -> list[tuple[int, int]]:
-    """Driver-side mirror of :func:`lsh_probe_buckets` over all tables:
-    same quantization, same exact integer dots, same (|margin|, plane-index)
-    flip ordering — bit-identical to the expression path. Returns
-    ``[(table, bucket)]``."""
+    """Multi-probe bucket list over all tables (query-directed, after Lv
+    et al. VLDB'07): per table, the exact signature plus the single-bit
+    flips with the smallest projection |margin| — the planes the vector
+    sits closest to are the ones most likely to disagree with a true
+    neighbor's signature. Same quantization and exact integer dots as
+    :func:`lsh_signatures_batch`, so probe 0 (the unflipped signature) is
+    the corpus-side bucket; flips order by (|margin|, plane index), as in
+    the expression form ``lsh_probe_buckets`` (tests/reference.py).
+    Returns ``[(table, bucket)]``."""
     import numpy as np
 
     v = np.asarray(vec, dtype=np.float32).astype(np.float64)
@@ -404,8 +338,6 @@ def lsh_cosine_topk(
     seed: int = 42,
     n_probes: int = 1,
     n_tables: int = 1,
-    arrow_threshold: int = 16,
-    collect_queries: bool = True,
 ) -> DataFrame:
     """Approximate cosine top-k: bucket corpus and queries by hyperplane
     signature, score only same-bucket candidates.
@@ -428,92 +360,54 @@ def lsh_cosine_topk(
     and avoids a corpus-side re-join — the cheaper side of the tradeoff
     when candidates are sparse).
 
-    Corpus-side signatures switch from pure expressions to the Arrow numpy
-    matmul (:func:`lsh_signatures_batch`) once ``n_tables × n_planes >=
-    arrow_threshold`` — above that, the literal expression tree dominates
-    analysis + codegen time while one int64 matmul per Arrow batch stays
-    flat. The two paths are bit-identical, so the cutover is purely a
-    physical choice. The (small, broadcast) query side always stays
-    expression-based — its plan is built once."""
+    Corpus-side signatures are one Arrow numpy matmul per batch
+    (:func:`lsh_signatures_batch`), and the query batch — the broadcast-
+    small side by contract — gets its probe buckets driver-side in numpy
+    (:func:`_probe_buckets_py`). Both avoid a tables × planes × dim
+    literal expression tree, whose analysis and codegen alone cost
+    seconds; tests/reference.py keeps that expression form, and both
+    sides are bit-identical to it."""
     tables = [hyperplanes(dim, n_planes, seed + 1000003 * t) for t in range(n_tables)]
-    if n_tables * n_planes >= arrow_threshold:
-        c = (
-            lsh_signatures_batch(corpus.select(id_col, vec_col), tables)
-            .select(
-                id_col,
-                vec_col,
-                F.posexplode("__sigs").alias("__t", "__sig"),
-            )
-            .select(
-                id_col,
-                vec_col,
-                F.struct(
-                    F.col("__t").cast("int").alias("t"), F.col("__sig").alias("sig")
-                ).alias("__bk"),
-            )
-        )
-    else:
-        c = corpus.select(
+    c = (
+        lsh_signatures_batch(corpus.select(id_col, vec_col), tables)
+        .select(
             id_col,
             vec_col,
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("t"),
-                            lsh_bucket(F.col(vec_col), planes).alias("sig"),
-                        )
-                        for t, planes in enumerate(tables)
-                    ]
-                )
+            F.posexplode("__sigs").alias("__t", "__sig"),
+        )
+        .select(
+            id_col,
+            vec_col,
+            F.struct(
+                F.col("__t").cast("int").alias("t"), F.col("__sig").alias("sig")
             ).alias("__bk"),
         )
+    )
     # Query probe list: per table, the multi-probe buckets tagged with the
     # table id (struct matches the corpus side's explode).
-    if collect_queries:
-        # The query batch is the broadcast-small side by contract, so its
-        # probe buckets are computed driver-side in numpy (bit-identical
-        # mirror of the expression path) — avoiding a tables × planes × dim
-        # literal expression tree whose CONSTRUCTION alone costs seconds.
-        spark = corpus.sparkSession
-        qschema = StructType(
-            [
-                StructField(query_id_col, queries.schema[id_col].dataType),
-                StructField("__qvec", ArrayType(FloatType())),
-                StructField(
-                    "__bk",
-                    StructType(
-                        [
-                            StructField("t", IntegerType(), False),
-                            StructField("sig", LongType(), False),
-                        ]
-                    ),
-                    False,
+    qschema = StructType(
+        [
+            StructField(query_id_col, queries.schema[id_col].dataType),
+            StructField("__qvec", ArrayType(FloatType())),
+            StructField(
+                "__bk",
+                StructType(
+                    [
+                        StructField("t", IntegerType(), False),
+                        StructField("sig", LongType(), False),
+                    ]
                 ),
-            ]
-        )
-        rows = [
-            (r[0], vec, (t, b))
-            for r in queries.select(id_col, vec_col).collect()
-            for vec in [[float(x) for x in r[1]]]
-            for t, b in _probe_buckets_py(vec, tables, n_probes)
+                False,
+            ),
         ]
-        q = F.broadcast(spark.createDataFrame(rows, qschema))
-    else:
-        probe_arrays = [
-            F.transform(
-                lsh_probe_buckets(F.col(vec_col), planes, n_probes),
-                (lambda t: lambda s: F.struct(F.lit(t).alias("t"), s.alias("sig")))(t),
-            )
-            for t, planes in enumerate(tables)
-        ]
-        q = F.broadcast(
-            queries.select(
-                F.col(id_col).alias(query_id_col),
-                F.col(vec_col).alias("__qvec"),
-                F.explode(F.flatten(F.array(*probe_arrays))).alias("__bk"),
-            )
-        )
+    )
+    rows = [
+        (r[0], vec, (t, b))
+        for r in queries.select(id_col, vec_col).collect()
+        for vec in [[float(x) for x in r[1]]]
+        for t, b in _probe_buckets_py(vec, tables, n_probes)
+    ]
+    q = F.broadcast(corpus.sparkSession.createDataFrame(rows, qschema))
     scored = (
         c.join(q, "__bk")
         .filter(F.col(id_col) != F.col(query_id_col))
@@ -526,34 +420,6 @@ def lsh_cosine_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(query_id_col, id_col, "cosine", "rank")
-    )
-
-
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 6,
-    dim: int = 64,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via LSH buckets + exact verify
-    (same candidates→verify shape as MinHash dedup)."""
-    planes = hyperplanes(dim, n_planes)
-    b = df.select(id_col, vec_col, lsh_bucket(F.col(vec_col), planes).alias("__bucket"))
-    a2, b2 = b.alias("a"), b.alias("b")
-    return (
-        a2.join(
-            b2,
-            (F.col("a.__bucket") == F.col("b.__bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            dec_cosine(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")).alias("cosine"),
-        )
-        .filter(F.col("cosine") >= threshold)
     )
 
 
@@ -613,7 +479,8 @@ def _ivf_partial_sums(
     PARTIAL integer sums + counts — n_lists × dim rows per batch instead of
     dim rows per corpus vector. The final groupBy reduces partials; integer
     addition is order-independent, so the result is bit-identical to the
-    expression path's posexplode + groupBy."""
+    expression form's crossJoin + rank + posexplode + groupBy
+    (``ivf_sums_expr`` in tests/reference.py)."""
     import numpy as np
     import pandas as pd
 
@@ -664,7 +531,6 @@ def train_ivf_centroids(
     iters: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    arrow: bool = True,
 ) -> list[tuple[int, list[float]]]:
     """Deterministic spherical-k-means IVF training (Lloyd iterations).
 
@@ -679,7 +545,6 @@ def train_ivf_centroids(
     and re-broadcast per iteration — the standard k-means-on-Spark shape.
     Returns ``[(cid, unit_centroid_floats)]`` sorted by cid.
     """
-    spark = corpus.sparkSession
 
     def unit(v: list[float]) -> list[float]:
         n = sum(x * x for x in v) ** 0.5
@@ -710,31 +575,8 @@ def train_ivf_centroids(
         chosen.append(best_i)
     cents = [(j, svecs[i]) for j, i in enumerate(chosen)]
 
-    qvec = _quantize(F.col(vec_col))
     for _ in range(iters):
-        if arrow:
-            sums = _ivf_partial_sums(corpus, cents, vec_col).collect()
-        else:
-            cdf = F.broadcast(
-                spark.createDataFrame(
-                    [(cid, v) for cid, v in cents], ["__cid", "__cvec"]
-                ).withColumn("__cvec", F.col("__cvec").cast("array<float>"))
-            )
-            scored = corpus.select(id_col, vec_col).crossJoin(cdf).withColumn(
-                "__d", dec_dot(F.col(vec_col), F.col("__cvec"))
-            )
-            w = Window.partitionBy(id_col).orderBy(F.desc("__d"), F.asc("__cid"))
-            assigned = (
-                scored.withColumn("__rk", F.row_number().over(w))
-                .filter(F.col("__rk") == 1)
-                .select(F.col("__cid").alias("__list"), qvec.alias("__q"))
-            )
-            sums = (
-                assigned.select("__list", F.posexplode("__q").alias("pos", "x"))
-                .groupBy("__list", "pos")
-                .agg(F.sum("x").alias("s"), F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
+        sums = _ivf_partial_sums(corpus, cents, vec_col).collect()
         by_list: dict[int, dict[int, int]] = {}
         counts: dict[int, int] = {}
         for r in sums:

@@ -70,7 +70,7 @@ def cms_partial(
     per (group, cms_row, bucket) with its counter — at most depth*width
     rows per group, whatever the input size. This is the frequency-
     estimation counterpart to the HLL distinct sketch: bounded-size,
-    exactly mergeable (counters are plain sums — see cms_merge), and the
+    exactly mergeable (counters are plain sums), and the
     estimate for any key is min over rows of its bucket counter, an
     OVERestimate by construction (collisions only add).
 
@@ -101,15 +101,6 @@ def cms_partial(
     )
     return bucketed.groupBy(*group_cols, "cms_row", "bucket").agg(
         F.count(F.lit(1)).alias("cnt")
-    )
-
-
-def cms_merge(sketches: DataFrame, group_cols: list[str] | None = None) -> DataFrame:
-    """Merge tall-form sketches (same depth/width): counters simply sum.
-    Exactly associative — merge(parts) == sketch(whole), pinned by test."""
-    gc = list(group_cols or [])
-    return sketches.groupBy(*gc, "cms_row", "bucket").agg(
-        F.sum("cnt").alias("cnt")
     )
 
 

@@ -176,76 +176,6 @@ def synthetic_cards(spark, n: int = 40) -> DataFrame:
         "url string, card_text string, heading string, detail_text string",
     )
 
-
-def synthetic_html_site(spark, n: int = 40):
-    """Render the synthetic_cards fixture as RAW HTML — one listing page per
-    8 cards (tier rotating through the 3-tier card-selector fallback,
-    main.py:85-97) plus one detail page per card — so the pipeline can be
-    driven from actual markup instead of pre-extracted columns.
-
-    Listing hrefs carry the decision-link marker the reference's selector
-    requires (main.py:90-92), alternating relative/absolute to keep both A4
-    branches live; the href (pre-absolutization) is the listing<->detail
-    join key, exactly as the reference fetches each card's url
-    (main.py:266-270). Returns (listing_pages_df, detail_pages_df)."""
-    cards = synthetic_cards(spark, n)
-    i = F.regexp_extract("url", r"med-(\d+)$", 1).cast("long")
-    href = F.when(
-        i % 2 == 0, F.format_string("/anbefalinger-og-vejledninger/med-%d", i)
-    ).otherwise(
-        F.format_string("https://ext.example/anbefalinger-og-vejledninger/med-%d", i)
-    )
-    page = F.floor(i / 8)
-    tier = (page % 3).cast("int")
-    card_html = (
-        F.when(
-            tier == 0,
-            F.format_string(
-                '<div class="card"><a href="%s">Laes mere</a><p>%s</p></div>',
-                href,
-                F.col("card_text"),
-            ),
-        )
-        .when(
-            tier == 1,
-            F.format_string(
-                '<article><a href="%s">Laes mere</a><span>%s</span></article>',
-                href,
-                F.col("card_text"),
-            ),
-        )
-        .otherwise(
-            F.format_string('<p><a href="%s">%s</a></p>', href, F.col("card_text"))
-        )
-    )
-    keyed = cards.select(
-        i.alias("i"), page.alias("page"), href.alias("href"),
-        card_html.alias("card_html"), "heading", "detail_text",
-    )
-    listing = keyed.groupBy("page").agg(
-        F.concat(
-            F.lit("<html><body>\n"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "card_html"))),
-                    lambda s: s["card_html"],
-                ),
-                "\n",
-            ),
-            F.lit("\n</body></html>"),
-        ).alias("html")
-    )
-    details = keyed.select(
-        F.col("href").alias("url"),
-        F.format_string(
-            '<html><body>\n<h1>%s</h1>\n<div class="detail">%s</div>\n</body></html>',
-            F.col("heading"),
-            F.col("detail_text"),
-        ).alias("html"),
-    )
-    return listing, details
-
-
 def cards_from_html(listing: DataFrame, details: DataFrame) -> DataFrame:
     """Raw HTML -> the (url, card_text, heading, detail_text) frame
     run_pipeline consumes: DOM card extraction over the listing pages

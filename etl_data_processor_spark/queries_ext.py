@@ -397,7 +397,8 @@ def q_snapshot_diff(spark, sf_dir):
     shift every 13th balance, add every 31st key under an offset). ONE
     full outer join on the key, unchanged rows filtered out — at 100 TB
     both sides shuffle once on the key; with pre-bucketed snapshots
-    (write_bucketed) even that exchange disappears. The +100.0 balance
+    (``bucketBy``, as in io.ensure_bucketed_join_tables) even that
+    exchange disappears. The +100.0 balance
     shift is exact in doubles, so 'changed' is bit-deterministic."""
     c = _cat(spark, sf_dir).customer
     v1 = c.select(F.col("c_custkey").alias("k"), F.col("c_acctbal").alias("bal"))
@@ -952,13 +953,13 @@ def _zorder_oracle() -> str:
 def q_zorder_value(spark, sf_dir):
     """The Morton (Z-order) interleave itself, oracle-checked bit-for-bit:
     customer key x order epoch-day quantized to 16 bits each, interleaved
-    into one 32-bit curve position (io.py::zorder_value — the sort key
-    write_zordered lays files out by). Pure shift/mask Column arithmetic,
+    into one 32-bit curve position (io.py::zorder_value — the sort key of
+    a two-key z-order file layout). Pure shift/mask Column arithmetic,
     narrow plan, no shuffle; the DuckDB side is emitted by zorder_value_sql
     from the SAME bit schedule so the two cannot drift. The curve is what
     gives a two-key layout row-group locality in BOTH keys (SCALE.md
-    round-2 notes); checking it exactly here means the layout op's key math
-    is under the differential gate, not just the layout test."""
+    round-2 notes); checking it exactly here puts the curve's key math
+    under the differential gate."""
     from etl_data_processor_spark.io import zorder_value
 
     o = _cat(spark, sf_dir).orders
@@ -1129,8 +1130,8 @@ def q_sketch_cms(spark, sf_dir):
     with true vs estimated counts (est >= true always; equality when no
     collision). At 100 TB the sketch is <= d*w counter rows per group
     REGARDLESS of input size — the frequency analog of the HLL pattern:
-    materialize per-slice, merge by summing counters (ops/sketches.py::
-    cms_merge), never re-read raw data."""
+    materialize per-slice, merge by summing counters per (cms_row,
+    bucket), never re-read raw data."""
     from etl_data_processor_spark.ops.sketches import cms_estimate, cms_partial
 
     ev = _cat(spark, sf_dir).events

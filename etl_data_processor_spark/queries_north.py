@@ -253,25 +253,23 @@ _BENCH_SOURCES = "('src0','src1','src2','src3')"
 )
 def q_decontaminate(spark, sf_dir):
     """Train-vs-benchmark decontamination: drop every train doc that
-    near-duplicates ANY benchmark doc, via BIPARTITE MinHash-LSH (neither
-    corpus self-joins; contaminated-id set is benchmark-bounded, so the
+    near-duplicates ANY benchmark doc, via one bucket join between the
+    train and benchmark slices of the session's LSH index (neither corpus
+    self-joins; the contaminated-id set is benchmark-bounded, so the
     final anti-join broadcasts and the train corpus never shuffles). The
     oracle is the exact cross-corpus Jaccard join — same recall argument
     as q_dedup_minhash."""
     d = _cat(spark, sf_dir).documents
     bench_srcs = ["src0", "src1", "src2", "src3"]
     train = d.filter(~F.col("source").isin(bench_srcs))
-    bench = d.filter(F.col("source").isin(bench_srcs))
     # bipartite slices of the session's shared signature index — plain
     # filters on the carried source column, no re-shingle, no re-sign
     sh, bk = _lsh_index(spark, sf_dir)
     is_bench = F.col("source").isin(bench_srcs)
-    pairs = D.minhash_lsh_pairs_between(
-        train, bench, threshold=0.8,
-        shingled_left=sh.filter(~is_bench), shingled_right=sh.filter(is_bench),
-        buckets_left=bk.filter(~is_bench), buckets_right=bk.filter(is_bench),
+    pairs = D.lsh_verified_pairs(
+        bk.filter(~is_bench), bk.filter(is_bench), sh, keep=F.lit(True)
     )
-    contaminated = pairs.select(F.col("id_l").alias("doc_id")).distinct()
+    contaminated = pairs.select(F.col("id_a").alias("doc_id")).distinct()
     return train.join(F.broadcast(contaminated), "doc_id", "left_anti").select(
         "doc_id", "source"
     )
@@ -716,9 +714,7 @@ def q_cosine_lsh(spark, sf_dir):
     """,
 )
 def q_emb_near_dup(spark, sf_dir):
-    """Embedding near-dup pairs, exact within a label block (the bounded
-    exact counterpart; the LSH-bucketed variant is ops.similarity.
-    embedding_near_dup_pairs, exercised in tests)."""
+    """Embedding near-dup pairs, exact within a label block."""
     emb = _cat(spark, sf_dir).embeddings
     a = emb.select("label", F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"))
     b = emb.select("label", F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"))

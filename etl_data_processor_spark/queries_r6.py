@@ -3,8 +3,9 @@
 q_bpe_pair_counts (round 5) computes the TRAINING statistic; this batch adds
 the INFERENCE half — applying a trained merge list to encode the corpus
 vocabulary into tokens — plus the trained-merge provenance: the literal merge
-list below IS ops.text.train_bpe_merges' output on the fixture corpus
-(pinned by tests/test_r6_ops.py), the same way a production pipeline ships a
+list below IS the greedy BPE trainer's output on the fixture corpus
+(``train_bpe_merges`` in tests/reference.py; pinned by
+tests/test_r6_ops.py), the same way a production pipeline ships a
 trained tokenizer artifact next to the data.
 
 House rules as ever: deterministic, DuckDB-oracled on the same parquet, and
@@ -22,7 +23,8 @@ from etl_data_processor_spark.ops import text as T
 from etl_data_processor_spark.registry import cat as _cat
 from etl_data_processor_spark.registry import q
 
-# Trained on the fixture corpus via ops.text.train_bpe_merges(documents, 16)
+# Trained on the fixture corpus via train_bpe_merges(documents, 16)
+# (tests/reference.py)
 # — the shipped-tokenizer artifact (tests/test_r6_ops.py re-trains and pins
 # equality). Rank order matters: later merges build on earlier symbols
 # (a+s -> as, as+h -> ash, h+ash -> hash).

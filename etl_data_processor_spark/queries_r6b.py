@@ -608,68 +608,6 @@ def _pyfloor(x: float) -> int:
 
     return math.floor(x)
 
-
-def _fs_estep(pat, params):
-    """E-step: posterior-of-match per agreement pattern, as a 1e-12
-    fixed-point BIGINT (exact under summation)."""
-
-    def field(g, m):
-        return F.when(F.col(g) == 1, F.col(m)).otherwise(F.lit(1.0) - F.col(m))
-
-    j = pat.crossJoin(F.broadcast(params))
-    pm = (
-        F.col("lam")
-        * field("g1", "m1") * field("g2", "m2") * field("g3", "m3")
-    )
-    pu = (
-        (F.lit(1.0) - F.col("lam"))
-        * field("g1", "u1") * field("g2", "u2") * field("g3", "u3")
-    )
-    wq = F.floor(pm / (pm + pu) * F.lit(1e12) + F.lit(0.5)).cast("long")
-    return j.select("g1", "g2", "g3", "n", wq.alias("wq"))
-
-
-def _fs_mstep(e):
-    """M-step: new (lam, m_i, u_i) from exact integer sums; each ratio is
-    one double division of exact BIGINTs, then 1e-12-quantized and
-    clamped away from {0,1} (log-ratio safety, the Splink clamp)."""
-    lo, hi = F.lit(1e-6), F.lit(0.999999)
-
-    def qz12(c):
-        return (
-            F.floor(c * F.lit(1e12) + F.lit(0.5)).cast("double") / F.lit(1e12)
-        )
-
-    def clamp(c):
-        return F.least(F.greatest(qz12(c), lo), hi)
-
-    wn = F.col("wq") * F.col("n")
-    vn = (F.lit(1000000000000).cast("long") - F.col("wq")) * F.col("n")
-    agg = e.agg(
-        F.sum(wn).alias("S"),
-        F.sum(F.col("n")).alias("T"),
-        F.sum(vn).alias("V"),
-        *[
-            F.sum(F.when(F.col(g) == 1, wn).otherwise(F.lit(0))).alias(f"S{g}")
-            for g in ("g1", "g2", "g3")
-        ],
-        *[
-            F.sum(F.when(F.col(g) == 1, vn).otherwise(F.lit(0))).alias(f"V{g}")
-            for g in ("g1", "g2", "g3")
-        ],
-    )
-    d = lambda c: c.cast("double")  # noqa: E731
-    return agg.select(
-        clamp(d(F.col("S")) / (d(F.col("T")) * F.lit(1e12))).alias("lam"),
-        clamp(d(F.col("Sg1")) / d(F.col("S"))).alias("m1"),
-        clamp(d(F.col("Sg2")) / d(F.col("S"))).alias("m2"),
-        clamp(d(F.col("Sg3")) / d(F.col("S"))).alias("m3"),
-        clamp(d(F.col("Vg1")) / d(F.col("V"))).alias("u1"),
-        clamp(d(F.col("Vg2")) / d(F.col("V"))).alias("u2"),
-        clamp(d(F.col("Vg3")) / d(F.col("V"))).alias("u3"),
-    )
-
-
 @q("q_linkage_fs_em", _FS_ORACLE)
 def q_linkage_fs_em(spark, sf_dir):
     """B66: Fellegi–Sunter parameter estimation (the EM at the core of
@@ -849,7 +787,8 @@ def q_linkage_fs_em(spark, sf_dir):
 
     # The pattern table is <= 2^3 rows — BOUNDED MODEL STATE (the BPE-
     # training discipline): collect it once and run the EM in the driver
-    # with arithmetic mirroring _fs_estep/_fs_mstep token for token.
+    # with arithmetic mirroring the DataFrame E/M steps (tests/reference.py,
+    # fs_estep/fs_mstep) token for token.
     # The earlier all-DataFrame form chained ~8 one-row aggregate jobs
     # (each a separate job barrier) and was the slowest bench key at
     # 6.6 s wall; the corpus-scale work (the candidate-pair pattern

@@ -184,8 +184,9 @@ _PRF_OUT_K = 10    # final result depth
 def _bm25_sql(qterms_cte: str, out: str) -> str:
     """One BM25 round as SQL CTE text: score every doc against the
     per-query term sets in ``qterms_cte`` (query_id, token), emitting
-    ``out`` (query_id, doc_id, sq). Mirrors the Spark `_bm25` helper
-    token for token (1e-12 per-term quantization, integer sums)."""
+    ``out`` (query_id, doc_id, sq). Mirrors the Spark scorer
+    (ops/invindex.py:bm25_batch_scores_from_index) token for token
+    (1e-12 per-term quantization, integer sums)."""
     return f"""
 {out}_cand AS (
     SELECT tf.token, tf.doc_id, tf.tf
@@ -289,53 +290,6 @@ SELECT query_id, doc_id,
        ) AS INTEGER) AS final_rank
 FROM r2 QUALIFY final_rank <= {_PRF_OUT_K}
 """
-
-
-def _bm25(tf, dl, stats, qterms):
-    """One BM25 round: score every doc against the per-query term sets
-    (query_id, token) -> (query_id, doc_id, sq). Same exact-arithmetic
-    scorer as q_hybrid_rrf's lexical leg, with the same two scale moves:
-    df derives from the candidate frame (tf rows are distinct per
-    (doc, token)), and the query-bounded candidate frame is
-    repartitioned DOWN and cached so each round costs ONE tf build and
-    no near-empty pinned-width downstream stages (the r6 hybrid-RRF
-    stress lesson)."""
-    cand = (
-        tf.join(F.broadcast(qterms.select("token").distinct()), "token")
-        .repartition(4)
-        .cache()
-    )
-    df = cand.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs").cast("double") - F.col("df").cast("double")
-           + F.lit(0.5))
-        / (F.col("df").cast("double") + F.lit(0.5))
-    )
-    norm = F.lit(1.2) * (
-        F.lit(0.25)
-        + F.lit(0.75)
-        * F.col("dl").cast("double")
-        * F.col("n_docs").cast("double")
-        / F.col("sum_dl").cast("double")
-    )
-    score = (
-        idf
-        * (F.col("tf").cast("double") * F.lit(2.2))
-        / (F.col("tf").cast("double") + norm)
-    )
-    tq = F.floor(score * F.lit(1e12) + F.lit(0.5)).cast("long")
-    return (
-        cand.join(F.broadcast(qterms), "token")
-        .filter(F.col("doc_id") != F.col("query_id"))
-        .join(F.broadcast(df), "token")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .select("query_id", "doc_id", tq.alias("tsq"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("tsq").alias("sq"))
-    )
-
 
 @q("q_prf_expand", _PRF_ORACLE)
 def q_prf_expand(spark, sf_dir):

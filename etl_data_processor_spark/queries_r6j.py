@@ -17,6 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from etl_data_processor_spark.ops.dedup import normalize_text
 from etl_data_processor_spark.ops.relational import ranked_topk
 from etl_data_processor_spark.ops.sampling import hash32, hash32_sql
 from etl_data_processor_spark.ops.text import char_poly_hash_sql
@@ -281,12 +282,6 @@ def select_top(scored):
         .alias("shard"),
     )
 
-
-def dedup_key(text):
-    """Stage 3's dedup key: lower-cased, trimmed, whitespace-collapsed."""
-    return F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-
-
 def selection_chain(dp):
     """Stages 1-5 over ``dp`` (doc_id, source, text, n_chars). Returns
     the corpus-relative models — ``cuts``, ``bench`` (trigram set) and
@@ -320,7 +315,7 @@ def selection_chain(dp):
 
     # stage 3: exact dedup, keep min doc_id per normalized text
     keep = (
-        g2.select("doc_id", dedup_key(F.col("text")).alias("norm"))
+        g2.select("doc_id", normalize_text(F.col("text")).alias("norm"))
         .groupBy("norm")
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")

@@ -42,61 +42,13 @@ from etl_data_processor_spark.registry import q
 # 64-bit portable SimHash (B22/B32 ext — the tuned signature)
 # =====================================================================
 
-_M32 = 1 << 32
-
-# DuckDB mirror of the two char folds (Horner, mod 2^32; base via {b}).
+# DuckDB form of the two char folds (Horner, mod 2^32; base via {b}).
 _CF_SQL = (
     "list_reduce(list_prepend(CAST(0 AS BIGINT), "
     "list_transform(range(1, length({t}) + 1), "
     "i -> CAST(ascii(substr({t}, CAST(i AS INTEGER), 1)) AS BIGINT))), "
     "(a, c) -> (a * {b} + c) % 4294967296)"
 )
-
-
-def _charfold(tok, base: int):
-    """Portable 32-bit polynomial char fold (Horner, ``base``, mod 2^32)
-    as a pure Column expression — bit-identical on DuckDB via _CF_SQL.
-    Two folds with coprime bases (31, 37) give 64 independent portable
-    hash bits without ever leaving checked int64 range on either engine
-    (max intermediate (2^32-1)*37 + 127 < 2^38)."""
-    codes = F.when(
-        F.length(tok) > 0,
-        F.transform(
-            F.sequence(F.lit(1), F.length(tok)),
-            lambda i: F.ascii(tok.substr(i, F.lit(1))).cast("long"),
-        ),
-    ).otherwise(F.array().cast("array<long>"))
-    return F.aggregate(
-        codes,
-        F.lit(0).cast("long"),
-        lambda a, c: (a * base + c) % F.lit(_M32),
-    )
-
-
-def _sig32(hashes):
-    """32-bit SimHash signature from an array of token hashes: per-bit
-    +1/-1 votes folded through a 32-counter array accumulator (one pass,
-    no explode), majority-positive bits OR-ed into a long."""
-    masks = F.array(*[F.lit(1 << b).cast("long") for b in range(32)])
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0).cast("long"), 32),
-        lambda acc, h: F.zip_with(
-            acc,
-            masks,
-            lambda a, m: a + F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1),
-        ),
-    )
-    return F.aggregate(
-        F.zip_with(
-            votes,
-            masks,
-            lambda v, m: F.when(v > 0, m).otherwise(F.lit(0).cast("long")),
-        ),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
-    )
-
 
 # Shared oracle CTE text: the 64-bit signature per (doc_id, source).
 _SIG64_SQL = f"""
@@ -935,7 +887,7 @@ def q_heaps_fit(spark, sf_dir):
     public; natural text sits near 0.4-0.6). This is the measured form
     of the argument VERDICT r6 item 5 made from citation: word-type
     counts grow like n^beta, so any driver-side vocabulary collect
-    (ops.text.train_bpe_merges) MUST be frequency-capped — a corpus
+    (a BPE trainer's) MUST be frequency-capped — a corpus
     team fits beta once and sizes the cap from it. Plan shape: docs
     bucket by exact integer arithmetic on doc_id into 32 ordered
     checkpoints per source; token totals and FIRST-OCCURRENCE buckets

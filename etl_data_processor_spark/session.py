@@ -47,8 +47,7 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     # Write timestamps as INT64 micros, not Spark's legacy INT96 default:
     # INT96 row groups carry NO min/max statistics, so every timestamp
-    # column the engine writes would be un-skippable on later range scans
-    # (caught by tests/test_io.py::test_write_clustered_tightens_rowgroup_stats).
+    # column the engine writes would be un-skippable on later range scans.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.enableVectorizedReader": "true",

@@ -158,52 +158,6 @@ class HttpSession:
             body = e.read().decode("utf-8", "replace") if e.fp else ""
             return Response(e.code, body, full)
 
-
-def fetch_details_live(
-    df,
-    base_url: str,
-    url_col: str = "url",
-    rate: float | None = None,
-    timeout: float = 30.0,
-):
-    """Per-row detail-page fetch over live HTTP (the reference fetches each
-    card's own page before detail extraction, main.py:266-270): widen
-    ``df`` with an ``html`` column by GETting ``urljoin(base_url, url)``
-    for every row. One :class:`HttpSession` per PARTITION (the reference's
-    single requests.Session, main.py:22-25) so connections, the UA header
-    and the optional token bucket are reused across the partition's rows —
-    at cluster scale the aggregate request rate is rate x partitions, the
-    same contract as the paged source. A failed page yields html=NULL and
-    the row survives (downstream extract_details already NULL-fills — the
-    reference appends the un-enriched decision, main.py:283-285).
-    Compose with :func:`ops.html.extract_details` for the
-    fetch -> parse -> enrich -> CSV path over real sockets."""
-    import pandas as pd
-    from urllib.parse import urljoin
-
-    from pyspark.sql.types import StringType, StructField, StructType
-
-    keep_fields = list(df.schema.fields)
-    schema = StructType(keep_fields + [StructField("html", StringType())])
-
-    def gen(batches):
-        session = HttpSession(rate=rate, timeout=timeout)
-        for pdf in batches:
-            html: list = []
-            for u in pdf[url_col]:
-                try:
-                    resp = session.get(urljoin(base_url, u))
-                    resp.raise_for_status()
-                    html.append(resp.text)
-                except Exception:
-                    html.append(None)  # per-record skip tier
-            out = pdf.copy()
-            out["html"] = pd.array(html, dtype=object)
-            yield out
-
-    return df.mapInPandas(gen, schema)
-
-
 def _live_conf(options) -> dict | None:
     """Live-HTTP mode config from source options; None unless opted in via
     ``live_http=1`` (mirrors resolve_enrich_client's env/flag gating —

@@ -18,3 +18,26 @@ def read_state(spark, table_dir):
         return TF.read(spark, table_dir)
     except ValueError:  # no commit yet
         return None
+
+
+def streaming_append_sink(table_dir: str, per_batch=lambda df: df):
+    """`writeStream.foreachBatch` sink committing each micro-batch as an
+    idempotent transactional append to a ``tableformat`` table — batch
+    replays after a failure deduplicate on the recorded batch id, so the
+    table sees each batch exactly once.
+
+    Each micro-batch first goes through ``per_batch`` (DataFrame ->
+    DataFrame; identity by default). A streaming monitor passes its
+    registered key's kernel there (streaming/drift.py, streaming/evals.py),
+    so the table holds ``batch_id`` plus the kernel's columns."""
+    from pyspark.sql import functions as F
+
+    from etl_data_processor_spark import tableformat as TF
+
+    def sink(batch_df, batch_id: int) -> None:
+        out = per_batch(batch_df).select(
+            F.lit(batch_id).cast("long").alias("batch_id"), "*"
+        )
+        TF.append_idempotent(out, table_dir, f"stream-batch-{batch_id}")
+
+    return sink

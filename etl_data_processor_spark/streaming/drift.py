@@ -3,7 +3,7 @@ divergence, Kolmogorov-Smirnov and Mann-Whitney U against a reference
 frozen once per epoch.
 
 Each monitor returns the per-batch frame function for
-``tableformat.streaming_append_sink``: it counts the micro-batch the way
+``streaming.streaming_append_sink``: it counts the micro-batch the way
 its registered key counts the corpus and calls that key's kernel in
 ops.drift against the frozen reference. The kernel groups by ``source``,
 so a micro-batch holding one source's rows yields exactly the key's row
@@ -13,7 +13,7 @@ computed outside the plan. Usage::
 
     ref = docs.filter(F.col("source") == "src0")
     stream.writeStream.foreachBatch(
-        TF.streaming_append_sink(out_dir, psi_monitor(ref))
+        streaming_append_sink(out_dir, psi_monitor(ref))
     )
 
 A reader alerts on the key's own columns: ``psi6 > 0.25``, ``drifted``

@@ -3,7 +3,7 @@ reference set frozen once per epoch, and a Heaps vocabulary-growth
 monitor.
 
 chrF and ROUGE return the per-batch frame function for
-``tableformat.streaming_append_sink``: the batch's candidate rows (every
+``streaming.streaming_append_sink``: the batch's candidate rows (every
 source but the reference source src0) join the frozen reference docs
 (rid, text) by rid and are scored by the registered key's kernel
 (queries_r7b.chrf_eval, queries_r7.rouge_eval), so a micro-batch over

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_data_processor_spark import queries_r6j as S
+from etl_data_processor_spark.ops.dedup import normalize_text
 from etl_data_processor_spark.streaming import freeze, read_state
 
 
@@ -60,7 +61,7 @@ def selection_gate_sink(models: dict, seen_table: str, scores_table: str):
         # stage 3: exact dedup — batch-local keep-min, then anti-join the
         # cross-batch seen-norms state (first batch wins; ascending-id
         # ingest makes this the batch keep-min rule)
-        withn = g2.withColumn("__norm", S.dedup_key(F.col("text")))
+        withn = g2.withColumn("__norm", normalize_text(F.col("text")))
         g3 = withn.join(
             withn.groupBy("__norm").agg(F.min("doc_id").alias("doc_id")),
             ["__norm", "doc_id"],

@@ -101,14 +101,11 @@ def _live_adds(table_dir: str, version: int | None = None) -> list[dict]:
     return live
 
 
-def _split_adds(
-    adds: list[dict],
-) -> tuple[list[dict], list[dict], list[dict]]:
-    """(data adds, equality-delete adds, positional-delete adds)."""
+def _split_adds(adds: list[dict]) -> tuple[list[dict], list[dict]]:
+    """(data adds, equality-delete adds)."""
     data = [a for a in adds if a.get("kind", "data") == "data"]
     dels = [a for a in adds if a.get("kind") == "deletes"]
-    pos = [a for a in adds if a.get("kind") == "posdeletes"]
-    return data, dels, pos
+    return data, dels
 
 
 def _live_groups(table_dir: str, version: int | None = None) -> list[str]:
@@ -245,34 +242,31 @@ def append(
     table_dir: str,
     stats_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
-    ndv_cols: list[str] | None = None,
 ) -> int:
     """Transactional append: new rows become visible atomically at the
     returned version. Concurrent appends serialize via retry (no data
     rewrite — rebasing an append is free). ``stats_cols``: record
-    per-group min/max in the commit so :func:`read_pruned` can skip the
-    group without opening a file. ``bloom_cols`` (integer columns):
-    additionally record a small portable bloom filter per column in the
-    commit — POINT lookups (:func:`read_point`) then skip groups whose
-    min/max overlap but which cannot contain the key (the Delta
-    bloom-index feature; 128 words per column of log state).
-    ``ndv_cols`` (integer columns): record per-group HLL register files
-    so :func:`table_ndv` answers distinct-count questions from the log
-    alone (the ANALYZE-statistics story; 64 small ints per column)."""
+    per-group min/max in the commit so :func:`merge` and
+    :func:`read_point` can skip the group without opening a file.
+    ``bloom_cols`` (integer columns): additionally record a small
+    portable bloom filter per column in the commit — POINT lookups
+    (:func:`read_point`) then skip groups whose min/max overlap but which
+    cannot contain the key (the Delta bloom-index feature; 128 words per
+    column of log state)."""
     group = _write_group(df, table_dir)
     stats = None
-    # ONE read-back of the just-written group feeds stats, NDV registers
-    # and bloom builds (it used to be one scan per feature, plus a
-    # distinct().count() job per bloom column — three redundant scans on
-    # the ingest hot path). Min/max and the blooms' distinct-key counts
-    # now share a single aggregation job over the cached scan.
-    if stats_cols is not None or ndv_cols or bloom_cols:
+    # ONE read-back of the just-written group feeds stats and bloom builds
+    # (it used to be one scan per feature, plus a distinct().count() job
+    # per bloom column — redundant scans on the ingest hot path). Min/max
+    # and the blooms' distinct-key counts share a single aggregation job
+    # over the cached scan.
+    if stats_cols is not None or bloom_cols:
         from pyspark.sql import functions as F
 
         back = df.sparkSession.read.parquet(
             os.path.join(_data_dir(table_dir), group)
         )
-        if ndv_cols or bloom_cols:
+        if bloom_cols:
             back = back.cache()
         agg_exprs = []
         for c in stats_cols or []:
@@ -299,8 +293,6 @@ def append(
                 for c in stats_cols
             }
     add = _add_action(group, stats)
-    if ndv_cols:
-        add["ndv"] = {c: _ndv_registers(back, c) for c in ndv_cols}
     if bloom_cols:
         from etl_data_processor_spark.ops.bloom import build_bloom
 
@@ -316,76 +308,8 @@ def append(
             }
         if blooms:
             add["bloom"] = blooms
-    if ndv_cols or bloom_cols:
         back.unpersist()
     return _commit(table_dir, "append", [add], None)
-
-
-_NDV_M = 256  # registers per column
-_NDV_ALPHA = 0.7182725932495458  # alpha_256 = 0.7213/(1+1.079/256)
-
-
-def _ndv_registers(df: DataFrame, col: str) -> list[int]:
-    """256-register portable-HLL file for one column of one group.
-    Register index and rank come from two INDEPENDENT portable-hash
-    evaluations (seed 0 / seed 1) — the 32-bit mixer's top bits correlate
-    with sequential keys, which biased a single-hash split ~30% high on
-    id-like columns; independent hashes restore the textbook estimator
-    (within ~10% on the probe suite). rho = 25 - bitlength(24 rank
-    bits); 0 means empty. Mergeable by elementwise max — the log answers
-    NDV over any group subset without touching data."""
-    from pyspark.sql import functions as F
-
-    from etl_data_processor_spark.ops.sampling import hash32
-
-    reg = hash32(F.col(col), 0) % _NDV_M
-    rest = F.shiftrightunsigned(hash32(F.col(col), 1), 8)
-    rho = F.when(rest == 0, 25).otherwise(25 - F.length(F.bin(rest)))
-    rows = (
-        df.filter(F.col(col).isNotNull())
-        .select(reg.alias("reg"), rho.alias("rho"))
-        .groupBy("reg")
-        .agg(F.max("rho").alias("m"))
-        .collect()
-    )
-    regs = [0] * _NDV_M
-    for r in rows:
-        regs[r["reg"]] = r["m"]
-    return regs
-
-
-def _ndv_estimate(regs: list[int]) -> int:
-    """Standard HLL estimator with small-range linear counting (same
-    constants/branches as the oracled q_sketch_hll_portable)."""
-    import math
-
-    v = sum(1 for r in regs if r == 0)
-    s = sum(2.0 ** -r for r in regs)
-    e_raw = _NDV_ALPHA * _NDV_M * _NDV_M / s
-    if e_raw <= 2.5 * _NDV_M and v > 0:
-        return int(_NDV_M * math.log(_NDV_M / v))  # linear counting
-    return int(e_raw)
-
-
-def table_ndv(table_dir: str, col: str, version: int | None = None) -> int | None:
-    """Approximate distinct count of ``col`` over the live table decided
-    ENTIRELY from the commit log: per-group HLL register files (recorded
-    by ``append(..., ndv_cols=[...])``) merge by elementwise max — the
-    ANALYZE-statistics story completing min/max (range pruning) and bloom
-    (point pruning): a cost-based planner can estimate join sizes and
-    aggregate widths with zero file I/O. Returns None when any live data
-    group lacks the column's registers (a merged estimate would silently
-    undercount)."""
-    data, _, _ = _split_adds(_live_adds(table_dir, version))
-    merged = [0] * _NDV_M
-    for a in data:
-        regs = a.get("ndv", {}).get(col)
-        if regs is None:
-            return None
-        for i, r in enumerate(regs):
-            if r > merged[i]:
-                merged[i] = r
-    return _ndv_estimate(merged)
 
 
 def _hash32_py(x: int, seed: int = 0) -> int:
@@ -428,7 +352,7 @@ def read_point(
     exact; groups committed without either are conservatively opened."""
     from pyspark.sql import functions as F
 
-    data, dels, pdels = _split_adds(_live_adds(table_dir, version))
+    data, dels = _split_adds(_live_adds(table_dir, version))
     if not data:
         raise ValueError(f"no table at {table_dir} (version={version})")
 
@@ -446,7 +370,7 @@ def read_point(
     if not keep:
         one = os.path.join(_data_dir(table_dir), data[0]["group"])
         return spark.read.parquet(one).filter(F.lit(False))
-    df = _assemble(spark, table_dir, keep, dels, pdels)
+    df = _assemble(spark, table_dir, keep, dels)
     return df.filter(F.col(col) == F.lit(value))
 
 
@@ -455,7 +379,7 @@ def point_group_count(
 ) -> tuple[int, int]:
     """(groups a point lookup must open, total live groups) — the
     observable bloom + stats pruning ratio."""
-    data, _, _ = _split_adds(_live_adds(table_dir, version))
+    data, _ = _split_adds(_live_adds(table_dir, version))
     opened = 0
     for a in data:
         st = a.get("stats", {}).get(col)
@@ -485,135 +409,20 @@ def compact(
     spark: SparkSession,
     table_dir: str,
     target_files: int = 4,
-    zorder_by: tuple[str, str] | None = None,
-    stats_cols: list[str] | None = None,
 ) -> int:
-    """Rewrite the live file set — the small-file compaction every
-    streaming ingest needs. A normal committed rewrite: readers see either
-    the old layout or the new one, never a mix; time travel before the
-    compaction version still replays the old groups (until vacuumed).
-    Reads with merge_schema so compacting a schema-evolved table keeps the
-    WIDEST schema, and through the snapshot read BOTH delete kinds
-    (equality + positional) fold into clean data — the delete files are
+    """Rewrite the live file set into one coalesced group — the small-file
+    compaction every streaming ingest needs. A normal committed rewrite:
+    readers see either the old layout or the new one, never a mix; time
+    travel before the compaction version still replays the old groups
+    (until vacuumed). Reads with merge_schema so compacting a
+    schema-evolved table keeps the WIDEST schema, and through the snapshot
+    read the equality deletes fold into clean data — the delete files are
     dropped by the commit's remove set.
-
-    ``zorder_by=(x, y)`` is Delta's OPTIMIZE ZORDER BY (VERDICT r2 item
-    9): rows are laid out along the Morton z-curve of (x, y) and split at
-    exact z-percentile cuts into ``target_files`` GROUPS, each committed
-    with min/max stats for both keys (plus ``stats_cols``) — so
-    ``read_pruned`` on EITHER key skips whole groups afterwards (the
-    z-curve bounds both coordinates within every contiguous slice;
-    probed by tests and scripts/merge_probe shapes). Without it, one
-    coalesced group (``stats_cols`` still recordable for merge pruning).
     """
     base = (_versions(table_dir) or [-1])[-1]
     df = read(spark, table_dir, version=base, merge_schema=True)
-    if zorder_by is None:
-        group = _write_group(df.coalesce(target_files), table_dir)
-        stats = (
-            _group_stats(df, table_dir, group, stats_cols)
-            if stats_cols
-            else None
-        )
-        adds = [_add_action(group, stats)]
-    else:
-        from pyspark.sql import functions as F
-
-        from etl_data_processor_spark.io import zorder_value
-
-        xc, yc = zorder_by
-        scs = sorted(set([xc, yc] + (stats_cols or [])))
-        # z-values are always >= 0, so -1 is a dedicated NULL sentinel:
-        # rows with a NULL in either key sort FIRST (into the first
-        # slice) instead of vanishing through NULL-valued slice filters
-        # (`__z > lo` / `__z <= hi` are false for NULL). Compaction must
-        # be row-preserving, like Delta's OPTIMIZE ZORDER.
-        zdf = df.withColumn(
-            "__z",
-            F.coalesce(
-                zorder_value(F.col(xc), F.col(yc)), F.lit(-1).cast("long")
-            ),
-        ).persist()
-        try:
-            if target_files > 1:
-                fracs = [i / target_files for i in range(1, target_files)]
-                bounds = zdf.select(
-                    F.percentile(
-                        "__z", F.array(*[F.lit(p) for p in fracs])
-                    ).alias("b")
-                ).collect()[0]["b"]
-            else:
-                bounds = []
-            adds = []
-            lo = None
-            for hi in [*bounds, None]:
-                sl = zdf
-                if lo is not None:
-                    sl = sl.filter(F.col("__z") > lo)
-                if hi is not None:
-                    sl = sl.filter(F.col("__z") <= hi)
-                sl = sl.sort("__z").drop("__z")
-                lo = hi
-                if sl.isEmpty():  # percentile ties can empty a slice
-                    continue
-                group = _write_group(sl, table_dir)
-                adds.append(
-                    _add_action(group, _group_stats(sl, table_dir, group, scs))
-                )
-        finally:
-            zdf.unpersist()
-    return _commit(table_dir, "compact", adds, removes_from=base)
-
-
-def _group_bytes(table_dir: str, group: str) -> int:
-    total = 0
-    for root, _, files in os.walk(os.path.join(_data_dir(table_dir), group)):
-        for f in files:
-            total += os.path.getsize(os.path.join(root, f))
-    return total
-
-
-def compact_small(
-    spark: SparkSession,
-    table_dir: str,
-    small_bytes: int = 64 << 20,
-    min_groups: int = 2,
-    stats_cols: list[str] | None = None,
-) -> int | None:
-    """BIN-PACKING compaction: rewrite ONLY the data groups smaller than
-    ``small_bytes`` into one group; large groups are untouched — so a
-    streaming ingest's small-file debt is paid with write amplification
-    bounded by the SMALL bytes, not a full-table rewrite (what real
-    compaction daemons do; full `compact()` is the table-wide OPTIMIZE).
-
-    Delete handling is exact: the small groups are read through the
-    snapshot path (both delete kinds applied), so their rewritten rows
-    are clean; the delete FILES stay live because they may still target
-    large groups — equality deletes cannot touch the rewritten rows (the
-    new group's commit sequence is later than every live delete file)
-    and positional tombstones for the removed files simply never match
-    again. Returns the new version, or None when fewer than
-    ``min_groups`` small groups exist (nothing worth paying a commit
-    for)."""
-    base = (_versions(table_dir) or [-1])[-1]
-    data, dels, pdels = _split_adds(_live_adds(table_dir, base))
-    if not data:
-        raise ValueError(f"no table at {table_dir}")
-    small = [a for a in data if _group_bytes(table_dir, a["group"]) < small_bytes]
-    if len(small) < min_groups:
-        return None
-    df = _assemble(spark, table_dir, small, dels, pdels, merge_schema=True)
-    group = _write_group(df.coalesce(1), table_dir)
-    stats = (
-        _group_stats(df, table_dir, group, stats_cols) if stats_cols else None
-    )
-    return _commit(
-        table_dir,
-        "compact",
-        [_add_action(group, stats)],
-        removes_from=base,
-        explicit_removes=[a["group"] for a in small],
-    )
+    group = _write_group(df.coalesce(target_files), table_dir)
+    return _commit(table_dir, "compact", [_add_action(group)], removes_from=base)
 
 
 def _touched_groups(
@@ -696,7 +505,7 @@ def merge(
     parquet log. Pass ``stats_cols=[key]`` so future merges can prune
     against the groups this merge writes."""
     base = (_versions(table_dir) or [-1])[-1]
-    data, dels, pdels = _split_adds(_live_adds(table_dir, base))
+    data, dels = _split_adds(_live_adds(table_dir, base))
     if not data:
         raise ValueError(f"no table at {table_dir}")
     touched = _touched_groups(changes, data, key)
@@ -711,7 +520,6 @@ def merge(
             table_dir,
             [a for a in data if a["group"] in set(touched)],
             dels,
-            pdels,
             merge_schema=True,
         )
     else:
@@ -722,16 +530,15 @@ def merge(
         from pyspark.sql import functions as F
 
         target = _assemble(
-            spark, table_dir, data, dels, pdels, merge_schema=True
+            spark, table_dir, data, dels, merge_schema=True
         ).filter(F.lit(False))
     from etl_data_processor_spark.ops.cdc import apply_changes
 
     merged = apply_changes(target, changes, key=key, op_col=op_col)
     if not touched and merged.isEmpty():
         # nothing matched and nothing to insert (e.g. deletes on absent
-        # keys): publishing an empty 'merge' commit would force every
-        # read_appends_since consumer into a full snapshot re-sync for
-        # a no-op — return without committing
+        # keys): publishing an empty 'merge' commit would add a version
+        # (and a history entry) for a no-op — return without committing
         return base, 0, len(data)
     group = _write_group(merged, table_dir)
     stats = (
@@ -790,53 +597,11 @@ def append_idempotent(
     raise ConflictError(f"could not publish after {max_retries} retries")
 
 
-def streaming_append_sink(table_dir: str, per_batch=lambda df: df):
-    """`writeStream.foreachBatch` sink committing each micro-batch as an
-    idempotent transactional append — batch replays after a failure
-    deduplicate on the recorded batch id, so the table sees each batch
-    exactly once.
-
-    Each micro-batch first goes through ``per_batch`` (DataFrame ->
-    DataFrame; identity by default). A streaming monitor passes its
-    registered key's kernel there (streaming/drift.py, streaming/evals.py),
-    so the table holds ``batch_id`` plus the kernel's columns."""
-    from pyspark.sql import functions as F
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        out = per_batch(batch_df).select(
-            F.lit(batch_id).cast("long").alias("batch_id"), "*"
-        )
-        append_idempotent(out, table_dir, f"stream-batch-{batch_id}")
-
-    return sink
-
-
-#: relative file identity 'group-uuid/part-file.parquet' — group dirs are
-#: uuids, so the last two path components identify a file uniquely and
-#: survive table relocation (positional deletes reference this, never an
-#: absolute path).
-_GF_RE = r"([^/]+/[^/]+)$"
-
-
-def _with_file_pos(df: DataFrame) -> DataFrame:
-    """Tag a parquet scan with its physical row identity via the hidden
-    ``_metadata`` column: (__gf = group/file, __pos = row index in file) —
-    exact Iceberg v2 positional-delete coordinates. Must be applied
-    directly on the scan relation (``_metadata`` does not survive a
-    union)."""
-    from pyspark.sql import functions as F
-
-    return df.withColumn(
-        "__gf", F.regexp_extract(F.col("_metadata.file_path"), _GF_RE, 1)
-    ).withColumn("__pos", F.col("_metadata.row_index"))
-
-
 def _assemble(
     spark: SparkSession,
     table_dir: str,
     data_adds: list[dict],
     del_adds: list[dict],
-    pos_adds: list[dict] | None = None,
     merge_schema: bool = False,
 ) -> DataFrame:
     """Build the logical snapshot from data groups + merge-on-read delete
@@ -844,24 +609,18 @@ def _assemble(
     deletes: each data group is tagged with its commit sequence and
     anti-joined against the (broadcast-small) union of delete-key files
     whose sequence is LATER — a delete never touches rows appended after
-    it (re-inserted keys survive), the Iceberg v2 equality-delete rule.
-    Positional deletes anti-join on exact (file, row-index) coordinates —
-    no sequence rule needed: a tombstone names one physical row, so later
-    appends (even of identical values) are untouched by construction, and
-    tombstones for compacted-away files simply never match."""
+    it (re-inserted keys survive), the Iceberg v2 equality-delete rule."""
     from pyspark.sql import functions as F
 
-    pos_adds = pos_adds or []
     ddir = _data_dir(table_dir)
     reader = (
         spark.read.option("mergeSchema", "true")
         if merge_schema
         else spark.read
     )
-    tag = _with_file_pos if pos_adds else (lambda df: df)
     if not del_adds:
-        data = tag(
-            reader.parquet(*[os.path.join(ddir, a["group"]) for a in data_adds])
+        data = reader.parquet(
+            *[os.path.join(ddir, a["group"]) for a in data_adds]
         )
     else:
         key = del_adds[0]["key"]
@@ -871,7 +630,7 @@ def _assemble(
         for a in data_adds:
             by_seq.setdefault(a["_seq"], []).append(a["group"])
         parts = [
-            tag(reader.parquet(*[os.path.join(ddir, g) for g in groups]))
+            reader.parquet(*[os.path.join(ddir, g) for g in groups])
             .withColumn("__dseq", F.lit(seq))
             for seq, groups in by_seq.items()
         ]
@@ -892,21 +651,6 @@ def _assemble(
             (data[key] == dels["__dkey"]) & (F.col("__xseq") > F.col("__dseq")),
             "left_anti",
         ).drop("__dseq")
-    if pos_adds:
-        pparts = [
-            spark.read.parquet(os.path.join(ddir, p["group"])).select(
-                F.col("gf").alias("__dgf"), F.col("pos").alias("__dpos")
-            )
-            for p in pos_adds
-        ]
-        pos = pparts[0]
-        for p in pparts[1:]:
-            pos = pos.unionByName(p)
-        data = data.join(
-            F.broadcast(pos),
-            (data["__gf"] == pos["__dgf"]) & (data["__pos"] == pos["__dpos"]),
-            "left_anti",
-        ).drop("__gf", "__pos")
     return data
 
 
@@ -924,11 +668,11 @@ def read(
     additional columns union into the widest schema (missing columns
     read as NULL) — append with a new column, old groups stay valid, no
     rewrite; the same additive-evolution contract Delta/Iceberg give."""
-    data, dels, pdels = _split_adds(_live_adds(table_dir, version))
+    data, dels = _split_adds(_live_adds(table_dir, version))
     if not data:
         raise ValueError(f"no table at {table_dir} (version={version})")
     return _assemble(
-        spark, table_dir, data, dels, pdels, merge_schema=merge_schema
+        spark, table_dir, data, dels, merge_schema=merge_schema
     )
 
 
@@ -967,9 +711,9 @@ def delete_where(
     n = keys.count()
     if n == 0:
         # zero matched keys: committing a no-op 'delete' (plus an empty
-        # delete-key file) would force read_appends_since consumers into
-        # a full snapshot re-sync for nothing — mirror merge()'s guard
-        # and return without writing or committing (ADVICE r2, low).
+        # delete-key file) would add a version for nothing — mirror
+        # merge()'s guard and return without writing or committing
+        # (ADVICE r2, low).
         keys.unpersist()
         return base, 0
     group = _write_group(keys, table_dir)
@@ -982,113 +726,6 @@ def delete_where(
         explicit_removes=[],
     )
     return v, n
-
-
-def delete_where_positional(
-    spark, table_dir: str, cond
-) -> tuple[int, int]:
-    """Iceberg-v2-style POSITIONAL merge-on-read delete (VERDICT r2 item
-    9): matching rows are tombstoned by their physical coordinates
-    (file, row-index) from the hidden ``_metadata`` column — no data
-    rewritten, and unlike equality deletes no key column is needed at
-    all, so NULL-key rows and duplicate-value rows delete exactly.
-    Later appends are untouched by construction (a tombstone names one
-    physical row in one immutable file), and ``compact()`` folds the
-    tombstones in. Predicate-vs-head conflict semantics match
-    ``delete_where``; zero matches commit nothing.
-
-    Trade-off vs equality deletes: positional files are precise but
-    require evaluating the predicate NOW against physical positions (a
-    full predicate scan at delete time), where equality deletes can be
-    written from keys alone — CDC streams favor equality, GDPR-style
-    point deletes with complex predicates favor positional.
-
-    Returns ``(version, n_tombstones)``."""
-    from pyspark.sql import functions as F
-
-    base = (_versions(table_dir) or [-1])[-1]
-    data, dels, pdels = _split_adds(_live_adds(table_dir, base))
-    if not data:
-        raise ValueError(f"no table at {table_dir}")
-    ddir = _data_dir(table_dir)
-    scan = spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(ddir, a["group"]) for a in data]
-    )
-    # Tombstoning an already-deleted row (equality- or position-wise) is a
-    # redundant no-op under anti-join, so the predicate runs on the raw
-    # scan — one pass, no delete-application subplan.
-    positions = (
-        _with_file_pos(scan)
-        .filter(cond)
-        .select(F.col("__gf").alias("gf"), F.col("__pos").alias("pos"))
-    ).persist()
-    n = positions.count()
-    if n == 0:
-        positions.unpersist()
-        return base, 0
-    group = _write_group(positions, table_dir)
-    positions.unpersist()
-    v = _commit(
-        table_dir,
-        "delete",
-        [{"op": "add", "group": group, "kind": "posdeletes"}],
-        removes_from=base,
-        explicit_removes=[],
-    )
-    return v, n
-
-
-def read_pruned(
-    spark: SparkSession,
-    table_dir: str,
-    col: str,
-    lo,
-    hi,
-    version: int | None = None,
-) -> DataFrame:
-    """Data-skipping range read: open ONLY live groups whose recorded
-    [min, max] for ``col`` overlaps [lo, hi] (groups committed without
-    stats are conservatively kept), then apply the exact filter. The
-    Delta data-skipping pattern: the log answers "which files can
-    contain this range" with zero file I/O — at 100 TB a selective
-    time-range read touches one day's groups, not the table."""
-    from pyspark.sql import functions as F
-
-    data, dels, pdels = _split_adds(_live_adds(table_dir, version))
-    if not data:
-        raise ValueError(f"no table at {table_dir} (version={version})")
-
-    def may_match(a: dict) -> bool:
-        st = a.get("stats", {}).get(col)
-        if st is None or st["min"] is None or st["max"] is None:
-            return True  # no stats -> cannot skip
-        return st["max"] >= lo and st["min"] <= hi
-
-    keep = [a for a in data if may_match(a)]
-    if not keep:  # nothing can match: one group supplies the schema,
-        # a constant-false filter drops every row without a data read
-        one = os.path.join(_data_dir(table_dir), data[0]["group"])
-        return spark.read.parquet(one).filter(F.lit(False))
-    # delete files always apply in full (their keys may target kept groups)
-    df = _assemble(spark, table_dir, keep, dels, pdels)
-    return df.filter((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
-
-
-def pruned_group_count(
-    table_dir: str, col: str, lo, hi, version: int | None = None
-) -> tuple[int, int]:
-    """(data groups that must be opened, total live data groups) for a
-    range read — the observable data-skipping ratio."""
-    data, _, _ = _split_adds(_live_adds(table_dir, version))
-    opened = sum(
-        1
-        for a in data
-        if (st := a.get("stats", {}).get(col)) is None
-        or st["min"] is None
-        or st["max"] is None
-        or (st["max"] >= lo and st["min"] <= hi)
-    )
-    return opened, len(data)
 
 
 def maintain(
@@ -1105,87 +742,6 @@ def maintain(
         return compact(spark, table_dir)
     except ConflictError:
         return None  # a writer slipped in; next tick retries
-
-
-class IncrementalBreakError(RuntimeError):
-    """A non-append commit interrupted incremental consumption; the
-    consumer must re-sync from a full snapshot read."""
-
-
-def read_appends_since(
-    spark: SparkSession, table_dir: str, since_version: int
-) -> tuple[DataFrame | None, int]:
-    """Incremental consumption (change-data-feed for append-only flows):
-    the rows added by APPEND commits in ``(since_version, head]``, plus
-    the head version to checkpoint for the next call. Returns
-    ``(None, head)`` when nothing new landed. This is what lets a
-    downstream pipeline tail the table — each tick processes only the new
-    file groups (no re-scan of the table), exactly the Delta/Iceberg
-    incremental-read pattern; pair it with ``append_idempotent`` on the
-    producer and the whole chain is exactly-once.
-
-    Raises :class:`IncrementalBreakError` if any commit in the range is
-    not an append (overwrite/compact/merge/delete): file-group
-    granularity cannot express those as row deltas, so the consumer must
-    reprocess from a snapshot (``read``) and resume from that version —
-    the same contract Delta's CDF has without a row-tracking log."""
-    head = (_versions(table_dir) or [-1])[-1]
-    new_groups: list[str] = []
-    for v in _versions(table_dir):
-        if v <= since_version or v > head:
-            continue
-        c = _read_commit(table_dir, v)
-        if c["mode"] != "append":
-            raise IncrementalBreakError(
-                f"non-append commit v{v} ({c['mode']}) in range; re-sync "
-                "from a snapshot read"
-            )
-        new_groups.extend(
-            a["group"]
-            for a in c["actions"]
-            if a["op"] == "add" and a.get("kind", "data") == "data"
-        )
-    if not new_groups:
-        return None, head
-    paths = [os.path.join(_data_dir(table_dir), g) for g in new_groups]
-    return spark.read.parquet(*paths), head
-
-
-def table_diff(
-    spark: SparkSession,
-    table_dir: str,
-    v_old: int,
-    v_new: int,
-    key: str,
-) -> DataFrame:
-    """Row-level diff between two committed versions — what changed
-    between yesterday's and today's snapshot: (key, change) with change in
-    {'added', 'removed', 'changed'}. Time travel makes this a pure
-    composition: read both versions, full-outer on the key, compare the
-    remaining columns as structs. The scan cost is the two snapshots'
-    live files; no log of row-level deltas is needed (and at file-group
-    granularity none exists)."""
-    from pyspark.sql import functions as F
-
-    old = read(spark, table_dir, version=v_old)
-    new = read(spark, table_dir, version=v_new)
-    cols = [c for c in old.columns if c != key]
-    o = old.select(
-        F.col(key), F.struct(*[F.col(c) for c in cols]).alias("__o")
-    )
-    n = new.select(
-        F.col(key), F.struct(*[F.col(c) for c in cols]).alias("__n")
-    )
-    j = o.join(n, key, "full_outer")
-    change = (
-        F.when(F.col("__o").isNull(), F.lit("added"))
-        .when(F.col("__n").isNull(), F.lit("removed"))
-        .when(F.col("__o") != F.col("__n"), F.lit("changed"))
-    )
-    return (
-        j.select(F.col(key), change.alias("change"))
-        .filter(F.col("change").isNotNull())
-    )
 
 
 def history(table_dir: str) -> list[dict]:

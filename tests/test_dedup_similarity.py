@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from etl_data_processor_spark.ops import dedup as D
 from etl_data_processor_spark.ops import similarity as SIM
+from tests import reference as R
 
 
 def test_minhash_catches_planted_near_dups(spark):
@@ -89,18 +90,6 @@ def test_lsh_cosine_topk_recall(spark, sf_dir):
     for r in approx:
         if (r.query_id, r.vec_id) in exact_scores:
             assert r.cosine == exact_scores[(r.query_id, r.vec_id)]
-
-
-def test_embedding_near_dup_pairs_verified(spark):
-    base = [0.1] * 64
-    near = [0.1] * 63 + [0.100001]
-    far = ([1.0] + [-1.0] * 63)
-    df = spark.createDataFrame(
-        [(1, base), (2, near), (3, far)], ["vec_id", "embedding"]
-    )
-    cast = df.withColumn("embedding", F.col("embedding").cast("array<float>"))
-    pairs = SIM.embedding_near_dup_pairs(cast, threshold=0.99).collect()
-    assert {(r.id_a, r.id_b) for r in pairs} == {(1, 2)}
 
 
 def test_ivf_topk_scores_match_exact(spark, sf_dir):
@@ -187,9 +176,9 @@ def test_ivf_trained_returns_k_exact_scores(spark, sf_dir):
 
 
 def test_lsh_arrow_signatures_match_expression_path(spark, sf_dir):
-    """The numpy-matmul signature path must be bit-identical to the literal
-    expression path (both take signs of the same exact fixed-point integer
-    dots), so the arrow_threshold cutover is purely physical."""
+    """The numpy-matmul signature path must be bit-identical to the
+    literal expression form (tests/reference.py): both take signs of the
+    same exact fixed-point integer dots."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(200)
     tables = [SIM.hyperplanes(64, 8, 42 + 1000003 * t) for t in range(3)]
     arrow = {
@@ -203,7 +192,7 @@ def test_lsh_arrow_signatures_match_expression_path(spark, sf_dir):
         for r in emb.select(
             "vec_id",
             *[
-                SIM.lsh_bucket(F.col("embedding"), tables[t]).alias(f"s{t}")
+                R.lsh_bucket(F.col("embedding"), tables[t]).alias(f"s{t}")
                 for t in range(3)
             ],
         ).collect()
@@ -212,36 +201,49 @@ def test_lsh_arrow_signatures_match_expression_path(spark, sf_dir):
 
 
 def test_lsh_topk_same_results_across_arrow_cutover(spark, sf_dir):
-    """Forcing the corpus side through either signature path yields the
-    identical top-k result set."""
+    """lsh_cosine_topk (Arrow corpus signatures, driver-side probes)
+    yields the identical top-k as the all-expression form."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qs = emb.filter(F.col("vec_id").isin([0, 1]))
     kw = dict(k=5, n_probes=2, n_tables=2)
-    via_expr = SIM.lsh_cosine_topk(emb, qs, arrow_threshold=10**9, **kw).collect()
-    via_arrow = SIM.lsh_cosine_topk(emb, qs, arrow_threshold=1, **kw).collect()
-    key = lambda r: (r.query_id, r.rank)
+    via_expr = R.lsh_cosine_topk_expr(emb, qs, **kw).collect()
+    via_arrow = SIM.lsh_cosine_topk(emb, qs, **kw).collect()
     assert sorted(map(tuple, via_expr)) == sorted(map(tuple, via_arrow))
 
 
 def test_ivf_arrow_training_matches_expression_path(spark, sf_dir):
-    """The Arrow map-side-combine Lloyd iteration must produce bit-identical
-    centroids to the crossJoin + rank + posexplode expression path (same
-    quantized integer dots, argmax ties to smallest cid, exact int sums)."""
+    """The Arrow map-side-combine Lloyd pass must produce bit-identical
+    per-(list, pos) sums and counts to the crossJoin + rank + posexplode
+    expression form (same quantized integer dots, argmax ties to smallest
+    cid, exact int sums), from the seeds and after one iteration."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    a = SIM.train_ivf_centroids(emb, n_lists=8, iters=2, arrow=True)
-    b = SIM.train_ivf_centroids(emb, n_lists=8, iters=2, arrow=False)
-    assert a == b
+    for iters in (0, 1):
+        cents = SIM.train_ivf_centroids(emb, n_lists=8, iters=iters)
+        arrow = {
+            tuple(r) for r in SIM._ivf_partial_sums(emb, cents, "embedding").collect()
+        }
+        expr = {tuple(r) for r in R.ivf_sums_expr(emb, cents).collect()}
+        assert arrow == expr
 
 
 def test_lsh_driver_side_probes_match_expression_path(spark, sf_dir):
     """Driver-side numpy probe buckets must be bit-identical to the
-    expression path, so collect_queries is purely a physical choice."""
+    expression form's (tests/reference.py), per table and in order."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qs = emb.filter(F.col("vec_id").isin([0, 1, 2]))
-    kw = dict(k=7, n_probes=3, n_tables=2)
-    a = SIM.lsh_cosine_topk(emb, qs, collect_queries=True, **kw).collect()
-    b = SIM.lsh_cosine_topk(emb, qs, collect_queries=False, **kw).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    qs = emb.filter(F.col("vec_id").isin([0, 1, 2])).select("vec_id", "embedding")
+    tables = [SIM.hyperplanes(64, 8, 42 + 1000003 * t) for t in range(2)]
+    rows = qs.select(
+        "embedding",
+        *[
+            R.lsh_probe_buckets(F.col("embedding"), planes, 3).alias(f"p{t}")
+            for t, planes in enumerate(tables)
+        ],
+    ).collect()
+    assert len(rows) == 3
+    for r in rows:
+        want = [(t, b) for t in range(2) for b in r[f"p{t}"]]
+        got = SIM._probe_buckets_py([float(x) for x in r.embedding], tables, 3)
+        assert got == want
 
 
 def test_pq_recall_vs_exact(spark, sf_dir):

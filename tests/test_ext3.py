@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from etl_data_processor_spark.ops import bloom as B
 from etl_data_processor_spark.ops.graph import bfs_hops
+from tests.reference import might_contain
 
 
 # ---------------------------------------------------------------- bloom
@@ -22,7 +23,7 @@ def test_bloom_has_no_false_negatives(spark):
     kdf = spark.createDataFrame([(k,) for k in keys], "k long")
     words = B.build_bloom(kdf, "k", m_bits=1 << 12, k=4)
     hits = (
-        kdf.filter(B.might_contain(F.col("k"), words, 1 << 12, k=4))
+        kdf.filter(B.might_contain_batch(words, 1 << 12, k=4)(F.col("k")))
         .count()
     )
     assert hits == len(keys)  # every row survives: zero false negatives
@@ -34,7 +35,7 @@ def test_bloom_false_positive_rate_is_sane(spark):
     member = spark.range(0, 1000).select(F.col("id").alias("k"))
     words = B.build_bloom(member, "k")
     probe = spark.range(1_000_000, 1_020_000).select(F.col("id").alias("k"))
-    fp = probe.filter(B.might_contain(F.col("k"), words, 1 << 16)).count()
+    fp = probe.filter(B.might_contain_batch(words, 1 << 16)(F.col("k"))).count()
     assert fp < 200  # 1% of 20k probes; expected ~0-10
 
 
@@ -65,24 +66,22 @@ def test_bloom_pruned_join_equals_plain_join(spark):
 
 def test_bloom_filter_evaluates_at_the_scan(spark):
     """The membership predicate must land in the fact side's Filter BEFORE
-    the join — that is the whole point (rows die pre-exchange). Checked
-    on the expression path (arrow=False; the arrow path shows an
-    ArrowEvalPython instead of the bit-test)."""
+    the join — that is the whole point (rows die pre-exchange)."""
     fact = spark.range(0, 1000).select(F.col("id").alias("fk"))
     dim = spark.range(0, 10).select(F.col("id").alias("dk"))
-    j = B.bloom_pruned_join(fact, dim, "fk", "dk", arrow=False)
+    j = B.bloom_pruned_join(fact, dim, "fk", "dk")
     plan = j._jdf.queryExecution().executedPlan().toString()
-    # the bit-test Filter must sit BELOW the join (physical plans print
-    # top-down: a child's line comes after its parent's)
-    assert "shiftrightunsigned" in plan
-    assert plan.index("shiftrightunsigned") > plan.index("Join")
+    # the Arrow membership test must sit BELOW the join (physical plans
+    # print top-down: a child's line comes after its parent's)
+    assert "ArrowEvalPython" in plan
+    assert plan.index("ArrowEvalPython") > plan.index("Join")
     assert j.count() == 10
 
 
 def test_bloom_batch_path_matches_expression_path(spark):
     """The numpy membership test must be bit-identical to the
-    expression form on random keys (both member and non-member), and
-    the arrow/expression pruned joins must agree."""
+    expression form (tests/reference.py) on random keys, both member and
+    non-member."""
     rnd = random.Random(31)
     keys = [rnd.randrange(1 << 31) for _ in range(3000)]
     kdf = spark.createDataFrame([(x,) for x in keys], "k long")
@@ -93,7 +92,7 @@ def test_bloom_batch_path_matches_expression_path(spark):
     expr = set(
         r["k"]
         for r in kdf.filter(
-            B.might_contain(F.col("k"), words, 1 << 12, k=4)
+            might_contain(F.col("k"), words, 1 << 12, k=4)
         ).collect()
     )
     batch = set(

@@ -167,26 +167,25 @@ def test_dedup_keep_is_corpus_minus_non_canonical(spark, sf_dir):
 
 
 def test_decontaminate_matches_exact_cross_join(spark, sf_dir):
+    """One bucket join between the train and bench slices of the LSH index
+    finds exactly the train docs a brute-force cross Jaccard finds, and
+    q_decontaminate keeps every other train doc."""
+    import __spark_entry__ as entry_mod
     from etl_data_processor_spark.ops.dedup import (
-        decontaminate,
-        minhash_lsh_pairs_between,
+        lsh_verified_pairs,
+        minhash_band_buckets,
         with_shingles,
     )
 
     docs = Catalog(spark, sf_dir).documents
     bench_srcs = ["src0", "src1", "src2", "src3"]
-    train = docs.filter(~F.col("source").isin(bench_srcs))
-    bench = docs.filter(F.col("source").isin(bench_srcs))
+    is_bench = F.col("source").isin(bench_srcs)
+    sh = with_shingles(docs).select("doc_id", "source", "shingles").cache()
 
     # exact model: brute-force cross Jaccard on collected shingle sets
-    tsh = {
-        r["doc_id"]: set(r["shingles"])
-        for r in with_shingles(train).select("doc_id", "shingles").collect()
-    }
-    bsh = {
-        r["doc_id"]: set(r["shingles"])
-        for r in with_shingles(bench).select("doc_id", "shingles").collect()
-    }
+    rows = sh.collect()
+    tsh = {r["doc_id"]: set(r["shingles"]) for r in rows if r["source"] not in bench_srcs}
+    bsh = {r["doc_id"]: set(r["shingles"]) for r in rows if r["source"] in bench_srcs}
     contaminated = {
         t
         for t, ts in tsh.items()
@@ -194,11 +193,15 @@ def test_decontaminate_matches_exact_cross_join(spark, sf_dir):
     }
     assert contaminated, "fixture plants cross-source near-dups"
 
-    pairs = minhash_lsh_pairs_between(train, bench, threshold=0.8)
-    assert {r["id_l"] for r in pairs.collect()} == contaminated
+    bk = minhash_band_buckets(sh, carry_cols=["source"])
+    pairs = lsh_verified_pairs(
+        bk.filter(~is_bench), bk.filter(is_bench), sh, keep=F.lit(True)
+    )
+    assert {r["id_a"] for r in pairs.collect()} == contaminated
+    sh.unpersist()
 
-    kept = {r["doc_id"] for r in decontaminate(train, bench).collect()}
-    assert kept == set(tsh) - contaminated
+    kept = entry_mod.queries()["q_decontaminate"](spark, sf_dir)
+    assert {r["doc_id"] for r in kept.collect()} == set(tsh) - contaminated
 
 
 def test_pagerank_matches_python_model(spark, sf_dir):
@@ -250,6 +253,17 @@ def test_pagerank_matches_python_model(spark, sf_dir):
         for r in pagerank_exact(edges.repartition(7), iters=5).collect()
     }
     assert got2 == rank
+
+
+def test_pagerank_of_no_edges_is_empty(spark):
+    """An empty edge list has no nodes: the rank table comes back empty,
+    typed (src long, rank_q long), instead of dividing by a node count
+    of zero."""
+    from etl_data_processor_spark.ops.graph import pagerank_exact
+
+    ranks = pagerank_exact(spark.createDataFrame([], "src long, dst long"))
+    assert ranks.dtypes == [("src", "bigint"), ("rank_q", "bigint")]
+    assert ranks.collect() == []
 
 
 def test_dedup_best_keeps_highest_quality(spark, sf_dir):
@@ -353,10 +367,10 @@ def _hand_index(spark):
 def test_decontaminate_dedup_equals_two_step_composition(spark, sf_dir, corpus):
     """decontaminate_dedup's one verified pair set against the two joins it
     replaces, over slices of the same LSH index: the train×bench pairs of
-    minhash_lsh_pairs_between plus the train×train pairs of
+    one bipartite lsh_verified_pairs join plus the train×train pairs of
     minhash_lsh_pairs, the contaminated ids, and dedup_keep over the clean
     train docs."""
-    from etl_data_processor_spark.ops.dedup import minhash_lsh_pairs_between
+    from etl_data_processor_spark.ops.dedup import lsh_verified_pairs
     from etl_data_processor_spark.ops.graph import decontaminate_dedup
     from etl_data_processor_spark.queries_north import _lsh_index
 
@@ -367,16 +381,14 @@ def test_decontaminate_dedup_equals_two_step_composition(spark, sf_dir, corpus):
         docs, sh, bk = _hand_index(spark)
     is_bench = F.col("source").isin(_BENCH_SRCS)
     train = docs.filter(~is_bench)
-    between = minhash_lsh_pairs_between(
-        train, docs.filter(is_bench), threshold=0.8,
-        shingled_left=sh.filter(~is_bench), shingled_right=sh.filter(is_bench),
-        buckets_left=bk.filter(~is_bench), buckets_right=bk.filter(is_bench),
+    between = lsh_verified_pairs(
+        bk.filter(~is_bench), bk.filter(is_bench), sh, keep=F.lit(True)
     ).collect()
     within = minhash_lsh_pairs(
         train, threshold=0.8,
         shingled=sh.filter(~is_bench), buckets=bk.filter(~is_bench),
     ).collect()
-    contaminated = {r["id_l"] for r in between}
+    contaminated = {r["id_a"] for r in between}
     clean = docs.filter(~is_bench & ~F.col("doc_id").isin(sorted(contaminated)))
     clean_ids = clean.select("doc_id")
     kept = dedup_keep(
@@ -392,7 +404,7 @@ def test_decontaminate_dedup_equals_two_step_composition(spark, sf_dir, corpus):
     assert {
         (r["id_a"], r["id_b"], r["jaccard"]) for r in pairs.collect()
     } == {
-        (min(r["id_l"], r["id_r"]), max(r["id_l"], r["id_r"]), r["jaccard"])
+        (min(r["id_a"], r["id_b"]), max(r["id_a"], r["id_b"]), r["jaccard"])
         for r in between
     } | {(r["id_a"], r["id_b"], r["jaccard"]) for r in within}
     assert {r["doc_id"] for r in got_contaminated.collect()} == contaminated

@@ -139,8 +139,8 @@ def test_pipeline_from_raw_html_matches_golden(spark):
         OUTPUT_COLUMNS,
         cards_from_html,
         run_pipeline,
-        synthetic_html_site,
     )
+    from tests.reference import synthetic_html_site
 
     listing, details = synthetic_html_site(spark, 40)
     out = run_pipeline(cards_from_html(listing, details))

@@ -85,15 +85,6 @@ def py_sample_frames(b: bytes, every_k: int, frame_size: int):
     }
 
 
-def py_resize(b: bytes, n_out: int) -> bytes:
-    if len(b) >= n_out:
-        stride = len(b) // n_out
-        sampled = b[::stride][:n_out]
-    else:
-        sampled = b
-    return sampled + b"\x00" * (n_out - len(sampled))
-
-
 @settings(max_examples=15, deadline=None)
 @given(
     st.lists(st.binary(max_size=200), min_size=1, max_size=20),
@@ -120,24 +111,3 @@ def test_sample_frames_matches_python(spark, blobs, every_k, frame_size):
         assert got.get(i, {}) == py_sample_frames(b, every_k, frame_size), (
             repr(b), every_k, frame_size,
         )
-
-
-@settings(max_examples=15, deadline=None)
-@given(
-    st.lists(st.binary(max_size=300), min_size=1, max_size=20),
-    st.integers(min_value=1, max_value=12),
-    st.integers(min_value=1, max_value=12),
-)
-@pytest.mark.slow
-def test_resize_matches_python(spark, blobs, w, h):
-    from etl_data_processor_spark.ops import multimodal as MM
-
-    df = spark.createDataFrame(
-        [(i, bytearray(b)) for i, b in enumerate(blobs)], "doc_id long, blob binary"
-    )
-    got = {
-        r.doc_id: bytes(r.resized_blob)
-        for r in MM.resize_images(df, w, h).collect()
-    }
-    for i, b in enumerate(blobs):
-        assert got[i] == py_resize(b, w * h), (repr(b), w, h)

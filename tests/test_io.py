@@ -1,5 +1,5 @@
-"""Source/sink coverage (B1): CSV + JSON roundtrips, permissive parsing,
-and bucketed tables for co-located (shuffle-free) joins."""
+"""Source/sink coverage (B1): the table catalog, partitioned and columnar
+layouts, and bucketed tables for co-located (shuffle-free) joins."""
 
 from __future__ import annotations
 
@@ -8,31 +8,7 @@ from contextlib import redirect_stdout
 
 from pyspark.sql import functions as F
 
-from etl_data_processor_spark.io import Catalog, read_csv, read_json, write_csv, write_parquet
-
-
-def test_json_roundtrip(spark, sf_dir, tmp_path):
-    docs = Catalog(spark, sf_dir).documents
-    path = str(tmp_path / "docs_json")
-    docs.write.json(path)
-    back = read_json(spark, path, schema=docs.schema)
-    assert back.count() == docs.count()
-    assert {r.doc_id for r in back.select("doc_id").collect()} == {
-        r.doc_id for r in docs.select("doc_id").collect()
-    }
-
-
-def test_csv_permissive_malformed_rows(spark, tmp_path):
-    """A3/A17 semantics: malformed records are skipped/nulled, never fatal
-    (the reference's per-record try/except, main.py:98-103)."""
-    p = tmp_path / "bad.csv"
-    p.write_text("a,b\n1,x\nnot_an_int,y\n3,z\n")
-    df = read_csv(
-        spark, str(p), schema="a int, b string", mode="PERMISSIVE"
-    )
-    rows = {(r.a, r.b) for r in df.collect()}
-    assert (1, "x") in rows and (3, "z") in rows
-    assert (None, "y") in rows  # malformed int -> null, row kept
+from etl_data_processor_spark.io import Catalog
 
 
 def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
@@ -171,63 +147,6 @@ def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
     assert filtered.count() == expected
 
 
-def test_write_clustered_tightens_rowgroup_stats(spark, sf_dir, tmp_path):
-    """write_clustered: range-partition + in-file sort must produce
-    near-disjoint per-file ts ranges (the property parquet min/max skipping
-    feeds on), where a hash-repartitioned write leaves every file spanning
-    ~the full range (no skipping possible)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from etl_data_processor_spark.io import write_clustered
-
-    ev = Catalog(spark, sf_dir).events.select("event_id", "ts", "value")
-
-    clustered = str(tmp_path / "clustered")
-    write_clustered(ev, clustered, by=["ts"], n_files=8)
-    scattered = str(tmp_path / "scattered")
-    ev.repartition(8).write.mode("overwrite").parquet(scattered)
-
-    def file_ranges(d):
-        out = []
-        for f in glob.glob(f"{d}/*.parquet"):
-            md = pq.ParquetFile(f).metadata
-            col_idx = next(
-                i for i in range(md.num_columns)
-                if md.row_group(0).column(i).path_in_schema == "ts"
-            )
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(col_idx).statistics
-                mins.append(st.min)
-                maxs.append(st.max)
-            out.append((min(mins), max(maxs)))
-        return sorted(out)
-
-    def overlap_fraction(ranges):
-        # fraction of file pairs whose ts ranges intersect
-        hits = total = 0
-        for i in range(len(ranges)):
-            for j in range(i + 1, len(ranges)):
-                total += 1
-                if ranges[i][1] >= ranges[j][0] and ranges[j][1] >= ranges[i][0]:
-                    hits += 1
-        return hits / max(total, 1)
-
-    cl = file_ranges(clustered)
-    sc = file_ranges(scattered)
-    assert len(cl) >= 4 and len(sc) >= 4
-    # clustered: ranges are near-disjoint (boundary touch allowed)
-    assert overlap_fraction(cl) <= 0.25
-    # hash-scattered: essentially every file spans every other file's range
-    assert overlap_fraction(sc) >= 0.9
-    # and the data survives the layout change
-    assert (
-        spark.read.parquet(clustered).count() == ev.count()
-    )
-
-
 def test_ntz_normalization_is_session_tz_independent(spark):
     """ADVICE r1 (medium): normalize_ntz must interpret NTZ wall time as UTC
     under ANY session timezone. The previous to_utc_timestamp(col, 'UTC')
@@ -255,178 +174,35 @@ def test_ntz_normalization_is_session_tz_independent(spark):
         spark.conf.set("spark.sql.session.timeZone", old_tz)
 
 
-def test_write_zordered_gives_both_keys_locality(spark, tmp_path):
-    """write_zordered: per-file (x, y) bounding boxes must be small in BOTH
-    dimensions, while write_clustered on x alone leaves y unconstrained —
-    the reason a two-key scan pattern needs the space-filling curve. The
-    assertion compares normalized bounding-box areas: the z-order layout's
-    mean area must be a fraction of the x-clustered layout's."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from etl_data_processor_spark.io import write_clustered, write_zordered
-
-    n = 1 << 14
-    side = 1 << 7  # full (x, y) grid [0,128)^2, x and y INDEPENDENT
-    df = spark.range(n).select(
-        (F.col("id") % side).alias("x"),
-        ((F.col("id") / side).cast("long") % side).alias("y"),
-    )
-    zpath = str(tmp_path / "zord")
-    cpath = str(tmp_path / "clust")
-    write_zordered(df, zpath, F.col("x"), F.col("y"), n_files=16)
-    write_clustered(df, cpath, ["x"], n_files=16)
-
-    def mean_extents(path):
-        xs, ys = [], []
-        for f in glob.glob(f"{path}/part-*.parquet"):
-            r = (
-                spark.read.parquet(f)
-                .agg(
-                    F.min("x"), F.max("x"), F.min("y"), F.max("y"), F.count("*")
-                )
-                .collect()[0]
-            )
-            if r[4] == 0:
-                continue
-            xs.append((r[1] - r[0] + 1) / side)
-            ys.append((r[3] - r[2] + 1) / side)
-        assert len(xs) >= 8
-        return sum(xs) / len(xs), sum(ys) / len(ys)
-
-    zx, zy = mean_extents(zpath)
-    cx, cy = mean_extents(cpath)
-    # On uniform data the bounding-box AREA is layout-invariant (1/n_files
-    # of the grid either way); what the curve buys is bounded extent in
-    # BOTH dims. 16 files over a 2-level Morton split -> ~quarter-range
-    # boxes; x-clustering leaves y unconstrained, so a y-only predicate
-    # can never skip a file there.
-    assert zx <= 0.5 and zy <= 0.5, (zx, zy)
-    assert cy >= 0.9, cy  # x-clustered: y range is the whole domain
-    assert zy < cy / 2, (zy, cy)
-    # the data survives the layout change
-    assert spark.read.parquet(zpath).count() == n
-
-
-def test_overwrite_partitions_is_surgical(spark, sf_dir, tmp_path):
-    """Dynamic partition overwrite replaces only the partitions present in
-    the incoming frame — the idempotent daily-backfill contract; static
-    overwrite would truncate every other partition."""
-    from pyspark.sql import functions as F
-
-    from etl_data_processor_spark.io import (
-        Catalog,
-        overwrite_partitions,
-        write_parquet,
-    )
-
-    ev = Catalog(spark, sf_dir).events.select(
-        "event_id", "user_id", F.to_date("ts").alias("day")
-    )
-    days = [r["day"] for r in ev.select("day").distinct().orderBy("day").limit(3).collect()]
-    base = ev.filter(F.col("day").isin(days))
-    path = str(tmp_path / "tbl")
-    write_parquet(base, path, partition_by=["day"])
-    before_other = (
-        spark.read.parquet(path).filter(F.col("day") != days[1]).count()
-    )
-
-    # backfill day[1] with a reduced set (every other event)
-    patch = base.filter(
-        (F.col("day") == days[1]) & (F.col("event_id") % 2 == 0)
-    )
-    n_patch = patch.count()
-    overwrite_partitions(patch, path, ["day"])
-
-    got = spark.read.parquet(path)
-    assert got.filter(F.col("day") != days[1]).count() == before_other
-    assert got.filter(F.col("day") == days[1]).count() == n_patch
-    # idempotent: re-running the same backfill changes nothing
-    overwrite_partitions(patch, path, ["day"])
-    assert spark.read.parquet(path).count() == before_other + n_patch
-
-
-def test_read_parquet_evolved_merges_schemas(spark, tmp_path):
-    """mergeSchema read surfaces late-added columns as nulls on old files
-    instead of dropping them."""
-    from pyspark.sql import functions as F
-
-    from etl_data_processor_spark.io import read_parquet_evolved
-
-    path = str(tmp_path / "evolving")
-    spark.range(5).select(F.col("id"), F.lit("old").alias("tag")).write.parquet(
-        f"{path}/part=1"
-    )
-    spark.range(5, 8).select(
-        F.col("id"),
-        F.lit("new").alias("tag"),
-        F.lit(1.5).alias("score"),
-    ).write.parquet(f"{path}/part=2")
-
-    got = read_parquet_evolved(spark, path)
-    assert "score" in got.columns
-    assert got.count() == 8
-    assert got.filter(F.col("score").isNull()).count() == 5
-
-
-def test_bucketed_join_plans_zero_exchanges(spark, tmp_path):
-    """write_bucketed -> join on the bucket key must plan no Exchange on
-    either side (co-partitioned reads), and values must equal the plain
-    join."""
+def test_bucketed_join_plans_zero_exchanges(spark, sf_dir):
+    """ensure_bucketed_join_tables' write-time-bucketed tables -> a join on
+    the bucket key plans no Exchange on either side (co-partitioned
+    reads), and values equal the plain join over the fixture."""
     import re
 
-    from pyspark.sql import functions as F
+    from etl_data_processor_spark.io import ensure_bucketed_join_tables
 
-    from etl_data_processor_spark.io import read_bucketed, write_bucketed
-
-    a = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") % 7).alias("va")
-    )
-    b = spark.range(0, 1000).select(
-        F.col("id").alias("k"), (F.col("id") % 11).alias("vb")
-    )
-    write_bucketed(a, "tb_a", "k", n_buckets=8, sort_col="k")
-    write_bucketed(b, "tb_b", "k", n_buckets=8, sort_col="k")
+    ob, cb = ensure_bucketed_join_tables(spark, sf_dir)
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        ba, bb = read_bucketed(spark, "tb_a"), read_bucketed(spark, "tb_b")
-        j = ba.join(bb, "k").groupBy().agg(
-            F.sum(F.col("va") * F.col("vb")).alias("s")
+        j = (
+            spark.table(ob)
+            .join(spark.table(cb), F.col("o_custkey") == F.col("c_custkey"))
+            .groupBy()
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("o_custkey").alias("s"))
         )
         plan = j._jdf.queryExecution().executedPlan().toString()
         # the join itself consumes the bucket layout: no shuffle below it
         join_part = plan[plan.index("Join"):]
         assert len(re.findall(r"\bExchange\b", join_part)) == 0, join_part
+        cat = Catalog(spark, sf_dir)
         expected = (
-            a.join(b, "k")
+            cat.orders.join(cat.customer, F.col("o_custkey") == F.col("c_custkey"))
             .groupBy()
-            .agg(F.sum(F.col("va") * F.col("vb")).alias("s"))
-            .collect()[0]["s"]
+            .agg(F.count(F.lit(1)).alias("n"), F.sum("o_custkey").alias("s"))
+            .collect()[0]
         )
-        assert j.collect()[0]["s"] == expected
+        assert j.collect()[0] == expected
     finally:
-        spark.sql("DROP TABLE IF EXISTS tb_a")
-        spark.sql("DROP TABLE IF EXISTS tb_b")
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    """ORC write/read roundtrip; the range predicate must reach the ORC
-    scan as a pushed filter (same pushdown story as parquet)."""
-    from pyspark.sql import functions as F
-
-    from etl_data_processor_spark.io import read_orc, write_orc
-
-    path = str(tmp_path / "t_orc")
-    df = spark.range(0, 1000).select(
-        F.col("id"), (F.col("id") % 7).alias("g")
-    )
-    write_orc(df, path)
-    back = read_orc(spark, path)
-    assert back.count() == 1000
-    filtered = back.filter(F.col("id") >= 900)
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    pushed = plan.split("PushedFilters")[1].split("]")[0]
-    assert "GreaterThanOrEqual(id,900)" in pushed, pushed
-    assert filtered.count() == 100
-    got = sorted(r["id"] for r in filtered.collect())
-    assert got == list(range(900, 1000))
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

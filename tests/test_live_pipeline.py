@@ -123,10 +123,8 @@ def test_live_transport_end_to_end_matches_golden(spark, live_medicines_site):
         OUTPUT_COLUMNS,
         run_pipeline,
     )
-    from etl_data_processor_spark.sources.paged import (
-        PagedDecisionSource,
-        fetch_details_live,
-    )
+    from etl_data_processor_spark.sources.paged import PagedDecisionSource
+    from tests.reference import fetch_details_live
 
     endpoint, base, hits = live_medicines_site
     spark.dataSource.register(PagedDecisionSource)
@@ -170,7 +168,7 @@ def test_live_transport_end_to_end_matches_golden(spark, live_medicines_site):
 def test_fetch_details_live_null_fills_failed_pages(spark, live_medicines_site):
     """A detail URL that 404s yields html=NULL and the row SURVIVES (the
     reference appends the un-enriched decision, main.py:283-285)."""
-    from etl_data_processor_spark.sources.paged import fetch_details_live
+    from tests.reference import fetch_details_live
 
     _, base, _ = live_medicines_site
     df = spark.createDataFrame(

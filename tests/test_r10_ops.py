@@ -195,6 +195,7 @@ def test_mwu_degenerate_counts_do_not_raise(spark, tmp_path):
     MWU variance is 0), and the Heaps monitor's first micro-batch is one
     checkpoint (the OLS slope's denominator is 0)."""
     from etl_data_processor_spark import tableformat as TF
+    from etl_data_processor_spark.streaming import streaming_append_sink
     from etl_data_processor_spark.streaming.drift import mwu_monitor
     from etl_data_processor_spark.streaming.evals import heaps_monitor_sink
 
@@ -207,7 +208,7 @@ def test_mwu_degenerate_counts_do_not_raise(spark, tmp_path):
     )
 
     mwu = str(tmp_path / "mwu")
-    TF.streaming_append_sink(mwu, mwu_monitor(ref))(const, 0)
+    streaming_append_sink(mwu, mwu_monitor(ref))(const, 0)
     row = TF.read(spark, mwu).first()
     # all ties: U*2 = cs * cr
     assert (row["ns"], row["u2"], row["z6"], row["shifted"]) == (3, 21, None, False)

@@ -5,9 +5,10 @@ production path on the real corpus plus hostile edge rows (null text,
 empty text, whitespace-only, sub-k docs, all-ties) and asserts null-safe
 equality row by row.
 
-- word_shingles: Arrow pass vs _word_shingles_expr (split+HOF+distinct).
+- word_shingles: Arrow pass vs reference.word_shingles_expr
+  (split+HOF+distinct).
 - minhash signatures: numpy (a*h+b) % p per-doc mins vs the nested-HOF
-  _minhash_sigs_expr.
+  reference.minhash_sigs_expr.
 - simhash: numpy bit-vote majority vs the zip_with accumulator chain.
 - doc_grams_arrow: batch_counts / doc_distinct / doc_counts shapes vs
   the explode+HOF gram construction they replaced.
@@ -20,6 +21,7 @@ from pyspark.sql import functions as F
 
 from etl_data_processor_spark.ops import dedup as D
 from etl_data_processor_spark.ops import text as T
+from tests import reference as R
 
 EDGE_ROWS = [
     (1, None),
@@ -49,7 +51,7 @@ def _docs(spark, sf_dir):
 def test_word_shingles_arrow_matches_expr(spark, sf_dir, edge):
     for df in (edge, _docs(spark, sf_dir)):
         cmp = df.select(
-            D._word_shingles_expr(F.col("text")).alias("o"),
+            R.word_shingles_expr(F.col("text")).alias("o"),
             D.word_shingles(F.col("text")).alias("n"),
         )
         assert cmp.filter(~F.col("o").eqNullSafe(F.col("n"))).count() == 0
@@ -67,7 +69,7 @@ def test_minhash_sigs_arrow_matches_expr(spark, sf_dir, edge):
             ),
         )
         cmp = hashed.select(
-            D._minhash_sigs_expr(F.col("__h"), params, p).alias("o"),
+            R.minhash_sigs_expr(F.col("__h"), params, p).alias("o"),
             D._minhash_sigs_col(F.col("__h"), params, p).alias("n"),
         )
         assert cmp.filter(~F.col("o").eqNullSafe(F.col("n"))).count() == 0
@@ -111,16 +113,14 @@ def test_simhash_arrow_matches_expr(spark, sf_dir, edge):
 
 
 def test_charfold_simhash_arrow_matches_expr(spark, sf_dir, edge):
-    from etl_data_processor_spark.queries_r7b import _charfold, _sig32
-
     for df in (edge, _docs(spark, sf_dir)):
         toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-        h1 = F.transform(toks, lambda t: _charfold(t, 31))
-        h2 = F.transform(toks, lambda t: _charfold(t, 37))
+        h1 = F.transform(toks, lambda t: R.charfold(t, 31))
+        h2 = F.transform(toks, lambda t: R.charfold(t, 37))
         st = D.charfold_simhash(F.col("text"), (31, 37))
         cmp = df.select(
-            _sig32(h1).alias("o_lo"),
-            _sig32(h2).alias("o_hi"),
+            R.sig32(h1).alias("o_lo"),
+            R.sig32(h2).alias("o_hi"),
             st.alias("st"),
         ).select(
             "o_lo", "o_hi",

@@ -8,7 +8,8 @@ The encoder reference is the CANONICAL min-rank-iterate BPE algorithm,
 while ops.text.bpe_encode_words applies one full fold pass per rank — a
 green differential is an empirical proof of the equivalence argument in
 its docstring. The trained-merge literal shipped in queries_r6 is pinned
-to ops.text.train_bpe_merges' output on the fixture corpus.
+to the reference trainer's output on the fixture corpus
+(tests/reference.py::train_bpe_merges).
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_data_processor_spark.ops import text as T
+from tests.reference import train_bpe_merges
 
 
 # --- pure-Python references ------------------------------------------------
@@ -92,7 +94,7 @@ def _random_corpus(seed, n_docs=60, words_per_doc=8, alphabet="abcd"):
 def test_train_bpe_merges_matches_naive_reference(spark, seed):
     docs = _random_corpus(seed)
     df = spark.createDataFrame(docs, ["doc_id", "text"])
-    got = T.train_bpe_merges(df, n_merges=12)
+    got = train_bpe_merges(df, n_merges=12)
     want = _naive_train(
         [w for _, text in docs for w in text.split()], 12
     )
@@ -145,12 +147,12 @@ def test_overlap_run_merges_leftmost_first(spark):
 
 def test_shipped_merge_list_is_trained_on_fixture(spark):
     """The literal BPE_MERGES in queries_r6 must BE train_bpe_merges'
-    output on the fixture corpus it documents (sf0.01) — the shipped
+    (tests/reference.py) output on the fixture corpus it documents (sf0.01) — the shipped
     tokenizer artifact stays reproducible from the data."""
     from etl_data_processor_spark.queries_r6 import BPE_MERGES
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    assert T.train_bpe_merges(docs, n_merges=16) == BPE_MERGES
+    assert train_bpe_merges(docs, n_merges=16) == BPE_MERGES
 
 
 def test_bpe_encode_plan_is_vocab_sized_no_python(spark, sf_dir):
@@ -528,7 +530,7 @@ def test_train_bpe_merges_vocab_cap(spark):
     word type."""
     docs = [(0, "aa bb aa bb aa cc"), (1, "aa bb aa dd ee ff")]
     df = spark.createDataFrame(docs, ["doc_id", "text"])
-    full = T.train_bpe_merges(df, n_merges=4)
-    assert T.train_bpe_merges(df, n_merges=4, max_vocab=10_000) == full
+    full = train_bpe_merges(df, n_merges=4)
+    assert train_bpe_merges(df, n_merges=4, max_vocab=10_000) == full
     # cap=1 keeps only 'aa' (freq 5): the only merge learnable is (a, a)
-    assert T.train_bpe_merges(df, n_merges=4, max_vocab=1) == [("a", "a")]
+    assert train_bpe_merges(df, n_merges=4, max_vocab=1) == [("a", "a")]

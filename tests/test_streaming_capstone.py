@@ -15,8 +15,8 @@ from pyspark.sql import functions as F
 from etl_data_processor_spark import tableformat as TF
 from etl_data_processor_spark.io import Catalog
 from etl_data_processor_spark.ops.dedup import (
+    lsh_verified_pairs,
     minhash_band_buckets,
-    minhash_lsh_pairs_between,
     with_shingles,
 )
 from etl_data_processor_spark.streaming.windows import streaming_dedup
@@ -41,6 +41,16 @@ def test_streaming_curation_matches_batch(spark, sf_dir, tmp_path):
     bk_bench = minhash_band_buckets(sh_bench).cache()
     bk_bench.count()
 
+    def contaminated_ids(df):
+        sh = with_shingles(df.select("doc_id", "text")).select(
+            "doc_id", "shingles"
+        )
+        pairs = lsh_verified_pairs(
+            minhash_band_buckets(sh), bk_bench, sh.unionByName(sh_bench),
+            keep=F.lit(True),
+        )
+        return pairs.select(F.col("id_a").alias("doc_id")).distinct()
+
     # stream input: three files with OVERLAPS (replayed rows) — the
     # at-least-once ingest reality the stateful dedup must absorb
     src = str(tmp_path / "incoming")
@@ -56,16 +66,8 @@ def test_streaming_curation_matches_batch(spark, sf_dir, tmp_path):
 
     def curate(batch_df, batch_id: int) -> None:
         batch_df = batch_df.drop("__ts")
-        pairs = minhash_lsh_pairs_between(
-            batch_df,
-            bench,
-            threshold=0.8,
-            shingled_right=sh_bench,
-            buckets_right=bk_bench,
-        )
-        contaminated = pairs.select(F.col("id_l").alias("doc_id")).distinct()
         clean = batch_df.join(
-            F.broadcast(contaminated), "doc_id", "left_anti"
+            F.broadcast(contaminated_ids(batch_df)), "doc_id", "left_anti"
         )
         TF.append_idempotent(
             clean.select("doc_id", "source"), table, f"curate-{batch_id}"
@@ -94,11 +96,7 @@ def test_streaming_curation_matches_batch(spark, sf_dir, tmp_path):
     }
 
     # batch reference: same decontamination over the distinct input set
-    ref_pairs = minhash_lsh_pairs_between(
-        train, bench, threshold=0.8,
-        shingled_right=sh_bench, buckets_right=bk_bench,
-    )
-    ref_bad = ref_pairs.select(F.col("id_l").alias("doc_id")).distinct()
+    ref_bad = contaminated_ids(train)
     want = {
         (r["doc_id"], r["source"])
         for r in train.join(F.broadcast(ref_bad), "doc_id", "left_anti")

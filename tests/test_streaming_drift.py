@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 import __spark_entry__ as entry_mod
 from etl_data_processor_spark import tableformat as TF
 from etl_data_processor_spark.io import Catalog
+from etl_data_processor_spark.streaming import streaming_append_sink
 from etl_data_processor_spark.streaming.drift import (
     jsd_monitor,
     ks_monitor,
@@ -54,7 +55,7 @@ def test_streaming_psi_matches_batch_per_file(
     reads 0, and a batch piled into one bin reads as shifted."""
     monitor = psi_monitor(_src0(spark, sf_dir))
     out = str(tmp_path / "psi")
-    stream_sources(TF.streaming_append_sink(out, monitor))
+    stream_sources(streaming_append_sink(out, monitor))
 
     got = _sink_rows(spark, out)
     assert got.pop("src0")["psi6"] == 0.0
@@ -72,7 +73,7 @@ def test_streaming_jsd_matches_batch_per_file(
     ln 2 bound, which needs the kernel's union vocabulary."""
     monitor = jsd_monitor(Catalog(spark, sf_dir).documents)
     out = str(tmp_path / "jsd")
-    stream_sources(TF.streaming_append_sink(out, monitor))
+    stream_sources(streaming_append_sink(out, monitor))
 
     assert _sink_rows(spark, out) == _key_rows(spark, sf_dir, "q_js_divergence")
 
@@ -87,7 +88,7 @@ def test_streaming_ks_matches_batch_per_file(
     D = 1 and drifts."""
     monitor = ks_monitor(_src0(spark, sf_dir))
     out = str(tmp_path / "ks")
-    stream_sources(TF.streaming_append_sink(out, monitor))
+    stream_sources(streaming_append_sink(out, monitor))
 
     got = _sink_rows(spark, out)
     assert (got["src0"]["ks6"], got.pop("src0")["drifted"]) == (0.0, 0)
@@ -105,7 +106,7 @@ def test_streaming_mwu_matches_batch_per_file(
     ref = _src0(spark, sf_dir)
     monitor = mwu_monitor(ref)
     out = str(tmp_path / "mwu")
-    stream_sources(TF.streaming_append_sink(out, monitor))
+    stream_sources(streaming_append_sink(out, monitor))
 
     got = _sink_rows(spark, out)
     assert (got["src0"]["z6"], got.pop("src0")["shifted"]) == (0.0, False)

@@ -13,6 +13,7 @@ import __spark_entry__ as entry_mod
 import pyarrow.parquet as pq
 from etl_data_processor_spark import tableformat as TF
 from etl_data_processor_spark.io import Catalog
+from etl_data_processor_spark.streaming import streaming_append_sink
 from etl_data_processor_spark.queries_r7b import heaps_ols
 from etl_data_processor_spark.streaming.evals import (
     chrf_monitor,
@@ -62,7 +63,7 @@ def test_streaming_chrf_matches_batch_per_file(
 ):
     ref = Catalog(spark, sf_dir).documents.filter(F.col("source") == "src0")
     out = str(tmp_path / "chrf")
-    stream_sources(TF.streaming_append_sink(out, chrf_monitor(ref)))
+    stream_sources(streaming_append_sink(out, chrf_monitor(ref)))
     _matches_key_per_source(spark, sf_dir, out, "q_chrf_eval")
 
 
@@ -71,7 +72,7 @@ def test_streaming_rouge_matches_batch_per_file(
 ):
     ref = Catalog(spark, sf_dir).documents.filter(F.col("source") == "src0")
     out = str(tmp_path / "rouge")
-    stream_sources(TF.streaming_append_sink(out, rouge_monitor(ref)))
+    stream_sources(streaming_append_sink(out, rouge_monitor(ref)))
     _matches_key_per_source(spark, sf_dir, out, "q_rouge_n")
 
 

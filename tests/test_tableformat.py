@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_data_processor_spark import tableformat as TF
+from etl_data_processor_spark.streaming import streaming_append_sink
 
 
 def ids(df):
@@ -146,7 +147,7 @@ def test_streaming_sink_is_exactly_once_under_replay(spark, tmp_path):
         spark.readStream.schema("id long").json(src)
     )
     q = (
-        stream.writeStream.foreachBatch(TF.streaming_append_sink(t))
+        stream.writeStream.foreachBatch(streaming_append_sink(t))
         .option("checkpointLocation", str(tmp_path / "chk"))
         .trigger(availableNow=True)
         .start()
@@ -156,58 +157,8 @@ def test_streaming_sink_is_exactly_once_under_replay(spark, tmp_path):
     assert before == list(range(10))
     assert TF.read(spark, t).columns == ["batch_id", "id"]
     # simulate the failure-recovery path: batch 0 is delivered again
-    TF.streaming_append_sink(t)(spark.range(0, 10), 0)
+    streaming_append_sink(t)(spark.range(0, 10), 0)
     assert ids(TF.read(spark, t)) == before
-
-
-def test_table_diff_classifies_changes(spark, tmp_path):
-    t = str(tmp_path / "t")
-    TF.append(
-        spark.range(0, 6).select(F.col("id"), (F.col("id") * 10).alias("v")),
-        t,
-    )
-    v_old = 0
-    v_new = TF.overwrite(
-        spark.range(2, 8).select(
-            F.col("id"),
-            F.when(F.col("id") == 3, 999).otherwise(F.col("id") * 10).alias(
-                "v"
-            ),
-        ),
-        t,
-    )
-    got = {
-        r["id"]: r["change"]
-        for r in TF.table_diff(spark, t, v_old, v_new, key="id").collect()
-    }
-    assert got == {0: "removed", 1: "removed", 3: "changed",
-                   6: "added", 7: "added"}
-
-
-def test_read_pruned_skips_groups_via_commit_stats(spark, tmp_path):
-    """Range reads must open only the groups whose recorded min/max
-    overlaps the predicate — the log answers with zero file I/O."""
-    t = str(tmp_path / "t")
-    for lo in (0, 100, 200):
-        TF.append(
-            spark.range(lo, lo + 100).select(F.col("id")),
-            t,
-            stats_cols=["id"],
-        )
-    opened, total = TF.pruned_group_count(t, "id", 120, 180)
-    assert (opened, total) == (1, 3)
-    got = ids(TF.read_pruned(spark, t, "id", 120, 180))
-    assert got == list(range(120, 181))
-    # out-of-range read returns empty but keeps the schema
-    empty = TF.read_pruned(spark, t, "id", 900, 999)
-    assert empty.count() == 0 and empty.columns == ["id"]
-    # stats-free groups are conservatively opened
-    TF.append(spark.range(500, 510), t)  # no stats
-    opened, total = TF.pruned_group_count(t, "id", 120, 180)
-    assert (opened, total) == (2, 4)
-    assert ids(TF.read_pruned(spark, t, "id", 120, 180)) == list(
-        range(120, 181)
-    )
 
 
 def _kv(spark, lo, hi):
@@ -324,33 +275,6 @@ def test_merge_conflicts_on_stale_base(spark, tmp_path):
         TF._try_publish = real_publish
 
 
-def test_incremental_read_tails_appends(spark, tmp_path):
-    """A downstream consumer checkpoints the version and processes only
-    new file groups each tick; a compaction breaks the incremental
-    contract and forces a snapshot re-sync."""
-    t = str(tmp_path / "t")
-    TF.append(spark.range(0, 5), t)
-    df, v = TF.read_appends_since(spark, t, -1)
-    assert ids(df) == list(range(5)) and v == 0
-    # nothing new -> None, same checkpoint
-    df2, v2 = TF.read_appends_since(spark, t, v)
-    assert df2 is None and v2 == 0
-    TF.append(spark.range(5, 8), t)
-    TF.append(spark.range(8, 9), t)
-    df3, v3 = TF.read_appends_since(spark, t, v)
-    assert ids(df3) == list(range(5, 9)) and v3 == 2
-    # a non-append commit in range breaks incremental consumption
-    TF.compact(spark, t)
-    with pytest.raises(TF.IncrementalBreakError):
-        TF.read_appends_since(spark, t, v3)
-    # consumer re-syncs from the snapshot and resumes from head
-    head = TF._versions(t)[-1]
-    assert ids(TF.read(spark, t)) == list(range(9))
-    TF.append(spark.range(9, 11), t)
-    df4, v4 = TF.read_appends_since(spark, t, head)
-    assert ids(df4) == [9, 10] and v4 == head + 1
-
-
 def test_mor_delete_rewrites_nothing(spark, tmp_path):
     """Merge-on-read delete: rows disappear from reads but every data
     group stays live untouched — only a delete-key file is committed."""
@@ -394,15 +318,17 @@ def test_compact_folds_deletes_in(spark, tmp_path):
     assert len(adds) == 1 and adds[0].get("kind", "data") == "data"
 
 
-def test_read_pruned_applies_deletes(spark, tmp_path):
+def test_read_point_applies_deletes(spark, tmp_path):
+    """A point lookup opens only the group whose stats cover the key, and
+    the live equality deletes still apply to it."""
     t = str(tmp_path / "t")
     for lo in (0, 100):
         TF.append(_kv(spark, lo, lo + 100), t, stats_cols=["id"])
     TF.delete_where(spark, t, "id", F.col("id").isin(120, 130, 5))
-    opened, total = TF.pruned_group_count(t, "id", 100, 199)
-    assert (opened, total) == (1, 2)  # delete files don't count as data
-    got = ids(TF.read_pruned(spark, t, "id", 100, 199))
-    assert got == [i for i in range(100, 200) if i not in (120, 130)]
+    # delete files don't count as data groups
+    assert TF.point_group_count(t, "id", 120) == (1, 2)
+    assert TF.read_point(spark, t, "id", 120).count() == 0
+    assert ids(TF.read_point(spark, t, "id", 121)) == [121]
 
 
 def test_merge_does_not_resurrect_mor_deleted_rows(spark, tmp_path):
@@ -567,125 +493,6 @@ def test_delete_where_noop_publishes_nothing(spark, tmp_path):
     assert ids(TF.read(spark, t)) == list(range(10))
 
 
-def test_positional_delete_rewrites_nothing(spark, tmp_path):
-    """Positional deletes tombstone exact physical rows: duplicate-value
-    rows and NULL-key rows (equality deletes can't touch those) delete
-    precisely; no data group is rewritten; a later re-insert of the SAME
-    values is untouched by construction."""
-    t = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [(1, 5), (2, 5), (None, 5), (3, 7)], "id long, val long"
-    )
-    TF.append(df, t)
-    groups_before = sorted(os.listdir(os.path.join(t, "data")))
-    v, n = TF.delete_where_positional(spark, t, F.col("val") == 5)
-    assert n == 3  # both id-dup rows AND the NULL-key row
-    rows = {(r["id"], r["val"]) for r in TF.read(spark, t).collect()}
-    assert rows == {(3, 7)}
-    # only the tombstone group was added; original data groups intact
-    groups_after = sorted(os.listdir(os.path.join(t, "data")))
-    assert set(groups_before) <= set(groups_after)
-    assert len(groups_after) == len(groups_before) + 1
-    # re-insert of identical values: visible (tombstones are positional)
-    TF.append(spark.createDataFrame([(1, 5)], "id long, val long"), t)
-    rows = {(r["id"], r["val"]) for r in TF.read(spark, t).collect()}
-    assert rows == {(3, 7), (1, 5)}
-
-
-def test_positional_delete_noop_publishes_nothing(spark, tmp_path):
-    t = str(tmp_path / "t")
-    TF.append(_kv(spark, 0, 10), t)
-    head = TF._versions(t)[-1]
-    v, n = TF.delete_where_positional(spark, t, F.col("id") > 999)
-    assert (v, n) == (head, 0)
-    assert TF._versions(t)[-1] == head
-
-
-def test_positional_and_equality_deletes_compose(spark, tmp_path):
-    """Both merge-on-read delete kinds apply in one read, and compact()
-    folds BOTH in (no live delete files afterwards, same rows)."""
-    t = str(tmp_path / "t")
-    TF.append(_kv(spark, 0, 10), t)
-    TF.delete_where(spark, t, "id", F.col("id") == 3)       # equality
-    TF.delete_where_positional(spark, t, F.col("id") == 7)  # positional
-    want = sorted(i for i in range(10) if i not in (3, 7))
-    assert ids(TF.read(spark, t)) == want
-    TF.compact(spark, t)
-    assert ids(TF.read(spark, t)) == want
-    data, dels, pdels = TF._split_adds(TF._live_adds(t))
-    assert dels == [] and pdels == []  # folded
-    assert len(data) == 1
-
-
-@pytest.mark.slow
-def test_zorder_compact_enables_two_key_pruning(spark, tmp_path):
-    """OPTIMIZE ZORDER BY: interleaved appends span the full (x, y) range,
-    so range reads open every group; after z-order compaction into 4
-    stat-carrying groups, a half-range predicate on EITHER key opens
-    roughly half the groups — and the data is unchanged. NULL-keyed rows
-    must survive the rewrite (row-preserving, like Delta's OPTIMIZE)."""
-    t = str(tmp_path / "t")
-    rows = [(i, i % 64, (i * 37) % 64) for i in range(4000)]
-    # NULL in x, in y, and in both — all three must survive compaction
-    rows += [(9001, None, 5), (9002, 5, None), (9003, None, None)]
-    for s in range(4):  # 4 appends, each covering the full x/y range
-        chunk = rows[s * 1000:(s + 1) * 1000] + (
-            rows[4000:] if s == 0 else []
-        )
-        TF.append(
-            spark.createDataFrame(chunk, "id long, x long, y long"),
-            t,
-            stats_cols=["x", "y"],
-        )
-    assert TF.pruned_group_count(t, "x", 48, 63)[0] == 4  # no skipping yet
-    before = {tuple(r) for r in TF.read(spark, t).collect()}
-
-    TF.compact(spark, t, target_files=4, zorder_by=("x", "y"))
-    after = {tuple(r) for r in TF.read(spark, t).collect()}
-    assert after == before
-    ox, total = TF.pruned_group_count(t, "x", 48, 63)
-    oy, _ = TF.pruned_group_count(t, "y", 48, 63)
-    assert total == 4
-    assert ox <= 2 and oy <= 2  # z-curve bounds BOTH keys per slice
-    # pruned read returns exactly the filtered rows
-    got = {
-        tuple(r)
-        for r in TF.read_pruned(spark, t, "x", 48, 63).collect()
-    }
-    assert got == {
-        r for r in before if r[1] is not None and 48 <= r[1] <= 63
-    }
-
-
-def test_compact_small_binpacks_only_small_groups(spark, tmp_path):
-    """Bin-packing compaction: small groups merge into one, the large
-    group's files are untouched on disk, both delete kinds still apply
-    correctly afterwards, and rows are identical before/after."""
-    t = str(tmp_path / "t")
-    TF.append(_kv(spark, 0, 5000), t)          # large group
-    for lo in (5000, 5010, 5020):              # three tiny groups
-        TF.append(_kv(spark, lo, lo + 10), t)
-    TF.delete_where(spark, t, "id", F.col("id") == 2)       # targets large
-    TF.delete_where_positional(spark, t, F.col("id") == 5005)  # targets small
-    before = ids(TF.read(spark, t))
-
-    data, _, _ = TF._split_adds(TF._live_adds(t))
-    sizes = {a["group"]: TF._group_bytes(t, a["group"]) for a in data}
-    large = max(sizes, key=sizes.get)
-    v = TF.compact_small(spark, t, small_bytes=sizes[large])
-    assert v is not None
-    assert ids(TF.read(spark, t)) == before  # rows identical, deletes held
-    data2, dels2, pdels2 = TF._split_adds(TF._live_adds(t))
-    live = {a["group"] for a in data2}
-    assert large in live  # untouched
-    assert len(live) == 2  # large + one packed group
-    assert dels2 and pdels2  # delete files stay live (may target large)
-    # equality delete still applies to the untouched large group
-    assert 2 not in ids(TF.read(spark, t))
-    # re-running with nothing small left is a no-op
-    assert TF.compact_small(spark, t, small_bytes=1024) is None
-
-
 @pytest.mark.slow
 def test_bloom_point_lookup_prunes_interleaved_groups(spark, tmp_path):
     """Four appends with fully-overlapping min/max (ids interleaved mod 4)
@@ -708,26 +515,6 @@ def test_bloom_point_lookup_prunes_interleaved_groups(spark, tmp_path):
         assert [r["id"] for r in rows] == [probe]  # never a false negative
     # absent key: usually zero groups opened, always zero rows
     assert TF.read_point(spark, t, "id", 999_999).count() == 0
-
-
-def test_table_ndv_from_log_registers(spark, tmp_path):
-    """NDV answered from the commit log: three appends with heavily
-    overlapping keys record HLL registers; the merged estimate lands
-    within ~15% of the true distinct count, and a group committed
-    WITHOUT registers makes the answer an honest None."""
-    t = str(tmp_path / "t")
-    for lo in (0, 2000, 4000):  # overlapping ranges: union = [0, 7000)
-        TF.append(_kv(spark, lo, lo + 3000), t, ndv_cols=["id"])
-    est = TF.table_ndv(t, "id")
-    true = 7000
-    assert est is not None and abs(est - true) / true < 0.15, est
-    # per-group registers alone estimate each group's own 3000
-    data, _, _ = TF._split_adds(TF._live_adds(t))
-    one = TF._ndv_estimate(data[0]["ndv"]["id"])
-    assert abs(one - 3000) / 3000 < 0.15, one
-    # a stats-less append poisons the merged answer -> None, not a lie
-    TF.append(_kv(spark, 9000, 9010), t)
-    assert TF.table_ndv(t, "id") is None
 
 
 # ---------------------------------------------------------------------------
