@@ -28,7 +28,6 @@ surveyed in SURVEY.md), generalized into a tested operator library:
                     (distinct → mapInPandas → left-join-back) with pluggable client.
 - ``ops.asof``    — as-of / range joins.
 - ``ops.multimodal`` — binary-blob column plumbing (decode stubbed).
-- ``streaming``   — Structured Streaming windows/watermark/session/dedup + CDC sink.
 - ``pipelines.medicines`` — the reference's end-to-end pipeline semantics on a
                     synthetic fixture (golden test).
 

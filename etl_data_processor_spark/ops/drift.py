@@ -4,10 +4,8 @@ divergence, Kolmogorov-Smirnov and Mann-Whitney U.
 Each kernel takes per-source counts plus a reference's counts and
 returns one row per source. The registered keys (q_quality_drift_psi,
 q_js_divergence, q_ks_drift, q_mannwhitney_u) are loaders that count
-the corpus and pick its reference; the streaming monitors
-(streaming/drift.py) count a micro-batch and pass a reference frozen
-per epoch. Either way the statistic is computed by the one plan below,
-the one the DuckDB oracle checks.
+the corpus and pick its reference; the statistic is computed by the
+one plan below, the one the DuckDB oracle checks.
 
 Arithmetic follows the house fixed-point discipline: integer counts,
 float terms quantized to 1e-12 integers before any sum (integer sums

@@ -37,7 +37,6 @@ from etl_data_processor_spark.ops import multimodal as MM
 from etl_data_processor_spark.ops.asof import asof_join_backward, range_join
 from etl_data_processor_spark.ops.enrich import batch_enrich, deterministic_stub_client
 from etl_data_processor_spark.ops.exact import dsum
-from etl_data_processor_spark.streaming import windows as W
 
 # DuckDB fragment: word 3-gram distinct shingles of `text` given w = split
 _DUCK_SHINGLES = "list_distinct([w[i]||' '||w[i+1]||' '||w[i+2] for i in range(1, len(w)-1)])"
@@ -1216,8 +1215,7 @@ def q_agg_approx(spark, sf_dir):
 
 
 # =====================================================================
-# Streaming-shaped windows (B36-B37) — batch form is oracle-checked;
-# true readStream semantics are in tests/test_streaming.py
+# Streaming-shaped windows (B36-B37) — the batch form is oracle-checked
 # =====================================================================
 
 @q(
@@ -1231,9 +1229,19 @@ def q_agg_approx(spark, sf_dir):
     """,
 )
 def q_stream_tumbling(spark, sf_dir):
-    """B36: tumbling window aggregate — identical grouping logic batch vs
-    stream; the streaming form adds withWatermark (tests)."""
-    return W.tumbling_counts(_cat(spark, sf_dir).events)
+    """B36: tumbling window aggregate — the same window() grouping runs
+    unchanged over a readStream (tests/test_streaming.py)."""
+    return (
+        _cat(spark, sf_dir).events
+        .groupBy(F.window("ts", "10 minutes").alias("win"))
+        .agg(F.count(F.lit(1)).alias("n"), dsum("value", 2).alias("sum_value"))
+        .select(
+            F.col("win.start").alias("win_start"),
+            F.col("win.end").alias("win_end"),
+            "n",
+            "sum_value",
+        )
+    )
 
 
 @q(
@@ -1252,7 +1260,16 @@ def q_stream_tumbling(spark, sf_dir):
 def q_stream_sliding(spark, sf_dir):
     """B36: sliding window (10 min / 5 min) — every event lands in two
     windows."""
-    return W.sliding_counts(_cat(spark, sf_dir).events)
+    return (
+        _cat(spark, sf_dir).events
+        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("win"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(
+            F.col("win.start").alias("win_start"),
+            F.col("win.end").alias("win_end"),
+            "n",
+        )
+    )
 
 
 @q(
@@ -1281,8 +1298,14 @@ def q_stream_sliding(spark, sf_dir):
 )
 def q_stream_session(spark, sf_dir):
     """B37: session windows (5-min gap) per user — batch session_window
-    equals the gaps-and-islands SQL; streaming form adds watermarked state."""
-    return W.session_counts(_cat(spark, sf_dir).events)
+    equals the gaps-and-islands SQL. session_window's end extends the gap
+    past the last event, so only the start is oracle-comparable."""
+    return (
+        _cat(spark, sf_dir).events
+        .groupBy(F.session_window("ts", "5 minutes").alias("win"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select("user_id", F.col("win.start").alias("session_start"), "n")
+    )
 
 
 # =====================================================================

@@ -821,10 +821,7 @@ def q_absence_detect(spark, sf_dir):
     when X is NOT followed by Y within T' (abandoned carts, missed
     heartbeats): clicks with no same-user purchase in the following hour,
     expressed as an interval LEFT ANTI join (key equi-condition + time
-    band — one shuffle on user_id, band-bounded state). The streaming
-    twin is stream_interval_join(..., join_type='left_outer') whose
-    null-matched rows emit once the watermark proves no match can
-    arrive (tests/test_streaming.py)."""
+    band — one shuffle on user_id, band-bounded state)."""
     ev = _cat(spark, sf_dir).events
     clicks = ev.filter(F.col("event_type") == "click").select(
         "event_id", F.col("user_id").alias("cu"), F.col("ts").alias("cts")

@@ -281,8 +281,7 @@ def q_quality_drift_psi(spark, sf_dir):
     with partition order — ops/exact). 100 TB shape: one corpus
     aggregate to (source, bin) counts; everything after is
     sources x 10 rows, reference bins broadcast back. The statistic is
-    ops.drift.psi_kernel, which streaming.drift.psi_monitor runs per
-    micro-batch; this loader supplies the reference."""
+    ops.drift.psi_kernel; this loader supplies the reference."""
     from etl_data_processor_spark.ops import drift as DR
 
     # the corpus collapses to <= |sources| x 10 rows here; cache the tiny

@@ -1065,7 +1065,7 @@ def q_ks_drift(spark, sf_dir):
     corpus-sized; the only window runs per source on that tiny grid.
     At 100 TB the value-count table for an integer-valued metric is
     bounded by the metric's range, not the row count. The statistic is
-    ops.drift.ks_kernel, shared with streaming.drift.ks_monitor."""
+    ops.drift.ks_kernel."""
     # value-distribution-sized; feeds the kernel's four branches
     vc = DR.value_counts(_cat(spark, sf_dir).documents).cache()
     return DR.ks_kernel(

@@ -286,8 +286,7 @@ def selection_chain(dp):
     """Stages 1-5 over ``dp`` (doc_id, source, text, n_chars). Returns
     the corpus-relative models — ``cuts``, ``bench`` (trigram set) and
     ``lr`` (DSIR table) — and ``scored`` (doc_id, source, n_tokens,
-    lw_q) for every survivor. q_selection_pipeline ranks ``scored``;
-    the streaming form freezes the models from an epoch's corpus.
+    lw_q) for every survivor. q_selection_pipeline ranks ``scored``.
 
     Every gate's decision is cached as a SKINNY doc-id set: without
     this, each downstream consumer re-executes the whole upstream chain
@@ -358,8 +357,7 @@ def q_selection_pipeline(spark, sf_dir):
     proved (one corpus pass each; model tables broadcast; the top-k is
     TakeOrderedAndProject with rank recovered on the <=k rows — no
     single-partition window anywhere); nothing materializes between
-    stages. The stage functions above are shared with
-    streaming.selection."""
+    stages."""
     from etl_data_processor_spark.ops.dedup import _parallelize
 
     d = _cat(spark, sf_dir).documents

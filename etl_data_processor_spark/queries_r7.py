@@ -1162,7 +1162,7 @@ def rouge_eval(cand, ref):
     counted per pair in one Arrow pass (ops.text.pair_clip_gram_counts),
     the recall denominator being the REFERENCE gram totals. Exact
     integer matches/totals, one double division. The scoring kernel of
-    q_rouge_n and of streaming.evals.rouge_monitor."""
+    q_rouge_n."""
     from etl_data_processor_spark.ops.text import pair_clip_gram_counts
 
     c = cand.select(
@@ -1205,7 +1205,7 @@ def q_rouge_n(spark, sf_dir):
     REFERENCE gram total (did the candidate cover the reference?),
     micro-averaged per source. Exact integer matches/totals; one double
     division. Plan (r10): the q_bleu_eval pair-scorer shape, scored by
-    rouge_eval (shared with the streaming monitor)."""
+    rouge_eval."""
     from etl_data_processor_spark.ops.dedup import _parallelize
 
     d = _parallelize(
@@ -1277,8 +1277,7 @@ def q_js_divergence(spark, sf_dir):
     counts contribute only the q-side term (0*ln0 pinned to 0). Scale:
     the corpus collapses to a (source, token) count table; the grid is
     |sources| x |vocab| — vocabulary-sized work however large the
-    corpus. The statistic is ops.drift.jsd_kernel, shared with
-    streaming.drift.jsd_monitor."""
+    corpus. The statistic is ops.drift.jsd_kernel."""
     from etl_data_processor_spark.ops import drift as DR
     from etl_data_processor_spark.ops.dedup import _parallelize
 

@@ -573,7 +573,7 @@ def chrf_eval(cand, ref):
     pass (ops.text.pair_clip_gram_counts — exact integer counts). Then
     the micro-sums per (source, order), chrP/chrR as the arithmetic
     means over orders of exact-integer ratios, and beta=2 F. The
-    scoring kernel of q_chrf_eval and of streaming.evals.chrf_monitor."""
+    scoring kernel of q_chrf_eval."""
     from etl_data_processor_spark.ops.text import pair_clip_gram_counts
 
     s = _chrf_strip(F.col("text"))
@@ -644,7 +644,7 @@ def q_chrf_eval(spark, sf_dir):
     3-way join that shuffled the gram multisets (~10-50x the text
     bytes) through two hash aggregates — measured 27-34
     executor-cpu-seconds at sf0.1 for this key alone. Scored by
-    chrf_eval (shared with the streaming monitor)."""
+    chrf_eval."""
     from etl_data_processor_spark.ops.dedup import _parallelize
 
     d = _parallelize(
@@ -845,8 +845,7 @@ def heaps_ols(cum, *by):
     DECIMAL(38) (xq^2 overflows int64 — the q_zipf_fit lesson), one
     double division per coefficient. Output (*by, n_points, beta6,
     logk6); below two distinct points the slope's denominator is 0 and
-    both coefficients are NULL. The fit of q_heaps_fit and of
-    streaming.evals.heaps_monitor_sink."""
+    both coefficients are NULL. The fit of q_heaps_fit."""
     q9 = lambda col: F.floor(  # noqa: E731
         F.log(col.cast("double")) * F.lit(1e9) + F.lit(0.5)
     ).cast("long")
@@ -896,8 +895,7 @@ def q_heaps_fit(spark, sf_dir):
     computable from per-bucket NEW-type counts); the only window is the
     32-row-per-source cumulative sum; moments run in DECIMAL(38)/
     HUGEINT (xq^2 overflows int64 — the q_zipf_fit lesson); one double
-    division per coefficient (heaps_ols, shared with the streaming
-    monitor)."""
+    division per coefficient (heaps_ols)."""
     from etl_data_processor_spark.ops.text import tokenize
     from pyspark.sql import Window
 

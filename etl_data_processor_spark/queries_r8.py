@@ -161,8 +161,7 @@ def q_mannwhitney_u(spark, sf_dir):
     the q_ks_drift scale argument); the only window cumulates the
     REFERENCE's bounded value table. Output: (source, ns, u2, z6,
     shifted) with the alpha=0.05 two-sided flag; a zero variance gives
-    z6 NULL and shifted false. The statistic is ops.drift.mwu_kernel,
-    shared with streaming.drift.mwu_monitor."""
+    z6 NULL and shifted false. The statistic is ops.drift.mwu_kernel."""
     from etl_data_processor_spark.ops import drift as DR
 
     # value-distribution-sized; feeds the reference and grid branches

@@ -303,8 +303,8 @@ class _PagedStreamReader(SimpleDataSourceStreamReader):
     Source): the offset is the next unread page, each micro-batch fetches up
     to ``pages_per_batch`` new pages, and ``readBetweenOffsets`` replays a
     committed range deterministically for failure recovery — which is what
-    makes the source exactly-once-capable end to end (pair with an
-    idempotent sink, streaming/windows.py::idempotent_parquet_sink).
+    makes the source exactly-once-capable end to end (pair with a sink
+    that is idempotent per batch id).
 
     This is the incremental version of the reference's polling loop
     (main.py:333-351): instead of a batch job re-fetching all pages, a

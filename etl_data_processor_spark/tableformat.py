@@ -556,47 +556,6 @@ def merge(
     return v, len(touched), len(data)
 
 
-def _committed_txns(table_dir: str) -> set[str]:
-    return {
-        c["txn"]
-        for v in _versions(table_dir)
-        for c in [_read_commit(table_dir, v)]
-        if "txn" in c
-    }
-
-
-def append_idempotent(
-    df: DataFrame, table_dir: str, txn_id: str, max_retries: int = 20
-) -> int | None:
-    """Append exactly once per ``txn_id``: the commit records the id, and a
-    replay with the same id is a NO-OP (returns None) — Delta's
-    transaction-identifier pattern. This is what makes a foreachBatch
-    sink exactly-once: Structured Streaming guarantees at-least-once
-    batch delivery with stable batch ids; recording the id in the commit
-    log upgrades that to exactly-once without any sink-side state."""
-    if txn_id in _committed_txns(table_dir):
-        return None
-    group = _write_group(df, table_dir)
-    for _ in range(max_retries):
-        head = (_versions(table_dir) or [-1])[-1]
-        if txn_id in _committed_txns(table_dir):
-            # a racing replay of the SAME batch won; drop our orphan group
-            shutil.rmtree(
-                os.path.join(_data_dir(table_dir), group), ignore_errors=True
-            )
-            return None
-        commit = {
-            "version": head + 1,
-            "mode": "append",
-            "txn": txn_id,
-            "ts_unix": time.time(),
-            "actions": [_add_action(group)],
-        }
-        if _try_publish(table_dir, head + 1, commit):
-            return head + 1
-    raise ConflictError(f"could not publish after {max_retries} retries")
-
-
 def _assemble(
     spark: SparkSession,
     table_dir: str,

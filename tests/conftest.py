@@ -23,9 +23,6 @@ def sf_dir() -> str:
     return SF_DIR
 
 
-DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
-
-
 @pytest.fixture
 def cli_main(spark):
     """The CLI's ``main``, run in-process. Its ``get_spark`` hands back the
@@ -46,45 +43,5 @@ def cli_main(spark):
                         spark.conf.set(k, before[k])
                     else:
                         spark.conf.unset(k)
-
-    return run
-
-
-@pytest.fixture(scope="session")
-def source_files(sf_dir, tmp_path_factory) -> str:
-    """The fixture's documents as one parquet file per source, src0 first:
-    a file stream with ``maxFilesPerTrigger=1`` makes each source one
-    micro-batch."""
-    import time
-
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(f"{sf_dir}/documents.parquet")
-    d = tmp_path_factory.mktemp("docs_by_source")
-    now = time.time()
-    for i, s in enumerate(sorted(set(t.column("source").to_pylist()))):
-        path = d / f"part-{i:03d}.parquet"
-        pq.write_table(t.filter(pc.equal(t["source"], s)), path)
-        os.utime(path, (now + i, now + i))  # the file source reads by mtime
-    return str(d)
-
-
-@pytest.fixture
-def stream_sources(spark, source_files, tmp_path):
-    """Run a ``foreachBatch`` sink over ``source_files``, one source per
-    micro-batch, until every file is consumed."""
-
-    def run(sink) -> None:
-        q = (
-            spark.readStream.schema(DOC_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(source_files)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", str(tmp_path / "ckpt-by-source"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     return run

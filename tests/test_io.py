@@ -1,5 +1,6 @@
-"""Source/sink coverage (B1): the table catalog, partitioned and columnar
-layouts, and bucketed tables for co-located (shuffle-free) joins."""
+"""Source/sink coverage (B1): the table catalog, the paged source, the
+partitioned split layout, and bucketed tables for co-located
+(shuffle-free) joins."""
 
 from __future__ import annotations
 
@@ -9,42 +10,6 @@ from contextlib import redirect_stdout
 from pyspark.sql import functions as F
 
 from etl_data_processor_spark.io import Catalog
-
-
-def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
-    """Bucketing both join sides on the key pre-co-locates them: the join
-    plans with NO Exchange — at 100 TB this removes the dominant cost of
-    repeated fact-fact joins on a stable key."""
-    import shutil
-
-    cat = Catalog(spark, sf_dir)
-    for t in ("b_orders", "b_lineitem"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"spark-warehouse/{t}", ignore_errors=True)
-    cat.orders.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(
-        "b_orders"
-    )
-    cat.lineitem.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(
-        "b_lineitem"
-    )
-    # disable broadcast so the join exercises the bucketed sort-merge path
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("b_lineitem").join(
-            spark.table("b_orders"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        ).select("l_orderkey", "o_totalprice", "l_quantity")
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        # co-located buckets: a SortMergeJoin with NO shuffle exchange
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning" not in plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_paged_source_partition_planning(spark):
@@ -67,84 +32,30 @@ def test_paged_source_partition_planning(spark):
     assert approved == 152  # 228 * 2/3
 
 
-def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
-    """Hive-style partitionBy layout + a partition-key filter must prune at
-    plan time: the scan's PartitionFilters carries the predicate and only
-    the matching directory is read. At 100 TB this is the difference between
-    scanning one day and scanning ten years."""
-    cat = Catalog(spark, sf_dir)
-    out = str(tmp_path / "events_by_type")
-    cat.events.write.partitionBy("event_type").parquet(out)
-
-    df = spark.read.parquet(out).filter(F.col("event_type") == "click")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain("formatted")
-    plan = buf.getvalue()
-    pf = plan.split("PartitionFilters:")[1].split("\n")[0]
-    assert "event_type" in pf
-    # pruned scan reads exactly the one partition's rows
-    expected = cat.events.filter(F.col("event_type") == "click").count()
-    assert df.count() == expected
-
-
 def test_partitioned_split_write_layout(spark, sf_dir, tmp_path):
     """train_test_split + partitionBy('split') produces the layout downstream
-    training readers partition-prune on (the B41 write path)."""
+    training readers partition-prune on (the B41 write path): a filter on
+    the split prunes at plan time (the scan's PartitionFilters carries it)
+    and reads exactly that split's rows."""
     import os
 
     from etl_data_processor_spark.ops.sampling import train_test_split
 
     cat = Catalog(spark, sf_dir)
     out = str(tmp_path / "docs_split")
-    train_test_split(cat.documents, "doc_id", {"train": 0.9, "test": 0.1}).write.partitionBy(
-        "split"
-    ).parquet(out)
+    split = train_test_split(cat.documents, "doc_id", {"train": 0.9, "test": 0.1})
+    split.write.partitionBy("split").parquet(out)
     dirs = {d for d in os.listdir(out) if d.startswith("split=")}
     assert dirs == {"split=train", "split=test"}
     back = spark.read.parquet(out)
     assert back.count() == cat.documents.count()
 
-
-def test_xml_roundtrip(spark, sf_dir, tmp_path):
-    """B1 extension: Spark 4 native XML source/sink roundtrip — schema and
-    values survive; the reader infers types back from element text."""
-    from etl_data_processor_spark.io import Catalog
-
-    p = str(tmp_path / "events_xml")
-    ev = Catalog(spark, sf_dir).events.select(
-        "event_id", "event_type", "value"
-    ).limit(50)
-    ev.write.mode("overwrite").option("rowTag", "event").format("xml").save(p)
-    back = (
-        spark.read.format("xml")
-        .option("rowTag", "event")
-        .load(p)
-        .select("event_id", "event_type", "value")
-    )
-    want = {(r.event_id, r.event_type, round(r.value, 6)) for r in ev.collect()}
-    got = {(r.event_id, r.event_type, round(r.value, 6)) for r in back.collect()}
-    assert got == want
-
-
-def test_orc_roundtrip_with_pushdown(spark, sf_dir, tmp_path):
-    # ORC is the second columnar format Spark ships natively; the engine's
-    # scan guarantees (schema fidelity, predicate pushdown to the reader)
-    # must hold there too.
-    orders = Catalog(spark, sf_dir).orders
-    p = str(tmp_path / "orders_orc")
-    orders.write.orc(p)
-    back = spark.read.orc(p)
-    assert back.schema == orders.schema
-    assert back.count() == orders.count()
-
-    filtered = back.filter(F.col("o_totalprice") > 300000.0).select(
-        "o_orderkey", "o_totalprice"
-    )
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [IsNotNull(o_totalprice), GreaterThan(o_totalprice,300000.0)" in plan
-    expected = orders.filter(F.col("o_totalprice") > 300000.0).count()
-    assert filtered.count() == expected
+    test = back.filter(F.col("split") == "test")
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        test.explain("formatted")
+    assert "split" in buf.getvalue().split("PartitionFilters:")[1].split("\n")[0]
+    assert test.count() == split.filter(F.col("split") == "test").count()
 
 
 def test_ntz_normalization_is_session_tz_independent(spark):

@@ -3,8 +3,8 @@ program, not only by tests.
 
 The scan parses the package, ``scripts/``, ``bench.py``,
 ``__spark_entry__.py`` and ``perfbench/`` with ``ast`` and looks for a
-reference to each top-level definition outside ``streaming/``. A
-reference counts only where the name can resolve to the defining module:
+reference to each top-level definition. A reference counts only where
+the name can resolve to the defining module:
 
 - inside that module, outside the definition's own body;
 - as ``from <module> import <name>``, or as ``<name>`` in a file that did so;
@@ -26,7 +26,6 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "etl_data_processor_spark"
 ENTRY_MODULES = {f"{PKG}.__main__", f"{PKG}.worker_daemon"}
-STREAMING = f"{PKG}.streaming"
 
 
 def _module_name(path: str) -> str:
@@ -141,12 +140,7 @@ def test_every_package_definition_is_reached_by_a_program():
     files = [_File(p, modules) for p in paths]
     unreached = []
     for f in files:
-        if (
-            not f.module.startswith(PKG)
-            or f.module in ENTRY_MODULES
-            or f.module == STREAMING
-            or f.module.startswith(STREAMING + ".")
-        ):
+        if not f.module.startswith(PKG) or f.module in ENTRY_MODULES:
             continue
         for node in f.tree.body:
             if not isinstance(

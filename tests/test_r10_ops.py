@@ -4,14 +4,16 @@
   signature: a fixture regenerated in place (same path, same params)
   retrains instead of serving stale centroids forever, and the
   superseded slug is left for vacuum_artifacts to reclaim.
-- degenerate micro-batches (a zero MWU variance, a one-checkpoint
-  Heaps fit) append NULL statistics through the registered keys'
-  arithmetic instead of raising out of the foreachBatch sink.
+- degenerate inputs (a zero MWU variance, a one-checkpoint Heaps fit)
+  give NULL statistics through the registered keys' arithmetic instead
+  of raising DIVIDE_BY_ZERO; the drift kernels read at their bounds on
+  a batch outside the reference's support.
 """
 
 from __future__ import annotations
 
 import io
+import math
 import os
 import shutil
 from contextlib import redirect_stdout
@@ -21,6 +23,14 @@ from pyspark.sql import functions as F
 import __spark_entry__ as entry_mod
 from etl_data_processor_spark.ops import dedup as D
 from etl_data_processor_spark.ops import similarity as SIM
+
+
+DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+
+
+def _pooled(counts, key):
+    """A reference's counts summed over its sources: (key, c)."""
+    return counts.groupBy(key).agg(F.sum("c").alias("c"))
 
 
 def _pairs(df):
@@ -188,34 +198,67 @@ def test_cached_model_retrains_on_source_regeneration(spark, tmp_path):
     assert not any(os.path.exists(p) for p in slugs)
 
 
-def test_mwu_degenerate_counts_do_not_raise(spark, tmp_path):
-    """Degenerate micro-batches run the keys' own arithmetic and append
-    NULL statistics instead of raising DIVIDE_BY_ZERO under ANSI: a
-    constant batch against a constant reference is one tie group (the
-    MWU variance is 0), and the Heaps monitor's first micro-batch is one
-    checkpoint (the OLS slope's denominator is 0)."""
-    from etl_data_processor_spark import tableformat as TF
-    from etl_data_processor_spark.streaming import streaming_append_sink
-    from etl_data_processor_spark.streaming.drift import mwu_monitor
-    from etl_data_processor_spark.streaming.evals import heaps_monitor_sink
+def test_mwu_degenerate_counts_do_not_raise(spark):
+    """Degenerate inputs run the keys' own arithmetic and give NULL
+    statistics instead of raising DIVIDE_BY_ZERO under ANSI: a constant
+    batch against a constant reference is one tie group (the MWU
+    variance is 0), and a one-checkpoint Heaps series is one point (the
+    OLS slope's denominator is 0)."""
+    from etl_data_processor_spark.ops.drift import mwu_kernel, value_counts
+    from etl_data_processor_spark.queries_r7b import heaps_ols
 
-    schema = "doc_id long, text string, lang string, source string, n_chars long"
     ref = spark.createDataFrame(
-        [(i, "a b", "en", "src0", 5) for i in range(7)], schema
+        [(i, "a b", "en", "src0", 5) for i in range(7)], DOC_SCHEMA
     )
     const = spark.createDataFrame(
-        [(i, "a b c", "en", "src1", 5) for i in range(3)], schema
+        [(i, "a b c", "en", "src1", 5) for i in range(3)], DOC_SCHEMA
     )
 
-    mwu = str(tmp_path / "mwu")
-    streaming_append_sink(mwu, mwu_monitor(ref))(const, 0)
-    row = TF.read(spark, mwu).first()
+    row = mwu_kernel(value_counts(const), _pooled(value_counts(ref), "v")).first()
     # all ties: U*2 = cs * cr
     assert (row["ns"], row["u2"], row["z6"], row["shifted"]) == (3, 21, None, False)
 
-    heaps = str(tmp_path / "heaps")
-    heaps_monitor_sink(str(tmp_path / "vocab"), heaps)(const, 0)
-    row = TF.read(spark, heaps).first()
-    assert (row["n_tokens"], row["n_types"], row["beta6"], row["logk6"]) == (
-        9, 3, None, None,
-    )
+    one = spark.createDataFrame([(9, 3)], "n long, v long")
+    row = heaps_ols(one).first()
+    assert (row["n_points"], row["beta6"], row["logk6"]) == (1, None, None)
+
+
+def test_drift_kernels_read_their_bounds_outside_the_reference(spark, sf_dir):
+    """A batch far from the src0 reference reads at each kernel's bound:
+    PSI piled into one bin is shifted, a vocabulary disjoint from the
+    corpus's sits at the JSD's ln 2 bound (the kernel's union
+    vocabulary), a batch outside the reference's support has KS D = 1,
+    and one above every reference value has the maximal Mann-Whitney U."""
+    from etl_data_processor_spark.io import Catalog
+    from etl_data_processor_spark.ops import drift as DR
+
+    docs = Catalog(spark, sf_dir).documents
+    src0 = docs.filter(F.col("source") == "src0")
+
+    def batch(rows):
+        return spark.createDataFrame(
+            [(i, t, "en", "srcX", n) for i, t, n in rows], DOC_SCHEMA
+        )
+
+    piled = DR.psi_kernel(
+        DR.psi_bin_counts(batch([(i, "!!!", 3) for i in range(100)])),
+        _pooled(DR.psi_bin_counts(src0), "bin"),
+    ).first()
+    assert piled["n_docs"] == 100 and piled["psi6"] > 0.25
+
+    disjoint = DR.jsd_kernel(
+        DR.jsd_token_counts(batch([(0, "zzz_only " * 10, 90)])),
+        _pooled(DR.jsd_token_counts(docs), "token"),
+    ).first()
+    assert abs(disjoint["jsd6"] - math.floor(math.log(2) * 1e6) / 1e6) < 2e-6
+
+    ref_vc = _pooled(DR.value_counts(src0), "v")
+    far = DR.ks_kernel(
+        DR.value_counts(batch([(i, "x", 10_000_000) for i in range(500)])), ref_vc
+    ).first()
+    assert (far["ks6"], far["drifted"]) == (1.0, 1)
+
+    rows = [(i, "x", 10_000_000 + i % 10) for i in range(200)]
+    shifted = DR.mwu_kernel(DR.value_counts(batch(rows)), ref_vc).first()
+    assert shifted["shifted"] and shifted["z6"] > 1.96
+    assert shifted["u2"] == 2 * shifted["ns"] * src0.count()

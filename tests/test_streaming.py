@@ -1,13 +1,9 @@
-"""Structured Streaming semantics tests (B36-B40): real readStream file
-sources driven through micro-batches, results drained to memory sinks.
-
-These cover what the DuckDB oracle can't: watermark late-data drops,
-stateful streaming dedup, and batch/stream agreement of window aggregates.
+"""The engine's plans driven through Structured Streaming micro-batches:
+a registered window key's grouping over a readStream file source, and
+the paged source's streaming reader resuming from its committed offset.
 """
 
 from __future__ import annotations
-
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -56,353 +52,19 @@ def _drain(stream_df, name, mode):
     return stream_df.sparkSession.table(name)
 
 
-def test_stream_tumbling_equals_batch(spark, events_stream_dir):
-    """B36: the same window() aggregation on stream vs batch must agree."""
+def test_stream_tumbling_equals_batch(spark, sf_dir, events_stream_dir, monkeypatch):
+    """B36: q_stream_tumbling's own plan, fed a readStream of the events
+    and drained in complete mode, equals the key's batch rows."""
+    from types import SimpleNamespace
+
+    from etl_data_processor_spark import queries_north as QN
+
+    want = {tuple(r) for r in QN.q_stream_tumbling(spark, sf_dir).collect()}
     stream = spark.readStream.schema(EVENT_SCHEMA).parquet(events_stream_dir)
-    agg = (
-        stream.groupBy(F.window("ts", "10 minutes").alias("win"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("win.start").alias("ws"), "n")
-    )
-    got = {
-        (r.ws.isoformat(), r.n) for r in _drain(agg, "t_tumbling", "complete").collect()
-    }
-    batch = spark.read.schema(EVENT_SCHEMA).parquet(events_stream_dir)
-    want = {
-        (r.ws.isoformat(), r.n)
-        for r in batch.groupBy(F.window("ts", "10 minutes").alias("win"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("win.start").alias("ws"), "n")
-        .collect()
-    }
-    assert got == want
-
-
-@pytest.mark.slow
-def test_watermark_drops_late_rows(spark, tmp_path):
-    """B38: a row arriving behind the watermark is dropped from the agg."""
-    src = tmp_path / "wm_src"
-    src.mkdir()
-
-    def write_batch(name, rows):
-        spark.createDataFrame(rows, ["event_id", "ts", "user_id", "event_type", "value", "props"]) \
-            .withColumn("ts", F.col("ts").cast("timestamp")) \
-            .coalesce(1).write.mode("append").parquet(str(src))
-        time.sleep(1.1)  # distinct file mtimes -> deterministic batch order
-
-    # batch 1: events at 10:00 and 11:00 -> watermark will advance to 10:50
-    write_batch("b1", [
-        (1, "2024-01-01 10:00:00", 1, "view", 1.0, "{}"),
-        (2, "2024-01-01 11:00:00", 1, "view", 1.0, "{}"),
-    ])
-    # batch 2: keeps the stream moving (the filtering watermark lags the
-    # reported one by a batch — observed behavior of the microbatch engine)
-    write_batch("b2", [
-        (5, "2024-01-01 11:01:00", 1, "view", 1.0, "{}"),
-    ])
-    # batch 3: late event at 09:00 (now firmly behind the 10:50 watermark)
-    # + on-time at 11:05
-    write_batch("b3", [
-        (3, "2024-01-01 09:00:00", 1, "view", 1.0, "{}"),
-        (4, "2024-01-01 11:05:00", 1, "view", 1.0, "{}"),
-    ])
-
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("win"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("win.start").alias("ws"), "n")
-    )
-    # update mode: watermark-late rows are dropped (complete mode would keep
-    # all state and accept them)
-    got = {
-        (r.ws.isoformat(), r.n)
-        for r in _drain(agg, "t_watermark", "update").collect()
-    }
-    # the 09:00 late row must NOT appear in any emitted update; the on-time
-    # 11:05 row must bump the 11:00 window to 3
-    assert not any(ws.startswith("2024-01-01T09") for ws, _ in got)
-    assert ("2024-01-01T11:00:00", 3) in got
-
-
-@pytest.mark.slow
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """B39: dropDuplicatesWithinWatermark keeps one row per key."""
-    src = tmp_path / "dd_src"
-    rows = [
-        (1, "2024-01-01 10:00:00", 1, "view", 1.0, "k1"),
-        (2, "2024-01-01 10:01:00", 1, "view", 1.0, "k1"),  # dup of k1
-        (3, "2024-01-01 10:02:00", 1, "view", 1.0, "k2"),
-    ]
-    spark.createDataFrame(rows, ["event_id", "ts", "user_id", "event_type", "value", "props"]) \
-        .withColumn("ts", F.col("ts").cast("timestamp")) \
-        .coalesce(1).write.parquet(str(src))
-
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(src))
-    from etl_data_processor_spark.streaming.windows import streaming_dedup
-
-    dd = streaming_dedup(stream, keys=["props"], watermark="1 hour")
-    got = _drain(dd.select("props"), "t_dedup", "append").collect()
-    assert sorted(r.props for r in got) == ["k1", "k2"]
-
-
-def test_foreach_batch_sink(spark, events_stream_dir):
-    """B40: foreachBatch sink — per-micro-batch callback with a batch df."""
-    seen: list[tuple[int, int]] = []
-
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(events_stream_dir)
-
-    def sink(batch_df, batch_id):
-        seen.append((batch_id, batch_df.count()))
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    assert sum(n for _, n in seen) == 1000  # sf0.001 events rows
-
-
-def test_session_window_batch_matches_islands(spark, sf_dir):
-    """B37: session_window on batch equals hand-computed gaps-and-islands."""
-    from etl_data_processor_spark.io import Catalog
-    from etl_data_processor_spark.streaming.windows import session_counts
-
-    ev = Catalog(spark, sf_dir).events
-    sessions = session_counts(ev).collect()
-    # islands via lag window
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("ts")
-    flagged = ev.select(
-        "user_id",
-        "ts",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (F.col("ts").cast("long") - F.lag("ts").over(w).cast("long") > 300),
-            1,
-        )
-        .otherwise(0)
-        .alias("is_new"),
-    ).withColumn(
-        "sid",
-        F.sum("is_new").over(
-            Window.partitionBy("user_id").orderBy("ts").rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
-    want = {
-        (r.user_id, r.session_start.isoformat(), r.n)
-        for r in flagged.groupBy("user_id", "sid")
-        .agg(F.min("ts").alias("session_start"), F.count(F.lit(1)).alias("n"))
-        .select("user_id", "session_start", "n")
-        .collect()
-    }
-    got = {(r.user_id, r.session_start.isoformat(), r.n) for r in sessions}
-    assert got == want
-
-
-@pytest.mark.slow
-def test_custom_stateful_running_totals(spark, tmp_path):
-    """North star: applyInPandasWithState carries per-key state across
-    micro-batches (running totals update, not restart, in batch 2)."""
-    import time as _time
-
-    src = tmp_path / "state_src"
-
-    def write_batch(rows):
-        spark.createDataFrame(rows, ["event_id", "ts", "user_id", "event_type", "value", "props"]) \
-            .withColumn("ts", F.col("ts").cast("timestamp")) \
-            .coalesce(1).write.mode("append").parquet(str(src))
-        _time.sleep(1.1)
-
-    write_batch([
-        (1, "2024-01-01 10:00:00", 1, "view", 1.0, "{}"),
-        (2, "2024-01-01 10:01:00", 1, "view", 2.0, "{}"),
-        (3, "2024-01-01 10:02:00", 2, "view", 5.0, "{}"),
-    ])
-    write_batch([
-        (4, "2024-01-01 10:03:00", 1, "view", 3.0, "{}"),
-    ])
-
-    from etl_data_processor_spark.streaming.windows import streaming_running_totals
-
-    stream = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    out = streaming_running_totals(stream)
-    got = _drain(out, "t_state", "update").collect()
-    # batch 1 emits (1, 2, 3.0) and (2, 1, 5.0); batch 2 emits (1, 3, 6.0)
-    emitted = {(r.user_id, r.n_events, r.total_value) for r in got}
-    assert (1, 2, 3.0) in emitted
-    assert (2, 1, 5.0) in emitted
-    assert (1, 3, 6.0) in emitted  # state carried across batches
-
-
-@pytest.mark.slow
-def test_stream_stream_interval_join(spark, tmp_path):
-    """B10 (streaming): watermarked stream-stream interval join — each
-    purchase joins clicks of the same user within the preceding 10 minutes."""
-    import time as _time
-
-    src = tmp_path / "ssj_src"
-    rows = [
-        (1, "2024-01-01 10:00:00", 1, "click", 1.0, "{}"),
-        (2, "2024-01-01 10:05:00", 1, "purchase", 9.0, "{}"),
-        (3, "2024-01-01 10:20:00", 1, "purchase", 9.0, "{}"),  # click too old
-        (4, "2024-01-01 10:04:00", 2, "click", 2.0, "{}"),
-        (5, "2024-01-01 10:06:00", 2, "purchase", 9.0, "{}"),
-    ]
-    spark.createDataFrame(rows, ["event_id", "ts", "user_id", "event_type", "value", "props"]) \
-        .withColumn("ts", F.col("ts").cast("timestamp")) \
-        .coalesce(1).write.parquet(str(src))
-
-    def stream():
-        return spark.readStream.schema(EVENT_SCHEMA).parquet(str(src))
-
-    clicks = (
-        stream().filter(F.col("event_type") == "click")
-        .select(F.col("event_id").alias("click_id"), F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", "30 minutes")
-    )
-    purchases = (
-        stream().filter(F.col("event_type") == "purchase")
-        .select(F.col("event_id").alias("purchase_id"), "user_id", F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", "30 minutes")
-    )
-    joined = purchases.join(
-        clicks,
-        F.expr(
-            "user_id = c_user AND c_ts >= p_ts - INTERVAL 10 MINUTES AND c_ts <= p_ts"
-        ),
-    ).select("purchase_id", "click_id")
-    got = {(r.purchase_id, r.click_id) for r in _drain(joined, "t_ssj", "append").collect()}
-    assert got == {(2, 1), (5, 4)}
-
-
-def _protobuf_usable() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _protobuf_usable(),
-    reason="transformWithStateInPandas needs the google.protobuf Python "
-    "package for its state-server protocol; this container's protobuf "
-    "install is broken (ImportError: cannot import name 'descriptor'). "
-    "applyInPandasWithState covers the same semantics above.",
-)
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """Forward-looking Spark 4 arbitrary-state API
-    (transformWithStateInPandas + RocksDB state store): same running-totals
-    semantics as test_custom_stateful_running_totals, expressed as a
-    StatefulProcessor with a ValueState."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-    src = tmp_path / "tws_src"
-    spark.createDataFrame(
-        [(1, "2024-01-01 10:00:00", 1, "view", 1.0, "{}"),
-         (2, "2024-01-01 10:01:00", 1, "view", 2.0, "{}"),
-         (3, "2024-01-01 10:02:00", 2, "view", 5.0, "{}")],
-        ["event_id", "ts", "user_id", "event_type", "value", "props"],
-    ).withColumn("ts", F.col("ts").cast("timestamp")).coalesce(1).write.mode(
-        "append"
-    ).parquet(str(src))
-
-    out_schema = StructType(
-        [StructField("user_id", LongType()), StructField("n_events", LongType()),
-         StructField("total_value", DoubleType())]
-    )
-    state_schema = StructType(
-        [StructField("n", LongType()), StructField("total", DoubleType())]
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle):
-            self._state = handle.getValueState("agg", state_schema)
-
-        def handleInputRows(self, key, rows, timerValues):
-            n, total = self._state.get() if self._state.exists() else (0, 0.0)
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self):
-            pass
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = spark.readStream.schema(EVENT_SCHEMA).parquet(str(src))
-        out = (
-            stream.withWatermark("ts", "1 hour")
-            .groupBy("user_id")
-            .transformWithStateInPandas(
-                RunningTotals(),
-                outputStructType=out_schema,
-                outputMode="Update",
-                timeMode="None",
-            )
-        )
-        got = _drain(out, "t_tws", "update").collect()
-        emitted = {(r.user_id, r.n_events, r.total_value) for r in got}
-        assert (1, 2, 3.0) in emitted and (2, 1, 5.0) in emitted
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-
-def test_idempotent_sink_survives_batch_replay(spark, events_stream_dir, tmp_path):
-    """B40 exactly-once: foreachBatch is at-least-once (a failed batch is
-    replayed with the same batch_id), so the sink must be idempotent per
-    batch_id. The dynamic-partition-overwrite recipe: replaying a batch
-    overwrites its own previous output — row counts do NOT double."""
-    from etl_data_processor_spark.streaming.windows import idempotent_parquet_sink
-
-    out = str(tmp_path / "sink_out")
-    sink = idempotent_parquet_sink(out)
-    captured: list[tuple] = []
-
-    def capturing_sink(batch_df, batch_id):
-        captured.append((batch_df.collect(), batch_id))
-        sink(batch_df, batch_id)
-
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(events_stream_dir)
-    q = (
-        stream.writeStream.foreachBatch(capturing_sink)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    n_once = spark.read.parquet(out).count()
-    assert n_once == 1000
-
-    # simulate the engine replaying every batch after a failure: same
-    # batch_id, same rows — an appending sink would double the output
-    for rows, batch_id in captured:
-        sink(spark.createDataFrame(rows, schema=EVENT_SCHEMA), batch_id)
-    assert spark.read.parquet(out).count() == n_once
+    monkeypatch.setattr(QN, "_cat", lambda *_: SimpleNamespace(events=stream))
+    agg = QN.q_stream_tumbling(spark, sf_dir)
+    got = {tuple(r) for r in _drain(agg, "t_tumbling", "complete").collect()}
+    assert got == want and len(want) > 1
 
 
 @pytest.mark.slow
@@ -419,11 +81,21 @@ def test_paged_source_streams_with_offset_resume(spark, tmp_path):
         spark.dataSource.register(PagedDecisionSource)
     except Exception:
         pass  # already registered by another test in this session
-    from etl_data_processor_spark.streaming.windows import idempotent_parquet_sink
 
     ckpt = str(tmp_path / "ckpt")
     out = str(tmp_path / "out")
-    sink = idempotent_parquet_sink(out)
+
+    def sink(batch_df, batch_id):
+        # idempotent per batch id: a replayed batch overwrites only its
+        # own partition instead of appending its rows again
+        (
+            batch_df.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(out)
+        )
+
     cumulative = []
     for _ in range(3):
         stream = (
@@ -446,305 +118,3 @@ def test_paged_source_streams_with_offset_resume(spark, tmp_path):
     assert cumulative == [50, 100, 120]
     pages = spark.read.parquet(out).groupBy("page").count().collect()
     assert {r.page: r["count"] for r in pages} == {1: 25, 2: 25, 3: 25, 4: 25, 5: 20}
-
-
-@pytest.mark.slow
-def test_streaming_cdc_upsert_snapshot(spark, tmp_path):
-    """Streaming MERGE: a U/I/D change feed maintains a parquet snapshot via
-    foreachBatch; replaying any batch (at-least-once semantics) leaves the
-    snapshot unchanged because each version derives from the previous one."""
-    import os
-    import time as _time
-
-    from etl_data_processor_spark.streaming.cdc import (
-        read_snapshot,
-        streaming_upsert_sink,
-    )
-
-    src = tmp_path / "cdc_feed"
-    out = str(tmp_path / "cdc_snapshot")
-    schema = "k long, name string, seq long, op string"
-
-    batch1 = spark.createDataFrame(
-        [(1, "a", 10, "I"), (2, "b", 11, "I"), (2, "b2", 12, "U"), (3, "c", 13, "I")],
-        schema,
-    )
-    batch2 = spark.createDataFrame(
-        [(1, None, 20, "D"), (3, "c2", 21, "U"), (4, "d", 22, "I")],
-        schema,
-    )
-    batch1.coalesce(1).write.parquet(str(src / "f1"))
-    _time.sleep(1.1)  # distinct mtimes -> deterministic file-batch order
-    batch2.coalesce(1).write.parquet(str(src / "f2"))
-    for i, d in enumerate(["f1", "f2"]):
-        os.utime(str(src / d), (1e9 + i, 1e9 + i))
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src / "*"))
-    )
-    sink = streaming_upsert_sink(out, key="k", op_col="op", seq_col="seq")
-    captured: list[tuple] = []
-
-    def capturing(batch_df, batch_id):
-        captured.append((batch_df.collect(), batch_id))
-        sink(batch_df, batch_id)
-
-    q = stream.writeStream.foreachBatch(capturing).trigger(availableNow=True).start()
-    q.awaitTermination()
-    assert len(captured) == 2
-
-    snap = {
-        r["k"]: (r["name"], r["seq"])
-        for r in read_snapshot(spark, out).collect()
-    }
-    # within-batch compaction: k=2 keeps seq 12; cross-batch: k=1 deleted,
-    # k=3 updated, k=4 inserted
-    assert snap == {2: ("b2", 12), 3: ("c2", 21), 4: ("d", 22)}
-
-    # replay every batch (same batch_id, same rows): snapshot must not change
-    for rows, batch_id in captured:
-        sink(spark.createDataFrame(rows, schema), batch_id)
-    snap2 = {
-        r["k"]: (r["name"], r["seq"])
-        for r in read_snapshot(spark, out).collect()
-    }
-    assert snap2 == snap
-
-
-def test_cdc_snapshot_compaction_and_retention(spark, tmp_path):
-    """VERDICT r1 #5: the snapshot lifecycle. compact_snapshot rewrites the
-    live version's many per-batch files into one with byte-equivalent reads;
-    expire_versions drops versions below the retention horizon without
-    changing what read_snapshot resolves."""
-    import glob
-    import os
-
-    from etl_data_processor_spark.streaming.cdc import (
-        compact_snapshot,
-        expire_versions,
-        read_snapshot,
-        streaming_upsert_sink,
-    )
-
-    out = str(tmp_path / "cdc_lifecycle")
-    schema = "k long, name string, seq long, op string"
-    sink = streaming_upsert_sink(out, key="k", op_col="op", seq_col="seq")
-    # three micro-batches -> versions v=0, v=1, v=2
-    sink(spark.createDataFrame([(1, "a", 1, "I"), (2, "b", 2, "I")], schema), 0)
-    sink(spark.createDataFrame([(2, "b2", 3, "U"), (3, "c", 4, "I")], schema), 1)
-    sink(spark.createDataFrame([(1, None, 5, "D"), (4, "d", 6, "I")], schema), 2)
-
-    before = sorted(map(tuple, read_snapshot(spark, out).collect()))
-    n_files_before = len(glob.glob(os.path.join(out, "v=2", "*.parquet")))
-
-    live = compact_snapshot(spark, out, target_files=1)
-    assert live == 2
-    after = sorted(map(tuple, read_snapshot(spark, out).collect()))
-    assert after == before  # reads equivalent pre/post-compact
-    n_files_after = len(glob.glob(os.path.join(out, "v=2", "*.parquet")))
-    assert n_files_after == 1 and n_files_before >= n_files_after
-    assert not glob.glob(os.path.join(out, ".compact-*")) and not glob.glob(
-        os.path.join(out, ".pre-*")
-    )  # no scratch/backup left behind
-
-    dropped = expire_versions(out, keep_last=2)
-    assert dropped == [0]
-    assert sorted(map(tuple, read_snapshot(spark, out).collect())) == before
-    # replay of the latest batch still finds its base (v=1 retained)
-    sink(spark.createDataFrame([(1, None, 5, "D"), (4, "d", 6, "I")], schema), 2)
-    assert sorted(map(tuple, read_snapshot(spark, out).collect())) == before
-
-
-def test_stream_static_broadcast_enrichment(spark, events_stream_dir, sf_dir):
-    """B36 ext: stream-static join — the streaming dimension-enrichment
-    workhorse (per-micro-batch lookup against a slowly-changing static
-    table; no state store involved, the static side is re-planned each
-    batch and broadcast when small). Stream and batch enrichment must
-    agree exactly."""
-    from etl_data_processor_spark.io import Catalog
-
-    # static "user dim" derived deterministically from the customer table
-    dim = (
-        Catalog(spark, sf_dir)
-        .customer.select(
-            (F.col("c_custkey") % 500).alias("user_id"),
-            F.col("c_mktsegment").alias("segment"),
-        )
-        .groupBy("user_id")
-        .agg(F.min("segment").alias("segment"))
-    )
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(events_stream_dir)
-    enriched = (
-        stream.join(F.broadcast(dim), "user_id", "left")
-        .groupBy("segment")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.floor(F.col("value") * 100).cast("long")).alias("cents"),
-        )
-    )
-    got = {
-        (r.segment, r.n, r.cents)
-        for r in _drain(enriched, "t_ss_join", "complete").collect()
-    }
-    batch = spark.read.schema(EVENT_SCHEMA).parquet(events_stream_dir)
-    want = {
-        (r.segment, r.n, r.cents)
-        for r in batch.join(F.broadcast(dim), "user_id", "left")
-        .groupBy("segment")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.floor(F.col("value") * 100).cast("long")).alias("cents"),
-        )
-        .collect()
-    }
-    assert got == want and len(got) >= 2
-
-
-@pytest.mark.slow
-def test_stream_stream_interval_join_matches_batch(spark, events_stream_dir):
-    """Stream-stream interval join (impressions->purchases attribution):
-    the streamed result must equal the equivalent batch interval join —
-    every purchase within 1 hour after a same-user click pairs up, each
-    pair exactly once."""
-    from etl_data_processor_spark.streaming.windows import stream_interval_join
-
-    def sides(df):
-        clicks = df.filter(F.col("event_type") == "click").select(
-            F.col("user_id").alias("user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        purchases = df.filter(F.col("event_type") == "purchase").select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        ).withColumnRenamed("p_user", "user_id")
-        return clicks, purchases
-
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(events_stream_dir)
-    s_clicks, s_purch = sides(stream)
-    joined = stream_interval_join(
-        s_clicks, s_purch, key="user_id",
-        left_ts="click_ts", right_ts="purchase_ts",
-        max_delay="1 hour", watermark="30 days",
-    ).select("click_id", "purchase_id")
-    got = {
-        (r["click_id"], r["purchase_id"])
-        for r in _drain(joined, "ssj_got", "append").collect()
-    }
-
-    batch = spark.read.schema(EVENT_SCHEMA).parquet(events_stream_dir)
-    b_clicks, b_purch = sides(batch)
-    want = {
-        (r["click_id"], r["purchase_id"])
-        for r in b_clicks.join(
-            b_purch.withColumnRenamed("user_id", "u2"),
-            (F.col("user_id") == F.col("u2"))
-            & (F.col("purchase_ts") >= F.col("click_ts"))
-            & (
-                F.col("purchase_ts")
-                <= F.col("click_ts") + F.expr("INTERVAL 1 hour")
-            ),
-        ).collect()
-    }
-    assert got == want and len(got) > 0
-
-
-def test_stream_stream_join_requires_watermarks_for_state_bound(spark, events_stream_dir):
-    """The interval condition + watermark is what bounds join state: the
-    plan must carry watermarks on both sides (no unbounded state)."""
-    from etl_data_processor_spark.streaming.windows import stream_interval_join
-
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(events_stream_dir)
-    left = stream.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("l_ts"), F.col("event_id").alias("l_id")
-    )
-    right = stream.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("r_ts"), F.col("event_id").alias("r_id")
-    )
-    joined = stream_interval_join(
-        left, right, key="user_id", left_ts="l_ts", right_ts="r_ts",
-        max_delay="1 hour", watermark="2 hours",
-    )
-    plan = joined._jdf.queryExecution().analyzed().toString()
-    assert plan.count("EventTimeWatermark") == 2
-
-
-def test_stream_static_broadcast_enrichment_per_event(spark, events_stream_dir, sf_dir):
-    """Stream-static join: a micro-batch stream enriches against a static
-    dimension (the broadcast lookup-join A6 in streaming form). The
-    static side re-resolves per micro-batch with NO stream state; result
-    must equal the batch join."""
-    from etl_data_processor_spark.io import Catalog
-
-    dim = Catalog(spark, sf_dir).customer.select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(events_stream_dir)
-    enriched = stream.join(F.broadcast(dim), "user_id", "left").select(
-        "event_id", "c_mktsegment"
-    )
-    got = {
-        (r["event_id"], r["c_mktsegment"])
-        for r in _drain(enriched, "sstat_got", "append").collect()
-    }
-    batch = spark.read.schema(EVENT_SCHEMA).parquet(events_stream_dir)
-    want = {
-        (r["event_id"], r["c_mktsegment"])
-        for r in batch.join(F.broadcast(dim), "user_id", "left")
-        .select("event_id", "c_mktsegment")
-        .collect()
-    }
-    assert got == want and len(got) > 0
-
-
-@pytest.mark.slow
-def test_stream_stream_left_outer_emits_absences(spark, events_stream_dir):
-    """LEFT OUTER stream-stream interval join: matched pairs equal the
-    batch inner join, and null-matched rows (absence alerts) only ever
-    name clicks the batch anti-join also calls unmatched — the engine
-    may HOLD BACK tail rows whose no-match proof needs a further
-    watermark advance, but it must never emit a false absence."""
-    from etl_data_processor_spark.streaming.windows import stream_interval_join
-
-    stream = spark.readStream.schema(EVENT_SCHEMA).parquet(events_stream_dir)
-    clicks = stream.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("event_id").alias("click_id"), F.col("ts").alias("c_ts")
-    )
-    purchases = stream.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("event_id").alias("p_id"), F.col("ts").alias("p_ts")
-    )
-    joined = stream_interval_join(
-        clicks, purchases, key="user_id", left_ts="c_ts", right_ts="p_ts",
-        max_delay="1 hour", watermark="1 minute", join_type="left_outer",
-    ).select("click_id", "p_id")
-    rows = _drain(joined, "ssj_outer", "append").collect()
-    matched = {(r["click_id"], r["p_id"]) for r in rows if r["p_id"] is not None}
-    absent = {r["click_id"] for r in rows if r["p_id"] is None}
-
-    batch = spark.read.schema(EVENT_SCHEMA).parquet(events_stream_dir)
-    b_clicks = batch.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("cu"), F.col("event_id").alias("click_id"),
-        F.col("ts").alias("c_ts"),
-    )
-    b_purch = batch.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("pu"), F.col("event_id").alias("p_id"),
-        F.col("ts").alias("p_ts"),
-    )
-    cond = (
-        (F.col("cu") == F.col("pu"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 1 hour"))
-    )
-    want_matched = {
-        (r["click_id"], r["p_id"])
-        for r in b_clicks.join(b_purch, cond).collect()
-    }
-    want_absent = {
-        r["click_id"] for r in b_clicks.join(b_purch, cond, "left_anti").collect()
-    }
-    assert matched == want_matched and len(matched) > 0
-    assert absent <= want_absent  # no false absences; tail may be held back
-    assert len(absent) > 0  # watermark advanced enough to prove some

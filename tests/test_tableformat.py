@@ -10,7 +10,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_data_processor_spark import tableformat as TF
-from etl_data_processor_spark.streaming import streaming_append_sink
 
 
 def ids(df):
@@ -125,40 +124,6 @@ def test_upsert_composes_with_apply_changes(spark, tmp_path):
     got = {r["id"]: r["val"] for r in TF.read(spark, t).collect()}
     assert got[3] == 999 and got[11] == 110 and 5 not in got
     assert len(got) == 10
-
-
-def test_idempotent_append_dedupes_on_txn_id(spark, tmp_path):
-    t = str(tmp_path / "t")
-    assert TF.append_idempotent(spark.range(0, 4), t, "batch-0") == 0
-    # replay of the same batch is a no-op
-    assert TF.append_idempotent(spark.range(0, 4), t, "batch-0") is None
-    assert TF.append_idempotent(spark.range(4, 6), t, "batch-1") == 1
-    assert ids(TF.read(spark, t)) == list(range(6))
-    assert len(TF.history(t)) == 2
-
-
-def test_streaming_sink_is_exactly_once_under_replay(spark, tmp_path):
-    """Drive the foreachBatch sink through a real rate-limited stream,
-    then replay a batch manually — the table must not double-count."""
-    src = str(tmp_path / "src")
-    t = str(tmp_path / "t")
-    spark.range(0, 10).coalesce(1).write.json(src)
-    stream = (
-        spark.readStream.schema("id long").json(src)
-    )
-    q = (
-        stream.writeStream.foreachBatch(streaming_append_sink(t))
-        .option("checkpointLocation", str(tmp_path / "chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    before = ids(TF.read(spark, t))
-    assert before == list(range(10))
-    assert TF.read(spark, t).columns == ["batch_id", "id"]
-    # simulate the failure-recovery path: batch 0 is delivered again
-    streaming_append_sink(t)(spark.range(0, 10), 0)
-    assert ids(TF.read(spark, t)) == before
 
 
 def _kv(spark, lo, hi):
