@@ -34,9 +34,7 @@ def test_paged_source_partition_planning(spark):
 
 def test_partitioned_split_write_layout(spark, sf_dir, tmp_path):
     """train_test_split + partitionBy('split') produces the layout downstream
-    training readers partition-prune on (the B41 write path): a filter on
-    the split prunes at plan time (the scan's PartitionFilters carries it)
-    and reads exactly that split's rows."""
+    training readers partition-prune on (the B41 write path)."""
     import os
 
     from etl_data_processor_spark.ops.sampling import train_test_split
@@ -50,7 +48,19 @@ def test_partitioned_split_write_layout(spark, sf_dir, tmp_path):
     back = spark.read.parquet(out)
     assert back.count() == cat.documents.count()
 
-    test = back.filter(F.col("split") == "test")
+
+def test_partitioned_write_prunes_partitions(spark, sf_dir, tmp_path):
+    """A filter on the split column of train_test_split's partitionBy
+    layout prunes at plan time: the scan's PartitionFilters carries the
+    predicate, and the read returns exactly that split's rows."""
+    from etl_data_processor_spark.ops.sampling import train_test_split
+
+    cat = Catalog(spark, sf_dir)
+    out = str(tmp_path / "docs_split")
+    split = train_test_split(cat.documents, "doc_id", {"train": 0.9, "test": 0.1})
+    split.write.partitionBy("split").parquet(out)
+
+    test = spark.read.parquet(out).filter(F.col("split") == "test")
     buf = io.StringIO()
     with redirect_stdout(buf):
         test.explain("formatted")

@@ -6,14 +6,12 @@
   superseded slug is left for vacuum_artifacts to reclaim.
 - degenerate inputs (a zero MWU variance, a one-checkpoint Heaps fit)
   give NULL statistics through the registered keys' arithmetic instead
-  of raising DIVIDE_BY_ZERO; the drift kernels read at their bounds on
-  a batch outside the reference's support.
+  of raising DIVIDE_BY_ZERO.
 """
 
 from __future__ import annotations
 
 import io
-import math
 import os
 import shutil
 from contextlib import redirect_stdout
@@ -222,43 +220,3 @@ def test_mwu_degenerate_counts_do_not_raise(spark):
     row = heaps_ols(one).first()
     assert (row["n_points"], row["beta6"], row["logk6"]) == (1, None, None)
 
-
-def test_drift_kernels_read_their_bounds_outside_the_reference(spark, sf_dir):
-    """A batch far from the src0 reference reads at each kernel's bound:
-    PSI piled into one bin is shifted, a vocabulary disjoint from the
-    corpus's sits at the JSD's ln 2 bound (the kernel's union
-    vocabulary), a batch outside the reference's support has KS D = 1,
-    and one above every reference value has the maximal Mann-Whitney U."""
-    from etl_data_processor_spark.io import Catalog
-    from etl_data_processor_spark.ops import drift as DR
-
-    docs = Catalog(spark, sf_dir).documents
-    src0 = docs.filter(F.col("source") == "src0")
-
-    def batch(rows):
-        return spark.createDataFrame(
-            [(i, t, "en", "srcX", n) for i, t, n in rows], DOC_SCHEMA
-        )
-
-    piled = DR.psi_kernel(
-        DR.psi_bin_counts(batch([(i, "!!!", 3) for i in range(100)])),
-        _pooled(DR.psi_bin_counts(src0), "bin"),
-    ).first()
-    assert piled["n_docs"] == 100 and piled["psi6"] > 0.25
-
-    disjoint = DR.jsd_kernel(
-        DR.jsd_token_counts(batch([(0, "zzz_only " * 10, 90)])),
-        _pooled(DR.jsd_token_counts(docs), "token"),
-    ).first()
-    assert abs(disjoint["jsd6"] - math.floor(math.log(2) * 1e6) / 1e6) < 2e-6
-
-    ref_vc = _pooled(DR.value_counts(src0), "v")
-    far = DR.ks_kernel(
-        DR.value_counts(batch([(i, "x", 10_000_000) for i in range(500)])), ref_vc
-    ).first()
-    assert (far["ks6"], far["drifted"]) == (1.0, 1)
-
-    rows = [(i, "x", 10_000_000 + i % 10) for i in range(200)]
-    shifted = DR.mwu_kernel(DR.value_counts(batch(rows)), ref_vc).first()
-    assert shifted["shifted"] and shifted["z6"] > 1.96
-    assert shifted["u2"] == 2 * shifted["ns"] * src0.count()
