@@ -160,15 +160,20 @@ def main(argv: list[str] | None = None) -> int:
             synthetic_cards,
         )
 
-        cards = synthetic_cards(spark, args.cards)
-        out_df = run_pipeline(cards)
-        n = out_df.count()
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
+        # the row count rides on the write's own job, so the pipeline (and
+        # its enrichment calls) runs once
+        written = Observation("medicines")
+        out_df = run_pipeline(synthetic_cards(spark, args.cards)).observe(
+            written, F.count(F.lit(1)).alias("rows")
+        )
         # CLI convenience: one CSV file, like the reference's single output
         # (main.py:329-331). The engine-level write_csv stays partitioned —
         # a 100 TB result should never be forced through one writer.
         write_csv(out_df.coalesce(1), args.out)
-        cards.unpersist()
-        log.info("wrote %d rows to %s", n, args.out)
+        log.info("wrote %d rows to %s", written.get["rows"], args.out)
         return 0
 
     if args.cmd == "query":

@@ -1,4 +1,4 @@
-"""As-of and range joins (B9/B10) — Spark has no batch as-of built-in.
+"""As-of joins (B10) — Spark has no batch as-of built-in.
 
 ``asof_join_backward`` uses the union + last-value window trick:
 tag both sides, union, sort within each key by (ts, side, tiebreak), and
@@ -15,9 +15,9 @@ under ``tolerance`` (the older value may be outside the window while the
 matched row's ts passes the gate). The struct is non-null for every right
 row, so ``last`` lands exactly on the latest match and its NULLs survive.
 
-``range_join`` is an equi-join on the key with a band predicate — Spark
-plans a hash join on the key and post-filters the band, so the cross
-product is bounded per key group.
+The band join (B9) needs no operator: ``q_join_range`` writes it as an
+equi-join on the key plus the band predicate, which Spark plans as a hash
+join that post-filters the band.
 """
 
 from __future__ import annotations
@@ -253,23 +253,3 @@ def asof_join_nearest(
         *lcols,
         *[m[c].alias(f"{c}{suffix}") for c in value_cols],
     )
-
-
-def range_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    lower: str,
-    upper: str,
-) -> DataFrame:
-    """Band/range join: same key, right_ts within [left_ts+lower,
-    left_ts+upper] (interval strings like "'5' MINUTE"). Planned as a hash
-    join on the key + band filter — never a cartesian product."""
-    cond = (
-        (left[key] == right[key])
-        & (right[right_ts] >= left[left_ts] + F.expr(f"INTERVAL {lower}"))
-        & (right[right_ts] <= left[left_ts] + F.expr(f"INTERVAL {upper}"))
-    )
-    return left.join(right, cond)

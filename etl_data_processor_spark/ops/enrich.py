@@ -2,28 +2,34 @@
 
 Generalizes the reference's core pipeline insight — A13+A14+A15 fused
 (main.py:262-305): dedupe the inputs of an expensive per-value function,
-call it in bounded chunks with per-chunk error isolation, then left-join
-results back with deterministic miss fallbacks
+call it in bounded chunks with per-chunk error isolation, then map the
+results back onto the rows with deterministic miss fallbacks
 (main.py:297-300: miss → (raw_text, '')). Rate limiting (A19) belongs to
 the client: ``llm_json_client`` paces its calls with a ``TokenBucket``.
 
 Spark-first shape:
-- The input is read twice, by the distinct keys and by the join back, and
-  Catalyst cannot share a subtree across a Python stage. A caller whose
-  input is expensive to compute (an HTML parse, an HTTP fetch) caches it
-  before the call and unpersists it after the sink, so the upstream runs
-  once (``pipelines.medicines.run_pipeline`` does). The operator itself
-  caches nothing: a plain scan saves no CPU from a cache but pays its
-  memory (``q_batch_map``), and a cache made here would have no owner to
-  release it.
-- ``distinct()`` before the expensive stage — the reference's manual rewrite
-  (main.py:264, 272-273, 285) that Catalyst won't do across a Python UDF.
-- ``mapInPandas`` for the expensive stage: Arrow delivers batches, the
-  client is constructed once per partition (the reference's session reuse,
-  main.py:26), chunking bounds each external call, failures degrade to
-  deterministic fallback rows instead of failing the job (main.py:213-214).
-- Left join back on the key; at 100 TB the distinct side is far smaller
-  than the fact side, so the join is usually broadcast-able.
+- One pass over the input. ``repartition(key_col)`` hash-partitions the
+  rows by key, so every row of a key lands in one task, and one
+  ``mapInArrow`` pass enriches them there. The input is read once, so a
+  caller has no cache to own, whatever its upstream costs (an HTML parse,
+  an HTTP fetch); the operator caches nothing either.
+- The pass reads only the key column into Python; every other column
+  goes back to the JVM as the Arrow array it came in as. Column pruning
+  cannot cross the Python node, so a caller projects its frame to the
+  columns it keeps before the call (``pipelines.medicines.run_pipeline``
+  does).
+- Dedup is a per-partition memo, the reference's manual rewrite
+  (main.py:264, 272-273, 285) that Catalyst won't do across a Python
+  stage: each distinct non-NULL key goes to the client once per task, and
+  with hash partitioning once per run. NULL keys never reach the client.
+  The memo holds one answer per distinct key of the task, since a key's
+  rows may arrive in any of the task's Arrow batches.
+- The client is constructed once per partition (the reference's session
+  reuse, main.py:26), chunking bounds each external call, and a failed
+  chunk degrades to miss rows instead of failing the job (main.py:213-214).
+- Trade-off: every row of a hot key shares one task. In the medicines
+  benchmark at seed 11 one key carries 802 of 1,500 approved rows; the
+  client calls stay per key and are spread by hash.
 
 The client is pluggable: production would wrap an LLM/HTTP service;
 ``deterministic_stub_client`` keeps tests and oracles exact.
@@ -33,8 +39,6 @@ from __future__ import annotations
 
 import time
 from collections.abc import Callable, Iterator
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -67,40 +71,50 @@ def batch_enrich(
 ) -> DataFrame:
     """Enrich ``df`` by ``key_col`` through an expensive batched function.
 
-    ``result_schema`` must contain ``key_col`` plus the enrichment columns.
-    Fallback rows (chunk failure / client miss) carry NULLs, which the final
-    join fills from ``defaults`` (coalesce), mirroring main.py:297-303.
+    ``result_schema`` must contain ``key_col`` plus the enrichment columns,
+    which are appended to ``df``'s columns. Miss rows (chunk failure,
+    client miss, NULL key) carry NULLs, which ``defaults`` fill
+    (coalesce), mirroring main.py:297-303.
 
-    ``df`` is evaluated twice (distinct keys, join back); cache it first if
-    computing it is expensive.
+    ``df`` is evaluated once, through one shuffle on ``key_col``; project
+    it to the columns the caller keeps first, since every column crosses
+    the shuffle and the Python boundary.
     """
-    field_names = [f.name for f in result_schema.fields if f.name != key_col]
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    def enrich_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    fields = [f for f in result_schema.fields if f.name != key_col]
+    names = [f.name for f in fields]
+    types = [to_arrow_type(f.dataType) for f in fields]
+
+    def enrich_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         client = client_factory()  # one client per partition (conn reuse)
-        for pdf in batches:
-            keys = pdf[key_col].tolist()
-            rows: list[dict] = []
-            for i in range(0, len(keys), chunk_size):
-                chunk = keys[i : i + chunk_size]
+        memo: dict = {}  # key -> the client's answer ({} on a miss)
+        for batch in batches:
+            keys = batch.column(key_col).to_pylist()
+            new = list(dict.fromkeys(k for k in keys if k is not None and k not in memo))
+            for i in range(0, len(new), chunk_size):
+                chunk = new[i : i + chunk_size]
                 try:
                     result = client(chunk)
                 except Exception:
                     # per-chunk isolation (main.py:213-214): failed chunk
-                    # degrades to deterministic fallback rows, job continues
+                    # degrades to miss rows, job continues
                     result = {}
                 for key in chunk:
-                    hit = result.get(key, {})
-                    rows.append(
-                        {key_col: key, **{f: hit.get(f) for f in field_names}}
-                    )
-            yield pd.DataFrame(rows, columns=[key_col] + field_names)
+                    memo[key] = result.get(key, {})
+            hits = [memo.get(k, {}) for k in keys]
+            enriched = [
+                pa.array([hit.get(n) for hit in hits], type=t)
+                for n, t in zip(names, types)
+            ]
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + enriched, names=batch.schema.names + names
+            )
 
-    distinct_keys = df.select(key_col).distinct()
-    enriched = distinct_keys.mapInPandas(enrich_partition, result_schema)
-
-    # Broadcast fits the reference's regime (hundreds of distinct keys).
-    out = df.join(F.broadcast(enriched), key_col, "left")
+    out = df.repartition(key_col).mapInArrow(
+        enrich_partition, StructType(df.schema.fields + fields)
+    )
     for col_name, fallback in (defaults or {}).items():
         out = out.withColumn(col_name, F.coalesce(F.col(col_name), fallback))
     return out
@@ -189,8 +203,8 @@ def resolve_enrich_client(
     wrap it with ``llm_json_client`` (JSON-reply parsing, chunk isolation,
     1 call/s token bucket like the reference's sleep); unset -> the
     deterministic stub, keeping tests and oracles exact. The factory runs
-    ON THE EXECUTOR inside mapInPandas, so the SDK is imported and the
-    session constructed once per partition."""
+    ON THE EXECUTOR inside batch_enrich's Arrow pass, so the SDK is
+    imported and the session constructed once per partition."""
     import os
 
     spec = os.environ.get(env_var, "")
@@ -212,8 +226,9 @@ def resolve_enrich_client(
 class TokenBucket:
     """Per-partition rate limiter (A19, main.py:212/278/351 generalized):
     allows ``rate`` calls/sec with bursts up to ``burst``. Monotonic-clock
-    based; one instance per partition inside mapInPandas (executor-local —
-    cluster-wide limits need rate*executors sized accordingly)."""
+    based; one instance per partition inside batch_enrich's Arrow pass
+    (executor-local — cluster-wide limits need rate*executors sized
+    accordingly)."""
 
     def __init__(self, rate: float, burst: int = 1):
         self.rate = float(rate)

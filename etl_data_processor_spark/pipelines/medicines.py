@@ -14,20 +14,22 @@ with the network/LLM stages replaced by deterministic equivalents:
   A9/A10 date         -> Danish month normalize, then d.m.yyyy fallback
                          (main.py:217-232, 246-256)
   A11 ATC code        -> regex token extract (main.py:234-244)
-  A13+A14+A15 enrich  -> batch_enrich: distinct raw texts -> chunked stub
-                         client -> left join back, miss => (raw_text, '')
+  A13+A14+A15 enrich  -> batch_enrich: rows hash-partitioned by raw text ->
+                         one Arrow pass, each distinct text to the chunked
+                         stub client once, miss => (raw_text, '')
                          (main.py:262-305)
   A16 project         -> display-name rename + fixed column order
                          (main.py:307-327)
   A17 sink            -> write_csv (main.py:329-331; BOM dropped)
 
-Every stage is a Column expression or an Arrow-batched mapInPandas stage.
+Every stage is a Column expression or an Arrow-batched Python stage.
 Fed from raw HTML (``cards_from_html``), the pipeline is one Catalyst plan
 with three Python stages: card extraction, detail extraction and
-enrichment. ``run_pipeline`` caches its ``cards`` input, so everything
-upstream of the enrichment (the HTML parse, or the HTTP fetch on the live
-path) is computed once even though the distinct keys and the join back
-both read it. The plan would run unchanged over a 100 TB card dump.
+enrichment. The enrichment reads its input once, through one shuffle on
+the raw drug text, so everything upstream of it (the HTML parse, or the
+HTTP fetch on the live path) runs once per action with nothing cached.
+The plan would run unchanged over a 100 TB card dump; its one skew is
+that all rows of one drug text share one enrichment task.
 """
 
 from __future__ import annotations
@@ -68,11 +70,14 @@ def run_pipeline(cards: DataFrame, client_factory=None) -> DataFrame:
     generate function — main.py:178-215 semantics), so the composed
     pipeline exercises the same factory path in tests and production.
 
-    ``cards`` is cached: the enrichment's distinct keys and its join back
-    both read it, and Catalyst cannot share the upstream Python stages (DOM
-    extraction, HTTP fetch) between them. The first job fills the cache.
-    It stays in the session until the caller calls ``cards.unpersist()``
-    after the sink."""
+    ``cards`` is read once per action and nothing is cached: the
+    enrichment is one Arrow pass over the rows hash-partitioned by
+    ``raw_drug_text``, which sends each distinct text to the client once.
+    Only the four columns the output needs cross that shuffle and the
+    Python boundary (column pruning cannot see through the Python node,
+    so ``detail_text`` is dropped here). Every row of one drug text is
+    enriched in one task: a hot text makes a long task, while the client
+    calls stay one per distinct text."""
     from etl_data_processor_spark.ops.enrich import resolve_enrich_client
 
     if client_factory is None:
@@ -80,7 +85,7 @@ def run_pipeline(cards: DataFrame, client_factory=None) -> DataFrame:
             ["active_ingredient", "trade_name"]
         )
     # A4: absolutize relative urls
-    df = cards.cache().withColumn("url", S.conditional_concat(F.col("url"), BASE_URL))
+    df = cards.withColumn("url", S.conditional_concat(F.col("url"), BASE_URL))
 
     # A5: classify, first-match-wins incl. negative lookbehind; unmatched rows
     # are dropped (extract_decision_from_card returns None -> skipped)
@@ -116,10 +121,10 @@ def run_pipeline(cards: DataFrame, client_factory=None) -> DataFrame:
     # A11: ATC code
     df = df.withColumn("atc_code", S.extract_atc_code(F.col("detail_text")))
 
-    # A13+A14+A15: distinct -> chunked stub enrichment -> left join back with
+    # A13+A14+A15: each distinct raw text to the chunked client once, with
     # the reference's miss defaults (active_ingredient=raw text, trade_name='')
     df = batch_enrich(
-        df,
+        df.select("raw_drug_text", "atc_code", "decision_date", "indication"),
         key_col="raw_drug_text",
         result_schema=_ENRICH_SCHEMA,
         client_factory=client_factory,

@@ -19,16 +19,11 @@ Registration is append-only via the ``@q`` decorator; SURVEY.md §2 keys map
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_data_processor_spark.io import Catalog
 from etl_data_processor_spark.ops import relational as R
 from etl_data_processor_spark.ops import scalar as S
-from etl_data_processor_spark.ops import text as T
 from etl_data_processor_spark.ops import arrays as A
 from etl_data_processor_spark.ops.exact import (
     dsum,

@@ -42,7 +42,7 @@ from pyspark.sql.types import (
 
 from etl_data_processor_spark.registry import q, cat as _cat
 from etl_data_processor_spark.ops import iterate
-from etl_data_processor_spark.ops.dedup import exact_jaccard, word_shingles
+from etl_data_processor_spark.ops.dedup import word_shingles
 from etl_data_processor_spark.ops.sampling import hash32_sql
 from etl_data_processor_spark.ops.similarity import stable_round6
 from etl_data_processor_spark.queries_north import _DUCK_SHINGLES

@@ -15,11 +15,9 @@ Same oracle rules as queries.py. Engine-stability notes:
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -34,7 +32,7 @@ from etl_data_processor_spark.ops import dedup as D
 from etl_data_processor_spark.ops import similarity as SIM
 from etl_data_processor_spark.ops import text as T
 from etl_data_processor_spark.ops import multimodal as MM
-from etl_data_processor_spark.ops.asof import asof_join_backward, range_join
+from etl_data_processor_spark.ops.asof import asof_join_backward
 from etl_data_processor_spark.ops.enrich import batch_enrich, deterministic_stub_client
 from etl_data_processor_spark.ops.exact import dsum
 
@@ -1036,8 +1034,9 @@ def q_text_fingerprint(spark, sf_dir):
 )
 def q_batch_map(spark, sf_dir):
     """B34: the reference's enrichment pipeline shape (main.py:262-305) —
-    distinct keys -> chunked mapInPandas with per-chunk error isolation ->
-    left join back with miss defaults. Deterministic stub client keeps it
+    rows hash-partitioned by text -> one Arrow pass that sends each
+    distinct text to the chunked client once, with per-chunk error
+    isolation -> miss defaults. Deterministic stub client keeps it
     oracle-checkable; production swaps in an LLM/HTTP client."""
     d = _cat(spark, sf_dir).documents
     schema = StructType(

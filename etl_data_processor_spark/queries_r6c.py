@@ -23,7 +23,6 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from etl_data_processor_spark.ops import similarity as SIM
 from etl_data_processor_spark.ops.relational import ranked_topk
 from etl_data_processor_spark.ops.text import (
     char_poly_hash,

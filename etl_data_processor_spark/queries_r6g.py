@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 
 from etl_data_processor_spark.ops import similarity as SIM
 from etl_data_processor_spark.ops import text as T
-from etl_data_processor_spark.ops.text import tokenize
 from etl_data_processor_spark.registry import cat as _cat
 from etl_data_processor_spark.registry import q
 

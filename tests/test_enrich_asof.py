@@ -1,4 +1,4 @@
-"""Tests for the batch-enrichment operator (B34) and as-of/range joins."""
+"""Tests for the batch-enrichment operator (B34) and as-of joins."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from etl_data_processor_spark.ops.asof import asof_join_backward, range_join
+from etl_data_processor_spark.ops.asof import asof_join_backward
 from etl_data_processor_spark.ops.enrich import batch_enrich
 
 SCHEMA = StructType(
@@ -53,7 +53,8 @@ def _logged_calls(log_dir):
 
 def test_batch_enrich_distinct_and_joinback(spark, tmp_path):
     """Distinct-before-expensive (A13): the client must see each distinct key
-    once even when the fact side repeats it."""
+    once even when the fact side repeats it, and each row gets its key's
+    answer back."""
     rows = [(i, "drug one") if i % 2 == 0 else (i, "drug two") for i in range(10)]
     df = spark.createDataFrame(rows, ["row_id", "text"])
 
@@ -94,6 +95,23 @@ def test_batch_enrich_error_isolation_and_defaults(spark):
     ).collect()
     by_text = {r.text: (r.active_ingredient, r.trade_name) for r in out}
     assert by_text == {"aaa bbb": ("aaa bbb", ""), "ccc ddd": ("ccc ddd", "")}
+
+
+def test_batch_enrich_null_keys_never_reach_the_client(spark):
+    """A NULL key is a miss row without a client call: the default stub
+    would raise on it and fail its whole chunk, so the other keys of that
+    chunk would come back as misses too."""
+    df = spark.createDataFrame(
+        [(1, "aaa bbb"), (2, None), (3, "ccc ddd")], "row_id int, text string"
+    ).coalesce(1)
+    out = batch_enrich(
+        df,
+        "text",
+        SCHEMA,
+        defaults={"active_ingredient": F.col("text"), "trade_name": F.lit("")},
+    ).collect()
+    by_id = {r.row_id: (r.active_ingredient, r.trade_name) for r in out}
+    assert by_id == {1: ("AAA", "bbb"), 2: (None, ""), 3: ("CCC", "ddd")}
 
 
 @pytest.mark.slow
@@ -142,30 +160,6 @@ def test_asof_tie_largest_tiebreak_wins(spark):
         left, right, key="user", ts="t", value_cols=["value"], tiebreak="event_id"
     ).collect()
     assert out[0].value_asof == 2.0
-
-
-def test_range_join_band(spark):
-    left = spark.createDataFrame(
-        [(1, "u", "2024-01-01 00:00:00")], ["id", "user", "t"]
-    ).withColumn("t", F.col("t").cast("timestamp"))
-    right = spark.createDataFrame(
-        [
-            (10, "u", "2024-01-01 00:10:00"),
-            (11, "u", "2024-01-01 00:40:00"),
-            (12, "v", "2024-01-01 00:05:00"),
-        ],
-        ["id", "user", "t"],
-    ).withColumn("t", F.col("t").cast("timestamp"))
-    out = range_join(
-        left,
-        right.select(F.col("id").alias("rid"), "user", F.col("t").alias("rt")),
-        key="user",
-        left_ts="t",
-        right_ts="rt",
-        lower="'0' SECOND",
-        upper="'30' MINUTE",
-    ).collect()
-    assert [r.rid for r in out] == [10]
 
 
 def test_asof_forward_basic_and_tie(spark):

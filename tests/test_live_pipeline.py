@@ -154,15 +154,14 @@ def test_live_transport_end_to_end_matches_golden(spark, live_medicines_site):
         want = sorted(tuple(r) for r in reader)
     assert got == want
 
-    # Each page is fetched once per run: run_pipeline caches its cards, so
-    # the enrichment's distinct keys and its join back do not each re-run
-    # the fetch. Page 1 also serves the driver's planning fetch.
+    # Each page is fetched once per run: the enrichment reads its input
+    # once, through one shuffle on the drug text, so nothing needs a
+    # cache. Page 1 also serves the driver's planning fetch.
     detail_hits = {p: n for p, n in hits.items() if not p.startswith("/api")}
     assert len(detail_hits) == 30
     assert set(detail_hits.values()) == {1}, detail_hits
     assert hits["/api?page=1"] == 2
     assert hits["/api?page=2"] == 1
-    cards.unpersist()
 
 
 def test_fetch_details_live_null_fills_failed_pages(spark, live_medicines_site):

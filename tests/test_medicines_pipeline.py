@@ -73,10 +73,9 @@ def test_csv_sink_roundtrip(spark, tmp_path):
 
 
 def test_pipeline_computes_cards_once(spark, tmp_path):
-    """run_pipeline caches its cards: an Arrow pass upstream logs the url of
-    every row it processes, and each card is processed once although the
-    enrichment's distinct keys and its join back both read the cards.
-    ``cards.unpersist()`` releases the cache."""
+    """run_pipeline reads its cards once and caches nothing: an Arrow pass
+    upstream logs the url of every row it processes, and each card is
+    processed once, with the CacheManager empty after the action."""
     import pyarrow as pa
 
     from etl_data_processor_spark.ops.text import arrow_pass
@@ -91,6 +90,7 @@ def test_pipeline_computes_cards_once(spark, tmp_path):
             f.write(json.dumps(cols["url"]) + "\n")
         return cols
 
+    spark.catalog.clearCache()
     src = synthetic_cards(spark, 40)
     cards = arrow_pass(src, logged, pa.schema([(c, pa.string()) for c in src.columns]))
     assert len(run_pipeline(cards).collect()) == 20
@@ -99,6 +99,44 @@ def test_pipeline_computes_cards_once(spark, tmp_path):
         with open(os.path.join(row_log, name)) as f:
             processed += [url for line in f for url in json.loads(line)]
     assert sorted(processed) == sorted(r.url for r in src.collect())
-    assert cards.storageLevel.useMemory
-    cards.unpersist()
-    assert not cards.storageLevel.useMemory
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _ancestors(tree: str, needle: str) -> list[list[str]]:
+    """For each line of a plan ``tree`` string containing ``needle``, the
+    lines of its ancestor nodes (a child is indented deeper than its
+    parent)."""
+
+    def depth(line: str) -> int:
+        return next(i for i, ch in enumerate(line) if ch.isalpha())
+
+    lines = [ln for ln in tree.splitlines() if ln.strip()]
+    out = []
+    for i, line in enumerate(lines):
+        if needle not in line:
+            continue
+        chain, d = [], depth(line)
+        for above in reversed(lines[:i]):
+            if depth(above) < d:
+                chain.append(above)
+                d = depth(above)
+        out.append(chain)
+    return out
+
+
+def test_html_pipeline_plan_shuffles_by_key_once_and_caches_nothing(spark):
+    """From raw HTML, the enrichment is one shuffle on the raw drug text
+    feeding one Python pass: no cached relation, no broadcast of the
+    enrichment's result."""
+    from etl_data_processor_spark.pipelines.medicines import cards_from_html
+    from tests.reference import synthetic_html_site
+
+    listing, details = synthetic_html_site(spark, 40)
+    out = run_pipeline(cards_from_html(listing, details))
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
+    assert plan.count("Exchange hashpartitioning(raw_drug_text") == 1
+    enrich_nodes = _ancestors(plan, "enrich_partition(")
+    assert len(enrich_nodes) == 1
+    assert not any("BroadcastExchange" in a for a in enrich_nodes[0])
+    assert len(out.collect()) == 20

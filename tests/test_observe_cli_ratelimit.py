@@ -49,6 +49,27 @@ def test_cli_medicines_and_list(cli_main, tmp_path, capsys):
     ]
 
 
+def test_cli_medicines_enriches_each_key_once(cli_main, tmp_path, monkeypatch, capsys):
+    """The CLI writes the pipeline once: the row count it logs is observed
+    on the write's own job, so no second action re-runs the enrichment,
+    and the generate backend sees each distinct drug text once."""
+    import json
+    import shutil
+
+    from tests import fake_llm
+
+    shutil.rmtree(fake_llm.calls_dir(), ignore_errors=True)
+    monkeypatch.setenv("ETL_LLM_GENERATE", "tests.fake_llm:logged_generate")
+    dest = str(tmp_path / "cli_out")
+    assert cli_main(["medicines", "--out", dest, "--cards", "40"]) == 0
+    assert "wrote 20 rows" in capsys.readouterr().out
+    keys = []
+    for name in os.listdir(fake_llm.calls_dir()):
+        with open(os.path.join(fake_llm.calls_dir(), name)) as f:
+            keys += [k for line in f for k in json.loads(line)]
+    assert len(keys) == len(set(keys)) == 20
+
+
 def test_cli_list_sees_the_entry_registry():
     """`list` (and with it `query`) loads the same registry as
     ``__spark_entry__``: same keys, same oracle-checked subset. Run in a fresh

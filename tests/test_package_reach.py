@@ -16,6 +16,10 @@ So a same-named function elsewhere, or a mention in a docstring, does not
 keep a function alive. Registered query keys (``@q(...)``) and the entry
 modules (``__main__``, ``worker_daemon``) are exempt. A function that only
 tests call belongs in ``tests/`` as a reference or fixture, or goes.
+
+The same pass fails on a top-level import a package module never uses.
+Only imports made for their side effect or to re-export are exempt: the
+package ``__init__``s and the names in ``REEXPORTS``.
 """
 
 from __future__ import annotations
@@ -26,6 +30,13 @@ import os
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PKG = "etl_data_processor_spark"
 ENTRY_MODULES = {f"{PKG}.__main__", f"{PKG}.worker_daemon"}
+# registry dicts re-exported by ``queries``; query modules imported to
+# register their ``@q`` keys
+REEXPORTS = {
+    f"{PKG}.queries": {"QUERIES", "ORACLE"},
+    f"{PKG}.queries_r8": {"_ext3"},
+    f"{PKG}.queries_r9": {"_r8"},
+}
 
 
 def _module_name(path: str) -> str:
@@ -156,3 +167,26 @@ def test_every_package_definition_is_reached_by_a_program():
         "top-level definitions no program reaches (move each into tests/ "
         f"as a reference or fixture, or delete it): {unreached}"
     )
+
+
+def test_every_package_import_is_used():
+    paths = _program_files()
+    modules = {_module_name(p) for p in paths}
+    unused = []
+    for path in paths:
+        f = _File(path, modules)
+        if not f.module.startswith(PKG) or path.endswith("__init__.py"):
+            continue
+        for node in f.tree.body:
+            if isinstance(node, ast.Import):
+                bound = [a.asname or a.name.split(".")[0] for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+                bound = [a.asname or a.name for a in node.names]
+            else:
+                continue
+            for name in bound:
+                if name in REEXPORTS.get(f.module, ()):
+                    continue
+                if not any(isinstance(n, ast.Name) for n in f.uses.get(name, ())):
+                    unused.append(f"{f.module}: {name}")
+    assert unused == [], f"top-level imports the module never uses: {unused}"
